@@ -294,15 +294,19 @@ object Bench {
       case Some(names) => SparkEntry.queries.filter { case (n, _) => names(n) }
       case None => SparkEntry.queries
     }
-    val results = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
+    val attempted = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
       val before = listener.snapshot
       val stealBefore = stealTicks()
       val t0 = System.nanoTime()
       // noop sink forces FULL evaluation of every projected expression —
       // a bare .count() lets Catalyst prune unevaluated projections, so
       // projection-only queries would measure parquet row counting only.
-      try { fn(spark, sfDir).write.mode("overwrite").format("noop").save() }
-      catch { case _: Throwable => () }
+      val ok =
+        try { fn(spark, sfDir).write.mode("overwrite").format("noop").save(); true }
+        catch { case e: Throwable =>
+          System.err.println(s"[bench] $name failed: ${e.getMessage}")
+          false
+        }
       val sec = (System.nanoTime() - t0) / 1e9
       // async listener events must land before the delta is read
       try org.apache.spark.graftbench.BusDrain.drain(spark.sparkContext)
@@ -319,8 +323,12 @@ object Bench {
         if (stealBefore < 0 || stealAfter < 0) -1L else stealAfter - stealBefore
       val delta = listener.snapshot.zip(before)
         .map { case (a, b) => a - b } :+ load1c :+ steal
-      (name, sec, delta)
+      (name, ok, sec, delta)
     }
+    // a query that threw has no timing: it stays out of total and the
+    // per-query maps, and is counted by name in the summary line
+    val results = attempted.collect { case (name, true, sec, delta) => (name, sec, delta) }
+    val failed = attempted.collect { case (name, false, _, _) => name }
     // Stop BEFORE printing so no executor log line can interleave with
     // the machine-readable JSON lines — but never let a shutdown
     // exception eat those lines.
@@ -334,7 +342,7 @@ object Bench {
     // ("timing moved, bytes identical") works from the repo alone.
     try java.nio.file.Files.write(
       java.nio.file.Paths.get(outFile),
-      (contract + "\n" + summaryLine(results, sfDir) + "\n")
+      (contract + "\n" + summaryLine(results, sfDir, failed) + "\n")
         .getBytes(java.nio.charset.StandardCharsets.UTF_8))
     catch { case _: Throwable => () }
     println(contract)
@@ -343,7 +351,7 @@ object Bench {
     // adjudication summary guaranteed to survive truncation whole:
     // total, query count, count under 1 s, max, and the slowest 12 with
     // their timings. BenchFormatSpec pins the size bound.
-    println(summaryLine(results, sfDir))
+    println(summaryLine(results, sfDir, failed))
   }
 
   private def fmt(v: Double): String = BigDecimal(v)
@@ -369,17 +377,28 @@ object Bench {
     s"""{"metric":"total","value":$total,"unit":"sec",$envField"taskMetrics":$tm,"queries":$qs,"sf":"$sfDir"}"""
   }
 
+  /** Failed queries named in the summary line (all are counted). */
+  val FailedListed = 8
+
   /** The tail-capture-proof summary line (metric=summary): bounded size
-    * regardless of catalog growth.
+    * regardless of catalog growth. `results` holds the queries that ran;
+    * `failed` names those that threw — all are counted in n_failed, the
+    * first [[FailedListed]] by name are listed.
     */
-  def summaryLine(results: Seq[(String, Double, Seq[Long])], sfDir: String): String = {
+  def summaryLine(
+      results: Seq[(String, Double, Seq[Long])],
+      sfDir: String,
+      failed: Seq[String] = Nil): String = {
     val sorted = results.sortBy(-_._2)
     val slowest = sorted.take(12)
       .map { case (k, v, _) => s"\"" + k + "\":" + fmt(v) }
       .mkString("{", ",", "}")
+    val failedNames = failed.sorted.take(FailedListed).map("\"" + _ + "\"").mkString("[", ",", "]")
     s"""{"metric":"summary","total_s":${fmt(results.map(_._2).sum)},"n":${results.size},""" +
       s""""n_lt_1s":${results.count(_._2 < 1.0)},""" +
       s""""max_s":${fmt(sorted.headOption.map(_._2).getOrElse(0.0))},""" +
+      s""""n_failed":${failed.size},""" +
+      s""""failed":$failedNames,""" +
       s""""slowest":$slowest,"sf":"$sfDir"}"""
   }
 }

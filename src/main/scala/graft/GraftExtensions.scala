@@ -12,12 +12,12 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   *   SparkSession.builder().withExtensions(new GraftExtensions) ...
   * }}}
   *
-  * and `dot_f64` / `simhash_agg` resolve in SQL text with no imperative
-  * `register` call. Only the constant-parameter natives live here —
-  * `MinHashAgg`/`LshBuckets`/`NearestCell` carry query-time constants
-  * (permutation tables, plane matrices, fitted centroids), so their
-  * call sites bind them per query. The per-query `register` helpers
-  * remain for sessions built without extensions.
+  * and `dot_f64` / `simhash_agg` / `jaro_winkler` resolve in SQL text.
+  * This is the SQL-user surface only: the engine's own queries never
+  * reach a native by name — they build each expression straight into a
+  * Column with `org.apache.spark.sql.graftnative.Native`, fitted
+  * constants (plane matrices, centroids, eval matrices) included, so
+  * they run the same on sessions built without this extension.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {

@@ -2,7 +2,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the DuckDB compare (scripts/check_oracle.py).
+  * Exits 1, after writing oracle_sql.json, when any attempted query
+  * failed. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
@@ -50,18 +52,21 @@ object Verify {
     // exactly-once per committed dir. Default off: a normal gate run
     // must never silently reuse a stale dump.
     val resume = sys.env.get("SPARK_GRAFT_RESUME").contains("1")
-    SparkEntry.queries
+    val attempted = SparkEntry.queries
       .filter { case (name, _) => only.forall(_(name)) }
       .filter { case (name, _) =>
         val done = resume && Files.exists(Paths.get(s"$outDir/$name/_SUCCESS"))
         if (done) System.err.println(s"[verify] $name already committed — skipped")
         !done
       }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+      .toSeq
+    val failed = attempted.filterNot { case (name, fn) =>
+      try {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+        true
+      } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        false
       } finally {
         // Session hygiene between queries: every persisted RDD still
         // alive here is THIS query's debris (queries share nothing) —
@@ -92,5 +97,8 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    System.err.println(s"[verify] ${failed.size} of ${attempted.size} attempted queries failed" +
+      (if (failed.isEmpty) "" else failed.map(_._1).mkString(": ", ", ", "")))
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

@@ -14,9 +14,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * ("a a a a" merging (a,a) → "aa aa", "a a a" → "aa a").
   *
   * The merge pair is fitted state (the argmax of the corpus pair count
-  * for its round), so call sites bind this through [[FittedExpr]] — the
-  * symbols never round-trip through SQL string literals, which would
-  * need escaping for arbitrary corpus tokens. The scan is a single
+  * for its round), so call sites build it straight into a Column with
+  * `org.apache.spark.sql.graftnative.Native` — the symbols never
+  * round-trip through SQL string literals, which would need escaping
+  * for arbitrary corpus tokens. The scan is a single
   * forward pass, evaluated inside whole-stage codegen via a reference
   * object, the MaxCosine/HotWeight discipline.
   */
@@ -77,8 +78,8 @@ case class BpeMerge(child: Expression, lhs: String, rhs: String)
   * one reference object the per-round plan — and its generated source —
   * is byte-stable across rounds: round 2+ of [[graft.text.Bpe.learn]]
   * and every [[graft.text.Bpe.bpeVocab]] consumer reuse the round-1
-  * compiled class. Like [[BpeMerge]], fitted state — bind via
-  * [[FittedExpr]].
+  * compiled class. Like [[BpeMerge]], fitted state — built into a
+  * Column with `Native`.
   */
 case class BpeMergeSeq(child: Expression, merges: Seq[(String, String)])
     extends UnaryExpression {

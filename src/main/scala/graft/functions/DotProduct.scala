@@ -110,12 +110,3 @@ case class DotProduct(left: Expression, right: Expression)
       newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
 }
-
-object DotProduct {
-  /** Register `dot_f64` in the session's function registry (idempotent),
-    * so call sites use `expr("dot_f64(a, b)")`.
-    */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dot_f64", exprs => DotProduct(exprs.head, exprs(1)), "built-in")
-}

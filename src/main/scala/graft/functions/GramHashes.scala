@@ -147,16 +147,6 @@ case class DistinctGramHashes(child: Expression, n: Int)
     copy(child = newChild)
 }
 
-object DistinctGramHashes {
-  /** Register `distinct_gram_hashes<n>` (idempotent — stateless, fixed
-    * name per gram width, the `dot_f64` discipline).
-    */
-  def register(spark: org.apache.spark.sql.SparkSession, n: Int): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      s"distinct_gram_hashes$n", exprs => DistinctGramHashes(exprs.head, n),
-      "built-in")
-}
-
 /** All space-joined n-grams of a token array, in positional order —
   * `transform(sequence(1, size(t)-n+1), i -> concat_ws(' ', slice(t, i,
   * n)))` without the interpreted per-element lambda, and without the
@@ -208,12 +198,6 @@ case class Grams(child: Expression, n: Int) extends UnaryExpression {
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
-}
-
-object Grams {
-  def register(spark: org.apache.spark.sql.SparkSession, n: Int): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      s"grams$n", exprs => Grams(exprs.head, n), "built-in")
 }
 
 /** The DISTINCT space-joined n-gram set of a token array, first
@@ -268,12 +252,6 @@ case class DistinctGrams(child: Expression, n: Int) extends UnaryExpression {
     copy(child = newChild)
 }
 
-object DistinctGrams {
-  def register(spark: org.apache.spark.sql.SparkSession, n: Int): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      s"distinct_grams$n", exprs => DistinctGrams(exprs.head, n), "built-in")
-}
-
 /** The 60-bit md5-prefix hash of the n-gram at EVERY position (no
   * dedup): element i hashes tokens [i, i+n) — so
   * `posexplode(pos_gram_hashes_n(t))` yields the same (pos, hash)
@@ -314,12 +292,6 @@ case class PosGramHashes(child: Expression, n: Int) extends UnaryExpression {
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
-}
-
-object PosGramHashes {
-  def register(spark: org.apache.spark.sql.SparkSession, n: Int): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      s"pos_gram_hashes$n", exprs => PosGramHashes(exprs.head, n), "built-in")
 }
 
 /** Winnowing fingerprints of a token array in one codegen'd pass: the
@@ -382,10 +354,4 @@ case class WinnowFps(child: Expression, k: Int, w: Int)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
-}
-
-object WinnowFps {
-  def register(spark: org.apache.spark.sql.SparkSession, k: Int, w: Int): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "winnow_fps", exprs => WinnowFps(exprs.head, k, w), "built-in")
 }

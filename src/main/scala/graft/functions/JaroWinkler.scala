@@ -65,10 +65,6 @@ case class JaroWinkler(left: Expression, right: Expression)
 
 object JaroWinkler {
 
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "jaro_winkler", exprs => JaroWinkler(exprs.head, exprs(1)), "built-in")
-
   /** The scorer itself — public so generated code (and specs) call it
     * directly. Operates on code points via String conversion: the
     * catalog's fixtures are ASCII, and DuckDB's comparator is also

@@ -64,12 +64,3 @@ case class PairStructs(child: Expression) extends UnaryExpression {
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }
-
-object PairStructs {
-  /** Register `pair_structs` (idempotent — stateless, fixed name, the
-    * `dot_f64` discipline).
-    */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "pair_structs", exprs => PairStructs(exprs.head), "built-in")
-}

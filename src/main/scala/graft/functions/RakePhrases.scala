@@ -94,9 +94,3 @@ case class RakePhrases(child: Expression, stop: Seq[String])
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }
-
-object RakePhrases {
-  def register(spark: org.apache.spark.sql.SparkSession, stop: Seq[String]): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "rake_phrases", exprs => RakePhrases(exprs.head, stop), "built-in")
-}

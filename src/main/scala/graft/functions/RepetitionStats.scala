@@ -120,9 +120,3 @@ case class RepetitionStats(child: Expression) extends UnaryExpression {
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }
-
-object RepetitionStats {
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "repetition_stats", exprs => RepetitionStats(exprs.head), "built-in")
-}

@@ -1,118 +1,14 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** All [[b]] Poisson(1) bootstrap multipliers of one unit key, in one
-  * codegen'd pass — the [[graft.relational.StatModels.bootstrapCi]] /
-  * abUpliftBootstrap lane kernel (md5(prefix ':' g) per 4-resample
-  * group, four 32-bit hex lanes per digest, u = lane / 2^32,
-  * multiplier = Poisson(1) inverse CDF of u) without the per-group
-  * string concat, the 32-hex-char materialization, or the four
-  * conv/substring round-trips per digest. Element index IS the
-  * resample id (b = g*4 + lane), so `posexplode` reproduces the former
-  * (b, m) stream exactly.
-  *
-  * Bit-identity: hex chars [1+8l, 8] of the md5 parse to the big-endian
-  * value of digest bytes [4l, 4l+4); that 32-bit integer divided by the
-  * exact power-of-two 2^32 is the same double; the thresholds are THE
-  * SAME doubles ([[graft.relational.StatModels.poissonMultiplier]]'s),
-  * compared with the same `<`.
-  */
-case class BootMultipliers(child: Expression, b: Int,
-    thresholds: Array[Double]) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"boot_multipliers expects string, got ${other.sql}")
-  }
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  def compute(prefix: UTF8String): ArrayData =
-    new GenericArrayData(BootMultipliers.multipliers(prefix, b, thresholds))
-
-  override def nullSafeEval(input: Any): Any =
-    compute(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self =
-      ctx.addReferenceObj("bootMult", this, classOf[BootMultipliers].getName)
-    nullSafeCodeGen(ctx, ev, v =>
-      s"${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData) $self.compute($v);")
-  }
-
-  override def prettyName: String = "boot_multipliers"
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object BootMultipliers {
-  /** Thread-local digest in the STATIC companion (the GramMd5
-    * discipline) — a ThreadLocal field on the expression itself is not
-    * serializable and a shared MessageDigest is not thread-safe.
-    */
-  private[functions] val md = new ThreadLocal[java.security.MessageDigest] {
-    override def initialValue(): java.security.MessageDigest =
-      java.security.MessageDigest.getInstance("MD5")
-  }
-
-  /** The shared draw kernel: all `b` multipliers of one unit key (see
-    * the class scaladoc for the bit-identity argument). Used by the
-    * expression form and by [[BootFold]]'s per-row update.
-    */
-  private[functions] def multipliers(prefix: UTF8String, b: Int,
-      thresholds: Array[Double]): Array[Long] = {
-    val m = md.get()
-    val pre = prefix.getBytes
-    val out = new Array[Long](b)
-    var g = 0
-    while (g < b / 4) {
-      m.reset()
-      m.update(pre)
-      m.update(':'.toByte)
-      m.update(String.valueOf(g).getBytes(
-        java.nio.charset.StandardCharsets.US_ASCII))
-      val d = m.digest()
-      var lane = 0
-      while (lane < 4) {
-        val v = ((d(4 * lane) & 0xFFL) << 24) |
-          ((d(4 * lane + 1) & 0xFFL) << 16) |
-          ((d(4 * lane + 2) & 0xFFL) << 8) | (d(4 * lane + 3) & 0xFFL)
-        val u = v.toDouble / 4294967296.0
-        var k = 0
-        var mult = thresholds.length.toLong
-        var found = false
-        while (k < thresholds.length && !found) {
-          if (u < thresholds(k)) { mult = k.toLong; found = true }
-          k += 1
-        }
-        out(g * 4 + lane) = mult
-        lane += 1
-      }
-      g += 1
-    }
-    out
-  }
-
-  /** Register `boot_multipliers` (idempotent — the thresholds and B are
-    * catalog constants, so the fixed shared name is safe).
-    */
-  def register(spark: org.apache.spark.sql.SparkSession, b: Int,
-      thresholds: Array[Double]): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "boot_multipliers",
-      exprs => BootMultipliers(exprs.head, b, thresholds), "built-in")
-}
-
 /** The whole Poisson-bootstrap fold as ONE typed aggregate: per input
-  * row, compute the unit's `b` multipliers (the [[BootMultipliers]]
-  * kernel) and accumulate Σ m·w_j into a flat b×k BIGINT buffer — no
+  * row, compute the unit's `b` multipliers ([[BootFold.multipliers]])
+  * and accumulate Σ m·w_j into a flat b×k BIGINT buffer — no
   * 64× row explode, no per-resample shuffle at all (the former shape
   * exploded every unit into b (b, m) rows and hash-aggregated them back
   * to b groups; this folds the identical exact-integer sums in-row,
@@ -160,7 +56,7 @@ case class BootFold(
     val ws = weights.eval(input)
     if (pre != null && ws != null) {
       val wArr = ws.asInstanceOf[ArrayData]
-      val ms = BootMultipliers.multipliers(
+      val ms = BootFold.multipliers(
         pre.asInstanceOf[UTF8String], b, thresholds)
       var i = 0
       while (i < b) {
@@ -217,4 +113,63 @@ case class BootFold(
   override def withNewInputAggBufferOffset(newOffset: Int): BootFold =
     copy(inputAggBufferOffset = newOffset)
   override def prettyName: String = "boot_fold"
+}
+
+object BootFold {
+  /** Thread-local digest in the STATIC companion (the GramMd5
+    * discipline) — a ThreadLocal field on the expression itself is not
+    * serializable and a shared MessageDigest is not thread-safe.
+    */
+  private val md = new ThreadLocal[java.security.MessageDigest] {
+    override def initialValue(): java.security.MessageDigest =
+      java.security.MessageDigest.getInstance("MD5")
+  }
+
+  /** All `b` Poisson(1) bootstrap multipliers of one unit key — the
+    * [[graft.relational.StatModels.bootstrapCi]] / abUpliftBootstrap lane
+    * draw (md5(prefix ':' g) per 4-resample group, four 32-bit hex lanes
+    * per digest, u = lane / 2^32, multiplier = Poisson(1) inverse CDF of
+    * u) without the per-group string concat, the 32-hex-char
+    * materialization, or the four conv/substring round-trips per digest.
+    * Element index IS the resample id (b = g*4 + lane).
+    *
+    * Bit-identity: hex chars [1+8l, 8] of the md5 parse to the big-endian
+    * value of digest bytes [4l, 4l+4); that 32-bit integer divided by the
+    * exact power-of-two 2^32 is the same double; the thresholds are THE
+    * SAME doubles ([[graft.relational.StatModels.poissonMultiplier]]'s),
+    * compared with the same `<`.
+    */
+  private[functions] def multipliers(prefix: UTF8String, b: Int,
+      thresholds: Array[Double]): Array[Long] = {
+    val m = md.get()
+    val pre = prefix.getBytes
+    val out = new Array[Long](b)
+    var g = 0
+    while (g < b / 4) {
+      m.reset()
+      m.update(pre)
+      m.update(':'.toByte)
+      m.update(String.valueOf(g).getBytes(
+        java.nio.charset.StandardCharsets.US_ASCII))
+      val d = m.digest()
+      var lane = 0
+      while (lane < 4) {
+        val v = ((d(4 * lane) & 0xFFL) << 24) |
+          ((d(4 * lane + 1) & 0xFFL) << 16) |
+          ((d(4 * lane + 2) & 0xFFL) << 8) | (d(4 * lane + 3) & 0xFFL)
+        val u = v.toDouble / 4294967296.0
+        var k = 0
+        var mult = thresholds.length.toLong
+        var found = false
+        while (k < thresholds.length && !found) {
+          if (u < thresholds(k)) { mult = k.toLong; found = true }
+          k += 1
+        }
+        out(g * 4 + lane) = mult
+        lane += 1
+      }
+      g += 1
+    }
+    out
+  }
 }

@@ -93,12 +93,3 @@ case class SimHashAgg(
     copy(inputAggBufferOffset = newOffset)
   override def prettyName: String = "simhash_agg"
 }
-
-object SimHashAgg {
-  /** Register `simhash_agg` (idempotent); call sites use
-    * `expr("simhash_agg(h)")` inside an agg.
-    */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash_agg", exprs => SimHashAgg(exprs.head), "built-in")
-}

@@ -128,9 +128,3 @@ case class SimHashSig(child: Expression) extends UnaryExpression {
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }
-
-object SimHashSig {
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash_sig", exprs => SimHashSig(exprs.head), "built-in")
-}

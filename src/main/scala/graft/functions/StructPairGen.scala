@@ -99,12 +99,6 @@ case class OrderedPairStructs(child: Expression) extends BucketPairKernel {
     copy(child = newChild)
 }
 
-object OrderedPairStructs {
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "ordered_pair_structs", exprs => OrderedPairStructs(exprs.head), "built-in")
-}
-
 /** array<struct<id:bigint, is_new:boolean>> -> i<j pairs KEPT only when
   * x.is_new OR y.is_new, as struct(a = least, b = greatest,
   * nn = x.is_new AND y.is_new) — the incremental-pairs bucket lambda
@@ -153,12 +147,6 @@ case class NewPairStructs(child: Expression) extends BucketPairKernel {
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
-}
-
-object NewPairStructs {
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "new_pair_structs", exprs => NewPairStructs(exprs.head), "built-in")
 }
 
 /** array<struct<id:bigint, lo:bigint, hi:bigint>> -> i<j pairs as
@@ -210,10 +198,4 @@ case class HammingPairStructs(child: Expression) extends BucketPairKernel {
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
-}
-
-object HammingPairStructs {
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "hamming_pair_structs", exprs => HammingPairStructs(exprs.head), "built-in")
 }

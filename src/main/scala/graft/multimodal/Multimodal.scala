@@ -2,6 +2,8 @@ package graft.multimodal
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftnative.Native
+import graft.functions.HammingPairStructs
 import graft.Tables
 
 /** A media file as it would sit in a multimodal training table: an
@@ -211,7 +213,6 @@ object Multimodal {
     // r14: native HammingPairStructs replaces the in-bucket pair lambda
     // (same kernel as the text SimHash tier; NativeKernelExprSpec pins
     // the parity, the oracle replays the lambda spelling unchanged).
-    graft.functions.HammingPairStructs.register(spark)
     val cap = graft.text.Dedup.MaxBucket
     val chunked = phashes(mediaFiles(spark, d)).select(
       struct($"doc_id", $"ph_lo", $"ph_hi").as("ds"),
@@ -226,7 +227,7 @@ object Multimodal {
       .groupBy($"chunk", $"chunk_val")
       .agg(collect_list($"ds").as("ds"))
       .filter(size($"ds") > 1 && size($"ds") <= cap)
-      .select(explode(expr("hamming_pair_structs(ds)")).as("p"))
+      .select(explode(Native(es => HammingPairStructs(es.head), $"ds")).as("p"))
       .select($"p.a".as("doc_a"), $"p.b".as("doc_b"),
         $"p.h".cast("long").as("hamming"))
       .filter($"hamming" <= PHashMaxHamming)

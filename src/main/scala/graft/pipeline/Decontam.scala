@@ -3,6 +3,8 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.graftnative.Native
+import graft.functions.{DistinctGramHashes, MaxCosine}
 import graft.Tables
 import graft.text.TextAnalysis
 
@@ -45,11 +47,10 @@ object Decontam {
     */
   def gramsOf(spark: SparkSession, d: String): DataFrame = {
     import spark.implicits._
-    graft.functions.DistinctGramHashes.register(spark, N)
     Tables.documents(spark, d)
       .withColumn("t", TextAnalysis.toks($"text"))
       .select($"doc_id", $"source",
-        explode(expr(s"distinct_gram_hashes$N(t)")).as("g"))
+        explode(Native(es => DistinctGramHashes(es.head, N), $"t")).as("g"))
   }
 
   /** Per training document: distinct n-grams, how many collide with
@@ -123,8 +124,7 @@ object Decontam {
     val benchArr: Array[Array[Double]] = e.filter($"vec_id" % 10 === 0)
       .select($"vec_id", $"v").sort($"vec_id").limit(BenchCap)
       .collect().map(_.getSeq[Double](1).toArray)
-    val maxCos = graft.functions.FittedExpr.bind(spark, "max_cosine",
-      exprs => graft.functions.MaxCosine(exprs.head, benchArr), $"v")
+    val maxCos = Native(es => MaxCosine(es.head, benchArr), $"v")
     e.filter($"vec_id" % 10 =!= 0)
       .select($"vec_id", maxCos.as("max_sim"))
       .select($"vec_id", $"max_sim",

@@ -2,6 +2,8 @@ package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftnative.Native
+import graft.functions.RepetitionStats
 import graft.Tables
 
 /** Gopher-style rule-battery quality filtering (Rae et al. 2021,
@@ -143,7 +145,6 @@ object QualityRules {
     */
   def gopherRepetitionOf(documents: DataFrame): DataFrame = {
     import documents.sparkSession.implicits._
-    graft.functions.RepetitionStats.register(documents.sparkSession)
     val base = documents
       .withColumn("t", graft.text.TextAnalysis.toks($"text"))
       .withColumn("ls", filter(split($"text", "\n"), x => x =!= ""))
@@ -159,7 +160,7 @@ object QualityRules {
         aggregate(array_distinct($"ls"), lit(0L),
           (acc, x) => acc + length(x).cast("long")), lit(0L)))
         .as("dup_line_chars"),
-      expr("repetition_stats(t)").as("rs"))
+      Native(es => RepetitionStats(es.head), $"t").as("rs"))
       .select($"source", $"n_chars", $"n_lines", $"n_dup_lines",
         $"dup_line_chars",
         $"rs.top2_chars".as("top2_chars"), $"rs.dup5_chars".as("dup5_chars"))

@@ -3,6 +3,8 @@ package graft.relational
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftnative.Native
+import graft.functions.{BootFold, JaroWinkler, PairStructs}
 import graft.Tables
 import RelQueries.{exactSum, gridScale}
 
@@ -340,7 +342,6 @@ object Analytics {
 
   def entityMatchJw(spark: SparkSession, d: String): DataFrame = {
     import spark.implicits._
-    graft.functions.JaroWinkler.register(spark)
     val names = Tables.part(spark, d)
       .groupBy($"p_name").agg(count(lit(1)).as("n_parts"))
       .withColumn("blk", element_at(split($"p_name", " "), -1))
@@ -349,7 +350,7 @@ object Analytics {
     a.join(b, Seq("blk"))
       .filter($"name_a" < $"name_b")
       .withColumn("jw_e4",
-        round(expr("jaro_winkler(name_a, name_b)") * 10000, 0).cast("long"))
+        round(Native(es => JaroWinkler(es(0), es(1)), $"name_a", $"name_b") * 10000, 0).cast("long"))
       .filter($"jw_e4" >= MinJwE4)
       .select($"name_a", $"name_b", $"jw_e4", $"n_a", $"n_b")
   }
@@ -566,11 +567,10 @@ object Analytics {
     // interpreted transform/slice lambdas (HOF lambdas are
     // CodegenFallback; the SQL spelling also allocated a sub-array per
     // element). Same (i < j) pairs in the same sorted order.
-    graft.functions.PairStructs.register(lineitems.sparkSession)
     lineitems
       .groupBy($"l_orderkey")
       .agg(slice(array_sort(collect_set($"l_partkey")), 1, MaxBasket).as("basket"))
-      .select(explode(expr("pair_structs(basket)")).as("p"))
+      .select(explode(Native(es => PairStructs(es.head), $"basket")).as("p"))
       .groupBy($"p.part_a".as("part_a"), $"p.part_b".as("part_b"))
       .agg(count(lit(1)).as("n_orders"))
   }
@@ -803,9 +803,9 @@ object Analytics {
     // unit key prefix is user ':' day exactly as the md5 concat spelled
     // it, and the four arm-conditional sums ride as weight cells; the
     // 64× explode and the groupBy(b) exchange disappear.
-    val foldC = graft.functions.FittedExpr.bind(spark, "boot_fold",
-      es => graft.functions.BootFold(es(0), es(1), B, 4,
-        StatModels.bootThresholds.toArray),
+    val foldC = Native(
+      es => BootFold(es(0), es(1), B, 4, StatModels.bootThresholds.toArray)
+        .toAggregateExpression(),
       concat($"user_id".cast("string"), lit(":"), $"day".cast("string")),
       array(
         when($"arm" === 0L, $"conv").otherwise(0L),

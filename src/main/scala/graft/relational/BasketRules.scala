@@ -2,6 +2,8 @@ package graft.relational
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftnative.Native
+import graft.functions.PairStructs
 import graft.Tables
 
 /** Association rules (Agrawal & Srikant, VLDB'94 level-2) over the
@@ -51,9 +53,8 @@ object BasketRules {
       .groupBy($"pk").agg(count(lit(1)).as("n_item"))
     // native PairStructs replaces the nested interpreted lambdas — the
     // same change (and reasoning) as [[Analytics.basketPairCounts]] r14
-    graft.functions.PairStructs.register(spark)
     val topPairs = baskets
-      .select(explode(expr("pair_structs(basket)")).as("p"))
+      .select(explode(Native(es => PairStructs(es.head), $"basket")).as("p"))
       .groupBy($"p.part_a".as("part_a"), $"p.part_b".as("part_b"))
       .agg(count(lit(1)).as("n_ab"))
       .orderBy($"n_ab".desc, $"part_a".asc, $"part_b".asc)

@@ -2,6 +2,7 @@ package graft.relational
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftnative.Native
 
 /** Exact order statistics over a (value, count) FREQUENCY table without
   * a global sort or an unpartitioned window — [[Quantiles]]'s iterative
@@ -105,7 +106,6 @@ object FreqSelect {
     val useLong = lo0 >= BigInt(Long.MinValue) && hi0 <= BigInt(Long.MaxValue) &&
       (hi0 - lo0) < BigInt(Long.MaxValue / 2)
     val vv: Column = if (useLong) col("v").cast("long") else col("v")
-    val spark = freq.sparkSession
 
     val B = BigInt(Buckets)
     var pass = 0
@@ -125,10 +125,8 @@ object FreqSelect {
       // all passes share one compiled class. Out-of-segment rows yield
       // -1 after ≤ |segs| primitive compares — the former separate
       // pass-2+ range filter is subsumed.
-      val sb = graft.functions.FittedExpr.bind(spark, "seg_bucket",
-        exprs => graft.functions.SegBucket(exprs.head,
-          segs.map(_._1).toArray, segs.map(_._2).toArray, bw.toArray,
-          Buckets), vv)
+      val sb = Native(es => graft.functions.SegBucket(es.head,
+        segs.map(_._1).toArray, segs.map(_._2).toArray, bw.toArray, Buckets), vv)
       val hist = freq
         .select(sb.as("p"), col("cnt"))
         .filter(col("p") >= 0L)

@@ -2,6 +2,7 @@ package graft.relational
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftnative.Native
 import graft.Tables
 
 /** In-database statistical modeling: per-group OLS regression and
@@ -705,9 +706,9 @@ object StatModels {
     // shuffle, taken to its limit: nothing per-resample ever leaves the
     // task). Sums are exact integers in any order, so the per-resample
     // cells — and mean_b — are bit-identical to the grouped spelling.
-    val foldC = graft.functions.FittedExpr.bind(spark, "boot_fold",
-      es => graft.functions.BootFold(es(0), es(1), BootB, 2,
-        bootThresholds.toArray),
+    val foldC = Native(
+      es => graft.functions.BootFold(es(0), es(1), BootB, 2, bootThresholds.toArray)
+        .toAggregateExpression(),
       $"o_orderkey".cast("string"), array($"cents", lit(1L)))
     val means = drawsIn.agg(foldC.as("cells"))
       .select(posexplode($"cells").as(Seq("b", "s")))

@@ -3,6 +3,8 @@ package graft.sim
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftnative.Native
+import graft.functions.DotProduct
 import graft.Tables
 
 /** Rank fusion across similarity geometries — Reciprocal Rank Fusion
@@ -40,17 +42,16 @@ object Fusion {
 
   def rrfFusion(spark: SparkSession, d: String): DataFrame = {
     import spark.implicits._
-    graft.functions.DotProduct.register(spark)
     val e = Tables.embeddings(spark, d)
       .withColumn("v", col("embedding").cast("array<double>"))
-      .withColumn("norm", sqrt(expr("dot_f64(v, v)")))
+      .withColumn("norm", sqrt(Native(es => DotProduct(es(0), es(1)), $"v", $"v")))
     val q = e.filter($"vec_id" < Similarity.NumQueries)
       .select($"vec_id".as("query_id"), $"v".as("qv"), $"norm".as("qnorm"))
     val c = e.select($"vec_id".as("neighbor_id"), $"v".as("cv"),
       $"norm".as("cnorm"))
     val scored = c.crossJoin(broadcast(q))
       .filter($"neighbor_id" =!= $"query_id")
-      .withColumn("ip", expr("dot_f64(qv, cv)"))
+      .withColumn("ip", Native(es => DotProduct(es(0), es(1)), $"qv", $"cv"))
       .withColumn("s_cos", round($"ip" / ($"qnorm" * $"cnorm"), 4))
       .withColumn("s_ip", round($"ip", 4))
       // |q - c|^2 expanded over the already-computed norms and dot:

@@ -2,6 +2,8 @@ package graft.sim
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftnative.Native
+import graft.functions.DotProduct
 import graft.Tables
 
 /** Distributed PCA — the top principal component of the embedding
@@ -70,7 +72,6 @@ object Pca {
       : (Array[Double], Array[Double], Long, Double) =
     fitCache.getOrElseUpdate((spark, d), {
       import spark.implicits._
-      graft.functions.DotProduct.register(spark)
       val e = Tables.embeddings(spark, d)
         .select(col("embedding").cast("array<double>").as("v"))
         .transform(graft.Ckpt.cut) // 9 passes read one materialized scan
@@ -81,9 +82,9 @@ object Pca {
       val n = mrow.getAs[Long]("n")
       val mean = Array.tabulate(Dim)(i =>
         mrow.getAs[Long](s"m$i").toDouble / (n.toDouble * 1000000.0))
-      // literals enter the per-pass plans as ARRAY literals (typedlit /
-      // call_function), not as 64 inlined double literals in a SQL
-      // string: complex-typed literals land in the codegen `references`
+      // literals enter the per-pass plans as ARRAY literals (typedlit),
+      // not as 64 inlined double literals in a SQL string:
+      // complex-typed literals land in the codegen `references`
       // array, so all 8 passes generate IDENTICAL source and passes 2-8
       // hit the Janino cache instead of recompiling the 64-aggregate
       // stage with each round's new iterate baked in (measured ~0.2 s
@@ -99,7 +100,7 @@ object Pca {
           .as(s"s$i"))
       for (k <- 1 to PowerIters) {
         if (k == PowerIters) lastFit = Some(v.clone())
-        val tExpr = call_function("dot_f64", $"c", typedlit(v.toSeq))
+        val tExpr = Native(es => DotProduct(es(0), es(1)), $"c", typedlit(v.toSeq))
         val srow = centered.withColumn("t", tExpr).agg(sAggs.head, sAggs.tail: _*)
           .collect()(0)
         val sd = Array.tabulate(Dim)(i => srow.getAs[Long](s"s$i").toDouble)
@@ -133,14 +134,13 @@ object Pca {
   def pcaResiduals(spark: SparkSession, d: String): DataFrame = {
     import spark.implicits._
     val (mean, v, _, _) = fitPca(spark, d)
-    graft.functions.DotProduct.register(spark)
     val meanLit = array(mean.map(lit).toIndexedSeq: _*)
-    val vLit = s"array(${v.map(x => s"${x}D").mkString(",")})"
+    val vLit = array(v.map(lit).toIndexedSeq: _*)
     Tables.embeddings(spark, d)
       .select($"vec_id", col("embedding").cast("array<double>").as("x"))
       .withColumn("c", zip_with($"x", meanLit, (a, b) => a - b))
-      .withColumn("t", expr(s"dot_f64(c, $vLit)"))
-      .withColumn("cc", expr("dot_f64(c, c)"))
+      .withColumn("t", Native(es => DotProduct(es(0), es(1)), $"c", vLit))
+      .withColumn("cc", Native(es => DotProduct(es(0), es(1)), $"c", $"c"))
       .select($"vec_id",
         round($"t", 4).as("proj"),
         round(sqrt(greatest($"cc" - $"t" * $"t", lit(0.0))), 4)

@@ -2,6 +2,9 @@ package graft.sim
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.graftnative.Native
+import graft.functions.{DotProduct, NearestCell}
 import graft.Tables
 
 /** Similarity search over the embeddings table (64-dim float vectors).
@@ -93,9 +96,8 @@ object Similarity {
     * (same left-to-right summation order, so oracle parity holds).
     */
   private def withVec(df: DataFrame): DataFrame = {
-    graft.functions.DotProduct.register(df.sparkSession)
     df.withColumn("v", col("embedding").cast("array<double>"))
-      .withColumn("norm", sqrt(expr("dot_f64(v, v)")))
+      .withColumn("norm", sqrt(Native(dotF64, col("v"), col("v"))))
   }
 
   /** Per-vector L2 norm + dimensionality — the normalization pass every
@@ -132,7 +134,7 @@ object Similarity {
       $"v".as("cv"), $"norm".as("cnorm"))
     c.crossJoin(broadcast(q))
       .filter($"neighbor_id" =!= $"query_id")
-      .withColumn("sim", round(expr("dot_f64(qv, cv)") / ($"qnorm" * $"cnorm"), 4))
+      .withColumn("sim", round(Native(dotF64, $"qv", $"cv") / ($"qnorm" * $"cnorm"), 4))
       .select($"query_id", $"qlabel", $"neighbor_id", $"clabel", $"sim")
   }
 
@@ -153,13 +155,11 @@ object Similarity {
     Seq.fill(NumPlanes)(Seq.fill(64)(if (rnd.nextBoolean()) 1.0 else -1.0))
   }
 
-  /** Register the native all-tables bucket hasher (idempotent). */
-  def registerLsh(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "lsh_buckets64",
-      exprs => graft.functions.LshBuckets(
-        exprs.head, planes.map(_.toArray).toArray, PlanesPerTable),
-      "built-in")
+  /** The native all-tables bucket hasher over the plane matrix. */
+  def lshBuckets(es: Seq[Expression]): Expression =
+    graft.functions.LshBuckets(es.head, planes.map(_.toArray).toArray, PlanesPerTable)
+
+  private val dotF64: Seq[Expression] => Expression = es => DotProduct(es(0), es(1))
 
   /** (vec_id, v, norm, tbl, bucket) rows for every vector. All 96 plane
     * dots and the L bucket ids come from ONE native expression
@@ -171,9 +171,8 @@ object Similarity {
     */
   private def bucketRows(df: DataFrame): DataFrame = {
     import df.sparkSession.implicits._
-    registerLsh(df.sparkSession)
     df.select($"vec_id", $"v", $"norm",
-      posexplode(expr("lsh_buckets64(v)")).as(Seq("tbl", "bucket")))
+      posexplode(Native(lshBuckets, $"v")).as(Seq("tbl", "bucket")))
   }
 
   /** ANN top-K: probes compare only against candidates sharing a bucket
@@ -194,7 +193,7 @@ object Similarity {
       .partitionBy($"query_id").orderBy($"sim".desc, $"neighbor_id")
     c.join(broadcast(q), Seq("tbl", "bucket"))
       .filter($"neighbor_id" =!= $"query_id")
-      .withColumn("sim", round(expr("dot_f64(qv, cv)") / ($"qnorm" * $"cnorm"), 4))
+      .withColumn("sim", round(Native(dotF64, $"qv", $"cv") / ($"qnorm" * $"cnorm"), 4))
       .select($"query_id", $"neighbor_id", $"sim")
       .distinct() // a pair may collide in several tables
       .withColumn("rk", row_number().over(w).cast("long"))
@@ -240,8 +239,7 @@ object Similarity {
     val cents = centroids(trainSample(e).map(_._2))
     ivfFit(d) = cents
     lastDir = Some(d)
-    val nearestCell = graft.functions.FittedExpr.bind(spark, "nearest_cell",
-      exprs => graft.functions.NearestCell(exprs.head, cents), $"v")
+    val nearestCell = Native(es => NearestCell(es.head, cents), $"v")
     val assigned = e
       .withColumn("cell", nearestCell)
       .select($"cell", $"vec_id", $"label".cast("long").as("label"), $"v", $"norm")
@@ -260,7 +258,7 @@ object Similarity {
     val b = capped.select($"cell", $"vec_id".as("vec_b"), $"v".as("cv"), $"norm".as("cnorm"))
     a.join(b, "cell")
       .filter($"vec_a" < $"vec_b")
-      .withColumn("sim", round(expr("dot_f64(qv, cv)") / ($"qnorm" * $"cnorm"), 4))
+      .withColumn("sim", round(Native(dotF64, $"qv", $"cv") / ($"qnorm" * $"cnorm"), 4))
       .filter($"sim" >= 0.3)
       .select($"vec_a", $"vec_b", $"cell".cast("long").as("cell"), $"sim")
   }
@@ -304,7 +302,7 @@ object Similarity {
       .map(i => (i, cents(i), math.sqrt(cn2(i))))
       .toDF("cell", "cv", "cnorm")
     val scored = capped.join(broadcast(centsDf), "cell")
-      .withColumn("ccos", round(expr("dot_f64(v, cv)") / ($"norm" * $"cnorm"), 4))
+      .withColumn("ccos", round(Native(dotF64, $"v", $"cv") / ($"norm" * $"cnorm"), 4))
       .select($"cell", $"vec_id", $"v", $"norm", $"ccos")
       .transform(graft.Ckpt.cut)
     val a = scored.select($"cell".as("ca"), $"vec_id".as("vec_a"), $"v".as("av"),
@@ -315,7 +313,7 @@ object Similarity {
     // then fold per vector: one shuffle fewer than distinct-then-join,
     // and the verdict set crosses the wire once, not twice
     val cond = $"ca" === $"cb" && $"vec_a" =!= $"vec_b" &&
-      round(expr("dot_f64(av, bv)") / ($"an" * $"bn"), 4) >= SemDedupEps &&
+      round(Native(dotF64, $"av", $"bv") / ($"an" * $"bn"), 4) >= SemDedupEps &&
       ($"ccos_b" < $"ccos_a" ||
         ($"ccos_b" === $"ccos_a" && $"vec_b" < $"vec_a"))
     a.join(b, cond, "left_outer")
@@ -380,7 +378,7 @@ object Similarity {
       .partitionBy($"vec_b", $"label_a").orderBy($"sim".desc, $"vec_a")
     a.join(b, "cell")
       .filter($"label_a" < $"label_b")
-      .withColumn("sim", round(expr("dot_f64(qv, cv)") / ($"qnorm" * $"cnorm"), 4))
+      .withColumn("sim", round(Native(dotF64, $"qv", $"cv") / ($"qnorm" * $"cnorm"), 4))
       .select($"label_a", $"label_b", $"vec_a", $"vec_b", $"sim")
       .withColumn("ra", row_number().over(wa))
       .withColumn("rb", row_number().over(wb))
@@ -519,8 +517,7 @@ object Similarity {
     val e = withVec(Tables.embeddings(spark, d))
     val sample = trainSample(e)
     val cents = centroids(sample.map(_._2))
-    val nearestCell = graft.functions.FittedExpr.bind(spark, "nearest_cell",
-      exprs => graft.functions.NearestCell(exprs.head, cents), $"v")
+    val nearestCell = Native(es => NearestCell(es.head, cents), $"v")
     val cand = e
       .withColumn("cell", nearestCell)
       .select($"vec_id".as("neighbor_id"), $"v".as("cv"), $"norm".as("cnorm"), $"cell")
@@ -548,7 +545,7 @@ object Similarity {
     // in several tables
     cand.join(probesDf, "cell")
       .filter($"neighbor_id" =!= $"query_id")
-      .withColumn("sim", round(expr("dot_f64(qv, cv)") / ($"qnorm" * $"cnorm"), 4))
+      .withColumn("sim", round(Native(dotF64, $"qv", $"cv") / ($"qnorm" * $"cnorm"), 4))
       .withColumn("rk", row_number().over(w).cast("long"))
       .filter($"rk" <= k)
       .select($"query_id", $"neighbor_id", $"rk", $"sim")
@@ -625,8 +622,7 @@ object Similarity {
     val bounds = fitQuantBounds(spark, d)
     quantFit(d) = bounds
     lastDir = Some(d)
-    val quantCode = graft.functions.FittedExpr.bind(spark, "quant_code16",
-      exprs => graft.functions.QuantCode(exprs.head, bounds),
+    val quantCode = Native(es => graft.functions.QuantCode(es.head, bounds),
       expr("cast(embedding as array<double>)"))
     Tables.embeddings(spark, d)
       .select($"vec_id", quantCode.as("q"))
@@ -639,7 +635,6 @@ object Similarity {
 
   def knnQuantized(spark: SparkSession, d: String): DataFrame = {
     import spark.implicits._
-    graft.functions.DotProduct.register(spark)
     val codes = knnQuantizedCodes(spark, d)
     val probes = codes.filter($"vec_id" < NumQueries)
       .select($"vec_id".as("query_id"), $"q".as("qq"))
@@ -648,7 +643,7 @@ object Similarity {
     codes.select($"vec_id".as("neighbor_id"), $"q".as("cq"))
       .crossJoin(broadcast(probes))
       .filter($"neighbor_id" =!= $"query_id")
-      .withColumn("score", expr("dot_f64(qq, cq)").cast("long"))
+      .withColumn("score", Native(dotF64, $"qq", $"cq").cast("long"))
       .withColumn("rk", row_number().over(w).cast("long"))
       .filter($"rk" <= K)
       .select($"query_id", $"neighbor_id", $"rk", $"score")
@@ -681,7 +676,6 @@ object Similarity {
     */
   def knnRerank(spark: SparkSession, d: String): DataFrame = {
     import spark.implicits._
-    graft.functions.DotProduct.register(spark)
     val codes = knnQuantizedCodes(spark, d)
     val probeCodes = codes.filter($"vec_id" < NumQueries)
       .select($"vec_id".as("query_id"), $"q".as("qq"))
@@ -690,7 +684,7 @@ object Similarity {
     val shortlist = codes.select($"vec_id".as("neighbor_id"), $"q".as("cq"))
       .crossJoin(broadcast(probeCodes))
       .filter($"neighbor_id" =!= $"query_id")
-      .withColumn("iscore", expr("dot_f64(qq, cq)").cast("long"))
+      .withColumn("iscore", Native(dotF64, $"qq", $"cq").cast("long"))
       .withColumn("srk", row_number().over(wShort))
       .filter($"srk" <= RerankShortlist)
       .select($"query_id", $"neighbor_id")
@@ -702,7 +696,7 @@ object Similarity {
     e.select($"vec_id".as("neighbor_id"), $"v".as("cv"), $"norm".as("cnorm"))
       .join(broadcast(shortlist), Seq("neighbor_id"))
       .join(broadcast(probeVecs), Seq("query_id"))
-      .withColumn("sim", round(expr("dot_f64(qv, cv)") / ($"qnorm" * $"cnorm"), 4))
+      .withColumn("sim", round(Native(dotF64, $"qv", $"cv") / ($"qnorm" * $"cnorm"), 4))
       .withColumn("rk", row_number().over(w).cast("long"))
       .filter($"rk" <= K)
       .select($"query_id", $"neighbor_id", $"rk", $"sim")
@@ -754,7 +748,7 @@ object Similarity {
     val shortlist = e.select($"vec_id".as("neighbor_id"), $"p".as("cp"))
       .crossJoin(broadcast(probes))
       .filter($"neighbor_id" =!= $"query_id")
-      .withColumn("pscore", expr("dot_f64(qp, cp)"))
+      .withColumn("pscore", Native(dotF64, $"qp", $"cp"))
       .withColumn("srk", row_number().over(wShort))
       .filter($"srk" <= RerankShortlist)
       .select($"query_id", $"neighbor_id")
@@ -765,7 +759,7 @@ object Similarity {
     e.select($"vec_id".as("neighbor_id"), $"v".as("cv"), $"norm".as("cnorm"))
       .join(broadcast(shortlist), Seq("neighbor_id"))
       .join(broadcast(probeVecs), Seq("query_id"))
-      .withColumn("sim", round(expr("dot_f64(qv, cv)") / ($"qnorm" * $"cnorm"), 4))
+      .withColumn("sim", round(Native(dotF64, $"qv", $"cv") / ($"qnorm" * $"cnorm"), 4))
       .withColumn("rk", row_number().over(w).cast("long"))
       .filter($"rk" <= K)
       .select($"query_id", $"neighbor_id", $"rk", $"sim")
@@ -892,8 +886,7 @@ object Similarity {
       books: Array[Array[Array[Double]]]): DataFrame = {
     import spark.implicits._
     val codeCols = (0 until PqSubspaces).map { m =>
-      graft.functions.FittedExpr.bind(spark, s"pq_code$m",
-        exprs => graft.functions.NearestCell(exprs.head, books(m)),
+      Native(es => NearestCell(es.head, books(m)),
         slice($"v", m * PqSubDim + 1, PqSubDim)).as(s"c$m")
     }
     val coded = df.select((df.columns.map(col).toSeq ++ codeCols): _*)
@@ -902,7 +895,7 @@ object Similarity {
     }: _*))
     coded
       .withColumn("xhat", xhat)
-      .withColumn("xnorm", sqrt(expr("dot_f64(xhat, xhat)")))
+      .withColumn("xnorm", sqrt(Native(dotF64, $"xhat", $"xhat")))
       .drop((0 until PqSubspaces).map(m => s"c$m"): _*)
   }
 
@@ -944,7 +937,7 @@ object Similarity {
       .select($"vec_id".as("neighbor_id"), $"xhat", $"xnorm")
       .crossJoin(broadcast(probes))
       .filter($"neighbor_id" =!= $"query_id")
-      .withColumn("psim", round(expr("dot_f64(qv, xhat)") / ($"qnorm" * $"xnorm"), 4))
+      .withColumn("psim", round(Native(dotF64, $"qv", $"xhat") / ($"qnorm" * $"xnorm"), 4))
       .withColumn("srk", row_number().over(wShort))
       .filter($"srk" <= RerankShortlist)
       .select($"query_id", $"neighbor_id")
@@ -954,7 +947,7 @@ object Similarity {
     e.select($"vec_id".as("neighbor_id"), $"v".as("cv"), $"norm".as("cnorm"))
       .join(broadcast(shortlist), Seq("neighbor_id"))
       .join(broadcast(probes), Seq("query_id"))
-      .withColumn("sim", round(expr("dot_f64(qv, cv)") / ($"qnorm" * $"cnorm"), 4))
+      .withColumn("sim", round(Native(dotF64, $"qv", $"cv") / ($"qnorm" * $"cnorm"), 4))
       .withColumn("rk", row_number().over(w).cast("long"))
       .filter($"rk" <= K)
       .select($"query_id", $"neighbor_id", $"rk", $"sim")
@@ -995,8 +988,7 @@ object Similarity {
     ivfFit(d) = cents
     ivfProbeFit(d) = probeRows.map { case (id, c, _, _) => (id, c) }
     lastDir = Some(d)
-    val nearestCell = graft.functions.FittedExpr.bind(spark, "nearest_cell",
-      exprs => graft.functions.NearestCell(exprs.head, cents), $"v")
+    val nearestCell = Native(es => NearestCell(es.head, cents), $"v")
     val cand = withPqRecon(spark, e.withColumn("cell", nearestCell), books)
       .select($"vec_id".as("neighbor_id"), $"cell", $"xhat", $"xnorm")
     val probesDf = broadcast(probeRows.toDF("query_id", "cell", "qv", "qnorm"))
@@ -1014,7 +1006,7 @@ object Similarity {
     // shortlist needs no distinct
     val shortlist = cand.join(probesDf, "cell")
       .filter($"neighbor_id" =!= $"query_id")
-      .withColumn("psim", round(expr("dot_f64(qv, xhat)") / ($"qnorm" * $"xnorm"), 4))
+      .withColumn("psim", round(Native(dotF64, $"qv", $"xhat") / ($"qnorm" * $"xnorm"), 4))
       .withColumn("srk", row_number().over(wShort))
       .filter($"srk" <= RerankShortlist)
       .select($"query_id", $"neighbor_id")
@@ -1023,7 +1015,7 @@ object Similarity {
     e.select($"vec_id".as("neighbor_id"), $"v".as("cv"), $"norm".as("cnorm"))
       .join(broadcast(shortlist), Seq("neighbor_id"))
       .join(probeVecs, Seq("query_id"))
-      .withColumn("sim", round(expr("dot_f64(qv, cv)") / ($"qnorm" * $"cnorm"), 4))
+      .withColumn("sim", round(Native(dotF64, $"qv", $"cv") / ($"qnorm" * $"cnorm"), 4))
       .withColumn("rk", row_number().over(w).cast("long"))
       .filter($"rk" <= K)
       .select($"query_id", $"neighbor_id", $"rk", $"sim")
@@ -1068,8 +1060,7 @@ object Similarity {
     lastDir = Some(d)
     var cents = init
     for (r <- 1 until KmRounds) {
-      val nearest = graft.functions.FittedExpr.bind(spark, s"km_cell_r$r",
-        exprs => graft.functions.NearestCell(exprs.head, cents), $"v")
+      val nearest = Native(es => NearestCell(es.head, cents), $"v")
       val rows = e.withColumn("cell", nearest)
         .select($"cell", posexplode($"v").as(Seq("dim", "x")))
         .groupBy($"cell", $"dim")
@@ -1083,8 +1074,7 @@ object Similarity {
       }
       cents = next
     }
-    val nearest = graft.functions.FittedExpr.bind(spark, s"km_cell_r$KmRounds",
-      exprs => graft.functions.NearestCell(exprs.head, cents), $"v")
+    val nearest = Native(es => NearestCell(es.head, cents), $"v")
     e.withColumn("cell", nearest)
       .select($"cell".cast("long").as("cell"),
         posexplode($"v").as(Seq("dim", "x")))
@@ -1126,9 +1116,9 @@ object Similarity {
     val wVec = Window.partitionBy($"vec_id")
       .orderBy($"key".asc, $"cell".asc)
     val perVec = e
-      .withColumn("n2", expr("dot_f64(v, v)"))
+      .withColumn("n2", Native(dotF64, $"v", $"v"))
       .crossJoin(broadcast(centsDf))
-      .withColumn("key", expr("-2 * dot_f64(v, cv) + cn2"))
+      .withColumn("key", lit(-2) * Native(dotF64, $"v", $"cv") + $"cn2")
       .withColumn("r", row_number().over(wVec))
       .groupBy($"vec_id")
       .agg(
@@ -1233,11 +1223,12 @@ object Similarity {
       .select($"vec_id", $"v", $"norm")
     val q = e.filter($"vec_id" < NumQueries)
       .select($"vec_id".as("query_id"), $"v".as("qv"), $"norm".as("qnorm"))
-    val e4 = (dot: String, n1: String, n2: String) =>
-      expr(s"CAST(round(round(dot_f64($dot) / ($n1 * $n2), 4) * 10000, 0) AS BIGINT)")
+    val e4 = (a: String, b: String, n1: String, n2: String) =>
+      round(round(Native(dotF64, col(a), col(b)) / (col(n1) * col(n2)), 4) * 10000, 0)
+        .cast("bigint")
     val shortlist = e.crossJoin(broadcast(q))
       .filter($"vec_id" =!= $"query_id")
-      .withColumn("rel_e4", e4("qv, v", "qnorm", "norm"))
+      .withColumn("rel_e4", e4("qv", "v", "qnorm", "norm"))
       .withColumn("rk",
         row_number().over(w.orderBy($"rel_e4".desc, $"vec_id")))
       .filter($"rk" <= MmrShortlist)
@@ -1248,7 +1239,7 @@ object Similarity {
       .join(shortlist.select($"query_id", $"vec_id".as("b_id"),
         $"v".as("bv"), $"norm".as("bn")), Seq("query_id"))
       .filter($"a_id" =!= $"b_id")
-      .withColumn("s_e4", e4("av, bv", "an", "bn"))
+      .withColumn("s_e4", e4("av", "bv", "an", "bn"))
       .select($"query_id", $"a_id", $"b_id", $"s_e4")
     val cands = shortlist.select($"query_id", $"vec_id", $"rel_e4")
     // The greedy itself runs ON THE DRIVER over the collected shortlist

@@ -2,8 +2,9 @@ package graft.text
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftnative.Native
 import graft.Tables
-import graft.functions.{BpeMergeSeq, FittedExpr}
+import graft.functions.BpeMergeSeq
 
 /** Distributed BPE vocabulary learning — the tokenizer-construction step
   * of a training-data pipeline (Sennrich et al. 2016, the subword
@@ -108,8 +109,7 @@ object Bpe {
             // compiling a k-deep nested merge chain (BpeMergeSeq
             // scaladoc; the fold spelling recompiled every round)
             val table = merges.result().map(m => (m._1, m._2))
-            cur = base.withColumn("s", FittedExpr.bind(
-              spark, "bpe_merge_seq", es => BpeMergeSeq(es.head, table), $"s"))
+            cur = base.withColumn("s", Native(es => BpeMergeSeq(es.head, table), $"s"))
           }
           k += 1
         }
@@ -136,9 +136,7 @@ object Bpe {
   def bpeVocab(spark: SparkSession, d: String): DataFrame = {
     import spark.implicits._
     val table = learn(spark, d).map(m => (m._1, m._2))
-    val seg =
-      FittedExpr.bind(spark, "bpe_merge_seq", es => BpeMergeSeq(es.head, table),
-        chars($"w"))
+    val seg = Native(es => BpeMergeSeq(es.head, table), chars($"w"))
     words(spark, d).drop("s")
       .select($"w".as("word"), $"f", array_join(seg, " ").as("seg"))
   }

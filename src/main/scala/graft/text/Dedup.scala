@@ -1,8 +1,12 @@
 package graft.text
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftnative.Native
 import graft.Tables
+import graft.functions.{DistinctGramHashes, HammingPairStructs, HotWeight, NewPairStructs,
+  OrderedPairStructs, PosGramHashes, SimHashSig, WinnowFps}
 
 /** Deduplication suite over the documents table — the core of any
   * 100 TB training-data pipeline. Four tiers:
@@ -163,19 +167,15 @@ object Dedup {
     */
   def signatures(spark: SparkSession, d: String): DataFrame = {
     import spark.implicits._
-    registerMinhashSig(spark)
     Tables.documents(spark, d)
       .withColumn("t", TextAnalysis.toks($"text"))
       .filter(size($"t") >= 3)
-      .select($"doc_id", expr("minhash_sig(t)").as("sig"))
+      .select($"doc_id", Native(minhashSig, $"t").as("sig"))
   }
 
-  private def registerMinhashSig(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "minhash_sig",
-      exprs => graft.functions.MinHashSig(
-        exprs.head, perms.map(_._1).toArray, perms.map(_._2).toArray, MinhashPrime),
-      "built-in")
+  private def minhashSig(es: Seq[Expression]): Expression =
+    graft.functions.MinHashSig(
+      es.head, perms.map(_._1).toArray, perms.map(_._2).toArray, MinhashPrime)
 
   /** Candidate pairs via banded LSH + signature-estimated Jaccard.
     * DuckDB-oracled (see [[minhashOracle]]): the base hash is an md5
@@ -261,17 +261,15 @@ object Dedup {
     // r12 spelling joined a separate flag frame back on doc_id because
     // the aggregate-built signatures had already lost the source column;
     // the in-row signature keeps the whole row available)
-    registerMinhashSig(spark)
     // r14: the in-bucket pair explode runs as the native NewPairStructs
     // kernel with the (x.is_new OR y.is_new) pair filter folded in — the
     // nested lambda spelling it replaces is pinned by
     // NativeKernelExprSpec and still replayed by the oracle.
-    graft.functions.NewPairStructs.register(spark)
     val sigs = Tables.documents(spark, d)
       .withColumn("t", TextAnalysis.toks($"text"))
       .filter(size($"t") >= 3)
       .select($"doc_id", ($"source" === IncrementalSource).as("is_new"),
-        expr("minhash_sig(t)").as("sig"))
+        Native(minhashSig, $"t").as("sig"))
       .transform(graft.Ckpt.cut)
     val bands = sigs.select(
       $"doc_id", $"is_new",
@@ -284,7 +282,7 @@ object Dedup {
       .groupBy($"band", $"band_key")
       .agg(collect_list(struct($"doc_id", $"is_new")).as("ds"))
       .filter(size($"ds") > 1 && size($"ds") <= MaxBucket)
-      .select(explode(expr("new_pair_structs(ds)")).as("p"))
+      .select(explode(Native(es => NewPairStructs(es.head), $"ds")).as("p"))
       .select($"p.a".as("doc_a"), $"p.b".as("doc_b"),
         when($"p.nn", "new-new").otherwise("new-corpus").as("pair_type"))
       .distinct()
@@ -418,11 +416,10 @@ object Dedup {
     // distinct-token stream on doc_id only to compute this per-document
     // value (guide §2.4 — same removal as the minhash signatures).
     // hi may set the sign bit; bits extract with >>> so that is harmless.
-    graft.functions.SimHashSig.register(spark)
     Tables.documents(spark, d)
       .withColumn("t", TextAnalysis.toks($"text"))
       .filter(size($"t") >= 1)
-      .select($"doc_id", expr("simhash_sig(t)").as("sim"))
+      .select($"doc_id", Native(es => SimHashSig(es.head), $"t").as("sim"))
       .select($"doc_id",
         $"sim".bitwiseAND(0xFFFFFFFFL).as("sim_lo"),
         shiftrightunsigned($"sim", 32).as("sim_hi"))
@@ -457,7 +454,6 @@ object Dedup {
     // r14: the in-bucket pair+hamming explode runs as the native
     // HammingPairStructs kernel (the lambda spelling is pinned by
     // NativeKernelExprSpec; the oracle replays it unchanged).
-    graft.functions.HammingPairStructs.register(spark)
     val docs = simhashDocs(spark, d)
     val chunked = docs.select(
       struct($"doc_id", $"sim_lo", $"sim_hi").as("ds"),
@@ -472,7 +468,7 @@ object Dedup {
       .groupBy($"chunk", $"chunk_val")
       .agg(collect_list($"ds").as("ds"))
       .filter(size($"ds") > 1 && size($"ds") <= MaxBucket)
-      .select(explode(expr("hamming_pair_structs(ds)")).as("p"))
+      .select(explode(Native(es => HammingPairStructs(es.head), $"ds")).as("p"))
       .select($"p.a".as("doc_a"), $"p.b".as("doc_b"),
         $"p.h".cast("long").as("hamming"))
       .filter($"hamming" <= MaxHamming)
@@ -665,8 +661,8 @@ object Dedup {
     // higher-order-function lambdas were CodegenFallback — every k-gram
     // walked an interpreted md5 expression tree per element (the r1
     // gram-spelling measurement, ~2 s of a ~3 s query at sf0.1)
-    graft.functions.WinnowFps.register(tokenized.sparkSession, WinnowK, WinnowW)
-    tokenized.select($"doc_id", explode(expr("winnow_fps(t)")).as("fp"))
+    tokenized.select($"doc_id",
+      explode(Native(es => WinnowFps(es.head, WinnowK, WinnowW), $"t")).as("fp"))
   }
 
   def winnowPairs(spark: SparkSession, d: String): DataFrame = {
@@ -736,7 +732,6 @@ object Dedup {
   /** Same, over an already-tokenized (doc_id, t) frame (spec access). */
   def prefixJaccardPairsOf(tokenized: DataFrame): DataFrame = {
     import tokenized.sparkSession.implicits._
-    val spark = tokenized.sparkSession
     val (num, den) = (PrefixJaccNum, PrefixJaccDen)
     val docs = tokenized
       .select($"doc_id", array_distinct($"t").as("dt"))
@@ -749,19 +744,14 @@ object Dedup {
       .orderBy($"df".desc, $"tok")
       .limit(PrefixHotCap)
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    // fitted per corpus, so bound under a fresh name (inside a lambda,
-    // hence bindName + SQL splice rather than a Column)
-    val hotFn = graft.functions.FittedExpr.bindName(spark, "hot_weight",
-      exprs => graft.functions.HotWeight(exprs.head, hot))
     val prefixes = docs
       .withColumn("n", size($"dt").cast("long"))
       // prefix length |d| - ceil(t*|d|) + 1, ceil in integer arithmetic
       .withColumn("plen", expr(s"n - (n * $num + $den - 1) DIV $den + 1"))
-      .withColumn("srt", expr(
-        s"""sort_array(transform(dt, t -> named_struct(
-          |  'w', coalesce($hotFn(t),
-          |               cast(conv(substring(md5(t), 1, 15), 16, 10) as bigint)),
-          |  'tok', t)))""".stripMargin))
+      .withColumn("srt", sort_array(transform($"dt", t => named_struct(
+        lit("w"), coalesce(Native(es => HotWeight(es.head, hot), t),
+          conv(substring(md5(t), 1, 15), 16, 10).cast("bigint")),
+        lit("tok"), t))))
       .select($"doc_id", $"dt",
         explode(slice($"srt", lit(1), $"plen".cast("int"))).as("p"))
       .select($"p.tok".as("tok"), $"doc_id", $"dt")
@@ -896,10 +886,9 @@ object Dedup {
     // and per-doc sorted it just to reassemble consecutive runs the
     // native expression reads off the array — posexplode's 0-based
     // position is exactly the old window `pos`
-    graft.functions.PosGramHashes.register(tokenized.sparkSession, SpanK)
     val grams = tokenized
       .select($"doc_id",
-        posexplode(expr(s"pos_gram_hashes$SpanK(t)")).as(Seq("pos", "h")))
+        posexplode(Native(es => PosGramHashes(es.head, SpanK), $"t")).as(Seq("pos", "h")))
       .select($"doc_id", $"pos".cast("long").as("pos"), $"h")
     // positional matches: bucket on the gram hash, explode cross-doc
     // (doc, pos) pairs inside the bucket, ordered so doc_a < doc_b
@@ -1066,7 +1055,6 @@ object Dedup {
     */
   def containmentPairs(spark: SparkSession, d: String): DataFrame = {
     import spark.implicits._
-    graft.functions.DistinctGramHashes.register(spark, ContainK)
     // r14: the in-bucket pair explode runs as the native
     // OrderedPairStructs kernel — the nested flatten/transform/filter
     // lambda spelling it replaces (pinned bit-for-bit by
@@ -1074,16 +1062,15 @@ object Dedup {
     // CodegenFallback: interpreted per element with a filter() sub-array
     // per element, ~0.5 s of this query's ~2.2 s warm wall (ContainProbe
     // stage split).
-    graft.functions.OrderedPairStructs.register(spark)
     val gn = Tables.documents(spark, d)
       .select($"doc_id", TextAnalysis.toks($"text").as("t"))
-      .select($"doc_id", expr(s"distinct_gram_hashes$ContainK(t)").as("hs"))
+      .select($"doc_id", Native(es => DistinctGramHashes(es.head, ContainK), $"t").as("hs"))
       .select($"doc_id", size($"hs").cast("long").as("n_doc"),
         explode($"hs").as("h"))
     gn.groupBy($"h")
       .agg(collect_list(struct($"doc_id", $"n_doc")).as("ds"))
       .filter(size($"ds") > 1 && size($"ds") <= MaxBucket)
-      .select(explode(expr("ordered_pair_structs(ds)")).as("p"))
+      .select(explode(Native(es => OrderedPairStructs(es.head), $"ds")).as("p"))
       .groupBy($"p.doc_a".as("doc_a"), $"p.doc_b".as("doc_b"),
         $"p.n_a".as("n_a"), $"p.n_b".as("n_b"))
       .agg(count(lit(1)).as("inter"))

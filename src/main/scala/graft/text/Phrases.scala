@@ -2,6 +2,8 @@ package graft.text
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftnative.Native
+import graft.functions.{Grams, RakePhrases}
 import graft.Tables
 
 /** Collocation mining for the tokenizer/embedding tier: phrase
@@ -46,10 +48,9 @@ object Phrases {
     val uni = toks.groupBy($"tok").agg(count(lit(1)).as("n1"))
     // adjacent pairs in-row (r13 native Grams — the lead-window
     // spelling shuffled the token stream on doc_id to see one neighbor)
-    graft.functions.Grams.register(spark, 2)
     val pairs = Tables.documents(spark, d)
       .withColumn("t", TextAnalysis.toks($"text"))
-      .select(explode(expr("grams2(t)")).as("bg"))
+      .select(explode(Native(es => Grams(es.head, 2), $"t")).as("bg"))
       .groupBy($"bg").agg(count(lit(1)).as("n12")) // key = the joined pair
       .filter($"n12" >= MinPairCount)
       // split once per DISTINCT pair (tokens are whitespace-split, so
@@ -89,10 +90,9 @@ object Phrases {
     // join-backs (guide §2.4). NativeKernelExprSpec pins the kernel
     // against the window spelling; the DuckDB oracle still replays the
     // window.
-    graft.functions.RakePhrases.register(spark, stop)
     val toks = Tables.documents(spark, d)
       .withColumn("t", TextAnalysis.toks($"text"))
-      .select($"doc_id", explode(expr("rake_phrases(t)")).as("x"))
+      .select($"doc_id", explode(Native(es => RakePhrases(es.head, stop), $"t")).as("x"))
       .select($"doc_id", $"x.pos".as("pos"), $"x.tok".as("tok"),
         $"x.grp".as("grp"), $"x.plen".as("plen"))
       .transform(graft.Ckpt.cut) // feeds word stats, scores, and the

@@ -2,6 +2,8 @@ package graft.text
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftnative.Native
+import graft.functions.DistinctGrams
 import graft.Tables
 
 /** Text-analysis operators for a large-scale training-data pipeline:
@@ -275,10 +277,9 @@ object TextAnalysis {
     // distinct exchange — exploded rows are already unique per doc.
     // Gram STRINGS (not hashes) stay the window key below because the
     // oracle groups on the string — collision semantics must match.
-    graft.functions.DistinctGrams.register(spark, 3)
     val grams = Tables.documents(spark, d)
       .withColumn("t", toks($"text"))
-      .select($"doc_id", explode(expr("distinct_grams3(t)")).as("gram"))
+      .select($"doc_id", explode(Native(es => DistinctGrams(es.head, 3), $"t")).as("gram"))
     // first-owner via a PARTITIONED window min on one gram exchange —
     // the former owner-aggregate + gram-keyed join-back paid two
     // exchanges of the gram stream plus the checkpoint that fed them
@@ -333,10 +334,9 @@ object TextAnalysis {
     // lead-window build paid a doc_id exchange + per-doc sort); the
     // (source, gram) distinct below still runs (cross-doc within a
     // source), but over the per-doc-deduped stream
-    graft.functions.DistinctGrams.register(spark, 3)
     val sg = Tables.documents(spark, d)
       .withColumn("t", toks($"text"))
-      .select($"source", explode(expr("distinct_grams3(t)")).as("gram"))
+      .select($"source", explode(Native(es => DistinctGrams(es.head, 3), $"t")).as("gram"))
       .distinct()
       .transform(graft.Ckpt.cut) // vocab-bounded; totals + pair join consumers
     val tot = sg.groupBy($"source").agg(count(lit(1)).as("n_grams"))

@@ -3,6 +3,8 @@ package graft.text
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftnative.Native
+import graft.functions.{DistinctGramHashes, Grams}
 import graft.Tables
 
 /** Additional corpus-analysis operators for the training-data pipeline
@@ -29,10 +31,9 @@ object TextExtras {
     val wTop = Window.orderBy($"n".desc, $"bigram")
     // bigrams in-row (r13 native Grams — the lead-window spelling paid
     // a doc_id exchange + per-doc sort of the token stream)
-    graft.functions.Grams.register(spark, 2)
     Tables.documents(spark, d)
       .withColumn("t", TextAnalysis.toks($"text"))
-      .select(explode(expr("grams2(t)")).as("bigram"))
+      .select(explode(Native(es => Grams(es.head, 2), $"t")).as("bigram"))
       .groupBy($"bigram")
       .agg(count(lit(1)).as("n"))
       // orderBy+limit compiles to TakeOrderedAndProject — a distributed
@@ -155,11 +156,10 @@ object TextExtras {
     // DistinctGramHashes): drops BOTH the lead-window build's doc_id
     // exchange and the (doc_id, h) distinct exchange — exploded rows
     // are already unique per document
-    graft.functions.DistinctGramHashes.register(spark, OverlapN)
     val grams = Tables.documents(spark, d)
       .withColumn("t", TextAnalysis.toks($"text"))
       .select($"doc_id",
-        explode(expr(s"distinct_gram_hashes$OverlapN(t)")).as("h"))
+        explode(Native(es => DistinctGramHashes(es.head, OverlapN), $"t")).as("h"))
     // per-gram document frequency as a PARTITIONED window count instead
     // of a groupBy(h) + join-back: the window reads the distinct gram
     // stream once on an h exchange and emits gdf in place, where the

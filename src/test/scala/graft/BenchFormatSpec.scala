@@ -43,6 +43,20 @@ class BenchFormatSpec extends AnyFunSuite {
       .findFirstIn(line.replaceAll(" ", "")).isDefined, line)
   }
 
+  test("summary counts a failed query, names it, and keeps it out of the timings") {
+    val rs = fakeResults(3)
+    val line = Bench.summaryLine(rs, "sfX", Seq("q_broken"))
+    assert(line.contains(""""n":3,"""), line)
+    assert(line.contains(""""n_failed":1,"failed":["q_broken"]"""), line)
+    assert(line.contains(s""""total_s":${BigDecimal(rs.map(_._2).sum)
+      .setScale(3, BigDecimal.RoundingMode.HALF_UP)},"""), line)
+    // many failures stay within the tail-capture bound
+    val worst = Bench.summaryLine(fakeResults(450), "sfX",
+      fakeResults(450).map(_._1))
+    assert(worst.length < 1500, s"summary line ${worst.length} chars with 450 failures")
+    assert(worst.contains(""""n_failed":450,"""))
+  }
+
   test("concurrency line carries level, wall vs summed walls, and per-query seconds") {
     val rs = Seq(("q_b", 2.5), ("q_a", 1.25))
     val line = BenchConcurrency.line(4, 2.75, rs, "sfX")

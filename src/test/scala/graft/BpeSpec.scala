@@ -1,8 +1,9 @@
 package graft
 
-import graft.functions.{BpeMerge, FittedExpr}
+import graft.functions.BpeMerge
 import graft.text.Bpe
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftnative.Native
 
 /** Semantics of the BPE vocabulary learner independent of the DuckDB
   * oracle (which value-checks the fixture corpus end-to-end): the native
@@ -46,7 +47,7 @@ class BpeSpec extends SparkSpec {
 
   private def mergeViaExpr(s: Seq[String], l: String, r: String): Seq[String] =
     Seq(Tuple1(s)).toDF("s")
-      .select(FittedExpr.bind(spark, "bpe_merge",
+      .select(Native(
         es => BpeMerge(es.head, l, r), $"s").as("m"))
       .collect().head.getSeq[String](0)
 

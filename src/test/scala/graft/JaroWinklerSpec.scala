@@ -2,6 +2,7 @@ package graft
 
 import graft.functions.JaroWinkler
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftnative.Native
 import org.apache.spark.unsafe.types.UTF8String
 
 /** The native Jaro-Winkler expression: bit-exactness against values
@@ -47,17 +48,16 @@ class JaroWinklerSpec extends SparkSpec {
   }
 
   test("codegen path == compute(): registered function over a DataFrame") {
-    JaroWinkler.register(spark)
     val pairs = Seq(
       ("martha", "marhta"), ("dixon", "dicksonx"), ("cold bolt", "old bolt"),
       ("", "x"), ("same", "same"), ("abcdef", "bcadef"))
     val fromPlan = pairs.toDF("a", "b")
-      .select(expr("jaro_winkler(a, b)").as("v"))
+      .select(Native(es => JaroWinkler(es(0), es(1)), $"a", $"b").as("v"))
       .collect().map(_.getDouble(0)).toSeq
     assert(fromPlan == pairs.map { case (a, b) => jw(a, b) })
     // null propagation through the binary expression
     val withNull = Seq((Some("x"), None: Option[String])).toDF("a", "b")
-      .select(expr("jaro_winkler(a, b)")).collect().head
+      .select(Native(es => JaroWinkler(es(0), es(1)), $"a", $"b")).collect().head
     assert(withNull.isNullAt(0))
   }
 

@@ -1,9 +1,10 @@
 package graft
 
-import graft.functions.{BpeMerge, BpeMergeSeq, DistinctGramHashes, FittedExpr,
-  RepetitionStats, WinnowFps}
+import graft.functions.{BpeMerge, BpeMergeSeq, DistinctGramHashes, RepetitionStats,
+  WinnowFps}
 import graft.text.{Dedup, TextAnalysis}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftnative.Native
 
 /** The r13 native gram expressions pinned bit-for-bit against the SQL
   * spellings they replaced (the formulations the DuckDB oracle still
@@ -30,9 +31,8 @@ class NativeGramExprSpec extends SparkSpec {
     docs.select($"doc_id", TextAnalysis.toks($"text").as("t"))
 
   test("DistinctGramHashes == distinct conv(substring(md5(gram),1,15),16,10)") {
-    DistinctGramHashes.register(spark, Dedup.ContainK)
     val native = toksDf
-      .select($"doc_id", explode(expr("distinct_gram_hashes3(t)")).as("h"))
+      .select($"doc_id", explode(Native(es => DistinctGramHashes(es.head, Dedup.ContainK), $"t")).as("h"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val k = Dedup.ContainK
     val sql = toksDf
@@ -48,16 +48,15 @@ class NativeGramExprSpec extends SparkSpec {
     assert(native === sql)
     // and the in-row set size equals the old windowed distinct count
     val sizes = toksDf
-      .select($"doc_id", size(expr("distinct_gram_hashes3(t)")).as("n"))
+      .select($"doc_id", size(Native(es => DistinctGramHashes(es.head, Dedup.ContainK), $"t")).as("n"))
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
     val sqlSizes = sql.groupBy(_._1).map { case (d, g) => d -> g.size }
     sqlSizes.foreach { case (d, n) => assert(sizes(d) === n, s"doc $d") }
   }
 
   test("WinnowFps == chained transform/array_min/array_distinct spelling") {
-    WinnowFps.register(spark, Dedup.WinnowK, Dedup.WinnowW)
     val native = toksDf
-      .select($"doc_id", expr("winnow_fps(t)").as("fps"))
+      .select($"doc_id", Native(es => WinnowFps(es.head, Dedup.WinnowK, Dedup.WinnowW), $"t").as("fps"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     val kgrams = when(size($"t") >= Dedup.WinnowK,
       transform(sequence(lit(0), size($"t") - Dedup.WinnowK),
@@ -76,9 +75,8 @@ class NativeGramExprSpec extends SparkSpec {
   }
 
   test("RepetitionStats == explode/groupBy gram-stats spelling (incl NULLs)") {
-    RepetitionStats.register(spark)
     val native = toksDf
-      .select($"doc_id", expr("repetition_stats(t)").as("rs"))
+      .select($"doc_id", Native(es => RepetitionStats(es.head), $"t").as("rs"))
       .select($"doc_id", $"rs.top2_chars", $"rs.dup5_chars")
       .collect()
       .map(r => r.getLong(0) ->
@@ -118,11 +116,8 @@ class NativeGramExprSpec extends SparkSpec {
   }
 
   test("Grams / DistinctGrams / PosGramHashes == the SQL spellings") {
-    graft.functions.Grams.register(spark, 2)
-    graft.functions.DistinctGrams.register(spark, 3)
-    graft.functions.PosGramHashes.register(spark, 6)
     // Grams(2) == transform(sequence, concat_ws(slice)) in order
-    val g2n = toksDf.select($"doc_id", expr("grams2(t)").as("g"))
+    val g2n = toksDf.select($"doc_id", Native(es => graft.functions.Grams(es.head, 2), $"t").as("g"))
       .collect().map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
     val g2s = toksDf.select($"doc_id",
       when(size($"t") >= 2, expr(
@@ -131,7 +126,7 @@ class NativeGramExprSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
     assert(g2n === g2s)
     // DistinctGrams(3) == array_distinct of the transform spelling
-    val d3n = toksDf.select($"doc_id", expr("distinct_grams3(t)").as("g"))
+    val d3n = toksDf.select($"doc_id", Native(es => graft.functions.DistinctGrams(es.head, 3), $"t").as("g"))
       .collect().map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
     val d3s = toksDf.select($"doc_id",
       when(size($"t") >= 3, array_distinct(expr(
@@ -141,7 +136,7 @@ class NativeGramExprSpec extends SparkSpec {
     assert(d3n === d3s)
     // PosGramHashes(6) == positional conv(substring(md5(gram),1,15),16,10)
     val p6n = toksDf.select($"doc_id",
-      posexplode(expr("pos_gram_hashes6(t)")).as(Seq("pos", "h")))
+      posexplode(Native(es => graft.functions.PosGramHashes(es.head, 6), $"t")).as(Seq("pos", "h")))
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
     val p6s = toksDf
       .select($"doc_id", posexplode(when(size($"t") >= 6, expr(
@@ -162,23 +157,22 @@ class NativeGramExprSpec extends SparkSpec {
     val inRow = {
       val toksD = corpus.withColumn("t", TextAnalysis.toks($"text"))
         .filter(size($"t") >= 3)
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "minhash_sig_test",
+      val sig = Native(
         es => graft.functions.MinHashSig(es.head,
           Dedup.permConstants.map(_._1).toArray,
           Dedup.permConstants.map(_._2).toArray, Dedup.MinhashPrime),
-        "built-in")
-      toksD.select($"doc_id", expr("minhash_sig_test(t)").as("sig"))
+        $"t")
+      toksD.select($"doc_id", sig.as("sig"))
         .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     }
     val viaAgg = {
       val wd = Window.partitionBy($"doc_id").orderBy($"pos")
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "minhash_agg_test",
+      val agg = Native(
         es => graft.functions.MinHashAgg(es.head,
           Dedup.permConstants.map(_._1).toArray,
-          Dedup.permConstants.map(_._2).toArray, Dedup.MinhashPrime),
-        "built-in")
+          Dedup.permConstants.map(_._2).toArray, Dedup.MinhashPrime)
+          .toAggregateExpression(),
+        $"h")
       corpus.withColumn("t", TextAnalysis.toks($"text"))
         .filter(size($"t") >= 3)
         .select($"doc_id", posexplode($"t").as(Seq("pos", "tok")))
@@ -187,7 +181,7 @@ class NativeGramExprSpec extends SparkSpec {
         .filter($"t2".isNotNull)
         .withColumn("s", concat_ws(" ", $"tok", $"t1", $"t2"))
         .withColumn("h", Dedup.md5Prefix32($"s", 1))
-        .groupBy($"doc_id").agg(expr("minhash_agg_test(h)").as("sig"))
+        .groupBy($"doc_id").agg(agg.as("sig"))
         .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     }
     assert(inRow.keySet === viaAgg.keySet)
@@ -200,16 +194,15 @@ class NativeGramExprSpec extends SparkSpec {
         .select(($"doc_id" + 900000L).as("doc_id"), $"text")) // no id collision
       .withColumn("t", TextAnalysis.toks($"text"))
       .filter(size($"t") >= 1)
-    graft.functions.SimHashSig.register(spark)
-    graft.functions.SimHashAgg.register(spark)
-    val inRow = corpus.select($"doc_id", expr("simhash_sig(t)").as("sim"))
+    val inRow = corpus.select($"doc_id", Native(es => graft.functions.SimHashSig(es.head), $"t").as("sim"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val viaAgg = corpus
       .select($"doc_id", explode(array_distinct($"t")).as("tok"))
       .withColumn("h",
         shiftleft(Dedup.md5Prefix32($"tok", 9), 32)
           .bitwiseOR(Dedup.md5Prefix32($"tok", 1)))
-      .groupBy($"doc_id").agg(expr("simhash_agg(h)").as("sim"))
+      .groupBy($"doc_id")
+      .agg(Native(es => graft.functions.SimHashAgg(es.head).toAggregateExpression(), $"h").as("sim"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(inRow === viaAgg)
   }
@@ -226,9 +219,9 @@ class NativeGramExprSpec extends SparkSpec {
     val merges = Seq(("a", "a"), ("aa", "aa"), ("l", "o"), ("lo", "w"))
     val nested = arrs.select(
       merges.foldLeft(col("s")) { case (c, (l, r)) =>
-        FittedExpr.bind(spark, "bpe_merge", es => BpeMerge(es.head, l, r), c)
+        Native(es => BpeMerge(es.head, l, r), c)
       }.as("m")).collect().map(_.getSeq[String](0))
-    val table = arrs.select(FittedExpr.bind(spark, "bpe_merge_seq",
+    val table = arrs.select(Native(
       es => BpeMergeSeq(es.head, merges), $"s").as("m"))
       .collect().map(_.getSeq[String](0))
     assert(table.toSeq === nested.toSeq)

@@ -1,16 +1,17 @@
 package graft
 
-import graft.functions.{BootMultipliers, PairStructs, SegBucket}
+import graft.functions.{PairStructs, SegBucket}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftnative.Native
 
 /** The r14 native kernels pinned bit-for-bit against the SQL spellings
   * they replaced (which the DuckDB oracle still replays):
   *
   *  - [[PairStructs]] vs the nested flatten/transform/slice lambda
   *    (basket_pairs / basket_rules pair explode);
-  *  - [[BootMultipliers]] vs the explode(sequence) + md5-hex +
-  *    conv(substring) lanes + threshold when-chain draw pipeline
-  *    (bootstrap_ci / ab_uplift_bootstrap);
+  *  - [[graft.functions.BootFold]] vs the explode(sequence) + md5-hex +
+  *    conv(substring) lanes + threshold when-chain draw pipeline and
+  *    groupBy(b) sums (bootstrap_ci / ab_uplift_bootstrap);
   *  - [[SegBucket]] vs the inline when-chain + integral div bucket
   *    assignment (FreqSelect's narrowing passes), on both the long and
   *    decimal paths.
@@ -19,7 +20,6 @@ class NativeKernelExprSpec extends SparkSpec {
   import spark.implicits._
 
   test("PairStructs == flatten(transform(..., slice ...)) ordered pairs") {
-    PairStructs.register(spark)
     val baskets = Seq(
       (1L, Seq(1L, 2L, 3L, 4L)),
       (2L, Seq(10L)),           // single item: no pairs
@@ -28,7 +28,7 @@ class NativeKernelExprSpec extends SparkSpec {
       (5L, (1L to 12L))         // larger basket
     ).toDF("k", "basket")
     val native = baskets
-      .select($"k", explode(expr("pair_structs(basket)")).as("p"))
+      .select($"k", explode(Native(es => PairStructs(es.head), $"basket")).as("p"))
       .select($"k", $"p.part_a", $"p.part_b")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq.sorted
     val sql = baskets
@@ -43,48 +43,33 @@ class NativeKernelExprSpec extends SparkSpec {
     assert(native.count(_._1 == 5L) === 12 * 11 / 2)
   }
 
-  test("BootMultipliers == md5-hex lane + threshold when-chain draws") {
-    val b = relational.StatModels.BootB
-    BootMultipliers.register(
-      spark, b, relational.StatModels.bootThresholds.toArray)
-    val keys = Seq("1", "42:2024-03-01", "999999999", "héllo:2020-01-31", "0")
-      .toDF("key")
-    val native = keys
-      .select($"key", posexplode(expr("boot_multipliers(key)"))
-        .as(Seq("b", "m")))
-      .collect().map(r => (r.getString(0), r.getInt(1), r.getLong(2))).toSet
-    val sql = keys
-      .select($"key", explode(sequence(lit(0), lit(b / 4 - 1))).as("g"))
-      .withColumn("h", md5(concat($"key", lit(":"), $"g".cast("string"))))
-      .select($"key", $"g",
-        posexplode(array((0 until 4).map(l =>
-          expr(s"conv(substring(h, ${1 + 8 * l}, 8), 16, 10)")
-            .cast("double") / lit(4294967296e0)): _*))
-          .as(Seq("lane", "u")))
-      .select($"key", ($"g" * 4 + $"lane").as("b"),
-        relational.StatModels.poissonMultiplier($"u").as("m"))
-      .collect().map(r => (r.getString(0), r.getInt(1), r.getLong(2))).toSet
-    assert(native === sql)
-    assert(native.size === keys.count() * b)
-  }
-
   test("BootFold == explode + groupBy(b) sums over the same multipliers") {
     val b = relational.StatModels.BootB
     val thr = relational.StatModels.bootThresholds.toArray
-    BootMultipliers.register(spark, b, thr)
-    val rows = Seq(("7", 100L, 3L), ("8", 250L, 1L), ("9:x", 999L, 2L))
+    val rows = Seq(("7", 100L, 3L), ("8", 250L, 1L), ("9:x", 999L, 2L),
+      ("héllo:2020-01-31", 5L, 7L), ("42:2024-03-01", 11L, 13L))
       .toDF("key", "w1", "w2")
-    val foldC = graft.functions.FittedExpr.bind(spark, "boot_fold_test",
-      es => graft.functions.BootFold(es(0), es(1), b, 2, thr),
+    val foldC = Native(
+      es => graft.functions.BootFold(es(0), es(1), b, 2, thr).toAggregateExpression(),
       col("key"), array(col("w1"), col("w2")))
     val native = rows.agg(foldC.as("cells"))
       .select(posexplode(col("cells")).as(Seq("b", "s")))
       .select(col("b"), element_at(col("s"), 1).as("s1"),
         element_at(col("s"), 2).as("s2"))
       .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSet
+    // the md5-hex lane + threshold when-chain draw spelling the DuckDB
+    // oracle replays
     val grouped = rows
-      .select(col("w1"), col("w2"),
-        posexplode(expr("boot_multipliers(key)")).as(Seq("b", "m")))
+      .select(col("w1"), col("w2"), $"key",
+        explode(sequence(lit(0), lit(b / 4 - 1))).as("g"))
+      .withColumn("h", md5(concat($"key", lit(":"), $"g".cast("string"))))
+      .select(col("w1"), col("w2"), $"g",
+        posexplode(array((0 until 4).map(l =>
+          expr(s"conv(substring(h, ${1 + 8 * l}, 8), 16, 10)")
+            .cast("double") / lit(4294967296e0)): _*))
+          .as(Seq("lane", "u")))
+      .select(col("w1"), col("w2"), ($"g" * 4 + $"lane").as("b"),
+        relational.StatModels.poissonMultiplier($"u").as("m"))
       .groupBy(col("b"))
       .agg(sum(col("m") * col("w1")).as("s1"), sum(col("m") * col("w2")).as("s2"))
       .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSet
@@ -93,7 +78,6 @@ class NativeKernelExprSpec extends SparkSpec {
   }
 
   test("OrderedPairStructs == containment bucket lambda (id-ordered 4-field pairs)") {
-    graft.functions.OrderedPairStructs.register(spark)
     val buckets = Seq(
       (1L, Seq((5L, 10L), (2L, 7L), (9L, 3L))),
       (2L, Seq((4L, 4L))),                       // singleton: no pairs
@@ -107,7 +91,7 @@ class NativeKernelExprSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
       .toSeq.sorted
     val native = rows(buckets
-      .select($"k", explode(expr("ordered_pair_structs(ds)")).as("p")))
+      .select($"k", explode(Native(es => graft.functions.OrderedPairStructs(es.head), $"ds")).as("p")))
     val sql = rows(buckets.select($"k", explode(expr(
       """flatten(transform(ds, (x, i) ->
         |  transform(filter(ds, (y, j) -> j > i), y -> named_struct(
@@ -123,7 +107,6 @@ class NativeKernelExprSpec extends SparkSpec {
   }
 
   test("NewPairStructs == incremental bucket lambda with the OR filter folded in") {
-    graft.functions.NewPairStructs.register(spark)
     val buckets = Seq(
       (1L, Seq((5L, true), (2L, false), (9L, true), (1L, false))),
       (2L, Seq((4L, false), (6L, false))),   // no new docs: zero pairs
@@ -136,7 +119,7 @@ class NativeKernelExprSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getBoolean(3)))
       .toSeq.sorted
     val native = rows(buckets
-      .select($"k", explode(expr("new_pair_structs(ds)")).as("p")))
+      .select($"k", explode(Native(es => graft.functions.NewPairStructs(es.head), $"ds")).as("p")))
     val sql = rows(buckets.select($"k", explode(expr(
       """flatten(transform(ds, (x, i) ->
         |  transform(filter(ds, (y, j) -> j > i AND (x.is_new OR y.is_new)),
@@ -151,7 +134,6 @@ class NativeKernelExprSpec extends SparkSpec {
   }
 
   test("HammingPairStructs == simhash/phash bucket lambda (xor bit counts)") {
-    graft.functions.HammingPairStructs.register(spark)
     val buckets = Seq(
       (1L, Seq((5L, 0x0FL, -1L), (2L, 0xF0L, -1L), (9L, 0x0FL, 0L))),
       (2L, Seq((4L, 1L, 2L))),
@@ -164,7 +146,7 @@ class NativeKernelExprSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getInt(3)))
       .toSeq.sorted
     val native = rows(buckets
-      .select($"k", explode(expr("hamming_pair_structs(ds)")).as("p")))
+      .select($"k", explode(Native(es => graft.functions.HammingPairStructs(es.head), $"ds")).as("p")))
     val sql = rows(buckets.select($"k", explode(expr(
       """flatten(transform(ds, (x, i) ->
         |  transform(filter(ds, (y, j) -> j > i), y -> named_struct(
@@ -179,7 +161,6 @@ class NativeKernelExprSpec extends SparkSpec {
 
   test("RakePhrases == running-stopword-count window segmentation + plens") {
     val stopw = Seq("the", "a", "of", "to", "and", "in", "is", "on")
-    graft.functions.RakePhrases.register(spark, stopw)
     val docs = Seq(
       (1L, "the quick brown fox is very quick and brown"),
       (2L, "of the to and"),                  // all stopwords: no phrases
@@ -189,7 +170,7 @@ class NativeKernelExprSpec extends SparkSpec {
     ).toDF("doc_id", "text")
     val native = docs
       .withColumn("t", text.TextAnalysis.toks($"text"))
-      .select($"doc_id", explode(expr("rake_phrases(t)")).as("x"))
+      .select($"doc_id", explode(Native(es => graft.functions.RakePhrases(es.head, stopw), $"t")).as("x"))
       .select($"doc_id", $"x.pos", $"x.tok", $"x.grp", $"x.plen")
       .collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getString(2), r.getLong(3), r.getLong(4)))
@@ -234,7 +215,7 @@ class NativeKernelExprSpec extends SparkSpec {
       501L, 99999L, 100000L, 100001L)
     // long path
     val longDf = values.toDF("v")
-    val sbL = graft.functions.FittedExpr.bind(spark, "seg_bucket_test",
+    val sbL = Native(
       e => SegBucket(e.head, segs, his, ws, buckets), col("v"))
     val gotL = longDf.select(col("v"), sbL.as("p")).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -242,7 +223,7 @@ class NativeKernelExprSpec extends SparkSpec {
     // decimal path (same grid points through DECIMAL(38,0))
     val decDf = values.toDF("v0")
       .select(col("v0"), col("v0").cast("decimal(38,0)").as("v"))
-    val sbD = graft.functions.FittedExpr.bind(spark, "seg_bucket_test",
+    val sbD = Native(
       e => SegBucket(e.head, segs, his, ws, buckets), col("v"))
     val gotD = decDf.select(col("v0"), sbD.as("p")).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -254,7 +235,7 @@ class NativeKernelExprSpec extends SparkSpec {
     val bigVals = Seq(bigLo, BigInt(0), bigHi, bigLo - 1)
     val bigDf = bigVals.map(_.toString).toDF("s")
       .select(col("s"), col("s").cast("decimal(38,0)").as("v"))
-    val sbB = graft.functions.FittedExpr.bind(spark, "seg_bucket_test",
+    val sbB = Native(
       e => SegBucket(e.head, Array(bigLo), Array(bigHi), Array(bigW),
         buckets), col("v"))
     val gotB = bigDf.select(col("s"), sbB.as("p")).collect()

@@ -3,17 +3,16 @@ package graft
 import graft.multimodal.Multimodal
 import graft.sim.Similarity
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftnative.Native
 
 /** Similarity search + multimodal plumbing semantics. */
 class SimilaritySpec extends SparkSpec {
   import spark.implicits._
 
   test("native lsh_buckets64 == per-plane dot-sign recompute (bit-for-bit)") {
-    Similarity.registerLsh(spark)
-    graft.functions.DotProduct.register(spark)
     val rows = Tables.embeddings(spark, sf)
       .withColumn("v", col("embedding").cast("array<double>"))
-      .select(col("vec_id"), col("v"), expr("lsh_buckets64(v)").as("b"))
+      .select(col("vec_id"), col("v"), Native(Similarity.lshBuckets, col("v")).as("b"))
       .collect()
     assert(rows.nonEmpty)
     rows.take(200).foreach { r =>
@@ -44,11 +43,9 @@ class SimilaritySpec extends SparkSpec {
   test("native nearest_cell == shared-scoring argmin recompute (bit-for-bit)") {
     import graft.functions.NearestCell
     val cents = Similarity.fitCentroids(spark, sf)
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "nearest_cell_t", exprs => NearestCell(exprs.head, cents), "built-in")
     val rows = Tables.embeddings(spark, sf)
       .withColumn("v", col("embedding").cast("array<double>"))
-      .select(col("vec_id"), col("v"), expr("nearest_cell_t(v)").as("cell"))
+      .select(col("vec_id"), col("v"), Native(es => NearestCell(es.head, cents), col("v")).as("cell"))
       .collect()
     assert(rows.nonEmpty)
     val cn2 = NearestCell.cn2Of(cents)
@@ -62,12 +59,9 @@ class SimilaritySpec extends SparkSpec {
 
   test("native expressions yield null (not garbage) on wrong-dimension vectors") {
     import graft.functions.{LshBuckets, NearestCell}
-    Similarity.registerLsh(spark)
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "nearest_cell_n",
-      exprs => NearestCell(exprs.head, Array(Array.fill(64)(0.5))), "built-in")
     val row = Seq((1L, Seq(1.0, 2.0, 3.0))).toDF("id", "v") // 3-dim, not 64
-      .selectExpr("lsh_buckets64(v) AS b", "nearest_cell_n(v) AS c")
+      .select(Native(Similarity.lshBuckets, $"v").as("b"),
+        Native(es => NearestCell(es.head, Array(Array.fill(64)(0.5))), $"v").as("c"))
       .collect().head
     assert(row.isNullAt(0), "lsh_buckets64 must be null on dim mismatch")
     assert(row.isNullAt(1), "nearest_cell must be null on dim mismatch")

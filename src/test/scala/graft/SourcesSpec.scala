@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftnative.Native
 
 /** Source/sink coverage beyond parquet: csv, json, and the reference's
   * text format round-trip losslessly through write → read.
@@ -227,13 +228,12 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("dot_f64 yields null (not a truncated dot) on mismatched-length vectors") {
-    graft.functions.DotProduct.register(spark)
     val rows = Seq(
       (1L, Seq(1.0, 2.0, 3.0), Seq(4.0, 5.0, 6.0)), // equal length
       (2L, Seq(1.0, 2.0, 3.0), Seq(4.0, 5.0)),      // mismatch -> null
       (3L, Seq.empty[Double], Seq.empty[Double]))   // empty == empty -> 0.0
       .toDF("id", "a", "b")
-      .selectExpr("id", "dot_f64(a, b) AS d")
+      .select($"id", Native(es => graft.functions.DotProduct(es(0), es(1)), $"a", $"b").as("d"))
       .collect().map(r => r.getLong(0) -> (if (r.isNullAt(1)) None else Some(r.getDouble(1))))
       .toMap
     assert(rows(1L) === Some(32.0))
@@ -319,11 +319,10 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("native dot_f64 == interpreted zip_with dot (and codegen compiles)") {
-    graft.functions.DotProduct.register(spark)
     val e = Tables.embeddings(spark, sf)
       .withColumn("v", $"embedding".cast("array<double>"))
     val rows = e.select(
-      expr("dot_f64(v, v)").as("native"),
+      Native(es => graft.functions.DotProduct(es(0), es(1)), $"v", $"v").as("native"),
       graft.sim.Similarity.dot($"v", $"v").as("interp")).collect()
     rows.foreach(r => assert(r.getDouble(0) == r.getDouble(1)))
   }
