@@ -78,30 +78,16 @@ object AqeSkewRehearsal {
 
   def main(args: Array[String]): Unit = {
     val (sfDir, outFile) = (args(0), args(1))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val builder = SparkSession.builder().master(master)
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", "64"))
+    val master = GraftSession.master(s"local[${GraftSession.cpus("32")}]")
+    val spark = GraftSession(master, GraftSession.shufflePartitions("64"),
       // close every broadcast path: a runtime broadcast conversion would
       // dissolve the skewed shuffle this rehearsal exists to observe
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_SKEW_THRESHOLD", "32m"))
-      .config("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_SKEW_ADVISORY", "16m"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-    sys.env.get("SPARK_GRAFT_EXECUTOR_CP").foreach(cp =>
-      builder.config("spark.executor.extraClassPath", cp))
-    GraftEnv.applyExtraConf(builder)
-    GraftEnv.requireExecutorMemoryOnCluster(master)
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.adaptive.skewJoin.enabled" -> "true",
+      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "32m",
+      "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2",
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "16m")
     import spark.implicits._
 
     def run(df: DataFrame): (Seq[(String, Long, Long)], Double, SparkPlan) = {
@@ -137,17 +123,15 @@ object AqeSkewRehearsal {
         s"splits=$skewedSplits) — plan:\n$planStr")
     require(planStr.contains("skew=true"),
       s"final adaptive plan carries no skew=true join node:\n$planStr")
-    val budget = sys.env.getOrElse("SPARK_GRAFT_AQE_BUDGET", "2.0").toDouble
+    val budget = 2.0
     require(aqeSec <= saltedSec * budget,
       f"AQE arm $aqeSec%.1fs exceeds $budget× the salted arm's $saltedSec%.1fs")
 
     val json =
       s"""{"sf":"$sfDir","master":"$master",""" +
         s""""env":${Bench.envJson(Bench.machineStamp())},""" +
-        s""""conf":{"skewedPartitionThresholdInBytes":"${sys.env.getOrElse(
-          "SPARK_GRAFT_SKEW_THRESHOLD", "32m")}",""" +
-        s""""skewedPartitionFactor":2,"advisoryPartitionSizeInBytes":"${sys.env
-          .getOrElse("SPARK_GRAFT_SKEW_ADVISORY", "16m")}",""" +
+        s""""conf":{"skewedPartitionThresholdInBytes":"32m",""" +
+        s""""skewedPartitionFactor":2,"advisoryPartitionSizeInBytes":"16m",""" +
         s""""autoBroadcastJoinThreshold":-1},""" +
         s""""skewed_partitions":$skewedParts,"skewed_splits":$skewedSplits,""" +
         s""""plan_has_skew_true":${planStr.contains("skew=true")},""" +

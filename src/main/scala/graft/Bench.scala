@@ -1,7 +1,6 @@
 package graft
 import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Per-query task/shuffle accounting — the live-metrics surface the
   * reference keeps as queryable counters (utils/metrics.go:8-73),
@@ -83,7 +82,10 @@ object Bench {
   def envJson(stamp: (Double, Int, Int)): String =
     s"""{"loadavg1":${stamp._1},"cores":${stamp._2},"javaProcs":${stamp._3}}"""
 
-  val IdleLoadMax = 2.0
+  /** perfbench's BUSY rule: the 1-min load average above one runnable
+    * task per core means another job shares the box and every timing
+    * inflates. */
+  def contended(load1: Double, cores: Int): Boolean = load1 / cores > 1.0
 
   /** Cumulative host-steal ticks (USER_HZ jiffies, summed across vCPUs)
     * from /proc/stat. This box is a microVM guest: the hypervisor can
@@ -119,152 +121,47 @@ object Bench {
     } catch { case _: Throwable => None }
 
   def main(args: Array[String]): Unit = {
-    // Idle guard: a 1-min load above ~2 at start means another heavy
-    // job is (or just was) on the box and every timing will inflate
-    // uniformly (~1.4x in r9). Banner-warn always; with
-    // SPARK_GRAFT_REQUIRE_IDLE=1 (the evidence-chain legs) wait up to
-    // 15 min for the load to decay, then REFUSE rather than commit a
-    // polluted artifact.
-    var stamp = machineStamp()
-    val requireIdle = sys.env.get("SPARK_GRAFT_REQUIRE_IDLE").contains("1")
-    if (stamp._1 > IdleLoadMax) {
+    // contention guard: banner-warn, the stamp lands in the artifact
+    val stamp = machineStamp()
+    if (contended(stamp._1, stamp._2))
       System.err.println(
-        s"*** BENCH CONTENTION WARNING: 1-min load ${stamp._1} > $IdleLoadMax " +
+        s"*** BENCH CONTENTION WARNING: 1-min load ${stamp._1} on ${stamp._2} cores " +
           s"(${stamp._3} java procs) — timings will be polluted ***")
-      if (requireIdle) {
-        val deadline = System.nanoTime() + 15L * 60 * 1000000000L
-        while (stamp._1 > IdleLoadMax && System.nanoTime() < deadline) {
-          Thread.sleep(30000)
-          stamp = machineStamp()
-        }
-        if (stamp._1 > IdleLoadMax) {
-          System.err.println(
-            s"*** BENCH REFUSED: load still ${stamp._1} after 15 min — box not idle ***")
-          sys.exit(2)
-        }
-      }
-    }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // Cross-sf overwrite guard: the r12 end-of-round snapshot clobbered
     // the committed idle sf0.1 flagship with an sf0.001 smoke run —
     // the artifact then contradicted SURVEY §9's numbers. Every contract
     // line stamps its `"sf":dir`, so a run at a DIFFERENT scale than the
     // artifact it would overwrite is refused up front (before the
-    // multi-minute catalog run), unless SPARK_GRAFT_BENCH_FORCE=1 or the
-    // run targets its own file via SPARK_GRAFT_BENCH_OUT.
+    // multi-minute catalog run); such a run targets its own file via
+    // SPARK_GRAFT_BENCH_OUT.
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_local.json")
-    if (!sys.env.get("SPARK_GRAFT_BENCH_FORCE").contains("1")) {
-      existingSf(outFile).foreach { prev =>
-        if (prev != sfDir) {
-          System.err.println(
-            s"*** BENCH REFUSED: $outFile records sf=$prev but this run is " +
-              s"sf=$sfDir — set SPARK_GRAFT_BENCH_OUT to a new file or " +
-              s"SPARK_GRAFT_BENCH_FORCE=1 to overwrite ***")
-          sys.exit(2)
-        }
+    existingSf(outFile).foreach { prev =>
+      if (prev != sfDir) {
+        System.err.println(
+          s"*** BENCH REFUSED: $outFile records sf=$prev but this run is " +
+            s"sf=$sfDir — set SPARK_GRAFT_BENCH_OUT to a new file ***")
+        sys.exit(2)
       }
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // the cluster-scale lever under measurement in the sf3 rehearsal:
-    // per-task agg/sort state divides across shuffle partitions, so the
-    // spill experiment sweeps this independently of the core count
-    val shuffleParts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    // The sf3 lever sweep showed shuffle.partitions alone is NOT the
-    // per-task-state lever once AQE coalescing is on: AQE re-merges
-    // reduce partitions to the 64 MB advisory target, so the effective
-    // task count (and spill) barely moves. The operative guard is the
-    // advisory size itself — sweeping it is what divides per-task state.
-    val advisoryMb = sys.env.get("SPARK_GRAFT_ADVISORY_MB")
+    // optional subset (comma-separated names); unset = full catalog, the
+    // driver's contract. A typo'd name fails loudly instead of silently
+    // benching a subset.
+    val selected = SparkEntry.selected(sys.env.get("SPARK_GRAFT_QUERIES"))
     // SPARK_GRAFT_MASTER overrides the single-JVM default — the
-    // multi-process rehearsal passes local-cluster[n,cores,memMb],
-    // which is the cheapest falsifier of the claims local[*]
-    // structurally cannot test: kryo/java serialization of the custom
-    // Expressions and Aggregators across executor JVMs, broadcast
-    // thresholds actually broadcasting, and executor-side class/registry
-    // rebinding. local-cluster launches REAL executor processes, so
-    // they need the compiled classes on their own classpath:
-    // SPARK_GRAFT_EXECUTOR_CP (the java_run.sh class snapshot).
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val builder = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", shuffleParts)
-    sys.env.get("SPARK_GRAFT_EXECUTOR_CP").foreach(cp =>
-      builder.config("spark.executor.extraClassPath", cp))
-    // generic conf passthrough (semicolon-separated k=v), the Verify
-    // discipline — the cluster benches pin spark.executor.memory here
-    GraftEnv.applyExtraConf(builder)
-    GraftEnv.requireExecutorMemoryOnCluster(master)
-    advisoryMb.foreach(mb => builder.config(
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes", s"${mb}m"))
-    // Map-side partial-agg state (basket_pairs' pair counts after the
-    // C(k,2) explode) is governed by the SCAN split size, not by any
-    // reduce-side partition count — the companion lever in the sweep.
-    sys.env.get("SPARK_GRAFT_MAX_PARTITION_MB").foreach(mb => builder.config(
-      "spark.sql.files.maxPartitionBytes", s"${mb}m"))
-    val spark = builder
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // multi-process rehearsal passes local-cluster[n,cores,memMb], the
+    // cheapest falsifier of what local[*] structurally cannot test:
+    // serialization of the custom Expressions and Aggregators across
+    // executor JVMs, broadcasts actually broadcasting, and executor-side
+    // class rebinding. The shuffle-partition count is swept apart from
+    // the core count: per-task agg/sort state divides across it.
+    val cpus = GraftSession.cpus("4")
+    val spark = GraftSession(GraftSession.master(s"local[$cpus]"),
+      GraftSession.shufflePartitions(cpus))
     val listener = new TaskMetricsListener
     spark.sparkContext.addSparkListener(listener)
-    // Warm up codegen/shuffle/parquet machinery so the first measured
-    // query doesn't absorb session initialization. Best-effort: a broken
-    // sfDir must degrade to per-query -1s, not kill the whole benchmark.
-    // r13 measurement fix (guide §1 — time the computation, not the
-    // stack's first-use JIT): the original two-op warmup left the
-    // window/join/aggregate operator classes cold, so the alphabetically
-    // FIRST queries (the ab_* family) absorbed ~1-1.5 s each of
-    // SQL-stack warmup that belongs to the session, not to them
-    // (ab_conversion_ztest — two aggregates over 2 MB — measured 2.2 s
-    // first vs ~0.6 s when not first). The widened warmup below runs
-    // each operator family once over a tiny synthetic frame; it adds
-    // ~2 s of UNTIMED setup and changes no query's measured work.
-    // Old numbers: BENCH_r12.json / the pre-r13 BENCH_local.json.
-    try {
-      import org.apache.spark.sql.expressions.Window
-      spark.range(100000).selectExpr("sum(id)").collect()
-      spark.read.parquet(s"$sfDir/region.parquet").count()
-      val w = spark.range(2000)
-        .selectExpr("id", "id % 7 AS k", "md5(cast(id AS string)) AS s")
-      val agg = w.groupBy("k")
-        .agg(org.apache.spark.sql.functions.count(
-          org.apache.spark.sql.functions.lit(1)).as("c"))
-      agg.join(w, "k").write.mode("overwrite").format("noop").save()
-      w.join(org.apache.spark.sql.functions.broadcast(agg), "k")
-        .write.mode("overwrite").format("noop").save()
-      w.withColumn("r", org.apache.spark.sql.functions.row_number()
-          .over(Window.partitionBy("k").orderBy("id")))
-        .withColumn("l", org.apache.spark.sql.functions.lead("s", 1)
-          .over(Window.partitionBy("k").orderBy("id")))
-        .orderBy("s").limit(50)
-        .write.mode("overwrite").format("noop").save()
-      w.selectExpr("explode(split(s, 'a')) AS t")
-        .groupBy("t").count().orderBy("t").limit(10).collect()
-      // r14 warmup widening (same §1.4 rationale as r13's, additions
-      // only, UNTIMED): the alphabetically-first ab_* family still
-      // absorbed ~1-1.5 s each of first-use JIT for operator classes
-      // the r13 warmup left cold — rollup/grouping-sets aggregates,
-      // localCheckpoint materialization, the md5/conv/posexplode
-      // kernels, decimal aggregation, and the broadcast nested-loop
-      // join. One tiny pass over each.
-      w.rollup("k").agg(org.apache.spark.sql.functions.sum("id"))
-        .write.mode("overwrite").format("noop").save()
-      graft.Ckpt.cut(w.limit(100)).count()
-      w.selectExpr(
-          "posexplode(array(conv(substring(md5(s), 1, 8), 16, 10), '1'))",
-          "cast(id AS decimal(38,0)) AS dv")
-        .selectExpr("sum(dv)", "count(col)").collect()
-      w.limit(50).as("a").join(w.limit(50).as("b"),
-          org.apache.spark.sql.functions.expr("a.id > b.id"))
-        .selectExpr("count(1)").collect()
-      w.groupBy("k")
-        .agg(org.apache.spark.sql.functions.slice(
-          org.apache.spark.sql.functions.array_sort(
-            org.apache.spark.sql.functions.collect_set("id")), 1, 5).as("b"))
-        .selectExpr("explode(b)").selectExpr("count(1)").collect()
-    } catch { case _: Throwable => () }
+    // untimed: session start-up JIT belongs to no query
+    GraftSession.warmup(spark, sfDir)
     // name-sorted: Map iteration order shifts as the catalog grows, which
     // would re-shuffle which queries absorb residual JIT warmup between
     // rounds; a fixed order keeps per-query times comparable round over
@@ -277,23 +174,6 @@ object Bench {
         // loop: the 1-min loadavg at query end and the host-steal tick
         // delta across the query (see stealTicks)
         "gcTimeMs", "runTimeMs", "cpuTimeMs", "loadavg1c", "stealTicks")
-    // optional subset (comma-separated names): the scale-rehearsal runs
-    // the heavy families at sf1 without paying for all 150+ queries.
-    // Unset = full catalog, the driver's contract.
-    val subset = sys.env.get("SPARK_GRAFT_QUERIES")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    // a typo'd name (or a rehearsal env var leaking into a full-catalog
-    // run) must fail loudly, not silently bench a subset
-    subset.foreach { names =>
-      val unknown = names.diff(SparkEntry.queries.keySet)
-      require(unknown.isEmpty,
-        s"SPARK_GRAFT_QUERIES names not in catalog: ${unknown.toSeq.sorted.mkString(",")}")
-      require(names.nonEmpty, "SPARK_GRAFT_QUERIES selected zero queries")
-    }
-    val selected = subset match {
-      case Some(names) => SparkEntry.queries.filter { case (n, _) => names(n) }
-      case None => SparkEntry.queries
-    }
     val attempted = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
       val before = listener.snapshot
       val stealBefore = stealTicks()

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Multi-tenant throughput evidence: the same catalog queries run
   * SERIALLY and then at N-way concurrency under Spark's FAIR scheduler
   * (one scheduler pool per worker thread, pools created on demand), one
@@ -31,33 +29,12 @@ import org.apache.spark.sql.SparkSession
 object BenchConcurrency {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val levels = sys.env.getOrElse("SPARK_GRAFT_CONCURRENCY_LEVELS", "1,4")
       .split(",").map(_.trim.toInt).filter(_ >= 1).toSeq
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.scheduler.mode", "FAIR")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    try {
-      spark.range(100000).selectExpr("sum(id)").collect()
-      spark.read.parquet(s"$sfDir/region.parquet").count()
-    } catch { case _: Throwable => () }
-    val subset = sys.env.get("SPARK_GRAFT_QUERIES")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    subset.foreach { names =>
-      val unknown = names.diff(SparkEntry.queries.keySet)
-      require(unknown.isEmpty,
-        s"SPARK_GRAFT_QUERIES names not in catalog: ${unknown.toSeq.sorted.mkString(",")}")
-    }
-    val selected = (subset match {
-      case Some(names) => SparkEntry.queries.filter { case (n, _) => names(n) }
-      case None => SparkEntry.queries
-    }).toSeq.sortBy(_._1)
+    val selected = SparkEntry.selected(sys.env.get("SPARK_GRAFT_QUERIES")).toSeq.sortBy(_._1)
+    val cpus = GraftSession.cpus("4")
+    val spark = GraftSession(s"local[$cpus]", cpus, "spark.scheduler.mode" -> "FAIR")
+    GraftSession.warmup(spark, sfDir)
 
     val lines = levels.map { k =>
       val pool = java.util.concurrent.Executors.newFixedThreadPool(k)

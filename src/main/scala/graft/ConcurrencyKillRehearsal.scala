@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
@@ -17,53 +15,29 @@ import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
   * with a result hash equal to its serial run.
   *
   * Result equality is an order-independent distributed hash (sum of
-  * per-row xxhash64 over stringified columns — the StreamScale.rowHash
-  * shape), so nothing data-scale is collected to the driver.
+  * per-row xxhash64 over stringified columns, [[RowHash]]), so nothing
+  * data-scale is collected to the driver.
   */
 object ConcurrencyKillRehearsal {
 
-  def rowHash(df: DataFrame): String = RowHash.of(df)
-
   def main(args: Array[String]): Unit = {
     val (sfDir, outFile) = (args(0), args(1))
-    val lanes = sys.env.getOrElse("SPARK_GRAFT_CONCURRENCY", "8").toInt
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", "")
+    val lanes = 8
+    val master = GraftSession.master("")
     require(master.startsWith("local-cluster"),
       s"concurrency-kill rehearsal needs real executor processes " +
         s"(master='$master') — pass SPARK_GRAFT_MASTER=local-cluster[n,c,m]")
-    val builder = SparkSession.builder().master(master)
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
-      .config("spark.scheduler.mode", "FAIR")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    sys.env.get("SPARK_GRAFT_EXECUTOR_CP").foreach(cp =>
-      builder.config("spark.executor.extraClassPath", cp))
-    GraftEnv.applyExtraConf(builder)
-    GraftEnv.requireExecutorMemoryOnCluster(master)
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    def executorPids(): Seq[Long] = Execs.childExecutorPids()
-    require(executorPids().size >= 2,
-      s"need >=2 executor processes, found ${executorPids().size}")
-
     // subset: caller-named, or the full catalog (the driver contract)
-    val subset = sys.env.get("SPARK_GRAFT_QUERIES")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    subset.foreach { names =>
-      val unknown = names.diff(SparkEntry.queries.keySet)
-      require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(",")}")
-    }
-    val selected = (subset match {
-      case Some(names) => SparkEntry.queries.filter { case (n, _) => names(n) }
-      case None => SparkEntry.queries
-    }).toSeq.sortBy(_._1)
+    val selected = SparkEntry.selected(sys.env.get("SPARK_GRAFT_QUERIES")).toSeq.sortBy(_._1)
+    val spark = GraftSession(master, GraftSession.shufflePartitions("32"),
+      "spark.scheduler.mode" -> "FAIR")
+
+    require(Execs.childExecutorPids().size >= 2,
+      s"need >=2 executor processes, found ${Execs.childExecutorPids().size}")
 
     // ground truth: serial, kill-free
     val serial: Map[String, String] = selected.map { case (name, fn) =>
-      name -> (try rowHash(fn(spark, sfDir))
+      name -> (try RowHash.of(fn(spark, sfDir))
       catch { case e: Throwable => s"ERROR:${e.getClass.getSimpleName}" })
     }.toMap
     require(!serial.values.exists(_.startsWith("ERROR:")),
@@ -90,7 +64,7 @@ object ConcurrencyKillRehearsal {
     val completedAtKill = new AtomicInteger(-1)
     val killer = new Thread(() => {
       while (completed.get() < killAt) Thread.sleep(50)
-      val victim = executorPids().head
+      val victim = Execs.childExecutorPids().head
       killPid.set(victim)
       killUtc = java.time.Instant.now().toString
       completedAtKill.set(completed.get())
@@ -107,7 +81,7 @@ object ConcurrencyKillRehearsal {
           spark.sparkContext.setLocalProperty(
             "spark.scheduler.pool", s"lane-${Thread.currentThread().getId}")
           val q0 = System.nanoTime()
-          val h = try rowHash(fn(spark, sfDir))
+          val h = try RowHash.of(fn(spark, sfDir))
           catch { case e: Throwable => s"ERROR:${e.getClass.getSimpleName}" }
           completed.incrementAndGet()
           ((name, h, (System.nanoTime() - q0) / 1e9))
@@ -131,7 +105,7 @@ object ConcurrencyKillRehearsal {
     require(completedAtKill.get() < selected.size,
       s"kill landed after all ${selected.size} lanes completed — " +
         "nothing was in flight; raise the query count")
-    require(!executorPids().contains(killPid.get()),
+    require(!Execs.childExecutorPids().contains(killPid.get()),
       s"victim ${killPid.get()} still alive")
     require(removals.get() >= 1,
       "the scheduler never observed an executor removal")

@@ -98,7 +98,7 @@ object DecommissionRehearsal {
 
   def main(args: Array[String]): Unit = {
     val (sfDir, outFile) = (args(0), args(1))
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", "")
+    val master = GraftSession.master("")
     require(master.startsWith("local-cluster"),
       s"decommission rehearsal needs real executor processes to SIGPWR " +
         s"(master='$master') — pass SPARK_GRAFT_MASTER=local-cluster[n,c,m]")
@@ -106,50 +106,29 @@ object DecommissionRehearsal {
     require(mode == "peer" || mode == "fallback", s"unknown mode $mode")
     val fallbackDir =
       s"/tmp/graft_fallback_${ProcessHandle.current().pid()}/"
-    val builder = SparkSession.builder().master(master)
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.decommission.enabled", "true")
-      .config("spark.storage.decommission.enabled", "true")
-      .config("spark.storage.decommission.shuffleBlocks.enabled", "true")
-      .config("spark.storage.decommission.rddBlocks.enabled", "true")
+    val spark = GraftSession(master, "32", Seq(
+      "spark.decommission.enabled" -> "true",
+      "spark.storage.decommission.enabled" -> "true",
+      "spark.storage.decommission.shuffleBlocks.enabled" -> "true",
+      "spark.storage.decommission.rddBlocks.enabled" -> "true",
       // a block that fails its first transfer round is only retried
       // every replicationReattemptInterval (default 30 s — the first
       // version of this rehearsal lost ONE map output of 24 to that)
-      .config("spark.storage.decommission.replicationReattemptInterval", "2s")
+      "spark.storage.decommission.replicationReattemptInterval" -> "2s",
       // safety net only: the victim is signalled while IDLE, so it is
       // expected to exit on its own once migration finishes
-      .config("spark.executor.decommission.forceKillTimeout", "60s")
-      .config("spark.task.maxFailures", "4")
-      .config("spark.ui.enabled", "false")
-    if (mode == "fallback")
-      builder.config("spark.storage.decommission.fallbackStorage.path",
-        fallbackDir)
-    sys.env.get("SPARK_GRAFT_EXECUTOR_CP").foreach(cp =>
-      builder.config("spark.executor.extraClassPath", cp))
-    GraftEnv.applyExtraConf(builder)
-    GraftEnv.requireExecutorMemoryOnCluster(master)
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel(
-      sys.env.getOrElse("SPARK_GRAFT_LOGLEVEL", "WARN"))
+      "spark.executor.decommission.forceKillTimeout" -> "60s",
+      "spark.task.maxFailures" -> "4") ++
+      (if (mode == "fallback")
+        Seq("spark.storage.decommission.fallbackStorage.path" -> fallbackDir)
+      else Nil): _*)
     val sc = spark.sparkContext
-
-    def executorPids(): Seq[Long] = {
-      import scala.jdk.CollectionConverters._
-      val self = ProcessHandle.current().pid()
-      ProcessHandle.allProcesses().iterator().asScala
-        .filter(h => h.parent()
-          .map[Boolean](p => p.pid() == self).orElse(false))
-        .filter(h => h.info().commandLine()
-          .map[Boolean](_.contains("CoarseGrainedExecutorBackend"))
-          .orElse(false))
-        .map(_.pid()).toSeq.sorted
-    }
 
     // Clean run = ground truth + JIT/scan warmup.
     val (truthBuckets, truthSum) =
       summarize(shuffleSum(spark, sfDir, 1024).collect())
 
-    val execsBefore = executorPids()
+    val execsBefore = Execs.childExecutorPids()
     require(execsBefore.size >= 2,
       s"need >=2 executor processes, found ${execsBefore.size}")
 
@@ -248,7 +227,7 @@ object DecommissionRehearsal {
     // WHOLE fleet is signalled — no live peer exists, blocks drain to
     // fallback storage, and the master must relaunch fresh executors.
     val victims =
-      if (mode == "fallback") executorPids() else Seq(executorPids().head)
+      if (mode == "fallback") Execs.childExecutorPids() else Seq(Execs.childExecutorPids().head)
     val sigUtc = java.time.Instant.now().toString
     sigSentNanos.set(System.nanoTime())
     victims.foreach { pid =>
@@ -275,7 +254,7 @@ object DecommissionRehearsal {
     catch { case _: Throwable => () }
     sc.removeSparkListener(listener)
 
-    val execsAfter = executorPids()
+    val execsAfter = Execs.childExecutorPids()
     val matches = gotBuckets == truthBuckets && gotSum == truthSum
     require(matches, s"decommissioned run diverged: buckets " +
       s"$gotBuckets/$truthBuckets sum $gotSum/$truthSum")
@@ -305,9 +284,7 @@ object DecommissionRehearsal {
     // exit reports "Executor killed by driver."; some paths say
     // "decommission" outright. A NON-ZERO exit code is none of these —
     // that's a crash, not a drain. The scheduler's acknowledgment line
-    // ("Received executor N decommissioned message") is gated by the
-    // evidence leg against the driver log, since no SparkListener event
-    // carries it.
+    // is gated separately below.
     val reasonOk = removedReason.get().toLowerCase.contains("decommission") ||
       removedReason.get().toLowerCase.contains("killed by driver") ||
       removedReason.get().contains("exited with code 0")

@@ -48,14 +48,7 @@ object ScaleGen {
     // session this main itself created
     val ownsSession = SparkSession.getActiveSession
       .orElse(SparkSession.getDefaultSession).isEmpty
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(s"local[${GraftSession.cpus("8")}]", "32")
 
     def tbl(name: String): DataFrame =
       spark.read.parquet(s"$src/$name.parquet")

@@ -2,13 +2,25 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** One catalog module: its queries and the DuckDB twins of those queries.
   *
-  * Aggregates the per-module query catalogs. Every key in [[queries]]
-  * with an entry in [[oracleSql]] is hash-compared against DuckDB on the
-  * same parquet tables at sf0.01; keys without an oracle get a weaker
-  * rows-only check (reserved for ops DuckDB cannot express, e.g.
-  * xxhash64-based MinHash).
+  * Every key in `queries` has an entry in `oracles` (an ANSI SQL twin
+  * hash-compared against Spark's result on the same parquet tables) or a
+  * reason in `noOracle`, never both. `oracles` may be a `def` whose
+  * entries appear only after their query was built (data-fitted twins).
+  */
+trait Catalog {
+  def queries: Map[String, (SparkSession, String) => DataFrame]
+  def oracles: Map[String, String]
+  def noOracle: Map[String, String] = Map.empty
+}
+
+/** The driver contract: the catalog, its oracles and the smoke entry.
+  *
+  * [[catalogs]] lists every catalog module once; [[queries]] and
+  * [[oracleSql]] are merged from it. Keys without an oracle get a weaker
+  * rows-only check; each such key carries its reason in its module's
+  * `noOracle` (engine-native sketch binaries DuckDB cannot reproduce).
   */
 object SparkEntry {
 
@@ -26,63 +38,48 @@ object SparkEntry {
       .toDF()
   }
 
+  /** Every catalog module, each named once. */
+  val catalogs: Seq[Catalog] = Seq(
+    apps.MrApps, relational.RelQueries, relational.RelExtras,
+    relational.Analytics, relational.TpchMore, relational.TimeSeries,
+    relational.Graph, relational.Layout, kv.KVStore, gossip.HealthMerge,
+    text.TextAnalysis, text.TextExtras, text.Bpe, text.Phrases, text.Dedup,
+    text.DedupCluster, text.Retrieval, text.HeavyHitters, sim.Similarity,
+    sim.Fusion, sim.Eval, sim.Pca, multimodal.Multimodal,
+    streaming.EventStreams, streaming.Drift, streaming.DocStreams,
+    relational.Skew, relational.Quantiles, relational.Reconcile,
+    relational.BloomPrune, relational.MaterializedView, pipeline.Curriculum,
+    relational.StatAudit, relational.StatModels, pipeline.Curation,
+    pipeline.Packing, pipeline.Decontam, pipeline.Classifier,
+    pipeline.Privacy, pipeline.Dsir, relational.Experiment,
+    relational.TsExtras, relational.Hits, relational.BasketRules,
+    relational.Dependence, pipeline.QualityRules, pipeline.SplitAudit,
+    text.LshPlan, relational.StatExtras)
+
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    apps.MrApps.queries ++ relational.RelQueries.queries ++
-      relational.RelExtras.queries ++ relational.Analytics.queries ++
-      relational.TpchMore.queries ++ relational.TimeSeries.queries ++
-      relational.Graph.queries ++ relational.Layout.queries ++
-      kv.KVStore.queries ++ gossip.HealthMerge.queries ++
-      text.TextAnalysis.queries ++ text.TextExtras.queries ++
-      text.Bpe.queries ++ text.Phrases.queries ++
-      text.Dedup.queries ++ text.DedupCluster.queries ++
-      text.Retrieval.queries ++ text.HeavyHitters.queries ++
-      sim.Similarity.queries ++ sim.Fusion.queries ++ sim.Eval.queries ++
-      sim.Pca.queries ++
-      multimodal.Multimodal.queries ++
-      streaming.EventStreams.queries ++ streaming.Drift.queries ++
-      streaming.DocStreams.queries ++
-      relational.Skew.queries ++ relational.Quantiles.queries ++
-      relational.Reconcile.queries ++ relational.BloomPrune.queries ++
-      relational.MaterializedView.queries ++ pipeline.Curriculum.queries ++
-      relational.StatAudit.queries ++ relational.StatModels.queries ++
-      pipeline.Curation.queries ++ pipeline.Packing.queries ++
-      pipeline.Decontam.queries ++ pipeline.Classifier.queries ++
-      pipeline.Privacy.queries ++ pipeline.Dsir.queries ++
-      relational.Experiment.queries ++ relational.TsExtras.queries ++
-      relational.Hits.queries ++ relational.BasketRules.queries ++
-      relational.Dependence.queries ++ pipeline.QualityRules.queries ++
-      pipeline.SplitAudit.queries ++ text.LshPlan.queries ++
-      relational.StatExtras.queries
+    catalogs.flatMap(_.queries).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops.
+    * the same parquet tables. Re-read on every call: the data-fitted
+    * twins register only once their query has been built.
     */
-  def oracleSql: Map[String, String] =
-    apps.MrApps.oracles ++ relational.RelQueries.oracles ++
-      relational.RelExtras.oracles ++ relational.Analytics.oracles ++
-      relational.TpchMore.oracles ++ relational.TimeSeries.oracles ++
-      relational.Graph.oracles ++ relational.Layout.oracles ++
-      kv.KVStore.oracles ++ gossip.HealthMerge.oracles ++
-      text.TextAnalysis.oracles ++ text.TextExtras.oracles ++
-      text.Bpe.oracles ++ text.Phrases.oracles ++
-      text.Dedup.oracles ++ text.DedupCluster.oracles ++
-      text.Retrieval.oracles ++ text.HeavyHitters.oracles ++
-      sim.Similarity.oracles ++ sim.Fusion.oracles ++ sim.Eval.oracles ++
-      sim.Pca.oracles ++
-      multimodal.Multimodal.oracles ++
-      streaming.EventStreams.oracles ++ streaming.Drift.oracles ++
-      streaming.DocStreams.oracles ++
-      relational.Skew.oracles ++ relational.Quantiles.oracles ++
-      relational.Reconcile.oracles ++ relational.BloomPrune.oracles ++
-      relational.MaterializedView.oracles ++ pipeline.Curriculum.oracles ++
-      relational.StatAudit.oracles ++ relational.StatModels.oracles ++
-      pipeline.Curation.oracles ++ pipeline.Packing.oracles ++
-      pipeline.Decontam.oracles ++ pipeline.Classifier.oracles ++
-      pipeline.Privacy.oracles ++ pipeline.Dsir.oracles ++
-      relational.Experiment.oracles ++ relational.TsExtras.oracles ++
-      relational.Hits.oracles ++ relational.BasketRules.oracles ++
-      relational.Dependence.oracles ++ pipeline.QualityRules.oracles ++
-      pipeline.SplitAudit.oracles ++ text.LshPlan.oracles ++
-      relational.StatExtras.oracles
+  def oracleSql: Map[String, String] = catalogs.flatMap(_.oracles).toMap
+
+  /** The queries a comma-separated name list selects, or the whole
+    * catalog for None. A name not in the catalog, or a list naming no
+    * query, fails with the bad keys: a typo must never run a silently
+    * smaller catalog.
+    */
+  def selected(names: Option[String]): Map[String, (SparkSession, String) => DataFrame] = {
+    val all = queries
+    names.fold(all) { spec =>
+      val want = spec.split(",").map(_.trim).filter(_.nonEmpty).toSet
+      val unknown = want.diff(all.keySet)
+      require(unknown.isEmpty,
+        s"queries not in the catalog: ${unknown.toSeq.sorted.mkString(",")}")
+      require(want.nonEmpty, s"query list '$spec' selects zero queries")
+      all.filter { case (n, _) => want(n) }
+    }
+  }
 }

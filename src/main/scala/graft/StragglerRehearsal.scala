@@ -33,7 +33,7 @@ import org.apache.spark.sql.SparkSession
   *
   * `spark.speculation` is a scheduler (SparkConf) switch, not a runtime
   * SQL conf — so the contrast arms run as SEPARATE invocations of this
-  * main (the evidence leg runs both and assembles one artifact), each
+  * main (BENCH_straggler.json holds both), each
   * writing a JSON fragment with its wall, the scheduler's own
   * speculative-task counts (SparkListener — the artifact must prove the
   * scheduler actually speculated, not just that the conf was set), and
@@ -52,8 +52,8 @@ import org.apache.spark.sql.SparkSession
   * merely a different executor. Under `local-cluster[n,c,m]` every
   * executor reports host=localhost, so the scheduler marks stragglers
   * speculatable and then never launches a single copy (observed:
-  * "Marking task … as speculatable" with launched=0). The evidence leg
-  * therefore stands up a REAL standalone master plus two worker JVMs
+  * "Marking task … as speculatable" with launched=0). The speculation
+  * arm therefore needs a REAL standalone master plus two worker JVMs
   * bound to distinct loopback aliases (127.0.0.1 / 127.0.0.2 — same
   * box, two hosts to the scheduler), which is also the faithful shape
   * of the reference's "2 straggler NODES" row. The speculation arm
@@ -67,7 +67,6 @@ import org.apache.spark.sql.SparkSession
   *   SPARK_GRAFT_EXTRA_CONF carries the speculation arm:
   *     off: "spark.speculation=false;spark.executor.memory=..."
   *     on:  "spark.speculation=true;spark.speculation.quantile=0.8;..."
-  *   SPARK_GRAFT_STRAGGLE_MS overrides the injected stall (default 8000).
   */
 object StragglerRehearsal {
 
@@ -123,7 +122,7 @@ object StragglerRehearsal {
 
   def main(args: Array[String]): Unit = {
     val (sfDir, outFile) = (args(0), args(1))
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", "")
+    val master = GraftSession.master("")
     require(master.startsWith("local-cluster") || master.startsWith("spark://"),
       s"straggler rehearsal needs real executor JVMs to stall one of " +
         s"(master='$master') — pass SPARK_GRAFT_MASTER=spark://host:port " +
@@ -134,21 +133,11 @@ object StragglerRehearsal {
       else sys.env.getOrElse("SPARK_GRAFT_EXPECT_EXECUTORS",
         sys.error("spark:// master: set SPARK_GRAFT_EXPECT_EXECUTORS")).toInt
     require(nExec >= 2, s"need >=2 executors, master=$master")
-    val sleepMs = sys.env.getOrElse("SPARK_GRAFT_STRAGGLE_MS", "8000").toLong
-    val builder = SparkSession.builder().master(master)
-      .config("spark.sql.shuffle.partitions", "32")
-      // locality wait would delay both first scheduling and the
-      // speculative copy's placement by up to 3 s/level — zero it so
-      // the artifact measures speculation, not locality backoff
-      .config("spark.locality.wait", "0s")
-      .config("spark.ui.enabled", "false")
-    sys.env.get("SPARK_GRAFT_EXECUTOR_CP").foreach(cp =>
-      builder.config("spark.executor.extraClassPath", cp))
-    GraftEnv.applyExtraConf(builder)
-    GraftEnv.requireExecutorMemoryOnCluster(master)
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel(
-      sys.env.getOrElse("SPARK_GRAFT_LOGLEVEL", "WARN"))
+    val sleepMs = 8000L
+    // locality wait would delay both first scheduling and the
+    // speculative copy's placement by up to 3 s/level — zero it so the
+    // artifact measures speculation, not locality backoff
+    val spark = GraftSession(master, "32", "spark.locality.wait" -> "0s")
     val speculation =
       spark.sparkContext.getConf.getBoolean("spark.speculation", false)
     val quantile =

@@ -13,7 +13,7 @@ object Tables {
   /** Scan-DataFrame memo per (session, dir, table) — r14 floor fix
     * (VERDICT item 2). Every `spark.read.parquet` call rebuilds the
     * file index and re-reads parquet footers for schema inference:
-    * measured ~85-100 ms PER CALL at sf0.1 (FloorProbe), paid 1-3x by
+    * measured ~85-100 ms PER CALL at sf0.1, paid 1-3x by
     * each of 279 catalog queries — the single largest share of the
     * sub-second tail's fixed cost. The memo holds the LAZY scan
     * DataFrame only (logical plan + resolved schema — metadata, no

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the DuckDB compare (scripts/check_oracle.py).
@@ -10,13 +9,8 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     // Optional 3rd arg (local iteration only; driver passes 2): run just
     // these comma-separated query names and dump only their oracle SQL.
-    val only: Option[Set[String]] =
-      if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // same overrides as Bench: the multi-JVM rehearsal hash-checks a
-    // catalog subset on local-cluster (executors need the class
-    // snapshot on their own classpath)
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
+    // An unknown or empty list fails rather than verify nothing.
+    val selected = SparkEntry.selected(args.lift(2))
     // shuffle partitions default to the core count (fixture scale) but
     // must SCALE WITH VOLUME on the 100x rehearsals: per-task agg/sort
     // state divides across reduce partitions (the r8 sf3 lever sweep),
@@ -24,23 +18,9 @@ object Verify {
     // partitions (basket_rules' pair partials) — 256 holds per-task
     // state at the sf0.1 design point while AQE re-coalesces the small
     // queries' outputs
-    val shuffleParts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val builder = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", shuffleParts)
-    sys.env.get("SPARK_GRAFT_EXECUTOR_CP").foreach(cp =>
-      builder.config("spark.executor.extraClassPath", cp))
-    // generic conf passthrough (semicolon-separated k=v): the executor-kill
-    // rehearsal pins spark.task.maxFailures explicitly so the artifact
-    // records the retry budget the run survived under
-    GraftEnv.applyExtraConf(builder)
-    GraftEnv.requireExecutorMemoryOnCluster(master)
-    val spark = builder
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.cpus("4")
+    val spark = GraftSession(GraftSession.master(s"local[$cpus]"),
+      GraftSession.shufflePartitions(cpus))
     new java.io.File(outDir).mkdirs()
     // Resume-from-manifest (SPARK_GRAFT_RESUME=1): skip queries whose
     // output dir already carries parquet's _SUCCESS marker — the
@@ -52,8 +32,7 @@ object Verify {
     // exactly-once per committed dir. Default off: a normal gate run
     // must never silently reuse a stale dump.
     val resume = sys.env.get("SPARK_GRAFT_RESUME").contains("1")
-    val attempted = SparkEntry.queries
-      .filter { case (name, _) => only.forall(_(name)) }
+    val attempted = selected
       .filter { case (name, _) =>
         val done = resume && Files.exists(Paths.get(s"$outDir/$name/_SUCCESS"))
         if (done) System.err.println(s"[verify] $name already committed — skipped")
@@ -93,7 +72,7 @@ object Verify {
       case c => c.toString
     } + "\""
     val json = SparkEntry.oracleSql
-      .filter { case (k, _) => only.forall(_(k)) }
+      .filter { case (k, _) => selected.contains(k) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

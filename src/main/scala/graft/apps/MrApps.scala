@@ -17,7 +17,7 @@ import graft.mr.{AppLoader, KeyValue, MapReduce, MrApp}
   * Tokenization stays inside whole-stage codegen (`split`/`explode`
   * builtins, no UDFs).
   */
-object MrApps {
+object MrApps extends graft.Catalog {
 
   /** `unicode.IsLetter` tokenizer of the reference wc app
     * (mrapps/wc.go:23-26) — `\p{L}` is the same predicate in Java regex

@@ -62,7 +62,7 @@ final case class HealthBuf(status: Int, suspicion: Long, lastUpdateMicros: Long,
   * not one row per observation: exactly the gossip table's constant
   * ~32 B/worker footprint (README.md:330), at cluster scale.
   */
-object HealthMerge {
+object HealthMerge extends graft.Catalog {
   val ConsensusC = 3
 
   /** Total order on observations: newest wins; ties broken by suspicion

@@ -37,7 +37,7 @@ final case class KvCell(
   * 1000-executor run scales with key cardinality. The unbounded-stream
   * variant of the same fold lives in graft.streaming (mapGroupsWithState).
   */
-object KVStore {
+object KVStore extends graft.Catalog {
 
   /** The sequential reference interpreter (used by tests as the oracle,
     * and by the distributed fold per key — same code path, so the

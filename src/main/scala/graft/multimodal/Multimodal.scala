@@ -48,7 +48,7 @@ final case class ResizedImage(
   * does. That is the property to preserve at 100 TB: decode early, ship
   * features, never reshuffle raw media bytes.
   */
-object Multimodal {
+object Multimodal extends graft.Catalog {
 
   /** documents.text cast to binary plays the media payload. */
   def mediaFiles(spark: SparkSession, d: String): Dataset[MediaFile] = {

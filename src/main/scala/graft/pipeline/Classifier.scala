@@ -33,7 +33,7 @@ import graft.text.TextAnalysis
   * that ever reaches the driver is the 10-number summary (a bounded
   * fit, same discipline as the BPE/k-means fits).
   */
-object Classifier {
+object Classifier extends graft.Catalog {
 
   private val Micro = 1000000L
 

@@ -10,7 +10,7 @@ import graft.text.TextAnalysis
   * need an extra engine feature (range join, correlated subquery via the
   * SQL entry point).
   */
-object Curation {
+object Curation extends graft.Catalog {
 
   /** Broadcast range join: every event binned into a value tier by an
     * inequality join against a tiny tier table. The tier side is

@@ -32,7 +32,7 @@ import graft.Tables
   * Reference basis: none (the reference's sort is per-reduce-partition,
   * mr/worker.go:120-126); SURVEY §2.3 pipeline surface.
   */
-object Curriculum {
+object Curriculum extends graft.Catalog {
 
   private val Bucket = 8192L
 

@@ -24,7 +24,7 @@ import graft.text.TextAnalysis
   * contaminated flag falls out of a broadcast semi-ish join, no
   * shuffle of the corpus beyond its one doc_id exchange.
   */
-object Decontam {
+object Decontam extends graft.Catalog {
 
   /** n-gram order for the collision rule. */
   val N = 8

@@ -35,7 +35,7 @@ import graft.text.TextAnalysis
   * and the final weight is the exact-grid quotient — no FP sum ever
   * crosses engines.
   */
-object Dsir {
+object Dsir extends graft.Catalog {
 
   val NumBuckets = 4096
   val TargetLang = "en"

@@ -14,7 +14,7 @@ import graft.Tables
   * (mr/worker.go:139-157); packing/splitting are driver-mandated
   * extensions (SURVEY.md §2.3).
   */
-object Packing {
+object Packing extends graft.Catalog {
 
   /** Character budget per packed sequence (the char-count stand-in for a
     * token budget; swap `n_chars` for a tokenizer count upstream).

@@ -31,7 +31,7 @@ import graft.Tables
   * opaque string KVs, mr/worker.go:128-148); this is SURVEY §2.3
   * pipeline surface.
   */
-object Privacy {
+object Privacy extends graft.Catalog {
 
   private val K = 5L
   private val L = 2L

@@ -31,7 +31,7 @@ import graft.Tables
   * one per-source aggregate (map-side combined). No shuffle beyond
   * the |sources|-row group-by.
   */
-object QualityRules {
+object QualityRules extends graft.Catalog {
 
   /** The catalog's stopword set (the `text_quality` list) — the
     * Gopher paper's English function-word battery collapses to the

@@ -26,7 +26,7 @@ import graft.Tables
   * DISTINCT on 8-byte hashes → one aggregate. A semi-join-shaped
   * LEFT JOIN on the hashed gram key; no string ever shuffles.
   */
-object SplitAudit {
+object SplitAudit extends graft.Catalog {
 
   private def splitOf(idCol: org.apache.spark.sql.Column) =
     graft.text.Dedup.md5Prefix32(idCol.cast("string"), 1) % 100L

@@ -21,7 +21,7 @@ import RelQueries.{exactSum, gridScale}
   * and anything global is either constant-size (funnel counters, daily
   * aggregates) or explodes linearly (session→hour coverage).
   */
-object Analytics {
+object Analytics extends graft.Catalog {
 
   /** Ordered conversion funnel view → click → purchase per user, with
     * strict event-order semantics: a click counts only if a view

@@ -24,7 +24,7 @@ import graft.Tables
   * joins the 20-row top-pair table (broadcast) against the item
   * counts — 20 output rows at any corpus size.
   */
-object BasketRules {
+object BasketRules extends graft.Catalog {
 
   private def dbl(e: Column): Column = e.cast("double")
 

@@ -32,7 +32,7 @@ import graft.Tables
   * Reference basis: none (the reference joins nothing); SURVEY §2.3
   * join surface, the scale lever next to [[Skew]]'s salting.
   */
-object BloomPrune {
+object BloomPrune extends graft.Catalog {
 
   private val M = 16384L // bits
   private val W = 32L // bits per packed word → 512 words

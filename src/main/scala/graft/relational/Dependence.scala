@@ -23,7 +23,7 @@ import graft.Tables
   * combined, grid-bounded output) → closed-form algebra on the
   * contraction. One data-scale exchange at any corpus size.
   */
-object Dependence {
+object Dependence extends graft.Catalog {
 
   private def dbl(e: Column): Column = e.cast("double")
 

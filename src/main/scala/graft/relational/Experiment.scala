@@ -29,7 +29,7 @@ import graft.Tables
   * table, then closed-form algebra on the contraction. No corpus-scale
   * window, no unbounded state.
   */
-object Experiment {
+object Experiment extends graft.Catalog {
 
   private def dec(e: Column): Column = sum(e.cast("decimal(38,0)"))
   private def dbl(e: Column): Column = e.cast("double")

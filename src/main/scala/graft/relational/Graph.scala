@@ -14,7 +14,7 @@ import graft.Tables
   * (SURVEY.md §2.3); its gossip topology is a control-plane ring, not a
   * data-plane graph (mr/gossip.go:165-177).
   */
-object Graph {
+object Graph extends graft.Catalog {
 
   /** Triangles in the near-duplicate similarity graph (duplicate
     * clusters are near-cliques, so triangle density is a cluster-quality

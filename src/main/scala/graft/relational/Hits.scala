@@ -22,7 +22,7 @@ import graft.Tables
   * 6dp round. The DuckDB twin unrolls the [[HitsIters]] iterations as
   * materialized CTEs (the [[Graph.pagerankNations]] precedent).
   */
-object Hits {
+object Hits extends graft.Catalog {
 
   val HitsIters = 5
 

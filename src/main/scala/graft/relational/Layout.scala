@@ -25,7 +25,7 @@ import graft.Tables
   * source-layer surface a warehouse-scale engine adds (SURVEY §2.3 file
   * formats).
   */
-object Layout {
+object Layout extends graft.Catalog {
 
   /** Interleave the low 16 bits of `a` (even positions) and `b` (odd
     * positions) into a 32-bit Morton key. Inputs must be pre-normalized

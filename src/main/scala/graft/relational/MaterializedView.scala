@@ -25,7 +25,7 @@ import graft.Tables
   * SURVEY §2.3 aggregation surface, the refresh path next to
   * [[Reconcile]]'s validation path.
   */
-object MaterializedView {
+object MaterializedView extends graft.Catalog {
 
   private val Cutoff = "1997-01-01"
 

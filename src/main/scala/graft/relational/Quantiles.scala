@@ -35,7 +35,7 @@ import graft.Tables
   * outside every active segment are never bucketized. Driver state is
   * O(#quantiles) longs.
   */
-object Quantiles {
+object Quantiles extends graft.Catalog {
 
   val Buckets = 1024L
   val Ps: Seq[Double] = Seq(0.5, 0.9, 0.99)

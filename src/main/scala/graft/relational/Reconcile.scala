@@ -35,7 +35,7 @@ import graft.Tables
   * Reference basis: none — the reference's sink is write-once text
   * (mr/worker.go:150-166); SURVEY §2.3 pipeline surface.
   */
-object Reconcile {
+object Reconcile extends graft.Catalog {
 
   /** Deterministic per-key lane in [0, 50): md5 of the key, first 60
     * bits, mod 50. Same expression text in the oracle.

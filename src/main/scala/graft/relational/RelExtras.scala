@@ -25,7 +25,7 @@ import RelQueries.{exactSum, gridScale}
   *     the formula's ulp difference.
   *   - day-of-week: Spark is 1-7 Sunday-first, DuckDB 0-6 — oracle adds 1.
   */
-object RelExtras {
+object RelExtras extends graft.Catalog {
 
   /** Moment statistics per group (partial+final merge under the hood —
     * Spark's ImperativeAggregate moments merge associatively, so this is
@@ -488,6 +488,10 @@ object RelExtras {
     "scalar_funcs2" -> (scalarFuncs2 _),
     "date_funcs" -> (dateFuncs _),
     "array_funcs" -> (arrayFuncs _))
+
+  override val noOracle: Map[String, String] = Map(
+    "hll_parts_sketch" -> ("engine-native HLL sketch binary; hll_dataflow_distinct " +
+      "is the oracled twin"))
 
   val oracles: Map[String, String] = Map(
     "skyline_lineitems" -> skylineOracle,

@@ -23,7 +23,7 @@ import graft.Tables
   * high-cardinality keys (custkey/user_id), so state per partition group
   * stays small.
   */
-object RelQueries {
+object RelQueries extends graft.Catalog {
 
   private def ts(s: String): Column = to_timestamp(lit(s))
 
@@ -410,6 +410,10 @@ object RelQueries {
     "json_extract" -> (jsonExtract _),
     "agg_distinct" -> (aggDistinct _),
     "approx_distinct" -> (approxDistinct _))
+
+  override val noOracle: Map[String, String] = Map(
+    "approx_distinct" -> ("HLL++ sketch estimate: DuckDB's approx_count_distinct " +
+      "is a different sketch; hll_dataflow_distinct is the oracled twin"))
 
   val oracles: Map[String, String] = Map(
     "asof_purchase_click" ->

@@ -12,7 +12,7 @@ import graft.Tables
   * The salt is derived from a value hash, so the plan stays
   * deterministic.
   */
-object Skew {
+object Skew extends graft.Catalog {
 
   /** @param salt a PER-ROW deterministic expression (e.g. a hash of a
     *             unique id column). Salting by the value itself would

@@ -18,7 +18,7 @@ import graft.Tables
   *
   * Reference basis: none; SURVEY §2.3 aggregation/QA surface.
   */
-object StatAudit {
+object StatAudit extends graft.Catalog {
 
   /** Benford per-mille expectation for first digit d: round(log10(1 +
     * 1/d) · 1000) — precomputed once here, embedded in both engines.

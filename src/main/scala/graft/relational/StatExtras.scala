@@ -17,7 +17,7 @@ import graft.Tables
   * doubles in identical operation order, per-term fixed-decimal grids
   * before any bounded FP sum, 6dp output rounds, −0.0 normalization.
   */
-object StatExtras {
+object StatExtras extends graft.Catalog {
 
   private def dbl(e: Column): Column = e.cast("double")
   private def dec(e: Column): Column = sum(e.cast("decimal(38,0)"))

@@ -24,7 +24,7 @@ import graft.Tables
   * where a 6-decimal round absorbs association order, the
   * [[graft.text.TextAnalysis.unigramLogprob]] precedent).
   */
-object StatModels {
+object StatModels extends graft.Catalog {
 
   /** Per-priority OLS of order value against time: slope (cents/day),
     * intercept, and Pearson correlation from the five exact sufficient

@@ -27,7 +27,7 @@ import graft.Tables
   * its reduce folds an UNORDERED value list (mr/worker.go:128-148);
   * sorted-within-partition output (O5) is presentation, not semantics.
   */
-object TimeSeries {
+object TimeSeries extends graft.Catalog {
 
   /** Smoothing factor: s_i = s_{i-1}*(1-Alpha) + x_i*Alpha. */
   val Alpha = 0.3

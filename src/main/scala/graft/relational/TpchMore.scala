@@ -27,7 +27,7 @@ import RelQueries.{exactSum, gridScale}
   * (SURVEY.md §2.3; mr/worker.go:128-148 is a per-key fold) — this file
   * is part of the §2.3 relational-breadth mandate.
   */
-object TpchMore {
+object TpchMore extends graft.Catalog {
 
   private def ts(s: String): Column = to_timestamp(lit(s))
 

@@ -22,7 +22,7 @@ import graft.Tables
   * the 1e-6 grid BEFORE the OLS fold so the ≤6-point fit consumes
   * identical integers on both engines.
   */
-object TsExtras {
+object TsExtras extends graft.Catalog {
 
   private def dbl(e: Column): Column = e.cast("double")
 

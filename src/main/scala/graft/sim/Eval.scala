@@ -26,7 +26,7 @@ import org.apache.spark.sql.functions._
   * unchanged. Determinism: hits are exact integer set intersections on
   * rounded-then-ranked lists; recall is an exact K-grid fraction.
   */
-object Eval {
+object Eval extends graft.Catalog {
 
   def recallEval(spark: SparkSession, d: String): DataFrame = {
     import spark.implicits._

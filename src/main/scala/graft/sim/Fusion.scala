@@ -35,7 +35,7 @@ import graft.Tables
   * fixed-order three-term sum of exact-integer reciprocals rounded at
   * emission.
   */
-object Fusion {
+object Fusion extends graft.Catalog {
 
   val RrfC = 60 // the canonical RRF constant from the SIGIR-09 paper
   val TopK = 10

@@ -33,7 +33,7 @@ import graft.Tables
   * iterate ([[pcaFit]] — the fitted-constant registry technique of
   * [[Similarity]]).
   */
-object Pca {
+object Pca extends graft.Catalog {
 
   /** Convergence note: power iteration converges at rate (λ2/λ1)^k, so
     * the iterate count is the accuracy knob. Production embedding

@@ -33,7 +33,7 @@ import graft.Tables
   * boundaries) are recorded in the fitted-constant registry below and
   * embedded as literals in the generated oracles.
   */
-object Similarity {
+object Similarity extends graft.Catalog {
 
   val K = 5
   val NumQueries = 10 // probe set: vec_id < 10

@@ -54,7 +54,7 @@ import graft.text.TextAnalysis
   * the emitted root; the root is never rewritten), spec-tested in
   * DocStreamsSpec ("late row preceding the chain root").
   */
-object DocStreams {
+object DocStreams extends graft.Catalog {
 
   /** Synthesized arrival spacing: doc_id d arrives at t = d·5 s. The
     * spacing is part of the QUERY DEFINITION (both engines compute it),

@@ -28,7 +28,7 @@ import org.apache.spark.sql.functions._
   * per streaming window is ONE row of [[Types]] counters, evicted by
   * the watermark.
   */
-object Drift {
+object Drift extends graft.Catalog {
 
   val Types = Seq("click", "error", "purchase", "signup", "view")
   val WindowSecs = 21600L // 6 hours

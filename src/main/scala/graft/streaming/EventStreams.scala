@@ -21,7 +21,7 @@ import graft.kv.{KvCell, KvOp}
   * (O11, mr/coordinator_tier.go:262-298) maps to `checkpointLocation`
   * exactly-once recovery, also exercised in the spec.
   */
-object EventStreams {
+object EventStreams extends graft.Catalog {
 
   /** Batch read of an events parquet path with `ts` normalized to
     * TimestampType whatever the on-disk encoding (nanos-as-long,

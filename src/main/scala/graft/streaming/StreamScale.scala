@@ -53,20 +53,6 @@ import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
   * incomparable series in one artifact (pre-r11 fragments without the
   * fields are accepted with a warning).
   */
-/** Prints the count of legs a run-ALL invocation produces on a
-  * single-JVM master (the registry minus the cluster-only legs, which
-  * skip themselves there) — the evidence scripts assert fresh
-  * full-artifact assemblies against the CODE's count instead of a
-  * hardcoded literal that goes stale every time a leg is added (the
-  * r11 review finding). Artifacts that mix in previously-recorded legs
-  * derive their expected count from the artifact itself instead
-  * (the streamadd legs).
-  */
-object StreamScaleLegCount {
-  def main(args: Array[String]): Unit = println(
-    StreamScale.LegNames.count(!StreamScale.ClusterOnlyLegs(_)))
-}
-
 object StreamScale {
 
   /** The leg registry: names the 4th-arg filter validates against.
@@ -116,27 +102,11 @@ object StreamScale {
     }
     val ownsSession = SparkSession.getActiveSession
       .orElse(SparkSession.getDefaultSession).isEmpty
-    // same multi-JVM levers as Verify/Bench: the executor-kill leg runs
-    // the stream on local-cluster (REAL executor processes), so the
-    // master, the executors' classpath (the java_run.sh class snapshot),
-    // and the retry-budget conf must be settable from the evidence
-    // script — and recorded by the leg, since they are provenance.
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER",
-      s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-    val builder = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
-    sys.env.get("SPARK_GRAFT_EXECUTOR_CP").foreach(cp =>
-      builder.config("spark.executor.extraClassPath", cp))
-    graft.GraftEnv.applyExtraConf(builder)
-    graft.GraftEnv.requireExecutorMemoryOnCluster(master)
-    val spark = builder
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the executor-kill legs run the stream on local-cluster (REAL
+    // executor processes); the master and the retry-budget conf are
+    // recorded by the leg, since they are provenance
+    val master = graft.GraftSession.master(s"local[${graft.GraftSession.cpus("8")}]")
+    val spark = graft.GraftSession(master, graft.GraftSession.shufflePartitions("32"))
     import spark.implicits._
 
     // the whole month of events, event-time ordered, staged on the

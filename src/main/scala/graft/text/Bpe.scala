@@ -44,7 +44,7 @@ import graft.functions.BpeMergeSeq
   * MATERIALIZED (DuckDB inlines plain CTEs per reference; the pagerank
   * lesson).
   */
-object Bpe {
+object Bpe extends graft.Catalog {
 
   /** Merge rounds learned. Six keeps the unrolled oracle tractable while
     * exercising multi-round behavior (later rounds merge MERGED symbols

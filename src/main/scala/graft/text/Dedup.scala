@@ -23,7 +23,7 @@ import graft.functions.{DistinctGramHashes, HammingPairStructs, HotWeight, NewPa
   * task — the standard LSH trade (a >cap bucket means the docs are
   * near-identical anyway; exact dedup catches them).
   */
-object Dedup {
+object Dedup extends graft.Catalog {
 
   /** Buckets larger than this are dropped from pair generation. */
   val MaxBucket = 50

@@ -43,7 +43,7 @@ import graft.Tables
   * its only keyed binary op is the gossip health merge,
   * mr/gossip.go:81-104).
   */
-object DedupCluster {
+object DedupCluster extends graft.Catalog {
 
   /** Near-dup edge threshold on exact token-set Jaccard. */
   val JaccThreshold = 0.6

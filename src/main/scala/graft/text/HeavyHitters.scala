@@ -35,7 +35,7 @@ import graft.Tables
   * full shuffle; this is the scale-aware refinement for "frequent words
   * only" queries.
   */
-object HeavyHitters {
+object HeavyHitters extends graft.Catalog {
 
   /** Counters per partition summary. Must exceed Total/threshold
     * (= 1000) for the superset guarantee.
@@ -232,6 +232,10 @@ object HeavyHitters {
     "hll_intersection" -> (hllIntersection _),
     "cms_join_size" -> (cmsJoinSize _),
     "hll_rollup_merge" -> (hllRollupMerge _))
+
+  override val noOracle: Map[String, String] = Map(
+    "cms_token_estimates" -> ("engine-native count-min sketch binary; " +
+      "cms_dataflow_estimates is the oracled twin"))
 
   /** Sketch-rollup economics made checkable: per month, the distinct
     * active users estimated two ways — DIRECTLY from the month's raw

@@ -26,7 +26,7 @@ import graft.Tables
   * all-pairs); the ×7 plan expansion rides on the PAIR table (already
   * contracted), and the output is 7 rows at any corpus size.
   */
-object LshPlan {
+object LshPlan extends graft.Catalog {
 
   /** All (bands, rows) factorizations of the 64-hash signature. */
   val Plans: Seq[(Int, Int)] =

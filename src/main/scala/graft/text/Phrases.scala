@@ -25,7 +25,7 @@ import graft.Tables
   * Reference basis: none (the reference's wc is unigram-only,
   * mrapps/wc.go); SURVEY §2.3 text-analysis surface.
   */
-object Phrases {
+object Phrases extends graft.Catalog {
 
   /** Phrase-detection threshold constants (Mikolov's δ discount). */
   private val Delta = 3L

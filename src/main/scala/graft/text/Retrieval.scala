@@ -20,7 +20,7 @@ import graft.Tables
   * per-doc ranking partitions on doc_id. Nothing global except the
   * corpus-size scalar (one-row broadcast).
   */
-object Retrieval {
+object Retrieval extends graft.Catalog {
 
   /** Top TF-IDF terms per document: tf(d,t) * ln(N / df(t)), top
     * [[TopTerms]] per doc by (rounded score desc, term asc).

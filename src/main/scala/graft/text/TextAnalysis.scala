@@ -16,7 +16,7 @@ import graft.Tables
   * per-doc reductions use Spark's higher-order array functions
   * (`filter`/`transform`/`aggregate`), not UDFs.
   */
-object TextAnalysis {
+object TextAnalysis extends graft.Catalog {
 
   /** Whitespace tokens with empties dropped — same lambda shape as the
     * DuckDB oracle's `list_filter(string_split_regex(...))`.

@@ -17,7 +17,7 @@ import graft.Tables
   * repetition is the same shape without the global step; redaction is a
   * pure narrow projection (regex runs inside codegen, no shuffle).
   */
-object TextExtras {
+object TextExtras extends graft.Catalog {
 
   /** Corpus-wide top-20 bigrams: tokens are exploded once, bigrams
     * formed per document with lead() over token position, counted with a

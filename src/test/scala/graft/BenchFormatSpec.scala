@@ -87,6 +87,12 @@ class BenchFormatSpec extends AnyFunSuite {
     assert(javas >= 1, "at least this JVM must be counted")
   }
 
+  test("contention is load per core above 1, perfbench's BUSY rule") {
+    assert(!Bench.contended(2.5, 4))
+    assert(Bench.contended(5.0, 4))
+    assert(!Bench.contended(2.5, 32))
+  }
+
   test("host-steal sampler reads a cumulative non-negative tick count") {
     // On this microVM guest /proc/stat carries a steal column; the
     // sampler must parse it (or degrade to -1, never throw), and it is

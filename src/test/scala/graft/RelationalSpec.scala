@@ -181,6 +181,19 @@ class RelationalSpec extends SparkSpec {
       val n = fn(spark, sf).count()
       assert(n >= 0, s"$name failed")
     }
+    // the catalog census, read only now: the data-fitted oracles register
+    // when their query is built
+    val queries = SparkEntry.queries.keySet
+    val oracled = SparkEntry.oracleSql.keySet
+    val noOracle = SparkEntry.catalogs.flatMap(_.noOracle).toMap.keySet
+    assert(SparkEntry.catalogs.map(_.queries.size).sum == queries.size,
+      "two modules declare the same query name")
+    assert(queries.diff(oracled ++ noOracle).isEmpty,
+      s"neither oracle nor noOracle reason: ${queries.diff(oracled ++ noOracle)}")
+    assert(oracled.intersect(noOracle).isEmpty,
+      s"both an oracle and a noOracle reason: ${oracled.intersect(noOracle)}")
+    assert((oracled ++ noOracle).diff(queries).isEmpty,
+      s"oracle or noOracle key that is not a query: ${(oracled ++ noOracle).diff(queries)}")
   }
 
   test("skyline: outputs mutually non-dominated and undominated by any input; planted staircase") {

@@ -7,16 +7,9 @@ import org.scalatest.funsuite.AnyFunSuite
 object TestSpark {
   // local[4, 2]: 4 threads, 2 task attempts — retries on, so the
   // fault-injection suite can exercise crash recovery (test-mr.sh analog)
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4, 2]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graftwh").toString)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession("local[4, 2]", "4",
+    "spark.app.name" -> "graft-test",
+    "spark.sql.warehouse.dir" -> java.nio.file.Files.createTempDirectory("graftwh").toString)
 
   val sf: String = "/root/testdata/sf0.001"
 }
