@@ -13,7 +13,9 @@ import graft.mr.{AppLoader, KeyValue, MapReduce, MrApp}
   * result as the declarative pipeline.
   *
   * Scale notes: every pipeline is scan → narrow transforms → ONE hash
-  * aggregate (partial+final, so the shuffle carries pre-combined rows).
+  * aggregate (partial+final, so the shuffle carries pre-combined rows);
+  * the indexer dedups words per document inside the row, so it needs no
+  * second aggregate for the (word, doc) DISTINCT.
   * Tokenization stays inside whole-stage codegen (`split`/`explode`
   * builtins, no UDFs).
   */
@@ -34,8 +36,13 @@ object MrApps extends graft.Catalog {
   val indexerMap: (String, String) => IterableOnce[KeyValue] = (name, contents) =>
     contents.split(LetterTokenPattern).iterator.filter(_.nonEmpty).distinct
       .map(KeyValue(_, name))
-  val indexerReduce: (String, Seq[String]) => String = (_, vs) =>
-    s"${vs.size} ${vs.distinct.sorted.mkString(",")}"
+  /** Counts DISTINCT names, like the oracle: the reference never maps
+    * one file name twice, but one doc_id may sit on several rows.
+    */
+  val indexerReduce: (String, Seq[String]) => String = (_, vs) => {
+    val docs = vs.distinct.sorted
+    s"${docs.size} ${docs.mkString(",")}"
+  }
 
   /** nocrash app semantics (mrapps/nocrash.go:28-49): four fixed pairs per
     * input; reduce sorts values and joins with " ".
@@ -97,13 +104,25 @@ object MrApps extends graft.Catalog {
     * deduped per document and sorted (mrapps/indexer.go:21-40).
     */
   def indexer(spark: SparkSession, sfDir: String): DataFrame =
-    tokens(spark, sfDir, LetterTokenPattern)
-      .select(col("word"), col("doc_id").cast("string").as("doc"))
-      .distinct()
+    indexerOf(Tables.documents(spark, sfDir))
+
+  /** The indexer over any (doc_id, text) frame. Words dedup inside each
+    * row, like the reference's per-file Map (mrapps/indexer.go:22-27), so
+    * the token stream crosses ONE exchange instead of a corpus-wide
+    * (word, doc) `distinct()` followed by the groupBy. `collect_set` over
+    * the long doc_id keeps the oracle's DISTINCT when a doc_id sits on
+    * several rows; the cast to string comes before the sort, so the docs
+    * follow the string order of the oracle's `ORDER BY doc`.
+    */
+  def indexerOf(docs: DataFrame): DataFrame =
+    docs
+      .select(col("doc_id"),
+        explode(array_distinct(split(col("text"), LetterTokenPattern))).as("word"))
+      .filter(length(col("word")) > 0)
       .groupBy("word")
-      .agg(
-        count(lit(1)).as("n_docs"),
-        array_join(sort_array(collect_set(col("doc"))), ",").as("docs"))
+      .agg(sort_array(collect_set(col("doc_id")).cast("array<string>")).as("ds"))
+      .select(col("word"), size(col("ds")).cast("long").as("n_docs"),
+        array_join(col("ds"), ",").as("docs"))
 
   /** crash/nocrash pipeline: 4 fixed pairs per document, reduce = sorted
     * space-join (mrapps/crash.go:36-57). `source` plays the file name,

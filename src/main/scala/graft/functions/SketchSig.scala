@@ -10,7 +10,7 @@ import org.apache.spark.unsafe.types.UTF8String
 /** The full 64-permutation MinHash signature of a token array, IN-ROW:
   * 3-token shingle → 32-bit md5-prefix hash → per-permutation
   * (a·h + b) mod P minima, one fused pass. Bit-identical to the
-  * explode → posexplode/lead window → [[MinHashAgg]] pipeline it
+  * explode → posexplode/lead window → `MinHashAgg` pipeline it
   * replaces (a permutation minimum is order-free, and the shingle
   * multiset is the same), but the signature is a per-document value, so
   * computing it inside the scan projection removes the pipeline's ONE
@@ -21,8 +21,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * state). At 100 TB that exchange is the pipeline's dominant term;
   * in-row it is zero bytes.
   *
-  * Constants are case-class fields (the [[MinHashAgg]] discipline), so
-  * the expression serializes with the plan.
+  * Constants are case-class fields (the discipline of `MinHashAgg`,
+  * the aggregate kept in the test tree as this expression's parity
+  * reference), so the expression serializes with the plan.
   */
 case class MinHashSig(
     child: Expression, as: Array[Long], bs: Array[Long], prime: Long)

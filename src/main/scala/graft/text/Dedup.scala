@@ -5,8 +5,8 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftnative.Native
 import graft.Tables
-import graft.functions.{DistinctGramHashes, HammingPairStructs, HotWeight, NewPairStructs,
-  OrderedPairStructs, PosGramHashes, SimHashSig, WinnowFps}
+import graft.functions.{DistinctGramHashes, HammingPairStructs, HotWeight, MatchCount,
+  NewPairStructs, OrderedPairStructs, PairStructs, PosGramHashes, SimHashSig, WinnowFps}
 
 /** Deduplication suite over the documents table — the core of any
   * 100 TB training-data pipeline. Four tiers:
@@ -155,7 +155,8 @@ object Dedup extends graft.Catalog {
     * [[graft.functions.MinHashSig]] expression (shingle → 32-bit
     * md5-prefix hash → 64 permutation minima, one fused pass inside the
     * scan projection). The signature is a per-document value, so the r12
-    * posexplode/lead-window/[[graft.functions.MinHashAgg]] pipeline's
+    * posexplode/lead-window/`MinHashAgg` pipeline's (that aggregate now
+    * lives in the test tree as NativeGramExprSpec's parity reference)
     * one corpus-scale doc_id exchange — the whole token stream shuffled
     * and per-doc sorted just to reassemble consecutive triples — carried
     * data whose every consumer was per-row; removed outright (guide
@@ -207,7 +208,9 @@ object Dedup extends graft.Catalog {
     // signature table joins back (twice, keyed on each side) for the
     // estimated Jaccard — so a pair colliding in several bands costs
     // one estimate, not several. More exchanges than the ride-along
-    // formulation, but each moves a small table or narrow rows.
+    // formulation, but each moves a small table or narrow rows. The
+    // in-bucket pair explode and the signature match count are native
+    // kernels (sortedPairs, sigMatches), not interpreted lambdas.
     val sigs = signatures(spark, d).transform(graft.Ckpt.cut)
     val bands = sigs.select(
       $"doc_id",
@@ -220,22 +223,36 @@ object Dedup extends graft.Catalog {
       .groupBy($"band", $"band_key")
       .agg(collect_list($"doc_id").as("ids"))
       .filter(size($"ids") > 1 && size($"ids") <= MaxBucket)
-      .select(explode(expr(
-        """flatten(transform(ids, (x, i) ->
-          |  transform(filter(ids, (y, j) -> j > i), y -> named_struct(
-          |    'a', least(x, y), 'b', greatest(x, y)))))""".stripMargin))
-        .as("p"))
-      .select($"p.a".as("doc_a"), $"p.b".as("doc_b"))
+      .select(sortedPairs($"ids").as("p"))
+      .select($"p.part_a".as("doc_a"), $"p.part_b".as("doc_b"))
       .distinct()
     val sa = sigs.select($"doc_id".as("doc_a"), $"sig".as("sig_a"))
     val sb = sigs.select($"doc_id".as("doc_b"), $"sig".as("sig_b"))
     cand.join(sa, "doc_a").join(sb, "doc_b")
-      .withColumn("m", expr(
-        """aggregate(zip_with(sig_a, sig_b,
-          |  (u, v) -> IF(u = v, CAST(1 AS BIGINT), CAST(0 AS BIGINT))),
-          |  CAST(0 AS BIGINT), (acc, w) -> acc + w)""".stripMargin))
+      .withColumn("m", sigMatches($"sig_a", $"sig_b"))
       .select($"doc_a", $"doc_b", ($"m".cast("double") / NumHashes).as("est_jaccard"))
   }
+
+  /** One row per i<j pair of a bucket's id list, as struct(part_a <=
+    * part_b): the native [[graft.functions.PairStructs]] kernel over the
+    * SORTED ids in place of the nested
+    * `flatten(transform(ids, (x, i) -> transform(filter(ids, (y, j) ->
+    * j > i), y -> named_struct('a', least(x, y), 'b', greatest(x, y)))))`
+    * lambda (CodegenFallback, kept in NativeKernelExprSpec as the
+    * reference side). The multiset of (least, greatest) pairs
+    * over i<j does not depend on the list's order, so the rows are the
+    * same, repeated ids included (NativeKernelExprSpec pins it).
+    */
+  private def sortedPairs(ids: Column): Column =
+    explode(Native(es => PairStructs(es.head), sort_array(ids)))
+
+  /** Signature minima that match position by position: the native
+    * [[graft.functions.MatchCount]] kernel in place of the interpreted
+    * `aggregate(zip_with(sig_a, sig_b, IF(u = v, 1, 0)), 0, +)` spelling
+    * (kept in NativeKernelExprSpec as the reference side).
+    */
+  private def sigMatches(a: Column, b: Column): Column =
+    Native(es => MatchCount(es(0), es(1)), a, b)
 
   /** The new-batch marker: one fixture source plays the daily delta. */
   val IncrementalSource = "src0"
@@ -289,10 +306,7 @@ object Dedup extends graft.Catalog {
     val sa = sigs.select($"doc_id".as("doc_a"), $"sig".as("sig_a"))
     val sb = sigs.select($"doc_id".as("doc_b"), $"sig".as("sig_b"))
     cand.join(sa, "doc_a").join(sb, "doc_b")
-      .withColumn("m", expr(
-        """aggregate(zip_with(sig_a, sig_b,
-          |  (u, v) -> IF(u = v, CAST(1 AS BIGINT), CAST(0 AS BIGINT))),
-          |  CAST(0 AS BIGINT), (acc, w) -> acc + w)""".stripMargin))
+      .withColumn("m", sigMatches($"sig_a", $"sig_b"))
       .select($"doc_a", $"doc_b", $"pair_type",
         ($"m".cast("double") / NumHashes).as("est_jaccard"),
         $"m".as("n_match"))
@@ -673,11 +687,8 @@ object Dedup extends graft.Catalog {
       .groupBy($"fp")
       .agg(collect_list($"doc_id").as("ids"))
       .filter(size($"ids") > 1 && size($"ids") <= MaxBucket)
-      .select(explode(expr(
-        """flatten(transform(ids, (x, i) ->
-          |  transform(filter(ids, (y, j) -> j > i), y -> named_struct(
-          |    'a', least(x, y), 'b', greatest(x, y)))))""".stripMargin)).as("p"))
-      .groupBy($"p.a".as("doc_a"), $"p.b".as("doc_b"))
+      .select(sortedPairs($"ids").as("p"))
+      .groupBy($"p.part_a".as("doc_a"), $"p.part_b".as("doc_b"))
       .agg(count(lit(1)).as("n_shared"))
       .filter($"n_shared" >= WinnowMinShared)
   }

@@ -5,9 +5,9 @@ package graft
   * integer arithmetic (so the rehearsal's result check is
   * order-independent), the shuffle is reusable across two jobs (the
   * sequencing the rehearsal depends on), and the main refuses a
-  * single-JVM master. The migration contrast itself is the evidence
-  * leg's job (scripts/r12_evidence.sh decommission — real executor
-  * processes to SIGPWR).
+  * single-JVM master. The migration contrast itself is the job of the
+  * `graft.DecommissionRehearsal` main run on a `local-cluster` master
+  * (real executor processes to SIGPWR; see its scaladoc for the usage).
   */
 class DecommissionSpec extends SparkSpec {
 

@@ -65,6 +65,49 @@ class MrCoreSpec extends SparkSpec {
     assert(core === df)
   }
 
+  private def indexerRows(df: org.apache.spark.sql.DataFrame): Map[String, String] =
+    df.collect().map(r => r.getString(0) -> s"${r.getLong(1)} ${r.getString(2)}").toMap
+
+  test("indexer via generic core == declarative pipeline") {
+    val perDoc = Tables.documents(spark, sf)
+      .select($"doc_id".cast("string"), $"text").as[(String, String)]
+    val core = MapReduce.run(spark, perDoc, MrApps.indexerMap, MrApps.indexerReduce, 8)
+      .collect().map(kv => kv.key -> kv.value).toMap
+    val df = indexerRows(MrApps.indexer(spark, sf))
+    assert(core.nonEmpty)
+    assert(core === df)
+  }
+
+  test("indexer counts a doc_id on two rows once, like the oracle's DISTINCT") {
+    // doc 7 sits on two rows; "ab" and "cd" appear in both of them
+    val rows = Seq(
+      (7L, "ab cd ab"), (7L, "cd, ab!"), (10L, "ab zz"), (2L, "zz"), (3L, ""))
+    val docs = rows.toDF("doc_id", "text")
+    val got = indexerRows(MrApps.indexerOf(docs))
+    // the oracle's shape: DISTINCT (word, doc string), then count and a
+    // string-ordered join per word
+    val want = rows
+      .flatMap { case (id, text) =>
+        text.split(MrApps.LetterTokenPattern).filter(_.nonEmpty).map(_ -> id.toString) }
+      .distinct.groupBy(_._1).map { case (w, ps) =>
+        val ds = ps.map(_._2).sorted
+        w -> s"${ds.size} ${ds.mkString(",")}" }
+    assert(got === want)
+    assert(got("ab") === "2 10,7") // string order: "10" < "7"
+    assert(got("cd") === "1 7")
+    val core = MapReduce.run(spark,
+        docs.select($"doc_id".cast("string"), $"text").as[(String, String)],
+        MrApps.indexerMap, MrApps.indexerReduce, 2)
+      .collect().map(kv => kv.key -> kv.value).toMap
+    assert(core === got)
+  }
+
+  test("mr_indexer plans exactly one hash exchange") {
+    val plan = MrApps.indexer(spark, sf).queryExecution.executedPlan.toString
+    val nEx = "Exchange hashpartitioning".r.findAllIn(plan).length
+    assert(nEx === 1, s"mr_indexer: $nEx hash exchanges:\n$plan")
+  }
+
   test("output is key-sorted within partitions (reference mr-out contract)") {
     val parts = MapReduce.run(spark, docsInput, MrApps.wcMap, MrApps.wcReduce, 4)
       .mapPartitions(it => Iterator.single(it.map(_.key).toSeq))

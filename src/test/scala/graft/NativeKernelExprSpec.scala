@@ -1,8 +1,12 @@
 package graft
 
-import graft.functions.{PairStructs, SegBucket}
+import graft.functions.{MatchCount, PairStructs, SegBucket}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftnative.Native
+import org.apache.spark.sql.types._
+import org.scalacheck.Gen
+import org.scalacheck.rng.Seed
 
 /** The r14 native kernels pinned bit-for-bit against the SQL spellings
   * they replaced (which the DuckDB oracle still replays):
@@ -14,7 +18,14 @@ import org.apache.spark.sql.graftnative.Native
   *    groupBy(b) sums (bootstrap_ci / ab_uplift_bootstrap);
   *  - [[SegBucket]] vs the inline when-chain + integral div bucket
   *    assignment (FreqSelect's narrowing passes), on both the long and
-  *    decimal paths.
+  *    decimal paths;
+  *  - [[MatchCount]] vs the `aggregate(zip_with(...))` signature match
+  *    count, and [[PairStructs]] over SORTED ids vs the least/greatest
+  *    bucket lambda (dedup_minhash_pairs, dedup_winnow_pairs), both as
+  *    generator-driven properties: raw ScalaCheck generators with fixed
+  *    seeds, every case in one frame, run once through the
+  *    local-relation (interpreted) path and once behind an exchange
+  *    (codegen path).
   */
 class NativeKernelExprSpec extends SparkSpec {
   import spark.implicits._
@@ -244,5 +255,94 @@ class NativeKernelExprSpec extends SparkSpec {
     assert(gotB((bigLo - 1).toString) === -1L)
     assert(gotB(BigInt(0).toString) === ((BigInt(0) - bigLo) / bigW).toLong)
     assert(gotB(bigHi.toString) === ((bigHi - bigLo) / bigW).toLong)
+  }
+
+  // ---- generator-driven kernel parity ----
+
+  private def samples[A](g: Gen[A], n: Int): Seq[A] =
+    (0 until n).flatMap(i => g.apply(Gen.Parameters.default, Seed(i.toLong)))
+
+  /** The frame as built (its projections fold into the local relation
+    * and run interpreted) and the same rows behind an exchange (the
+    * projections run in whole-stage codegen).
+    */
+  private def bothPaths(df: DataFrame): Seq[DataFrame] = Seq(df, df.repartition(3))
+
+  /** Few distinct values, so equal positions are common; the long edges
+    * are among them.
+    */
+  private val genElem: Gen[java.lang.Long] = Gen.frequency(
+    1 -> Gen.const(null),
+    6 -> Gen.oneOf(Long.MinValue, Long.MaxValue, 0L, -1L, 1L, 42L).map(Long.box))
+
+  private val genSig: Gen[Seq[java.lang.Long]] = Gen.frequency(
+    1 -> Gen.const(null),
+    1 -> Gen.const(Seq.empty[java.lang.Long]),
+    8 -> Gen.choose(1, 9).flatMap(n => Gen.listOfN(n, genElem)))
+
+  test("MatchCount == aggregate(zip_with(...)) match count (generated arrays)") {
+    val cases = samples(Gen.zip(genSig, genSig), 300)
+    val sigType = ArrayType(LongType, containsNull = true)
+    val schema = StructType(Seq(StructField("k", LongType, nullable = false),
+      StructField("sig_a", sigType), StructField("sig_b", sigType)))
+    val df = spark.createDataFrame(
+      java.util.Arrays.asList(cases.zipWithIndex.map { case ((a, b), k) =>
+        Row(k.toLong, a, b) }: _*), schema)
+    def counts(d: DataFrame, m: org.apache.spark.sql.Column) =
+      d.select($"k", m.as("m")).collect()
+        .map(r => r.getLong(0) -> (if (r.isNullAt(1)) None else Some(r.getLong(1)))).toMap
+    for (d <- bothPaths(df)) {
+      val native = counts(d, Native(es => MatchCount(es(0), es(1)), $"sig_a", $"sig_b"))
+      // the spelling dedup_minhash_pairs and dedup_incremental_pairs ran
+      // before the kernel
+      val sql = counts(d, expr(
+        """aggregate(zip_with(sig_a, sig_b,
+          |  (u, v) -> IF(u = v, CAST(1 AS BIGINT), CAST(0 AS BIGINT))),
+          |  CAST(0 AS BIGINT), (acc, w) -> acc + w)""".stripMargin))
+      assert(native.size === cases.size)
+      assert(native === sql)
+      // the generator reaches every branch: null arrays, empty arrays,
+      // unequal lengths, and matches
+      assert(sql.values.exists(_.isEmpty) && sql.values.exists(_.exists(_ > 1)))
+    }
+    assert(cases.exists { case (a, b) =>
+      a != null && b != null && a.size != b.size && a.nonEmpty && b.nonEmpty })
+  }
+
+  test("PairStructs(sort_array(ids)) == least/greatest bucket lambda (generated ids)") {
+    val maxBucket = text.Dedup.MaxBucket
+    // distinct ids (a band bucket holds each doc once), the long edges
+    // among them, shuffled
+    val genIds: Gen[Seq[Long]] = for {
+      n <- Gen.oneOf(0, 1, 2, maxBucket)
+      edges <- Gen.someOf(Long.MinValue, Long.MaxValue, 0L, -1L)
+      rest <- Gen.listOfN(n, Gen.choose(Long.MinValue, Long.MaxValue))
+      seed <- Gen.long
+    } yield new scala.util.Random(seed).shuffle((edges.toSeq ++ rest).distinct.take(n))
+    // winnow fingerprint buckets may hold one doc twice: the pair
+    // multiset must match there too
+    val genRepeats: Gen[Seq[Long]] = Gen.choose(2, 12)
+      .flatMap(n => Gen.listOfN(n, Gen.oneOf(Long.MinValue, 0L, 5L, Long.MaxValue)))
+    val cases = samples(genIds, 40) ++ samples(genRepeats, 20)
+    val df = cases.zipWithIndex.map { case (ids, k) => (k.toLong, ids) }.toDF("k", "ids")
+    def rows(d: DataFrame) = d
+      .select($"k", $"p.*").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq.sorted
+    for (d <- bothPaths(df)) {
+      val native = rows(d.select($"k",
+        explode(Native(es => PairStructs(es.head), sort_array($"ids"))).as("p")))
+      // the spelling dedup_minhash_pairs and dedup_winnow_pairs ran
+      // before the kernel
+      val sql = rows(d.select($"k", explode(expr(
+        """flatten(transform(ids, (x, i) ->
+          |  transform(filter(ids, (y, j) -> j > i), y -> named_struct(
+          |    'a', least(x, y), 'b', greatest(x, y)))))""".stripMargin))
+        .as("p")))
+      assert(native === sql)
+      assert(native.size === cases.map(c => c.size * (c.size - 1) / 2).sum)
+      assert(native.forall { case (_, a, b) => a <= b })
+    }
+    assert(cases.exists(c => c.distinct.size < c.size))
+    assert(cases.map(_.size).toSet.contains(maxBucket))
   }
 }

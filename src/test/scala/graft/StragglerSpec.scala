@@ -5,8 +5,9 @@ package graft
   * wrapper is a pass-through for data), the victim predicate never
   * matches in-process executors when blank, and the main refuses a
   * single-JVM master rather than produce a receipt-shaped no-op. The
-  * speculation contrast itself is the evidence leg's job
-  * (scripts/r12_evidence.sh straggler — real executor JVMs to stall).
+  * speculation contrast itself is the job of the `graft.StragglerRehearsal`
+  * main run on a `local-cluster` or standalone master (real executor JVMs
+  * to stall; see its scaladoc for the usage).
   */
 class StragglerSpec extends SparkSpec {
 
