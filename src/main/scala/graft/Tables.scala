@@ -10,37 +10,26 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   * `.explain("formatted")`: filters must show up under `PushedFilters`.
   */
 object Tables {
-  /** Scan-DataFrame memo per (session, dir, table) — r14 floor fix
-    * (VERDICT item 2). Every `spark.read.parquet` call rebuilds the
+  /** Scan-DataFrame memo per session (r14 floor fix, VERDICT item 2).
+    * Every `spark.read.parquet` call rebuilds the
     * file index and re-reads parquet footers for schema inference:
     * measured ~85-100 ms PER CALL at sf0.1, paid 1-3x by
     * each of 279 catalog queries — the single largest share of the
-    * sub-second tail's fixed cost. The memo holds the LAZY scan
-    * DataFrame only (logical plan + resolved schema — metadata, no
-    * rows): every action still reads the parquet files themselves, so
-    * bench/oracle runs compute from disk exactly as before. Keyed on
-    * the session OBJECT (the [[graft.text.Dedup]] edgeCache
-    * discipline); entries of stopped sessions are purged on access.
-    * A memoized plan pins the file LIST, so each entry carries the
-    * table directory's mtime and is rebuilt when it changes (an
-    * `overwrite` into the same path replaces the files — StatModelsSpec
-    * plants fixtures exactly that way); one stat(2) per call replaces
-    * the footer re-read.
+    * sub-second tail's fixed cost. The [[graft.Memo]] entry holds the
+    * LAZY scan DataFrame only (logical plan + resolved schema —
+    * metadata, no rows): every action still reads the parquet files
+    * themselves, so bench/oracle runs compute from disk exactly as
+    * before. A memoized plan pins the file LIST, so the table
+    * directory's mtime is part of the key and an `overwrite` into the
+    * same path (StatModelsSpec plants fixtures exactly that way) is
+    * read afresh; one stat(2) per call replaces the footer re-read. The
+    * old mtime's entry is never served again; it holds only a lazy plan
+    * and is dropped when its session stops.
     */
-  private val cache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, String), (Long, DataFrame)]
-
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    cache.filterInPlace { case ((s, _, _), _) => !s.sparkContext.isStopped }
-    val key = (spark, sfDir, name)
-    val stamp = new java.io.File(s"$sfDir/$name.parquet").lastModified
-    cache.get(key) match {
-      case Some((st, df)) if st == stamp => df
-      case _ =>
-        val df = spark.read.parquet(s"$sfDir/$name.parquet")
-        cache.put(key, (stamp, df))
-        df
-    }
+    val path = s"$sfDir/$name.parquet"
+    val stamp = new java.io.File(path).lastModified
+    Memo(spark, ("table", sfDir, name, stamp))(spark.read.parquet(path))
   }
 
   def region(s: SparkSession, d: String): DataFrame     = table(s, d, "region")

@@ -173,21 +173,15 @@ object Curation extends graft.Catalog {
     * the SAME correctly-rounded double (string→double parse in Spark,
     * int→double cast in DuckDB, of the same 60-bit integer).
     */
-  /** The fitted 20-row rate table, localCheckpointed once per
-    * (session, dir): [[stratifiedSample]] applies the mixture in the
+  /** The fitted 20-row rate table, a [[graft.Memo.frame]]:
+    * [[stratifiedSample]] applies the mixture in the
     * same catalog pass that computed it, and re-running the full
     * tokenize+aggregate fit inside the draw's own plan doubled the
     * documents scan (VERDICT r7 item 7). The checkpoint cuts the
     * lineage, so the draw's plan starts from 20 materialized rows.
     */
-  private val ratesCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  // self-healing (Ckpt.cachedCheckpoint): the 20-row fit refits itself
-  // if its checkpoint blocks die between queries (executor cascade or
-  // Verify's inter-query unpersist hygiene)
   private def fittedRates(spark: SparkSession, d: String): DataFrame =
-    graft.Ckpt.cachedCheckpoint(ratesCache, (spark, d))(
-      fitMixtureRates(spark, d))
+    graft.Memo.frame(spark, ("mixture_rates", d))(fitMixtureRates(spark, d))
 
   def stratifiedSample(spark: SparkSession, d: String): DataFrame = {
     import spark.implicits._

@@ -32,13 +32,11 @@ object Graph extends graft.Catalog {
     * bucket-capped by construction ([[graft.text.Dedup.MaxBucket]]), so
     * no hub exists by design.
     */
-  /** The >= 0.5 Jaccard edge list, checkpointed once per (session, dir)
-    * — [[triangles]], [[kcore]] and [[reachHops]] in one catalog pass
-    * share the materialization instead of each replaying the pair
-    * pipeline. r13: the registry itself now lives in
-    * [[graft.text.Dedup.jaccardEdges]] so dedup_blocking_eval's truth
-    * set shares the same single fit (self-healing cachedCheckpoint as
-    * before).
+  /** The >= 0.5 Jaccard edge list, checkpointed once — [[triangles]],
+    * [[kcore]] and [[reachHops]] in one catalog pass share the
+    * materialization instead of each replaying the pair pipeline. r13:
+    * the memo itself lives in [[graft.text.Dedup.jaccardEdges]] so
+    * dedup_blocking_eval's truth set shares the same single fit.
     */
   private def dupEdges(spark: SparkSession, d: String): DataFrame =
     graft.text.Dedup.jaccardEdges(spark, d)

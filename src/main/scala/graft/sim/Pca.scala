@@ -55,22 +55,13 @@ object Pca extends graft.Catalog {
   @volatile private var lastFit: Option[Array[Double]] = None
   @volatile private var lastFinal: Option[Array[Double]] = None
 
-  private def dlit(x: Double): String = {
-    val s = x.toString
-    if (s.indexOf('E') >= 0 || s.indexOf('e') >= 0) s else s + "e0"
-  }
-
-  /** One PCA fit: (mean, final component, n, ||s||_final). Cached per
-    * (session, dir) so [[pcaPower]] and [[pcaResiduals]] in one catalog
-    * pass share the 9 scans ([[graft.pipeline.Curation]]'s fittedRates
-    * discipline).
+  /** One PCA fit: (mean, final component, n, ||s||_final). A
+    * [[graft.Memo]], so [[pcaPower]] and [[pcaResiduals]] in one catalog
+    * pass share the 9 scans.
     */
-  private val fitCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (Array[Double], Array[Double], Long, Double)]
-
   private def fitPca(spark: SparkSession, d: String)
       : (Array[Double], Array[Double], Long, Double) =
-    fitCache.getOrElseUpdate((spark, d), {
+    graft.Memo(spark, ("pca_fit", d)) {
       import spark.implicits._
       val e = Tables.embeddings(spark, d)
         .select(col("embedding").cast("array<double>").as("v"))
@@ -109,7 +100,7 @@ object Pca extends graft.Catalog {
       }
       lastFinal = Some(v.clone())
       (mean, v, n, nrm)
-    })
+    }
 
   def pcaPower(spark: SparkSession, d: String): DataFrame = {
     import spark.implicits._
@@ -153,7 +144,7 @@ object Pca extends graft.Catalog {
     */
   private def pcaOracle: String = {
     val v7 = lastFit.getOrElse(Array.fill(Dim)(0.125))
-    val vLits = v7.map(dlit).mkString(", ")
+    val vLits = v7.map(Similarity.dlit).mkString(", ")
     s"""WITH e AS (SELECT CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
        |nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM e),
        |dims AS (SELECT unnest(range(1, ${Dim + 1})) AS i),
@@ -188,7 +179,7 @@ object Pca extends graft.Catalog {
     */
   private def residOracle: String = {
     val v = lastFinal.getOrElse(Array.fill(Dim)(0.125))
-    val vLits = v.map(dlit).mkString(", ")
+    val vLits = v.map(Similarity.dlit).mkString(", ")
     s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
        |           FROM embeddings),
        |nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM e),

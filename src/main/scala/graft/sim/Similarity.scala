@@ -70,7 +70,7 @@ object Similarity extends graft.Catalog {
     * through the correctly-rounded DOUBLE parser, recovering the
     * identical bits.
     */
-  private def dlit(x: Double): String = {
+  private[sim] def dlit(x: Double): String = {
     val s = x.toString
     if (s.indexOf('E') >= 0 || s.indexOf('e') >= 0) s else s + "e0"
   }

@@ -52,13 +52,6 @@ object Bpe extends graft.Catalog {
     */
   val Rounds = 6
 
-  /** Learned merges per data dir: (lhs, rhs, pair_count) in round order.
-    * Memoized so the two catalog queries share one fit (the ivfFit
-    * registry discipline).
-    */
-  private val fit =
-    scala.collection.concurrent.TrieMap.empty[String, Seq[(String, String, Long)]]
-
   private def chars(c: org.apache.spark.sql.Column) =
     filter(split(c, ""), x => x =!= "")
 
@@ -72,12 +65,14 @@ object Bpe extends graft.Catalog {
       .withColumn("s", chars($"w"))
   }
 
-  /** Run the K merge rounds once per dir. Each round is two jobs over
-    * the cached vocabulary (pair argmax, then nothing — the merge is
-    * folded lazily into the next round's expression chain).
+  /** The learned merges, (lhs, rhs, pair_count) in round order: K merge
+    * rounds, each two jobs over the cached vocabulary (pair argmax, then
+    * nothing — the merge is folded lazily into the next round's
+    * expression chain). A [[graft.Memo]], so the two catalog queries
+    * share one fit.
     */
   private def learn(spark: SparkSession, d: String): Seq[(String, String, Long)] =
-    fit.getOrElseUpdate(d, {
+    graft.Memo(spark, ("bpe_merges", d)) {
       import spark.implicits._
       val base = words(spark, d).persist()
       try {
@@ -115,7 +110,7 @@ object Bpe extends graft.Catalog {
         }
         merges.result()
       } finally base.unpersist()
-    })
+    }
 
   /** The learned merge table: (step, lhs, rhs, pair_count). K rows,
     * assembled driver-side from the bounded fit — the ≤625-row

@@ -86,18 +86,16 @@ object Dedup extends graft.Catalog {
         ($"inter".cast("double") / $"uni").as("jacc"))
   }
 
-  /** The ≥ 0.5 blocked-Jaccard edge list (a < b), fitted once per
-    * (session, dir) and shared by EVERY in-session consumer of the same
-    * bucket-capped frame — the graph family (kcore / triangles /
+  /** The ≥ 0.5 blocked-Jaccard edge list (a < b), fitted once and
+    * shared by EVERY in-session consumer of the same bucket-capped
+    * frame — the graph family (kcore / triangles /
     * reach_hops via [[graft.relational.Graph]]) and the blocking
     * evaluation's truth set. r13: the registry moved here from Graph so
     * dedup_blocking_eval (alphabetically first in a catalog pass) pays
     * the one fit the graph queries then reuse, instead of the two
-    * modules fitting the identical frame once each. Self-healing
-    * ([[graft.Ckpt.cachedCheckpoint]]): refits if the blocks die.
+    * modules fitting the identical frame once each. A
+    * [[graft.Memo.frame]]: refits if the blocks die.
     */
-  private val edgeCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
   def jaccardEdges(spark: SparkSession, d: String): DataFrame = {
     import spark.implicits._
     jaccardEdgesWithJacc(spark, d).select($"a", $"b")
@@ -112,7 +110,7 @@ object Dedup extends graft.Catalog {
     * the identical predicate by construction).
     */
   def jaccardEdgesWithJacc(spark: SparkSession, d: String): DataFrame =
-    graft.Ckpt.cachedCheckpoint(edgeCache, (spark, d)) {
+    graft.Memo.frame(spark, ("jaccard_edges", d)) {
       import spark.implicits._
       jaccardPairs(spark, d)
         .filter($"jacc" >= 0.5)
@@ -188,12 +186,10 @@ object Dedup extends graft.Catalog {
     * set is band/bucket-capped (never corpus²), so one catalog pass
     * fits it once for its two consumers (the dedup_minhash_pairs query
     * and [[blockingEval]]'s candidate side) — the [[jaccardEdges]]
-    * discipline applied to the LSH tier (r13).
+    * discipline applied to the LSH tier (r13), through [[graft.Memo.frame]].
     */
-  private val minhashPairCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
   def minhashPairs(spark: SparkSession, d: String): DataFrame =
-    graft.Ckpt.cachedCheckpoint(minhashPairCache, (spark, d)) {
+    graft.Memo.frame(spark, ("minhash_pairs", d)) {
       minhashPairsUncached(spark, d)
     }
 
@@ -450,13 +446,11 @@ object Dedup extends graft.Catalog {
   /** Shared fit (r13): the hamming-verified pair set is chunk-bucket-
     * capped (never corpus²), and one catalog pass consumes it twice —
     * [[editPairs]]' candidate stream (alphabetically first) and the
-    * dedup_simhash_pairs query itself — the [[minhashPairs]] registry
+    * dedup_simhash_pairs query itself — the [[minhashPairs]] memo
     * discipline.
     */
-  private val simhashPairCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
   def simhashPairs(spark: SparkSession, d: String): DataFrame =
-    graft.Ckpt.cachedCheckpoint(simhashPairCache, (spark, d)) {
+    graft.Memo.frame(spark, ("simhash_pairs", d)) {
       simhashPairsUncached(spark, d)
     }
 

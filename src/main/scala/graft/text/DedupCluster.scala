@@ -72,36 +72,34 @@ object DedupCluster extends graft.Catalog {
     * emitted — they need no dedup decision). cluster_id = min doc_id of
     * the component; the keeper is that minimum (deterministic
     * tie-break, same convention as [[Dedup.exact]]'s keep_id).
+    *
+    * The propagation loop runs EAGERLY at plan-construction time
+    * (localCheckpoint + fixpoint actions), so the result is a
+    * [[graft.Memo]]: the cluster table is a shared intermediate of the
+    * dedup pipeline ([[clusters]] + [[survivors]] both consume it), and
+    * a production run computes it once. Deterministic, so caching is
+    * observationally pure. Not [[graft.Memo.frame]]: the below-gate
+    * result is a driver-built local relation that needs no cut.
     */
-  def clusters(spark: SparkSession, d: String): DataFrame = {
-    // purge entries bound to stopped sessions (a DataFrame pins its
-    // session, so dead-session entries would otherwise be retained
-    // forever), then validate identity with `eq` — never serve a frame
-    // bound to a different session that happens to share a hash key
-    cache.filterInPlace { case (_, (sess, _)) => !sess.sparkContext.isStopped }
-    cache.get((System.identityHashCode(spark), d)) match {
-      case Some((sess, df)) if sess eq spark => df
-      case _ =>
-        import spark.implicits._
-        // r14 (guide §2.4 / §5 reuse): the ≥ [[JaccThreshold]] edge set
-        // is a FILTER of the fitted ≥ 0.5 registry edge list (identical
-        // jacc values, computed once per session and shared with the
-        // graph family + blocking eval) — the former standalone
-        // re-derivation ran the whole blocked-Jaccard pipeline again.
-        // The registry frame is already checkpointed; no further cut
-        // needed for the count gate + chosen path below.
-        val edges = Dedup.jaccardEdgesWithJacc(spark, d)
-          .filter($"jacc" >= JaccThreshold)
-          .select($"a".as("doc_a"), $"b".as("doc_b"))
-        val labeled =
-          if (edges.count() <= DriverEdgeLimit) clustersOfEdgesLocal(edges)
-          else clustersOfEdges(edges)
-        val out = labeled.withColumn(
-          "is_keeper", ($"doc_id" === $"cluster_id").cast("long"))
-        cache.put((System.identityHashCode(spark), d), (spark, out))
-        out
+  def clusters(spark: SparkSession, d: String): DataFrame =
+    graft.Memo(spark, ("dedup_clusters", d)) {
+      import spark.implicits._
+      // r14 (guide §2.4 / §5 reuse): the ≥ [[JaccThreshold]] edge set
+      // is a FILTER of the fitted ≥ 0.5 registry edge list (identical
+      // jacc values, computed once per session and shared with the
+      // graph family + blocking eval) — the former standalone
+      // re-derivation ran the whole blocked-Jaccard pipeline again.
+      // The registry frame is already checkpointed; no further cut
+      // needed for the count gate + chosen path below.
+      val edges = Dedup.jaccardEdgesWithJacc(spark, d)
+        .filter($"jacc" >= JaccThreshold)
+        .select($"a".as("doc_a"), $"b".as("doc_b"))
+      val labeled =
+        if (edges.count() <= DriverEdgeLimit) clustersOfEdgesLocal(edges)
+        else clustersOfEdges(edges)
+      labeled.withColumn(
+        "is_keeper", ($"doc_id" === $"cluster_id").cast("long"))
     }
-  }
 
   /** Driver-side exact union-find over a collected edge list — the
     * below-[[DriverEdgeLimit]] fast path. Path-compressed; the emitted
@@ -135,19 +133,6 @@ object DedupCluster extends graft.Catalog {
     parent.keys.toSeq.map(k => (k, minOf(find(k))))
       .toDF("doc_id", "cluster_id")
   }
-
-  /** The propagation loop runs EAGERLY at plan-construction time
-    * (localCheckpoint + fixpoint actions), so [[clusters]] memoizes its
-    * checkpoint-backed result per (session, dir): the cluster table is a
-    * shared intermediate of the dedup pipeline ([[clusters]] +
-    * [[survivors]] both consume it), and a production run computes it
-    * once. Deterministic, so caching is observationally pure. The
-    * session rides along in the value so lookups verify identity with
-    * `eq` (identityHashCode alone can collide after GC) and entries for
-    * stopped sessions are purged on access.
-    */
-  private val cache = scala.collection.concurrent.TrieMap
-    .empty[(Int, String), (SparkSession, DataFrame)]
 
   /** Rounds the last [[clustersOfEdges]] run took to converge —
     * spec-only introspection for the O(log diameter) bound.

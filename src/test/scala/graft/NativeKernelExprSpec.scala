@@ -25,7 +25,10 @@ import org.scalacheck.rng.Seed
   *    generator-driven properties: raw ScalaCheck generators with fixed
   *    seeds, every case in one frame, run once through the
   *    local-relation (interpreted) path and once behind an exchange
-  *    (codegen path).
+  *    (codegen path);
+  *  - the three bucket pair kernels (`OrderedPairStructs`,
+  *    `NewPairStructs`, `HammingPairStructs`) vs their bucket lambdas,
+  *    on the hand-picked rows plus generated buckets the same way.
   */
 class NativeKernelExprSpec extends SparkSpec {
   import spark.implicits._
@@ -89,85 +92,105 @@ class NativeKernelExprSpec extends SparkSpec {
   }
 
   test("OrderedPairStructs == containment bucket lambda (id-ordered 4-field pairs)") {
-    val buckets = Seq(
+    // distinct ids, as a bucket holds each doc once
+    val generated = keyed(samples(genIds.flatMap(ids =>
+      Gen.listOfN(ids.size, genEdgeLong).map(ids.zip(_))), 40))
+    val buckets = (Seq(
       (1L, Seq((5L, 10L), (2L, 7L), (9L, 3L))),
       (2L, Seq((4L, 4L))),                       // singleton: no pairs
       (3L, Seq.empty[(Long, Long)]),             // empty
       (4L, (1L to 9L).map(i => (10L - i, i * 2)))  // descending ids
-    ).toDF("k", "xs")
+    ) ++ generated).toDF("k", "xs")
       .select($"k", expr("transform(xs, e -> named_struct('doc_id', e._1, 'n_doc', e._2))").as("ds"))
     def rows(df: org.apache.spark.sql.DataFrame) = df
       .select($"k", $"p.doc_a", $"p.n_a", $"p.doc_b", $"p.n_b")
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
       .toSeq.sorted
-    val native = rows(buckets
-      .select($"k", explode(Native(es => graft.functions.OrderedPairStructs(es.head), $"ds")).as("p")))
-    val sql = rows(buckets.select($"k", explode(expr(
-      """flatten(transform(ds, (x, i) ->
-        |  transform(filter(ds, (y, j) -> j > i), y -> named_struct(
-        |    'doc_a', IF(x.doc_id < y.doc_id, x.doc_id, y.doc_id),
-        |    'n_a',   IF(x.doc_id < y.doc_id, x.n_doc, y.n_doc),
-        |    'doc_b', IF(x.doc_id < y.doc_id, y.doc_id, x.doc_id),
-        |    'n_b',   IF(x.doc_id < y.doc_id, y.n_doc, x.n_doc)))))""".stripMargin))
-      .as("p")))
-    assert(native === sql)
-    assert(native.count(_._1 == 4L) === 9 * 8 / 2)
-    // ordering holds on every emitted pair
-    assert(native.forall { case (_, a, _, b, _) => a < b })
+    for (d <- bothPaths(buckets)) {
+      val native = rows(d
+        .select($"k", explode(Native(es => graft.functions.OrderedPairStructs(es.head), $"ds")).as("p")))
+      val sql = rows(d.select($"k", explode(expr(
+        """flatten(transform(ds, (x, i) ->
+          |  transform(filter(ds, (y, j) -> j > i), y -> named_struct(
+          |    'doc_a', IF(x.doc_id < y.doc_id, x.doc_id, y.doc_id),
+          |    'n_a',   IF(x.doc_id < y.doc_id, x.n_doc, y.n_doc),
+          |    'doc_b', IF(x.doc_id < y.doc_id, y.doc_id, x.doc_id),
+          |    'n_b',   IF(x.doc_id < y.doc_id, y.n_doc, x.n_doc)))))""".stripMargin))
+        .as("p")))
+      assert(native === sql)
+      assert(native.count(_._1 == 4L) === 9 * 8 / 2)
+      // ordering holds on every emitted pair
+      assert(native.forall { case (_, a, _, b, _) => a < b })
+      // every generated pair, plus the hand-picked C(3,2) and C(9,2)
+      assert(native.size === generated.map(g => g._2.size * (g._2.size - 1) / 2).sum + 3 + 36)
+    }
   }
 
   test("NewPairStructs == incremental bucket lambda with the OR filter folded in") {
-    val buckets = Seq(
+    val generated = keyed(samples(Gen.oneOf(Some(false), Some(true), None).flatMap { flag =>
+      genBuckets(Gen.zip(genEdgeLong, flag.fold(Gen.oneOf(false, true))(Gen.const)))
+    }, 60))
+    val buckets = (Seq(
       (1L, Seq((5L, true), (2L, false), (9L, true), (1L, false))),
       (2L, Seq((4L, false), (6L, false))),   // no new docs: zero pairs
       (3L, Seq((7L, true), (8L, true)))      // new-new
-    ).toDF("k", "xs")
+    ) ++ generated).toDF("k", "xs")
       .select($"k", expr("transform(xs, e -> named_struct('doc_id', e._1, 'is_new', e._2))").as("ds"))
     def rows(df: org.apache.spark.sql.DataFrame) = df
       .select($"k", $"p.a", $"p.b", $"p.nn")
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getBoolean(3)))
       .toSeq.sorted
-    val native = rows(buckets
-      .select($"k", explode(Native(es => graft.functions.NewPairStructs(es.head), $"ds")).as("p")))
-    val sql = rows(buckets.select($"k", explode(expr(
-      """flatten(transform(ds, (x, i) ->
-        |  transform(filter(ds, (y, j) -> j > i AND (x.is_new OR y.is_new)),
-        |    y -> named_struct(
-        |      'a', least(x.doc_id, y.doc_id),
-        |      'b', greatest(x.doc_id, y.doc_id),
-        |      'nn', x.is_new AND y.is_new))))""".stripMargin))
-      .as("p")))
-    assert(native === sql)
-    assert(!native.exists(_._1 == 2L), "all-corpus bucket must emit no pairs")
-    assert(native.filter(_._1 == 3L).forall(_._4), "new-new pair must flag nn")
+    for (d <- bothPaths(buckets)) {
+      val native = rows(d
+        .select($"k", explode(Native(es => graft.functions.NewPairStructs(es.head), $"ds")).as("p")))
+      val sql = rows(d.select($"k", explode(expr(
+        """flatten(transform(ds, (x, i) ->
+          |  transform(filter(ds, (y, j) -> j > i AND (x.is_new OR y.is_new)),
+          |    y -> named_struct(
+          |      'a', least(x.doc_id, y.doc_id),
+          |      'b', greatest(x.doc_id, y.doc_id),
+          |      'nn', x.is_new AND y.is_new))))""".stripMargin))
+        .as("p")))
+      assert(native === sql)
+      assert(!native.exists(_._1 == 2L), "all-corpus bucket must emit no pairs")
+      assert(native.filter(_._1 == 3L).forall(_._4), "new-new pair must flag nn")
+    }
+    // full all-old and all-new buckets are among the generated ones
+    val full = generated.map(_._2).filter(_.size == text.Dedup.MaxBucket)
+    assert(full.exists(_.forall(!_._2)) && full.exists(_.forall(_._2)))
   }
 
   test("HammingPairStructs == simhash/phash bucket lambda (xor bit counts)") {
-    val buckets = Seq(
+    val generated = keyed(samples(genBuckets(Gen.zip(genEdgeLong, genEdgeLong, genEdgeLong)), 40))
+    val buckets = (Seq(
       (1L, Seq((5L, 0x0FL, -1L), (2L, 0xF0L, -1L), (9L, 0x0FL, 0L))),
       (2L, Seq((4L, 1L, 2L))),
       (3L, Seq((7L, Long.MinValue, Long.MaxValue), (8L, 0L, 0L), (6L, -1L, -1L)))
-    ).toDF("k", "xs")
+    ) ++ generated).toDF("k", "xs")
       .select($"k", expr("transform(xs, e -> named_struct('doc_id', e._1, 'lo', e._2, 'hi', e._3))").as("ds"))
     def rows(df: org.apache.spark.sql.DataFrame) = df
       .select($"k", $"p.a", $"p.b", $"p.h")
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getInt(3)))
       .toSeq.sorted
-    val native = rows(buckets
-      .select($"k", explode(Native(es => graft.functions.HammingPairStructs(es.head), $"ds")).as("p")))
-    val sql = rows(buckets.select($"k", explode(expr(
-      """flatten(transform(ds, (x, i) ->
-        |  transform(filter(ds, (y, j) -> j > i), y -> named_struct(
-        |    'a', least(x.doc_id, y.doc_id),
-        |    'b', greatest(x.doc_id, y.doc_id),
-        |    'h', bit_count(x.lo ^ y.lo) + bit_count(x.hi ^ y.hi)))))""".stripMargin))
-      .as("p")))
-    assert(native === sql)
-    // identical halves -> hamming 0; full complement -> 128
-    assert(sql.nonEmpty && native.exists(_._4 == 0) === sql.exists(_._4 == 0))
+    for (d <- bothPaths(buckets)) {
+      val native = rows(d
+        .select($"k", explode(Native(es => graft.functions.HammingPairStructs(es.head), $"ds")).as("p")))
+      val sql = rows(d.select($"k", explode(expr(
+        """flatten(transform(ds, (x, i) ->
+          |  transform(filter(ds, (y, j) -> j > i), y -> named_struct(
+          |    'a', least(x.doc_id, y.doc_id),
+          |    'b', greatest(x.doc_id, y.doc_id),
+          |    'h', bit_count(x.lo ^ y.lo) + bit_count(x.hi ^ y.hi)))))""".stripMargin))
+        .as("p")))
+      assert(native === sql)
+      // identical halves -> hamming 0; full complement -> 128
+      assert(sql.nonEmpty && native.exists(_._4 == 0) === sql.exists(_._4 == 0))
+      // every generated pair, plus the hand-picked C(3,2) twice
+      assert(native.size === generated.map(g => g._2.size * (g._2.size - 1) / 2).sum + 3 + 3)
+    }
   }
 
   test("RakePhrases == running-stopword-count window segmentation + plens") {
@@ -268,6 +291,35 @@ class NativeKernelExprSpec extends SparkSpec {
     */
   private def bothPaths(df: DataFrame): Seq[DataFrame] = Seq(df, df.repartition(3))
 
+  /** Generated buckets get keys from 100 up, clear of hand-picked rows. */
+  private def keyed[A](buckets: Seq[Seq[A]]): Seq[(Long, Seq[A])] =
+    buckets.zipWithIndex.map { case (b, i) => (100L + i, b) }
+
+  /** Longs with the edges (`Long.MinValue`/`MaxValue`, 0, -1) common, so
+    * ids, lo/hi words and counts collide and hit both ends.
+    */
+  private val genEdgeLong: Gen[Long] = Gen.frequency(
+    1 -> Gen.oneOf(Long.MinValue, Long.MaxValue, 0L, -1L),
+    3 -> Gen.choose(Long.MinValue, Long.MaxValue))
+
+  /** Bucket sizes the pair kernels branch on (empty, one element, one
+    * pair) and the cap that bounds them.
+    */
+  private val genSize: Gen[Int] = Gen.oneOf(0, 1, 2, text.Dedup.MaxBucket)
+
+  private def genBuckets[A](elem: Gen[A]): Gen[Seq[A]] =
+    genSize.flatMap(n => Gen.listOfN(n, elem))
+
+  /** Distinct ids (a band bucket holds each doc once), the long edges
+    * among them, shuffled.
+    */
+  private val genIds: Gen[Seq[Long]] = for {
+    n <- genSize
+    edges <- Gen.someOf(Long.MinValue, Long.MaxValue, 0L, -1L)
+    rest <- Gen.listOfN(n, Gen.choose(Long.MinValue, Long.MaxValue))
+    seed <- Gen.long
+  } yield new scala.util.Random(seed).shuffle((edges.toSeq ++ rest).distinct.take(n))
+
   /** Few distinct values, so equal positions are common; the long edges
     * are among them.
     */
@@ -311,14 +363,6 @@ class NativeKernelExprSpec extends SparkSpec {
 
   test("PairStructs(sort_array(ids)) == least/greatest bucket lambda (generated ids)") {
     val maxBucket = text.Dedup.MaxBucket
-    // distinct ids (a band bucket holds each doc once), the long edges
-    // among them, shuffled
-    val genIds: Gen[Seq[Long]] = for {
-      n <- Gen.oneOf(0, 1, 2, maxBucket)
-      edges <- Gen.someOf(Long.MinValue, Long.MaxValue, 0L, -1L)
-      rest <- Gen.listOfN(n, Gen.choose(Long.MinValue, Long.MaxValue))
-      seed <- Gen.long
-    } yield new scala.util.Random(seed).shuffle((edges.toSeq ++ rest).distinct.take(n))
     // winnow fingerprint buckets may hold one doc twice: the pair
     // multiset must match there too
     val genRepeats: Gen[Seq[Long]] = Gen.choose(2, 12)
