@@ -5,12 +5,24 @@
 # while multi-minute rehearsal jobs (ScaleGen/Verify/Bench/StreamScale)
 # run in the background. Mirrors build.sbt's forked-run JVM flags.
 #
-# Usage: CLS_SNAP=/tmp/graft_cls scripts/java_run.sh <mainClass> [args...]
+# Usage: [CLS_SNAP=dir] scripts/java_run.sh <mainClass> [args...]
+#
+# The default snapshot, /tmp/graft_cls, is refreshed whenever
+# target/scala-2.13/classes holds a class file newer than it. An
+# explicitly set CLS_SNAP stays pinned: it is filled only when absent.
+# Spark's jars come from ${SPARK_HOME:-/opt/spark}/jars.
 set -euo pipefail
+ROOT="$(cd "$(dirname "${BASH_SOURCE[0]}")/.." && pwd)"
+CLASSES="$ROOT/target/scala-2.13/classes"
 SNAP="${CLS_SNAP:-/tmp/graft_cls}"
+if [ -z "${CLS_SNAP:-}" ] && [ -d "$SNAP" ] &&
+   [ -n "$(find "$CLASSES" -name '*.class' -newer "$SNAP" -print -quit)" ]; then
+  rm -rf "$SNAP"
+fi
 if [ ! -d "$SNAP" ]; then
   mkdir -p "$SNAP"
-  cp -r /root/repo/target/scala-2.13/classes/. "$SNAP/"
+  cp -r "$CLASSES/." "$SNAP/"
+  touch "$SNAP"
 fi
 ADD_OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
@@ -23,4 +35,4 @@ done
 exec java $ADD_OPENS \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -Xmx"${SPARK_DRIVER_MEM:-8g}" \
-  -cp "$SNAP:/opt/spark/jars/*" "$@"
+  -cp "$SNAP:${SPARK_HOME:-/opt/spark}/jars/*" "$@"

@@ -1,8 +1,10 @@
 package graft.apps
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftnative.Native
 import graft.Tables
+import graft.functions.LetterTokens
 import graft.mr.{AppLoader, KeyValue, MapReduce, MrApp}
 
 /** The reference's eight pluggable Map/Reduce apps (SURVEY.md §2.2) as
@@ -16,8 +18,9 @@ import graft.mr.{AppLoader, KeyValue, MapReduce, MrApp}
   * aggregate (partial+final, so the shuffle carries pre-combined rows);
   * the indexer dedups words per document inside the row, so it needs no
   * second aggregate for the (word, doc) DISTINCT.
-  * Tokenization stays inside whole-stage codegen (`split`/`explode`
-  * builtins, no UDFs).
+  * Tokenization stays inside whole-stage codegen: the byte-scanning
+  * kernels of `graft.functions` ([[letterTokens]],
+  * [[graft.text.TextAnalysis.toks]]) and `explode`, no UDFs.
   */
 object MrApps extends graft.Catalog {
 
@@ -26,6 +29,14 @@ object MrApps extends graft.Catalog {
     * and in DuckDB's RE2.
     */
   val LetterTokenPattern = "[^\\p{L}]+"
+
+  /** The letter tokens of `c`: the codegen'd [[LetterTokens]] byte
+    * scanner, row for row the retained spelling `split(c,
+    * LetterTokenPattern)` with its empty tokens dropped (pinned by
+    * NativeKernelExprSpec, and against [[wcMap]]'s `String.split` by
+    * MrCoreSpec).
+    */
+  def letterTokens(c: Column): Column = Native(es => LetterTokens(es.head), c)
 
   // ---- map/reduce fn pairs (the reference plugin ABI, for MapReduce.run) ----
 
@@ -89,14 +100,17 @@ object MrApps extends graft.Catalog {
 
   // ---- declarative pipelines (registered in SparkEntry.queries) ----
 
-  private def tokens(spark: SparkSession, sfDir: String, pattern: String): DataFrame =
+  /** One row per token of each document, `tokenizer` yielding no empty
+    * token (it replaces `explode(split(text, pattern))` plus a
+    * `length(word) > 0` filter).
+    */
+  private def tokens(spark: SparkSession, sfDir: String, tokenizer: Column => Column): DataFrame =
     Tables.documents(spark, sfDir)
-      .select(col("doc_id"), col("source"), explode(split(col("text"), pattern)).as("word"))
-      .filter(length(col("word")) > 0)
+      .select(col("doc_id"), col("source"), explode(tokenizer(col("text"))).as("word"))
 
   /** wc: tokenize on non-letter runes, count per word (mrapps/wc.go:21-42). */
   def wc(spark: SparkSession, sfDir: String): DataFrame =
-    tokens(spark, sfDir, LetterTokenPattern)
+    tokens(spark, sfDir, letterTokens)
       .groupBy("word")
       .agg(count(lit(1)).as("cnt"))
 
@@ -106,19 +120,20 @@ object MrApps extends graft.Catalog {
   def indexer(spark: SparkSession, sfDir: String): DataFrame =
     indexerOf(Tables.documents(spark, sfDir))
 
-  /** The indexer over any (doc_id, text) frame. Words dedup inside each
-    * row, like the reference's per-file Map (mrapps/indexer.go:22-27), so
-    * the token stream crosses ONE exchange instead of a corpus-wide
-    * (word, doc) `distinct()` followed by the groupBy. `collect_set` over
-    * the long doc_id keeps the oracle's DISTINCT when a doc_id sits on
-    * several rows; the cast to string comes before the sort, so the docs
-    * follow the string order of the oracle's `ORDER BY doc`.
+  /** The indexer over any (doc_id, text) frame. Words are
+    * [[letterTokens]] (the retained spelling: `split(text,
+    * LetterTokenPattern)` plus a `length(word) > 0` filter) and dedup
+    * inside each row, like the reference's per-file Map
+    * (mrapps/indexer.go:22-27), so the token stream crosses ONE exchange
+    * instead of a corpus-wide (word, doc) `distinct()` followed by the
+    * groupBy. `collect_set` over the long doc_id keeps the oracle's
+    * DISTINCT when a doc_id sits on several rows; the cast to string
+    * comes before the sort, so the docs follow the string order of the
+    * oracle's `ORDER BY doc`.
     */
   def indexerOf(docs: DataFrame): DataFrame =
     docs
-      .select(col("doc_id"),
-        explode(array_distinct(split(col("text"), LetterTokenPattern))).as("word"))
-      .filter(length(col("word")) > 0)
+      .select(col("doc_id"), explode(array_distinct(letterTokens(col("text")))).as("word"))
       .groupBy("word")
       .agg(sort_array(collect_set(col("doc_id")).cast("array<string>")).as("ds"))
       .select(col("word"), size(col("ds")).cast("long").as("n_docs"),
@@ -140,12 +155,13 @@ object MrApps extends graft.Catalog {
       .agg(array_join(sort_array(collect_list(col("v"))), " ").as("vals"))
   }
 
-  /** wc_long: whitespace tokenizer, values joined with ","
-    * (mrapps/wc_long.go:9-22). All values are "1", so collect order is
-    * irrelevant.
+  /** wc_long: whitespace tokenizer ([[graft.text.TextAnalysis.toks]],
+    * the retained spelling `split(text, "\\s+")` without empty tokens),
+    * values joined with "," (mrapps/wc_long.go:9-22). All values are
+    * "1", so collect order is irrelevant.
     */
   def wcLong(spark: SparkSession, sfDir: String): DataFrame =
-    tokens(spark, sfDir, "\\s+")
+    tokens(spark, sfDir, graft.text.TextAnalysis.toks)
       .groupBy("word")
       .agg(array_join(collect_list(lit("1")), ",").as("ones"))
 

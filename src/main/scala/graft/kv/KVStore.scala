@@ -31,7 +31,7 @@ final case class KvCell(
   * the reference's in-memory `map[string]KVData` + CAS Put
   * (srv/server.go:21-88) becomes a deterministic per-key op-log replay.
   *
-  * Scale notes: ONE shuffle on key (`groupByKey`); the per-key fold is
+  * Scale notes: ONE shuffle on the `key` column; the per-key fold is
   * streaming over a sorted iterator, so only one op is held at a time —
   * no per-key materialization. Keys partition independently, so a
   * 1000-executor run scales with key cardinality. The unbounded-stream
@@ -60,11 +60,14 @@ object KVStore extends graft.Catalog {
 
   /** Distributed CAS replay of an op-log Dataset. Ops within a key are
     * replayed in `seq` order (sort is per-group over the shuffle's sorted
-    * run, not a global sort).
+    * run, not a global sort). Grouped on the `key` column, not with
+    * `groupByKey(_.key)`: the same single exchange and fold, but no
+    * per-op deserialization into a [[KvOp]] just to compute a key the
+    * row already holds.
     */
   def replay(spark: SparkSession, ops: org.apache.spark.sql.Dataset[KvOp]): DataFrame = {
     import spark.implicits._
-    ops.groupByKey(_.key)
+    ops.groupBy(col("key")).as[String, KvOp]
       .flatMapSortedGroups($"seq") { (k, it) => Iterator.single(replayKey(k, it)) }
       .toDF()
   }

@@ -147,7 +147,9 @@ object QualityRules extends graft.Catalog {
     import documents.sparkSession.implicits._
     val base = documents
       .withColumn("t", graft.text.TextAnalysis.toks($"text"))
-      .withColumn("ls", filter(split($"text", "\n"), x => x =!= ""))
+      // array_remove, not an interpreted filter lambda: split never
+      // yields a null element, so the rows are the same
+      .withColumn("ls", array_remove(split($"text", "\n"), ""))
     def sumLen(c: String): Column =
       coalesce(aggregate(col(c), lit(0L), (acc, x) => acc + length(x).cast("long")),
         lit(0L))

@@ -52,8 +52,10 @@ object Bpe extends graft.Catalog {
     */
   val Rounds = 6
 
-  private def chars(c: org.apache.spark.sql.Column) =
-    filter(split(c, ""), x => x =!= "")
+  /** The characters of `c`. `array_remove`, not an interpreted `filter`
+    * lambda: `split` never yields a null element, so both drop the same.
+    */
+  private def chars(c: org.apache.spark.sql.Column) = array_remove(split(c, ""), "")
 
   /** The (word, freq, symbols) vocabulary table: one corpus pass. */
   private def words(spark: SparkSession, d: String): DataFrame = {

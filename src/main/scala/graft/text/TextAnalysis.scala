@@ -3,7 +3,7 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftnative.Native
-import graft.functions.DistinctGrams
+import graft.functions.{BpePreTokenCount, DistinctGrams, WhitespaceTokens}
 import graft.Tables
 
 /** Text-analysis operators for a large-scale training-data pipeline:
@@ -12,16 +12,20 @@ import graft.Tables
   * transforms (no shuffle at all except where a corpus-level aggregate is
   * explicitly requested), so they scale linearly with input splits.
   *
-  * Everything stays inside whole-stage codegen: tokenization and the
-  * per-doc reductions use Spark's higher-order array functions
+  * Everything stays inside whole-stage codegen: tokenization runs the
+  * byte-scanning kernels of `graft.functions` ([[toks]], [[bpeCount]])
+  * and the per-doc reductions use Spark's higher-order array functions
   * (`filter`/`transform`/`aggregate`), not UDFs.
   */
 object TextAnalysis extends graft.Catalog {
 
-  /** Whitespace tokens with empties dropped — same lambda shape as the
-    * DuckDB oracle's `list_filter(string_split_regex(...))`.
+  /** Whitespace tokens with empties dropped: the codegen'd
+    * [[graft.functions.WhitespaceTokens]] byte scanner, row for row the
+    * retained spelling `filter(split(c, "\\s+"), t => t =!= "")` (pinned
+    * by NativeKernelExprSpec) and the DuckDB oracle's
+    * `list_filter(string_split_regex(...))`.
     */
-  def toks(c: Column): Column = filter(split(c, "\\s+"), t => t =!= "")
+  def toks(c: Column): Column = Native(es => WhitespaceTokens(es.head), c)
 
   /** Per-document token statistics + type-token ratio. */
   def textStats(spark: SparkSession, d: String): DataFrame = {
@@ -96,12 +100,16 @@ object TextAnalysis extends graft.Catalog {
     */
   val BpePattern = " ?\\p{L}+| ?\\p{N}+| ?[^\\s\\p{L}\\p{N}]+"
 
+  /** Matches of [[BpePattern]] in `c`: the codegen'd
+    * [[graft.functions.BpePreTokenCount]] run counter, row for row the
+    * retained spelling `size(regexp_extract_all(c, BpePattern, 0))`
+    * (pinned by NativeKernelExprSpec), null input included.
+    */
+  def bpeCount(c: Column): Column = Native(es => new BpePreTokenCount(es.head), c)
+
   def tokenCount(spark: SparkSession, d: String): DataFrame = {
     import spark.implicits._
-    Tables.documents(spark, d).select(
-      $"doc_id",
-      size(expr(s"regexp_extract_all(text, '${BpePattern.replace("\\", "\\\\")}', 0)"))
-        .cast("long").as("n_bpe"))
+    Tables.documents(spark, d).select($"doc_id", bpeCount($"text").cast("long").as("n_bpe"))
   }
 
   /** Rolling-normalized fingerprint: md5 of (lowercased, whitespace

@@ -347,8 +347,9 @@ object TextExtras extends graft.Catalog {
     * >> 1 for a language means its documents cost proportionally more
     * sequence length per word; Rust et al. 2021, "How Good is Your
     * Tokenizer?"). Language comes from [[TextAnalysis.LangProfiles]]'s
-    * stopword argmax, tokens from [[TextAnalysis.BpePattern]] — the
-    * catalog's proven cross-engine regex pair.
+    * stopword argmax, tokens are the matches of
+    * [[TextAnalysis.BpePattern]] (the catalog's proven cross-engine regex
+    * pair), counted by [[TextAnalysis.bpeCount]].
     *
     * Scale shape: one narrow document scan (source, text), per-doc
     * integer counts, ONE partial+final aggregate onto ≤ |sources| × 4
@@ -357,11 +358,9 @@ object TextExtras extends graft.Catalog {
     */
   def tokenFertility(spark: SparkSession, d: String): DataFrame = {
     import spark.implicits._
-    import graft.text.TextAnalysis.{BpePattern, LangProfiles, hits, toks}
+    import graft.text.TextAnalysis.{LangProfiles, bpeCount, hits, toks}
     val base = Tables.documents(spark, d)
-      .select($"source", toks($"text").as("t"),
-        size(expr(s"regexp_extract_all(text, '${BpePattern.replace("\\", "\\\\")}', 0)"))
-          .cast("long").as("n_bpe"))
+      .select($"source", toks($"text").as("t"), bpeCount($"text").cast("long").as("n_bpe"))
     val withHits = LangProfiles.foldLeft(base) { case (df, (lang, words)) =>
       df.withColumn(s"${lang}_hits", hits(col("t"), words))
     }

@@ -12,8 +12,9 @@ import org.apache.spark.sql.DataFrame
   * mixture_sample minutes later). The memo must refit instead.
   *
   * Memo entries are per session: a fresh `newSession()` starts cold,
-  * and concurrent lanes sharing one session's memos return the serial
-  * results. Dropping the entries of a stopped session is not tested:
+  * concurrent callers of one cold key share a single fit, a fit that
+  * throws is retried, and concurrent lanes sharing one session's memos
+  * return the serial results. Dropping the entries of a stopped session is not tested:
   * every suite shares one SparkContext, and stopping it would stop them
   * all.
   */
@@ -61,6 +62,44 @@ class CkptSpec extends SparkSpec {
     assert(Memo(spark, ("ckpt_spec", "d3"))(fitFrame(fits)) eq first)
     assert(Memo(fresh, ("ckpt_spec", "d3"))(fitFrame(fits)) eq other)
     assert(fits.get() == 2)
+  }
+
+  test("Memo: 4 concurrent callers of a cold key fit it once") {
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    try {
+      for ((key, memo) <- Seq[(String, (=> DataFrame) => DataFrame)](
+          "d4" -> (fit => Memo(spark, ("ckpt_spec", "d4"))(fit)),
+          "d5" -> (fit => Memo.frame(spark, ("ckpt_spec", "d5"))(fit)))) {
+        val fits = new java.util.concurrent.atomic.AtomicInteger
+        val go = new java.util.concurrent.CountDownLatch(1)
+        val callers = (1 to 4).map(_ => pool.submit(new java.util.concurrent.Callable[DataFrame] {
+          def call(): DataFrame = {
+            go.await()
+            memo { Thread.sleep(300); fitFrame(fits) }
+          }
+        }))
+        go.countDown()
+        val got = callers.map(_.get())
+        assert(fits.get() == 1, s"$key: the waiting callers must not fit again")
+        assert(got.forall(_ eq got.head), s"$key: every caller gets the one fitted value")
+        assert(got.head.count() == 3)
+      }
+    } finally pool.shutdown()
+  }
+
+  test("Memo: a fit that throws is retried by the next caller") {
+    for ((key, memo) <- Seq[(String, (=> DataFrame) => DataFrame)](
+        "d6" -> (fit => Memo(spark, ("ckpt_spec", "d6"))(fit)),
+        "d7" -> (fit => Memo.frame(spark, ("ckpt_spec", "d7"))(fit)))) {
+      val fits = new java.util.concurrent.atomic.AtomicInteger
+      intercept[IllegalStateException] {
+        memo { fits.incrementAndGet(); throw new IllegalStateException("fit failed") }
+      }
+      val df = memo(fitFrame(fits))
+      assert(fits.get() == 2, s"$key: the failed fit must not be memoized")
+      assert(memo(fitFrame(fits)) eq df, s"$key: the retried fit is memoized")
+      assert(fits.get() == 2)
+    }
   }
 
   test("Memo: 4 concurrent lanes on a fresh session equal the serial run") {

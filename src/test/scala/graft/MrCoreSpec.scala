@@ -3,6 +3,7 @@ package graft
 import graft.apps.MrApps
 import graft.mr.{KeyValue, MapReduce}
 import org.apache.spark.sql.expressions.Aggregator
+import org.apache.spark.sql.functions.array_distinct
 import org.apache.spark.sql.{Encoder, Encoders}
 
 /** Proves the generic MapReduce core (graft.mr.MapReduce) computes the
@@ -100,6 +101,22 @@ class MrCoreSpec extends SparkSpec {
         MrApps.indexerMap, MrApps.indexerReduce, 2)
       .collect().map(kv => kv.key -> kv.value).toMap
     assert(core === got)
+  }
+
+  test("letterTokens tokenizes like the plugin ABI's String.split (wcMap, indexerMap)") {
+    val extra = Seq("h\u00e9llo w\u00f6rld", "\ud835\udc00b\u0301c \u0663\u216b\u00b2x",
+      " \u00a0a\u3000b\u2003c ", "", "  \t\n", "\u01c5\u02b0\u4e2d-\u20ac\ud83d\ude00q")
+    val docs = Tables.documents(spark, sf).select("doc_id", "text").as[(Long, String)]
+      .collect().toSeq ++ extra.zipWithIndex.map { case (t, i) => (-1L - i, t) }
+    val got = docs.toDF("doc_id", "text")
+      .select($"doc_id", MrApps.letterTokens($"text").as("w"),
+        array_distinct(MrApps.letterTokens($"text")).as("d"))
+      .collect().map(r => r.getLong(0) -> (r.getSeq[String](1), r.getSeq[String](2))).toMap
+    for ((id, text) <- docs) {
+      assert(got(id)._1 === MrApps.wcMap("f", text).iterator.map(_.key).toSeq, s"wc $id")
+      assert(got(id)._2 === MrApps.indexerMap("f", text).iterator.map(_.key).toSeq, s"indexer $id")
+    }
+    assert(got.values.map(_._1.size).sum > 1000)
   }
 
   test("mr_indexer plans exactly one hash exchange") {

@@ -15,7 +15,8 @@ class NativeColumnSpec extends SparkSpec {
 
   /** Every catalog query that builds a native expression, fitted
     * (centroids, codebooks, eval matrices, merge tables, FreqSelect
-    * segments, bootstrap thresholds) or stateless.
+    * segments, bootstrap thresholds) or stateless (among them the
+    * tokenizer kernels).
     */
   private val nativeQueries = Seq(
     "decontam_embed", "decontam_ngrams", "bpe_merges", "bpe_vocab", "bpe_encode_stats",
@@ -29,7 +30,8 @@ class NativeColumnSpec extends SparkSpec {
     "text_gram_overlap", "text_ngram_topk", "source_gram_containment", "text_novelty_rate",
     "text_phrase_detect", "text_keywords_rake", "gopher_repetition_rules",
     "theilsen_trend", "bootstrap_ci", "ab_uplift_bootstrap",
-    "entity_match_jw", "basket_pairs", "basket_rules")
+    "entity_match_jw", "basket_pairs", "basket_rules",
+    "mr_wc", "mr_indexer", "text_stats", "text_token_count", "token_fertility")
 
   test("running the native catalog twice registers no session function") {
     val registry = spark.sessionState.functionRegistry

@@ -1,7 +1,9 @@
 package graft
 
-import graft.functions.{MatchCount, PairStructs, SegBucket}
-import org.apache.spark.sql.{DataFrame, Row}
+import graft.functions.{BpePreTokenCount, LetterTokens, MatchCount, PairStructs, SegBucket,
+  WhitespaceTokens}
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.Size
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftnative.Native
 import org.apache.spark.sql.types._
@@ -28,7 +30,11 @@ import org.scalacheck.rng.Seed
   *    (codegen path);
   *  - the three bucket pair kernels (`OrderedPairStructs`,
   *    `NewPairStructs`, `HammingPairStructs`) vs their bucket lambdas,
-  *    on the hand-picked rows plus generated buckets the same way.
+  *    on the hand-picked rows plus generated buckets the same way;
+  *  - the tokenizer kernels ([[WhitespaceTokens]], [[LetterTokens]],
+  *    [[BpePreTokenCount]]) vs the split / regexp_extract_all spellings
+  *    they replaced, over generated strings (every Java regex class
+  *    boundary, null, long, and malformed UTF-8), compared byte for byte.
   */
 class NativeKernelExprSpec extends SparkSpec {
   import spark.implicits._
@@ -388,5 +394,130 @@ class NativeKernelExprSpec extends SparkSpec {
     }
     assert(cases.exists(c => c.distinct.size < c.size))
     assert(cases.map(_.size).toSet.contains(maxBucket))
+  }
+
+  // ---- tokenizer kernels ----
+
+  /** Code points on every side of the tokenizers' class boundaries. */
+  private val textAtoms: Seq[String] = Seq(
+    "a", "Z", "q", "0", "7", "!", ",", "-", "_", "\u0000", "\u001c", "\u007f",
+    // the six ASCII `\s` bytes
+    " ", "\t", "\n", "\u000b", "\f", "\r",
+    // spaces that are not `\s`, NEL and a zero-width space
+    "\u00a0", "\u2003", "\u3000", "\u0085", "\u200b",
+    // letters: Ll, Ll, Lu, Lo, Lt, Lm, and U+1D400 (supplementary Lu)
+    "\u00e9", "\u00df", "\u0416", "\u4e2d", "\u01c5", "\u02b0", "\ud835\udc00",
+    // combining marks (Mn)
+    "\u0301", "\u0308",
+    // numbers: Nd, Nl, No, and U+1D7CE (supplementary Nd)
+    "\u0663", "\u216b", "\u00b2", "\ud835\udfce",
+    // symbols: Sc and U+1F600 (supplementary So)
+    "\u20ac", "\ud83d\ude00",
+    // next to a class change: ª µ (letters before punctuation), × ÷ ¿
+    // (before letters), ٩ (Nd before Po), ¹ (No before a letter)
+    "\u00aa", "\u00b5", "\u00d7", "\u00f7", "\u00bf", "\u0669", "\u00b9")
+
+  private val genAtoms: Gen[String] =
+    Gen.choose(1, 12).flatMap(n => Gen.listOfN(n, Gen.oneOf(textAtoms))).map(_.mkString)
+
+  private val genText: Gen[String] = Gen.frequency(
+    1 -> Gen.const(null),
+    1 -> Gen.const(""),
+    1 -> Gen.choose(1, 6).flatMap(n => Gen.listOfN(n, Gen.oneOf(" \t\n\u000b\f\r".map(_.toString))))
+      .map(_.mkString),
+    8 -> genAtoms,
+    1 -> Gen.listOfN(2000, Gen.oneOf(textAtoms)).map(_.mkString))
+
+  /** Byte sequences a strict UTF-8 decoder rejects: stray continuation,
+    * overlong, surrogate, past U+10FFFF, bytes that never occur, and
+    * truncated leads.
+    */
+  private val malformed: Seq[Array[Byte]] = Seq(
+    Array(0x80), Array(0xbf), Array(0xc0, 0xaf), Array(0xc1, 0x81), Array(0xe0, 0x80, 0xaf),
+    Array(0xed, 0xa0, 0x80), Array(0xf4, 0x90, 0x80, 0x80), Array(0xf5), Array(0xff),
+    Array(0xc3), Array(0xe2, 0x82), Array(0xf0, 0x9f, 0x98)).map(_.map(_.toByte))
+
+  private val genMalformed: Gen[Array[Byte]] = for {
+    parts <- Gen.choose(1, 4).flatMap(n => Gen.listOfN(n, genAtoms))
+    bad <- Gen.listOfN(parts.size, Gen.oneOf(malformed))
+  } yield parts.zip(bad).flatMap { case (p, b) => p.getBytes("UTF-8") ++ b }.toArray
+
+  /** Every generated string as bytes, cast to a string column: the valid
+    * strings, a space before each atom, and the malformed ones.
+    */
+  private lazy val textCases: DataFrame = {
+    val valid = samples(genText, 400) ++ textAtoms.map(" " + _) ++
+      textAtoms.flatMap(a => textAtoms.take(8).map(b => b + " " + a))
+    val bytes = valid.map(t => if (t == null) null else t.getBytes("UTF-8")) ++
+      samples(genMalformed, 120)
+    bytes.zipWithIndex.map { case (b, k) => (k.toLong, b) }.toDF("k", "bin")
+      .select($"k", $"bin".cast("string").as("text"))
+  }
+
+  /** Tokens as the hex of their bytes: a decoded String would hide a
+    * malformed byte behind U+FFFD.
+    */
+  private def tokenHex(d: DataFrame, tokens: Column): Map[Long, Seq[String]] =
+    d.select($"k", transform(tokens, t => hex(t)).as("h")).collect()
+      .map(r => r.getLong(0) -> (if (r.isNullAt(1)) null else r.getSeq[String](1))).toMap
+
+  private def assertTokensMatch(native: Column, spelling: Column): Unit = {
+    val cases = textCases
+    def field(c: Column) = cases.select(c.as("t")).schema.head
+    assert(field(native) === field(spelling))
+    for (d <- bothPaths(cases)) {
+      val got = tokenHex(d, native)
+      val want = tokenHex(d, spelling)
+      assert(got.size === cases.count())
+      for ((k, w) <- want) assert(got(k) === w, s"row $k")
+      // the cases reach null input, empty results and long token lists
+      assert(want.values.exists(_ == null) && want.values.exists(t => t != null && t.isEmpty))
+      assert(want.values.exists(t => t != null && t.size > 200))
+    }
+  }
+
+  test("text cases cover malformed UTF-8 and every atom after a lone space") {
+    val rows = textCases.select($"k", hex($"text")).collect()
+    def valid(h: String): Boolean = {
+      val b = h.grouped(2).map(Integer.parseInt(_, 16).toByte).toArray
+      try {
+        java.nio.charset.StandardCharsets.UTF_8.newDecoder().decode(java.nio.ByteBuffer.wrap(b))
+        true
+      } catch { case _: java.nio.charset.CharacterCodingException => false }
+    }
+    val texts = rows.filter(!_.isNullAt(1)).map(_.getString(1))
+    assert(texts.count(!valid(_)) >= 100, "the binary cast must keep the malformed bytes")
+    val hexOf = texts.toSet
+    for (a <- textAtoms) assert(hexOf.contains(("20" + a.getBytes("UTF-8").map(b =>
+      f"${b & 0xff}%02X").mkString)), s"lone space before U+${a.codePointAt(0).toHexString}")
+  }
+
+  test("WhitespaceTokens == filter(split(text, \\s+), t -> t != '') (generated strings)") {
+    assertTokensMatch(Native(es => WhitespaceTokens(es.head), $"text"),
+      filter(split($"text", "\\s+"), t => t =!= ""))
+  }
+
+  test("LetterTokens == split(text, [^\\p{L}]+) without empties (generated strings)") {
+    assertTokensMatch(Native(es => LetterTokens(es.head), $"text"),
+      filter(split($"text", graft.apps.MrApps.LetterTokenPattern), t => length(t) > 0))
+  }
+
+  test("BpePreTokenCount == size(regexp_extract_all(text, BpePattern)) (generated strings)") {
+    val pattern = text.TextAnalysis.BpePattern
+    def counts(d: DataFrame, c: Column): Map[Long, Option[Int]] =
+      d.select($"k", c).collect()
+        .map(r => r.getLong(0) -> (if (r.isNullAt(1)) None else Some(r.getInt(1)))).toMap
+    val extracted = regexp_extract_all($"text", lit(pattern), lit(0))
+    for (d <- bothPaths(textCases)) {
+      val got = counts(d, text.TextAnalysis.bpeCount($"text"))
+      assert(got === counts(d, size(extracted)))
+      assert(got.values.exists(_.exists(_ > 500)))
+      // null input under both settings of spark.sql.legacy.sizeOfNull
+      for (legacy <- Seq(true, false)) {
+        val n = counts(d, Native(es => BpePreTokenCount(es.head, legacy), $"text"))
+        assert(n === counts(d, Native(es => Size(es.head, legacy), extracted)))
+        assert(n.values.exists(_ == (if (legacy) Some(-1) else None)))
+      }
+    }
   }
 }
