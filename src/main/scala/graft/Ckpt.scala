@@ -141,21 +141,57 @@ object Ckpt {
   * the first caller of a cold key fits it, and concurrent callers of the
   * same key wait for that fit instead of repeating its jobs and
   * checkpoints. A fit that throws leaves the key cold for the next
-  * caller.
+  * caller. [[latest]] reads completed fits without running one: the
+  * data-fitted oracles embed the constants their queries used.
   */
 object Memo {
   import org.apache.spark.sql.{DataFrame, SparkSession}
 
   /** One key's fit: the first `value` runs it, later ones wait for it
     * (a lazy val locks its holder), and a throwing fit runs again on the
-    * next `value`.
+    * next `value`. `done` holds a completed fit's value and its
+    * completion stamp.
     */
   private final class Holder(fit: => Any) {
-    lazy val value: Any = fit
+    @volatile var done: Option[(Long, Any)] = None
+    lazy val value: Any = {
+      val v = fit
+      done = Some((completions.incrementAndGet(), v))
+      v
+    }
   }
+
+  private val completions = new java.util.concurrent.atomic.AtomicLong
 
   private val entries =
     scala.collection.concurrent.TrieMap.empty[(SparkSession, Any), Holder]
+
+  /** Completed values of live sessions' entries, with their keys. */
+  private def completed: Iterator[(Any, (Long, Any))] =
+    entries.iterator.collect {
+      case ((s, key), h) if h.done.isDefined && !s.sparkContext.isStopped =>
+        (key, h.done.get)
+    }
+
+  /** The most recently completed value whose key starts with `tag`, from
+    * a session that is still live. Never runs or waits for a fit.
+    */
+  def latest[T](tag: Any): Option[T] =
+    completed
+      .collect { case (key: Product, done) if key.productIterator.nextOption().contains(tag) => done }
+      .maxByOption(_._1).map(_._2.asInstanceOf[T])
+
+  /** The ids of the persisted RDDs that live entries' frames read: the
+    * checkpoint blocks that session hygiene between queries must spare.
+    */
+  def pinnedRdds: Set[Int] =
+    completed.flatMap {
+      case (_, (_, ds: org.apache.spark.sql.Dataset[_])) =>
+        ds.queryExecution.logical.collect {
+          case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
+        }
+      case _ => Nil
+    }.toSet
 
   /** A driver value or an uncheckpointed frame, fitted once per key. */
   def apply[T](spark: SparkSession, key: Any)(fit: => T): T = {
@@ -168,8 +204,8 @@ object Memo {
   /** A [[Ckpt.cut]] frame, self-healing. A localCheckpoint has NO
     * lineage to recompute from, and a memoized one outlives the query
     * that fitted it — if its blocks die in the meantime (an executor
-    * cascade takes both replicas, or session hygiene unpersists
-    * leftovers between queries, as Verify does), every later
+    * cascade takes both replicas, or a between-query unpersist that
+    * does not spare [[pinnedRdds]]), every later
     * consumer would fail with CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND
     * forever (observed live: the sf10 gate's prefix-jaccard executor
     * massacre poisoned the mixture queries minutes later). Probe the

@@ -7,7 +7,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Every key in `queries` has an entry in `oracles` (an ANSI SQL twin
   * hash-compared against Spark's result on the same parquet tables) or a
   * reason in `noOracle`, never both. `oracles` may be a `def` whose
-  * entries appear only after their query was built (data-fitted twins).
+  * entries appear only once a live session holds their fit (data-fitted
+  * twins, read through [[Memo.latest]]).
   */
 trait Catalog {
   def queries: Map[String, (SparkSession, String) => DataFrame]
@@ -62,7 +63,7 @@ object SparkEntry {
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Re-read on every call: the data-fitted
-    * twins register only once their query has been built.
+    * twins appear only once their fit exists.
     */
   def oracleSql: Map[String, String] = catalogs.flatMap(_.oracles).toMap
 

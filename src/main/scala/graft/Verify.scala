@@ -3,7 +3,7 @@ import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the DuckDB compare (scripts/check_oracle.py).
   * Exits 1, after writing oracle_sql.json, when any attempted query
-  * failed. */
+  * threw or has neither an oracle nor a noOracle reason. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
@@ -46,18 +46,7 @@ object Verify {
       } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
         false
-      } finally {
-        // Session hygiene between queries: every persisted RDD still
-        // alive here is THIS query's debris (queries share nothing) —
-        // mostly replicated localCheckpoint blocks, which otherwise
-        // linger on executors until the ContextCleaner's weak refs are
-        // GC'd. On multi-process sf10 sessions that lag compounded into
-        // executor heap exhaustion ~250 queries in (three r12 gate
-        // attempts died of it); explicit unpersist makes cleanup
-        // deterministic instead of GC-timed.
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
-      }
+      } finally sweep(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
@@ -71,13 +60,35 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
-      .filter { case (k, _) => selected.contains(k) }
+    val oracles = SparkEntry.oracleSql.filter { case (k, _) => selected.contains(k) }
+    val json = oracles
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
-    System.err.println(s"[verify] ${failed.size} of ${attempted.size} attempted queries failed" +
-      (if (failed.isEmpty) "" else failed.map(_._1).mkString(": ", ", ", "")))
-    if (failed.nonEmpty) sys.exit(1)
+    // a query with neither a dumped oracle nor a noOracle reason would
+    // pass the compare on a row count alone: it fails here instead
+    val noOracle = SparkEntry.catalogs.flatMap(_.noOracle).toMap
+    val unchecked = attempted.map(_._1)
+      .filterNot(n => oracles.contains(n) || noOracle.contains(n))
+    for (n <- unchecked) System.err.println(s"[verify] $n has neither an oracle nor a noOracle reason")
+    val failedNames = (failed.map(_._1) ++ unchecked).distinct
+    System.err.println(s"[verify] ${failedNames.size} of ${attempted.size} attempted queries failed" +
+      (if (failedNames.isEmpty) "" else failedNames.mkString(": ", ", ", "")))
+    if (failedNames.nonEmpty) sys.exit(1)
+  }
+
+  /** Session hygiene between queries: unpersists every persisted RDD
+    * except the checkpoints behind live [[Memo]] entries, which later
+    * queries of the run share. The rest is the last query's debris —
+    * mostly replicated localCheckpoint blocks, which otherwise linger
+    * on executors until the ContextCleaner's weak refs are GC'd. On
+    * multi-process sf10 sessions that lag compounded into executor heap
+    * exhaustion ~250 queries in (three r12 gate attempts died of it);
+    * explicit unpersist makes cleanup deterministic instead of GC-timed.
+    */
+  def sweep(spark: org.apache.spark.sql.SparkSession): Unit = {
+    val pinned = Memo.pinnedRdds
+    spark.sparkContext.getPersistentRDDs
+      .foreach { case (id, rdd) => if (!pinned(id)) rdd.unpersist(blocking = false) }
   }
 }

@@ -48,8 +48,9 @@ object Eval extends graft.Catalog {
   }
 
   /** Composite oracle: the exact/LSH/IVF oracles as subqueries (the IVF
-    * one embeds its run-fitted centroids, so this must be read at
-    * dump time — hence `def`), joined per the definition of recall@K.
+    * one embeds the session's fitted [[Similarity.quantizer]], so this
+    * must be read at dump time — hence `def`), joined per the definition
+    * of recall@K.
     */
   private def recallOracle(
       exact: String, lsh: String, ivf: String): String = {
@@ -73,10 +74,10 @@ object Eval extends graft.Catalog {
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "embed_recall_eval" -> (recallEval _))
 
-  /** The IVF leg's oracle exists only after [[Similarity.annIvf]] has
-    * run and recorded its fit (a filtered Verify run may not touch it);
-    * running [[recallEval]] itself populates it, so whenever the eval
-    * query ran its oracle is present.
+  /** The IVF leg's oracle exists only once a live session holds the
+    * quantizer fit, read through [[graft.Memo.latest]] (a filtered Verify
+    * run may not touch it); running [[recallEval]] itself fits it, so
+    * whenever the eval query ran its oracle is present.
     */
   def oracles: Map[String, String] = {
     val sims = Similarity.oracles

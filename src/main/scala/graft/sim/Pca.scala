@@ -29,9 +29,9 @@ import graft.Tables
   * crosses engines; the only FP chain is the per-row dot against the
   * iterate (in-order [[graft.functions.DotProduct]], bit-matching
   * DuckDB's list_dot_product) and the driver-side normalization, which
-  * the oracle replays term-for-term from the recorded second-to-last
-  * iterate ([[pcaFit]] — the fitted-constant registry technique of
-  * [[Similarity]]).
+  * the oracle replays term-for-term from the second-to-last iterate
+  * that the session's [[graft.Memo]] fit holds (read back through
+  * [[graft.Memo.latest]], as [[Similarity]]'s fitted oracles are).
   */
 object Pca extends graft.Catalog {
 
@@ -47,20 +47,17 @@ object Pca extends graft.Catalog {
   val Dim = 64
   val PowerIters = 8
 
-  /** v entering the FINAL pass, recorded so the dump-time oracle can
-    * replay pass 8 (mean + sums + normalization) in SQL — the
-    * fitted-constant registry technique; one Verify run touches one
-    * data dir ([[Similarity]]'s lastDir reasoning).
+  /** One PCA fit: the per-dim mean, the iterate `prev` entering the
+    * FINAL pass (so the oracle can replay pass [[PowerIters]] in SQL),
+    * the final component `v`, the row count and ||s||_final.
     */
-  @volatile private var lastFit: Option[Array[Double]] = None
-  @volatile private var lastFinal: Option[Array[Double]] = None
+  private final case class PcaFit(
+      mean: Array[Double], prev: Array[Double], v: Array[Double], n: Long, nrm: Double)
 
-  /** One PCA fit: (mean, final component, n, ||s||_final). A
-    * [[graft.Memo]], so [[pcaPower]] and [[pcaResiduals]] in one catalog
-    * pass share the 9 scans.
+  /** A [[graft.Memo]], so [[pcaPower]] and [[pcaResiduals]] in one
+    * catalog pass share the 9 scans.
     */
-  private def fitPca(spark: SparkSession, d: String)
-      : (Array[Double], Array[Double], Long, Double) =
+  private def fitPca(spark: SparkSession, d: String): PcaFit =
     graft.Memo(spark, ("pca_fit", d)) {
       import spark.implicits._
       val e = Tables.embeddings(spark, d)
@@ -85,12 +82,13 @@ object Pca extends graft.Catalog {
       val centered = e.withColumn("c", zip_with($"v", meanLit, (a, b) => a - b))
       // power iteration: v0 = uniform unit vector (64 * (1/8)^2 = 1)
       var v = Array.fill(Dim)(0.125)
+      var prev = v
       var nrm = 0.0
       val sAggs = (0 until Dim).map(i =>
         sum(round(element_at($"c", i + 1) * $"t" * 1000000, 0).cast("long"))
           .as(s"s$i"))
       for (k <- 1 to PowerIters) {
-        if (k == PowerIters) lastFit = Some(v.clone())
+        prev = v
         val tExpr = Native(es => DotProduct(es(0), es(1)), $"c", typedlit(v.toSeq))
         val srow = centered.withColumn("t", tExpr).agg(sAggs.head, sAggs.tail: _*)
           .collect()(0)
@@ -98,13 +96,12 @@ object Pca extends graft.Catalog {
         nrm = math.sqrt(sd.foldLeft(0.0)((a, x) => a + x * x))
         v = sd.map(_ / nrm)
       }
-      lastFinal = Some(v.clone())
-      (mean, v, n, nrm)
+      PcaFit(mean, prev, v, n, nrm)
     }
 
   def pcaPower(spark: SparkSession, d: String): DataFrame = {
     import spark.implicits._
-    val (_, v, n, nrm) = fitPca(spark, d)
+    val PcaFit(_, _, v, n, nrm) = fitPca(spark, d)
     // scatter-matrix top eigenvalue estimate ||Av||, as per-sample
     // variance along the component
     val pcVar = BigDecimal(nrm / 1000000.0 / (n - 1).toDouble)
@@ -124,7 +121,7 @@ object Pca extends graft.Catalog {
     */
   def pcaResiduals(spark: SparkSession, d: String): DataFrame = {
     import spark.implicits._
-    val (mean, v, _, _) = fitPca(spark, d)
+    val PcaFit(mean, _, v, _, _) = fitPca(spark, d)
     val meanLit = array(mean.map(lit).toIndexedSeq: _*)
     val vLit = array(v.map(lit).toIndexedSeq: _*)
     Tables.embeddings(spark, d)
@@ -139,12 +136,11 @@ object Pca extends graft.Catalog {
   }
 
   /** DuckDB twin of the FINAL pass: recomputes the exact-grid mean from
-    * the data, replays pass [[PowerIters]]'s matvec from the recorded
-    * iterate, and normalizes in the same term order.
+    * the data, replays pass [[PowerIters]]'s matvec from the fitted
+    * iterate `prev`, and normalizes in the same term order.
     */
-  private def pcaOracle: String = {
-    val v7 = lastFit.getOrElse(Array.fill(Dim)(0.125))
-    val vLits = v7.map(Similarity.dlit).mkString(", ")
+  private def pcaOracle(prev: Array[Double]): String = {
+    val vLits = prev.map(Similarity.dlit).mkString(", ")
     s"""WITH e AS (SELECT CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
        |nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM e),
        |dims AS (SELECT unnest(range(1, ${Dim + 1})) AS i),
@@ -177,8 +173,7 @@ object Pca extends graft.Catalog {
     * as [[pcaOracle]]), fitted component embedded, identical scoring
     * expressions.
     */
-  private def residOracle: String = {
-    val v = lastFinal.getOrElse(Array.fill(Dim)(0.125))
+  private def residOracle(v: Array[Double]): String = {
     val vLits = v.map(Similarity.dlit).mkString(", ")
     s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
        |           FROM embeddings),
@@ -210,7 +205,11 @@ object Pca extends graft.Catalog {
     "embed_pca_power" -> (pcaPower _),
     "embed_pca_residuals" -> (pcaResiduals _))
 
-  def oracles: Map[String, String] = Map(
-    "embed_pca_power" -> pcaOracle,
-    "embed_pca_residuals" -> residOracle)
+  /** Present once a live session holds a fit, like [[Similarity]]'s
+    * fitted oracles.
+    */
+  def oracles: Map[String, String] =
+    graft.Memo.latest[PcaFit]("pca_fit").toSeq.flatMap(f => Seq(
+      "embed_pca_power" -> pcaOracle(f.prev),
+      "embed_pca_residuals" -> residOracle(f.v))).toMap
 }

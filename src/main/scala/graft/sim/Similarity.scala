@@ -30,8 +30,9 @@ import graft.Tables
   * BEFORE ranking and ties broken by vec_id, so rank order cannot depend
   * on last-ulp FP differences between Spark's aggregate() and DuckDB's
   * list_dot_product. Data-fitted constants (centroids, probe cells,
-  * boundaries) are recorded in the fitted-constant registry below and
-  * embedded as literals in the generated oracles.
+  * codebooks, boundaries) are fitted once per session as [[graft.Memo]]
+  * entries ([[quantizer]], [[quantBounds]]) and embedded as literals in
+  * the generated oracles.
   */
 object Similarity extends graft.Catalog {
 
@@ -39,27 +40,6 @@ object Similarity extends graft.Catalog {
   val NumQueries = 10 // probe set: vec_id < 10
   val MmrShortlist = 16 // MMR candidate pool per query (pair matrix ≤ S²)
   val MmrK = 5 // MMR picks per query (unrolled greedy depth)
-
-  /** Fitted-constant registry. The IVF centroids, IVF probe-cell
-    * assignments, and quantile boundary vectors are DATA-dependent
-    * (fitted while the query runs), but every fit is deterministic
-    * (sorted capped sample, fixed seed, fixed iterations) — and Verify
-    * dumps oracle SQL AFTER running the queries, so [[oracles]] embeds
-    * exactly the constants the Spark run used as SQL literals, the same
-    * technique as the compile-time LSH plane oracle. Keyed by data dir;
-    * one Verify run touches one dir ([[lastDir]] picks the fit to embed).
-    */
-  private val ivfFit =
-    scala.collection.concurrent.TrieMap.empty[String, Array[Array[Double]]]
-  private val ivfProbeFit =
-    scala.collection.concurrent.TrieMap.empty[String, Seq[(Long, Int)]]
-  private val quantFit =
-    scala.collection.concurrent.TrieMap.empty[String, Array[Array[Double]]]
-  private val pqFit =
-    scala.collection.concurrent.TrieMap.empty[String, Array[Array[Array[Double]]]]
-  private val kmInitFit =
-    scala.collection.concurrent.TrieMap.empty[String, Array[Array[Double]]]
-  @volatile private var lastDir: Option[String] = None
 
   /** Round-trip double literal for DuckDB SQL. `Double.toString` is the
     * shortest repr that round-trips through IEEE parse — but a bare
@@ -219,7 +199,7 @@ object Similarity extends graft.Catalog {
     * actual vector geometry, so the block count scales with the fitted
     * cell count instead of an incidental low-cardinality label column
     * (whose blocks are O(n²/labels) at scale). DuckDB-oracled via the
-    * registered centroid fit.
+    * [[quantizer]]'s centroids.
     */
   /** ONE implementation of "fit the quantizer, assign every vector to
     * its cell, drop over-cap cells" — the shared front half of every
@@ -229,18 +209,15 @@ object Similarity extends graft.Catalog {
     * feeds the cap aggregate AND both sides of the caller's self-join —
     * without the barrier Catalyst would execute it three times,
     * tripling the dominant cost at scale (same discipline as
-    * minhashPairs' sigs). The fit is recorded in the oracle registry.
+    * minhashPairs' sigs). The centroids are the session's [[quantizer]].
     * The bucket-cap is a tiny (IvfCells-row) aggregate broadcast back
     * as a semi-filter — no window over the low-cardinality cell key.
     */
   private def cappedCells(spark: SparkSession, d: String): DataFrame = {
     import spark.implicits._
-    val e = withVec(Tables.embeddings(spark, d))
-    val cents = centroids(trainSample(e).map(_._2))
-    ivfFit(d) = cents
-    lastDir = Some(d)
+    val cents = quantizer(spark, d).cents
     val nearestCell = Native(es => NearestCell(es.head, cents), $"v")
-    val assigned = e
+    val assigned = withVec(Tables.embeddings(spark, d))
       .withColumn("cell", nearestCell)
       .select($"cell", $"vec_id", $"label".cast("long").as("label"), $"v", $"norm")
       .transform(graft.Ckpt.cut)
@@ -294,7 +271,7 @@ object Similarity extends graft.Catalog {
   def semDedup(spark: SparkSession, d: String): DataFrame = {
     import spark.implicits._
     val capped = cappedCells(spark, d)
-    val cents = ivfFit(d)
+    val cents = quantizer(spark, d).cents
     val cn2 = graft.functions.NearestCell.cn2Of(cents)
     // centroid norms come from the SAME cn2 doubles the oracle embeds as
     // literals, so both engines divide by the identical constant
@@ -486,11 +463,41 @@ object Similarity extends graft.Catalog {
   private def cellScores(v: Array[Double], cents: Array[Array[Double]]): Array[Double] =
     graft.functions.NearestCell.scores(v, cents, graft.functions.NearestCell.cn2Of(cents))
 
-  /** The fitted quantizer for a dataset (exposed for the parity test —
-    * same deterministic sample + Lloyd fit annIvf uses).
+  /** A dataset's coarse quantizer, fitted on ONE bounded [[trainSample]]:
+    * the Lloyd centroids, the PQ codebooks, and the probe vectors
+    * (vec_id < NumQueries) with their norms. Every fit is deterministic
+    * (sorted capped sample, fixed seeds, fixed iterations).
     */
-  def fitCentroids(spark: SparkSession, d: String): Array[Array[Double]] =
-    centroids(trainSample(withVec(Tables.embeddings(spark, d))).map(_._2))
+  final class Quantizer(sample: Array[(Long, Array[Double])]) {
+    val cents: Array[Array[Double]] = centroids(sample.map(_._2))
+    val books: Array[Array[Array[Double]]] = pqCodebooks(sample.map(_._2))
+    /** (query_id, v, |v|), the norm summed in index order. */
+    val queries: Seq[(Long, Array[Double], Double)] =
+      sample.toSeq.filter(_._1 < NumQueries)
+        .map { case (id, v) => (id, v, math.sqrt(v.foldLeft(0.0)((a, x) => a + x * x))) }
+
+    /** Each probe's `probes` nearest cells, ranked locally by
+      * (d2 asc, cell asc): (query_id, cell, qv, qnorm).
+      */
+    def probeRows(probes: Int): Seq[(Long, Int, Seq[Double], Double)] =
+      queries.flatMap { case (id, v, qnorm) =>
+        cellScores(v, cents).zipWithIndex
+          .sortBy { case (d2, c) => (d2, c) }
+          .take(probes)
+          .map { case (_, c) => (id, c, v.toSeq, qnorm) }
+      }
+
+    /** The default-probe ([[IvfProbes]]) probe→cell pairs. */
+    val probes: Seq[(Long, Int)] = probeRows(IvfProbes).map { case (id, c, _, _) => (id, c) }
+  }
+
+  /** The session's quantizer for a dataset, a [[graft.Memo]]: every
+    * IVF-family query and its oracle read this one fit.
+    */
+  def quantizer(spark: SparkSession, d: String): Quantizer =
+    graft.Memo(spark, ("ivf_quantizer", d)) {
+      new Quantizer(trainSample(withVec(Tables.embeddings(spark, d))))
+    }
 
   /** IVF ANN top-K: candidates are assigned to their nearest centroid by
     * the native [[graft.functions.NearestCell]] expression — a narrow
@@ -514,29 +521,12 @@ object Similarity extends graft.Catalog {
       probes: Int = IvfProbes,
       k: Int = K): DataFrame = {
     import spark.implicits._
-    val e = withVec(Tables.embeddings(spark, d))
-    val sample = trainSample(e)
-    val cents = centroids(sample.map(_._2))
-    val nearestCell = Native(es => NearestCell(es.head, cents), $"v")
-    val cand = e
+    val q = quantizer(spark, d)
+    val nearestCell = Native(es => NearestCell(es.head, q.cents), $"v")
+    val cand = withVec(Tables.embeddings(spark, d))
       .withColumn("cell", nearestCell)
       .select($"vec_id".as("neighbor_id"), $"v".as("cv"), $"norm".as("cnorm"), $"cell")
-    // probe cells ranked locally: (d2 asc, cell asc), top IvfProbes
-    val probeRows = sample.filter(_._1 < NumQueries).flatMap { case (id, v) =>
-      var acc = 0.0
-      var j = 0
-      while (j < v.length) { acc += v(j) * v(j); j += 1 }
-      val qnorm = math.sqrt(acc)
-      cellScores(v, cents).zipWithIndex
-        .sortBy { case (d2, c) => (d2, c) }
-        .take(probes)
-        .map { case (_, c) => (id, c, v.toSeq, qnorm) }
-    }.toSeq
-    // record the fitted constants for [[oracles]] (dumped after the run)
-    ivfFit(d) = cents
-    ivfProbeFit(d) = probeRows.map { case (id, c, _, _) => (id, c) }
-    lastDir = Some(d)
-    val probesDf = broadcast(probeRows.toDF("query_id", "cell", "qv", "qnorm"))
+    val probesDf = broadcast(q.probeRows(probes).toDF("query_id", "cell", "qv", "qnorm"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy($"query_id").orderBy($"sim".desc, $"neighbor_id")
     // no distinct needed: each candidate has exactly ONE cell and a
@@ -574,8 +564,8 @@ object Similarity extends graft.Catalog {
     * corpus into each of 64 window partitions: unbounded state at scale,
     * plus a posexplode and a regroup shuffle. It survives only as the
     * spec's cross-check.) Probe×candidate scoring is the same broadcast
-    * shape as [[knnExact]]; the fitted boundaries are registered for the
-    * generated DuckDB oracle, same technique as the IVF centroids.
+    * shape as [[knnExact]]; the generated DuckDB oracle embeds the fitted
+    * boundaries ([[quantBounds]]), same technique as the IVF centroids.
     *
     * RESOLUTION CONTRACT (SimilaritySpec pins both halves): 4-bit codes
     * rank reliably only down to sim deltas of the quantization step —
@@ -614,24 +604,23 @@ object Similarity extends graft.Catalog {
     out
   }
 
+  /** The session's boundary fit for a dataset, a [[graft.Memo]]:
+    * [[knnQuantized]], [[knnRerank]] and their oracles share it.
+    */
+  def quantBounds(spark: SparkSession, d: String): Array[Array[Double]] =
+    graft.Memo(spark, ("quant_bounds", d))(fitQuantBounds(spark, d))
+
   /** The coded-vector table (vec_id, q) — the fit + one narrow coding
     * scan. Exposed for the parity spec; [[knnQuantized]] builds on it.
     */
   def knnQuantizedCodes(spark: SparkSession, d: String): DataFrame = {
     import spark.implicits._
-    val bounds = fitQuantBounds(spark, d)
-    quantFit(d) = bounds
-    lastDir = Some(d)
+    val bounds = quantBounds(spark, d)
     val quantCode = Native(es => graft.functions.QuantCode(es.head, bounds),
       expr("cast(embedding as array<double>)"))
     Tables.embeddings(spark, d)
       .select($"vec_id", quantCode.as("q"))
   }
-
-  /** The boundary matrix the last [[knnQuantizedCodes]] fit for a dir
-    * (spec access).
-    */
-  def lastQuantBounds(d: String): Option[Array[Array[Double]]] = quantFit.get(d)
 
   def knnQuantized(spark: SparkSession, d: String): DataFrame = {
     import spark.implicits._
@@ -822,7 +811,7 @@ object Similarity extends graft.Catalog {
     * literal lookup (element_at on the codebook literal), so the whole
     * coding + reconstruction pass is ONE narrow codegen'd scan — no
     * shuffle until the top-K window. The DuckDB oracle replays
-    * assignment/reconstruction/ranking from the registered codebook
+    * assignment/reconstruction/ranking from the [[quantizer]]'s codebook
     * literals exactly as the IVF/SQ oracles do.
     */
   val PqSubspaces = 8
@@ -904,17 +893,9 @@ object Similarity extends graft.Catalog {
     */
   def pqReconstructed(spark: SparkSession, d: String): DataFrame = {
     import spark.implicits._
-    val e = withVec(Tables.embeddings(spark, d))
-    val books = pqFit.getOrElseUpdate(d, pqCodebooks(trainSample(e).map(_._2)))
-    lastDir = Some(d)
-    withPqRecon(spark, e, books).select($"vec_id", $"xhat", $"xnorm")
+    withPqRecon(spark, withVec(Tables.embeddings(spark, d)), quantizer(spark, d).books)
+      .select($"vec_id", $"xhat", $"xnorm")
   }
-
-  /** The registered codebooks for a dir (spec access). */
-  def lastPqBooks(d: String): Option[Array[Array[Array[Double]]]] = pqFit.get(d)
-
-  /** The registered probe→cell pairs for a dir (spec access). */
-  def lastIvfProbes(d: String): Option[Seq[(Long, Int)]] = ivfProbeFit.get(d)
 
   /** PQ top-K in the production composition (IVF-PQ's retrieval half):
     * ADC shortlist — raw probe against the reconstructed corpus, top
@@ -972,33 +953,13 @@ object Similarity extends graft.Catalog {
   def annIvfPq(spark: SparkSession, d: String): DataFrame = {
     import spark.implicits._
     val e = withVec(Tables.embeddings(spark, d))
-    val sample = trainSample(e)
-    val cents = centroids(sample.map(_._2))
-    val books = pqFit.getOrElseUpdate(d, pqCodebooks(sample.map(_._2)))
-    val probeRows = sample.filter(_._1 < NumQueries).flatMap { case (id, v) =>
-      var acc = 0.0
-      var j = 0
-      while (j < v.length) { acc += v(j) * v(j); j += 1 }
-      val qnorm = math.sqrt(acc)
-      cellScores(v, cents).zipWithIndex
-        .sortBy { case (d2, c) => (d2, c) }
-        .take(IvfProbes)
-        .map { case (_, c) => (id, c, v.toSeq, qnorm) }
-    }.toSeq
-    ivfFit(d) = cents
-    ivfProbeFit(d) = probeRows.map { case (id, c, _, _) => (id, c) }
-    lastDir = Some(d)
-    val nearestCell = Native(es => NearestCell(es.head, cents), $"v")
-    val cand = withPqRecon(spark, e.withColumn("cell", nearestCell), books)
+    val q = quantizer(spark, d)
+    val nearestCell = Native(es => NearestCell(es.head, q.cents), $"v")
+    val cand = withPqRecon(spark, e.withColumn("cell", nearestCell), q.books)
       .select($"vec_id".as("neighbor_id"), $"cell", $"xhat", $"xnorm")
-    val probesDf = broadcast(probeRows.toDF("query_id", "cell", "qv", "qnorm"))
+    val probesDf = broadcast(q.probeRows(IvfProbes).toDF("query_id", "cell", "qv", "qnorm"))
     val probeVecs = broadcast(
-      sample.filter(_._1 < NumQueries).map { case (id, v) =>
-        var acc = 0.0
-        var j = 0
-        while (j < v.length) { acc += v(j) * v(j); j += 1 }
-        (id, v.toSeq, math.sqrt(acc))
-      }.toSeq.toDF("query_id", "qv", "qnorm"))
+      q.queries.map { case (id, v, qnorm) => (id, v.toSeq, qnorm) }.toDF("query_id", "qv", "qnorm"))
     val wShort = org.apache.spark.sql.expressions.Window
       .partitionBy($"query_id").orderBy($"psim".desc, $"neighbor_id")
     // a (query, neighbor) pair joins at most once (one cell per
@@ -1030,8 +991,8 @@ object Similarity extends graft.Catalog {
     * Lloyd rounds each cost ONE narrow assignment scan (the native
     * NearestCell argmin) + ONE bounded (cell, dim) aggregate — the
     * exchange payload is cells×dims rows regardless of corpus size, and
-    * the per-round driver collect is the same ≤1024-row bounded fit the
-    * IVF registry uses. At 100 TB each round is a single map-side-
+    * the per-round driver collect is a bounded cells×dims (≤1024-row)
+    * table. At 100 TB each round is a single map-side-
     * combined pass; rounds are few and fixed.
     *
     * Cross-engine exactness WITHOUT a rounding cascade: coordinate sums
@@ -1054,11 +1015,7 @@ object Similarity extends graft.Catalog {
   def kmeansRefine(spark: SparkSession, d: String): DataFrame = {
     import spark.implicits._
     val e = withVec(Tables.embeddings(spark, d))
-    val sample = trainSample(e)
-    val init = centroids(sample.map(_._2))
-    kmInitFit(d) = init
-    lastDir = Some(d)
-    var cents = init
+    var cents = quantizer(spark, d).cents
     for (r <- 1 until KmRounds) {
       val nearest = Native(es => NearestCell(es.head, cents), $"v")
       val rows = e.withColumn("cell", nearest)
@@ -1107,9 +1064,7 @@ object Similarity extends graft.Catalog {
     import spark.implicits._
     import org.apache.spark.sql.expressions.Window
     val e = withVec(Tables.embeddings(spark, d))
-    val cents = centroids(trainSample(e).map(_._2))
-    ivfFit(d) = cents
-    lastDir = Some(d)
+    val cents = quantizer(spark, d).cents
     val cn2 = graft.functions.NearestCell.cn2Of(cents)
     val centsDf = cents.indices.map(i => (i, cents(i), cn2(i)))
       .toDF("cell", "cv", "cn2")
@@ -1513,9 +1468,9 @@ object Similarity extends graft.Catalog {
        |    FROM n CROSS JOIN cents) x WHERE r = 1)""".stripMargin
   }
 
-  /** DuckDB twin of [[annIvf]], generated from the registry AFTER the
-    * query ran (Verify's dump order): the fitted centroids and the
-    * driver-ranked probe→cell pairs embed as literals, so the SQL
+  /** DuckDB twin of [[annIvf]], generated from the [[quantizer]] AFTER
+    * the query ran (Verify's dump order): the fitted centroids and the
+    * driver-ranked default-probe→cell pairs embed as literals, so the SQL
     * replays candidate assignment with the exact constants the Spark
     * run used; the probe side skips ranking entirely because the
     * (query_id, cell) pairs are literals.
@@ -1540,7 +1495,7 @@ object Similarity extends graft.Catalog {
        |WHERE rk <= $K""".stripMargin
   }
 
-  /** DuckDB twin of [[knnPq]], generated from the registered codebooks:
+  /** DuckDB twin of [[knnPq]], generated from the fitted codebooks:
     * per-subspace argmin replays the [[graft.functions.NearestCell]]
     * score (-2·dot + |c|², ties to the lowest code) on list_slice'd
     * subvectors against the 128 codebook literals, reconstruction is
@@ -1644,7 +1599,7 @@ object Similarity extends graft.Catalog {
        |$pqRerankTail""".stripMargin
   }
 
-  /** DuckDB twin of [[kmeansRefine]], from the registered warm-start
+  /** DuckDB twin of [[kmeansRefine]], from the fitted warm-start
     * centroids: each unrolled round replays the argmin (same
     * -2·dot + |c|² score, ties to the lowest cell; derived-round |c|²
     * via `list_dot_product(c, c)` — bit-equal to `cn2Of`'s
@@ -1699,57 +1654,28 @@ object Similarity extends graft.Catalog {
     sb.toString
   }
 
-  /** A def, not a val: the data-fitted entries (IVF) exist only after
-    * their query ran and registered its constants — Verify evaluates
-    * this AFTER the query loop, so the fit is always present there.
+  /** A def, not a val: the data-fitted entries exist only once a live
+    * session holds their fit ([[graft.Memo.latest]]). Verify evaluates
+    * this AFTER the query loop, so they embed exactly the constants the
+    * Spark run used, the same technique as the compile-time LSH plane
+    * oracle.
     */
   def oracles: Map[String, String] = staticOracles ++ fittedOracles
 
   private def fittedOracles: Map[String, String] = {
-    val ivf = for {
-      d <- lastDir
-      cents <- ivfFit.get(d)
-      probes <- ivfProbeFit.get(d)
-    } yield "embed_ann_ivf" -> annIvfOracle(cents, probes)
-    val quant = for {
-      d <- lastDir
-      bounds <- quantFit.get(d)
-    } yield "embed_knn_quantized" -> knnQuantizedOracle(bounds)
-    val rerank = for {
-      d <- lastDir
-      bounds <- quantFit.get(d)
-    } yield "embed_knn_rerank" -> knnRerankOracle(bounds)
-    val dup = for {
-      d <- lastDir
-      cents <- ivfFit.get(d)
-    } yield "dedup_embed_pairs" -> embedDupOracle(cents)
-    val xl = for {
-      d <- lastDir
-      cents <- ivfFit.get(d)
-    } yield "embed_xlabel_mutual" -> xlabelOracle(cents)
-    val sd = for {
-      d <- lastDir
-      cents <- ivfFit.get(d)
-    } yield "embed_semdedup" -> semDedupOracle(cents)
-    val pq = for {
-      d <- lastDir
-      books <- pqFit.get(d)
-    } yield "embed_knn_pq" -> knnPqOracle(books)
-    val ivfpq = for {
-      d <- lastDir
-      cents <- ivfFit.get(d)
-      probes <- ivfProbeFit.get(d)
-      books <- pqFit.get(d)
-    } yield "embed_ann_ivfpq" -> ivfPqOracle(cents, probes, books)
-    val km = for {
-      d <- lastDir
-      init <- kmInitFit.get(d)
-    } yield "embed_kmeans" -> kmeansOracle(init)
-    val sil = for {
-      d <- lastDir
-      cents <- ivfFit.get(d)
-    } yield "embed_silhouette" -> silhouetteOracle(cents)
-    (ivf ++ quant ++ rerank ++ dup ++ xl ++ sd ++ pq ++ ivfpq ++ km ++ sil).toMap
+    val ivf = graft.Memo.latest[Quantizer]("ivf_quantizer").toSeq.flatMap(q => Seq(
+      "embed_ann_ivf" -> annIvfOracle(q.cents, q.probes),
+      "dedup_embed_pairs" -> embedDupOracle(q.cents),
+      "embed_xlabel_mutual" -> xlabelOracle(q.cents),
+      "embed_semdedup" -> semDedupOracle(q.cents),
+      "embed_knn_pq" -> knnPqOracle(q.books),
+      "embed_ann_ivfpq" -> ivfPqOracle(q.cents, q.probes, q.books),
+      "embed_kmeans" -> kmeansOracle(q.cents),
+      "embed_silhouette" -> silhouetteOracle(q.cents)))
+    val sq = graft.Memo.latest[Array[Array[Double]]]("quant_bounds").toSeq.flatMap(b => Seq(
+      "embed_knn_quantized" -> knnQuantizedOracle(b),
+      "embed_knn_rerank" -> knnRerankOracle(b)))
+    (ivf ++ sq).toMap
   }
 
   /** DuckDB twin of [[embedDupPairs]]: same centroid-literal cell
@@ -1798,8 +1724,8 @@ object Similarity extends graft.Catalog {
        |FROM scored s LEFT JOIN rm ON rm.vec_id = s.vec_id""".stripMargin
   }
 
-  /** DuckDB twin of [[knnQuantized]], generated from the registered
-    * boundary fit: the 64×(B-1) boundary matrix is embedded as list
+  /** DuckDB twin of [[knnQuantized]], generated from the [[quantBounds]]
+    * fit: the 64×(B-1) boundary matrix is embedded as list
     * literals and the comparison bucketing (`1 + #{b : v >= b}`,
     * centered) is replayed per dimension — integer comparisons against
     * round-trip double literals, so the codes are bit-exact across

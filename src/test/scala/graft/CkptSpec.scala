@@ -14,12 +14,33 @@ import org.apache.spark.sql.DataFrame
   * Memo entries are per session: a fresh `newSession()` starts cold,
   * concurrent callers of one cold key share a single fit, a fit that
   * throws is retried, and concurrent lanes sharing one session's memos
-  * return the serial results. Dropping the entries of a stopped session is not tested:
-  * every suite shares one SparkContext, and stopping it would stop them
-  * all.
+  * return the serial results. `Memo.latest` returns the newest completed
+  * fit of a live session and never runs or waits for one; Verify's
+  * between-query sweep spares the checkpoints behind live memo frames.
+  * Every suite shares one SparkContext, so a stopped session is a stand-in
+  * whose context reports the stopped flag the test sets.
   */
 class CkptSpec extends SparkSpec {
   import spark.implicits._
+  import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
+
+  /** A session whose context's stopped flag is `stopped`, allocated
+    * without running either constructor (a JVM holds one live
+    * SparkContext): only the two fields Memo reads are set.
+    */
+  private def standInSession(stopped: AtomicBoolean): org.apache.spark.sql.SparkSession = {
+    val objenesis = new org.objenesis.ObjenesisStd
+    def set(o: AnyRef, cls: Class[_], field: String, v: AnyRef): Unit = {
+      val f = cls.getDeclaredField(field)
+      f.setAccessible(true)
+      f.set(o, v)
+    }
+    val sc = objenesis.newInstance(classOf[org.apache.spark.SparkContext])
+    set(sc, classOf[org.apache.spark.SparkContext], "stopped", stopped)
+    val s = objenesis.newInstance(spark.getClass)
+    set(s, spark.getClass, "sparkContext", sc)
+    s
+  }
 
   private def fitFrame(mark: java.util.concurrent.atomic.AtomicInteger): DataFrame = {
     mark.incrementAndGet()
@@ -128,6 +149,74 @@ class CkptSpec extends SparkSpec {
         assert(got == serial(n), s"$n: concurrent result differs from the serial run")
       }
     } finally pool.shutdown()
+  }
+
+  test("Memo.latest: the newest completed fit under a tag wins across dirs") {
+    val s = spark.newSession()
+    Memo(s, ("latest_spec_a", "d1"))("one")
+    Memo(s, ("latest_spec_a", "d2"))("two")
+    assert(Memo.latest[String]("latest_spec_a").contains("two"))
+    // a hit completes no fit, so it does not change the answer
+    assert(Memo(s, ("latest_spec_a", "d1"))("unused") == "one")
+    assert(Memo.latest[String]("latest_spec_a").contains("two"))
+    Memo(s, ("latest_spec_a", "d3"))("three")
+    assert(Memo.latest[String]("latest_spec_a").contains("three"))
+  }
+
+  test("Memo.latest: a stopped session's entries are not returned") {
+    val stopped = new AtomicBoolean(false)
+    val s = standInSession(stopped)
+    Memo(s, ("latest_spec_b", "d1"))("live")
+    assert(Memo.latest[String]("latest_spec_b").contains("live"))
+    stopped.set(true)
+    assert(Memo.latest[String]("latest_spec_b").isEmpty)
+  }
+
+  test("Memo.latest: a running or failed fit is not returned, and the read never runs or waits for one") {
+    val s = spark.newSession()
+    val fits = new AtomicInteger
+    val started = new java.util.concurrent.CountDownLatch(1)
+    val release = new java.util.concurrent.CountDownLatch(1)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(1)
+    try {
+      val fit = pool.submit(new java.util.concurrent.Callable[String] {
+        def call(): String = Memo(s, ("latest_spec_c", "d1")) {
+          fits.incrementAndGet(); started.countDown(); release.await(); "done"
+        }
+      })
+      started.await()
+      // the fit is blocked on `release`: a read that waited would hang here
+      assert(Memo.latest[String]("latest_spec_c").isEmpty)
+      assert(!fit.isDone)
+      release.countDown()
+      assert(fit.get() == "done")
+      assert(Memo.latest[String]("latest_spec_c").contains("done"))
+      assert(fits.get() == 1)
+    } finally { release.countDown(); pool.shutdown() }
+    intercept[IllegalStateException] {
+      Memo(s, ("latest_spec_d", "d1")) { fits.incrementAndGet(); throw new IllegalStateException("fit failed") }
+    }
+    assert(Memo.latest[String]("latest_spec_d").isEmpty)
+    assert(Memo.latest[String]("latest_spec_never_fitted").isEmpty)
+    assert(fits.get() == 2, "reads must not run a fit")
+  }
+
+  test("Verify.sweep spares live Memo.frame checkpoints and unpersists the rest") {
+    val fits = new AtomicInteger
+    val first = Memo.frame(spark, ("ckpt_spec", "d8"))(fitFrame(fits))
+    assert(first.count() == 3)
+    val debris = Ckpt.cut(Seq(1L, 2L).toDF("k"))
+    val debrisIds = debris.queryExecution.logical.collect {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
+    }
+    assert(debrisIds.nonEmpty && debrisIds.forall(spark.sparkContext.getPersistentRDDs.contains))
+    Verify.sweep(spark)
+    assert(debrisIds.forall(id => !spark.sparkContext.getPersistentRDDs.contains(id)),
+      "a query's leftover checkpoint must be unpersisted")
+    val again = Memo.frame(spark, ("ckpt_spec", "d8"))(fitFrame(fits))
+    assert(fits.get() == 1, "the sweep must not make the memo refit")
+    assert(again eq first)
+    assert(again.count() == 3)
   }
 
   test("cut is the catalog lineage cut: materialized, truncated, value-preserving") {

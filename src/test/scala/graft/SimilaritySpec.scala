@@ -42,7 +42,7 @@ class SimilaritySpec extends SparkSpec {
 
   test("native nearest_cell == shared-scoring argmin recompute (bit-for-bit)") {
     import graft.functions.NearestCell
-    val cents = Similarity.fitCentroids(spark, sf)
+    val cents = Similarity.quantizer(spark, sf).cents
     val rows = Tables.embeddings(spark, sf)
       .withColumn("v", col("embedding").cast("array<double>"))
       .select(col("vec_id"), col("v"), Native(es => NearestCell(es.head, cents), col("v")).as("cell"))
@@ -109,6 +109,49 @@ class SimilaritySpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val recall = exact.intersect(ivf).size.toDouble / exact.size
     assert(recall > 0.3, s"IVF recall too low: $recall")
+  }
+
+  test("the embed_ann_ivf oracle embeds the default-probe cells after a probes=16 annIvf") {
+    // a fresh session, so this dataset's quantizer is the newest fit
+    val fresh = spark.newSession()
+    Similarity.annIvf(fresh, sf, probes = 16).collect()
+    val sql = Similarity.oracles("embed_ann_ivf")
+    val pairs = "\\((\\d+), (\\d+)\\)".r
+      .findAllMatchIn(sql.split("probes\\(query_id, cell\\) AS \\(VALUES ")(1).takeWhile(_ != '\n'))
+      .map(m => (m.group(1).toLong, m.group(2).toInt)).toSeq
+    // the driver recompute: each probe vector's IvfProbes nearest cells
+    val cents = Similarity.quantizer(fresh, sf).cents
+    val cn2 = graft.functions.NearestCell.cn2Of(cents)
+    val want = Tables.embeddings(spark, sf)
+      .filter($"vec_id" < Similarity.NumQueries).orderBy($"vec_id")
+      .select($"vec_id", $"embedding".cast("array<double>")).collect().toSeq
+      .flatMap { r =>
+        val scores = graft.functions.NearestCell.scores(r.getSeq[Double](1).toArray, cents, cn2)
+        scores.indices.sortBy(i => (scores(i), i)).take(Similarity.IvfProbes).map(c => (r.getLong(0), c))
+      }
+    assert(pairs == want)
+  }
+
+  test("the IVF family on a fresh session collects the quantizer's training sample once") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    val samples = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart if s.details.contains("trainSample") =>
+          samples.incrementAndGet()
+        case _ =>
+      }
+    }
+    val fresh = spark.newSession()
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      for (n <- Seq("embed_ann_ivf", "embed_ann_ivfpq", "embed_kmeans",
+          "embed_silhouette", "dedup_embed_pairs", "embed_semdedup"))
+        assert(SparkEntry.queries(n)(fresh, sf).count() > 0, n)
+      org.apache.spark.graftbench.BusDrain.drain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(samples.get() == 1, s"${samples.get()} training-sample collects")
   }
 
   // 8 well-separated Gaussian clusters x 50 vectors in 64 dims — the
@@ -385,7 +428,7 @@ class SimilaritySpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getDouble(4)))
     assert(got.nonEmpty, "fixture mined no cross-label pairs — vacuous")
     // driver replay: same fit, same cells, same rounded sims
-    val cents = Similarity.fitCentroids(spark, sf)
+    val cents = Similarity.quantizer(spark, sf).cents
     val rows = Tables.embeddings(spark, sf)
       .select($"vec_id", $"label".cast("long"), $"embedding".cast("array<double>"))
       .collect()
@@ -425,7 +468,7 @@ class SimilaritySpec extends SparkSpec {
     // the fitted boundaries drive the plan; recompute codes on the
     // driver with the SAME comparison rule and assert bit-for-bit
     val coded = Similarity.knnQuantizedCodes(spark, sf)
-    val bounds = Similarity.lastQuantBounds(sf).get
+    val bounds = Similarity.quantBounds(spark, sf)
     val rows = Tables.embeddings(spark, sf)
       .withColumn("v", col("embedding").cast("array<double>"))
       .select(col("vec_id"), col("v")).collect()
@@ -468,7 +511,7 @@ class SimilaritySpec extends SparkSpec {
     assert(pairs.forall(_.getDouble(3) >= 0.3))
     // every emitted pair sits in ONE cell, and no kept cell exceeds the cap:
     // recompute assignment with the same fit and count
-    val cents = Similarity.fitCentroids(spark, sf)
+    val cents = Similarity.quantizer(spark, sf).cents
     val cn2 = NearestCell.cn2Of(cents)
     val cellOf = Tables.embeddings(spark, sf)
       .withColumn("v", col("embedding").cast("array<double>"))
@@ -557,7 +600,7 @@ class SimilaritySpec extends SparkSpec {
   test("pq reconstruction: Spark xhat == driver replay of the codebook argmin") {
     val got = Similarity.pqReconstructed(spark, sf).collect()
       .map(r => r.getLong(0) -> r.getSeq[Double](1).toArray).toMap
-    val books = Similarity.lastPqBooks(sf).get
+    val books = Similarity.quantizer(spark, sf).books
     val raw = Tables.embeddings(spark, sf)
       .selectExpr("vec_id", "cast(embedding as array<double>) AS v").collect()
       .map(r => r.getLong(0) -> r.getSeq[Double](1).toArray).toMap
@@ -587,7 +630,7 @@ class SimilaritySpec extends SparkSpec {
     // every returned neighbor must live in one of its query's probed
     // cells (the coarse pruning is the ONLY recall loss in the
     // composite; the shortlist+rerank recovers everything inside)
-    val cents = Similarity.fitCentroids(spark, sf)
+    val cents = Similarity.quantizer(spark, sf).cents
     val cn2 = graft.functions.NearestCell.cn2Of(cents)
     val raw = Tables.embeddings(spark, sf)
       .selectExpr("vec_id", "cast(embedding as array<double>) AS v").collect()
@@ -596,7 +639,7 @@ class SimilaritySpec extends SparkSpec {
       val s = graft.functions.NearestCell.scores(v, cents, cn2)
       s.indices.minBy(i => (s(i), i))
     }
-    val probed = Similarity.lastIvfProbes(sf).get
+    val probed = Similarity.quantizer(spark, sf).probes
       .groupBy(_._1).map { case (q, ps) => q -> ps.map(_._2).toSet }
     for (r <- ivfpq) {
       val q = r.getLong(0); val n = r.getLong(1)
@@ -622,7 +665,7 @@ class SimilaritySpec extends SparkSpec {
     val raw = Tables.embeddings(spark, sf)
       .selectExpr("vec_id", "cast(embedding as array<double>) AS v").collect()
       .map(r => r.getSeq[Double](1).toArray)
-    var cents = Similarity.fitCentroids(spark, sf)
+    var cents = Similarity.quantizer(spark, sf).cents
     def assign(): Array[Int] = {
       val cn2 = graft.functions.NearestCell.cn2Of(cents)
       raw.map { v =>
