@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftnative.Native
 import graft.Tables
-import graft.functions.LetterTokens
+import graft.functions.{DecimalOrderJoin, LetterTokens}
 import graft.mr.{AppLoader, KeyValue, MapReduce, MrApp}
 
 /** The reference's eight pluggable Map/Reduce apps (SURVEY.md §2.2) as
@@ -127,17 +127,19 @@ object MrApps extends graft.Catalog {
     * (mrapps/indexer.go:22-27), so the token stream crosses ONE exchange
     * instead of a corpus-wide (word, doc) `distinct()` followed by the
     * groupBy. `collect_set` over the long doc_id keeps the oracle's
-    * DISTINCT when a doc_id sits on several rows; the cast to string
-    * comes before the sort, so the docs follow the string order of the
-    * oracle's `ORDER BY doc`.
+    * DISTINCT when a doc_id sits on several rows. The doc list is the
+    * codegen'd [[DecimalOrderJoin]], row for row the retained spelling
+    * `array_join(sort_array(cast(ids AS array<string>)), ",")` (pinned by
+    * NativeKernelExprSpec): the docs follow the string order of the
+    * oracle's `ORDER BY doc`, sorted as packed longs instead of strings.
     */
   def indexerOf(docs: DataFrame): DataFrame =
     docs
       .select(col("doc_id"), explode(array_distinct(letterTokens(col("text")))).as("word"))
       .groupBy("word")
-      .agg(sort_array(collect_set(col("doc_id")).cast("array<string>")).as("ds"))
-      .select(col("word"), size(col("ds")).cast("long").as("n_docs"),
-        array_join(col("ds"), ",").as("docs"))
+      .agg(collect_set(col("doc_id")).as("ids"))
+      .select(col("word"), size(col("ids")).cast("long").as("n_docs"),
+        Native(es => DecimalOrderJoin(es.head), col("ids")).as("docs"))
 
   /** crash/nocrash pipeline: 4 fixed pairs per document, reduce = sorted
     * space-join (mrapps/crash.go:36-57). `source` plays the file name,

@@ -27,48 +27,79 @@ final case class KvCell(
     n_errversion: Long,
     n_errnokey: Long)
 
+/** The CAS step rule of the reference KV server (srv/server.go:59-88),
+  * written once: a mutable fold over one key's ops in `seq` order,
+  * started empty (a missing key) or from an existing cell. The batch
+  * interpreter, the distributed replay and the streaming twin all step
+  * ops through it.
+  */
+final class CasFold private (
+    private var value: String,
+    private var version: Long,
+    private var ok: Long,
+    private var errv: Long,
+    private var errnk: Long) {
+
+  def this() = this(null, 0L, 0L, 0L, 0L)
+
+  def step(op: KvOp): Unit =
+    if (op.attempt == version) {
+      value = op.value; version += 1; ok += 1
+    } else if (version == 0L) errnk += 1 // missing key, version != 0
+    else errv += 1
+
+  def cell(key: String): KvCell =
+    KvCell(key, if (value == null) "" else value, version, ok, errv, errnk)
+}
+
+object CasFold {
+  /** A fold that continues from `c` (a streaming key's live cell). */
+  def from(c: KvCell): CasFold =
+    new CasFold(c.value, c.version, c.n_ok, c.n_errversion, c.n_errnokey)
+}
+
 /** Versioned KV store with compare-and-swap puts, as a data operator:
   * the reference's in-memory `map[string]KVData` + CAS Put
   * (srv/server.go:21-88) becomes a deterministic per-key op-log replay.
   *
-  * Scale notes: ONE shuffle on the `key` column; the per-key fold is
-  * streaming over a sorted iterator, so only one op is held at a time —
-  * no per-key materialization. Keys partition independently, so a
-  * 1000-executor run scales with key cardinality. The unbounded-stream
-  * variant of the same fold lives in graft.streaming (mapGroupsWithState).
+  * Scale notes: ONE shuffle, hash-partitioned on the `key` column, and a
+  * sort on `seq` alone inside each partition (a single long: Spark's
+  * radix path, no string comparisons). One pass over the sorted
+  * partition keeps a [[CasFold]] per key it has seen, so its state is
+  * O(distinct keys per partition), never O(ops). Keys partition
+  * independently, so a 1000-executor run scales with key cardinality.
+  * Ops with equal `seq` within a key replay in an unspecified order. The
+  * unbounded-stream variant of the same fold lives in graft.streaming
+  * (mapGroupsWithState).
   */
 object KVStore extends graft.Catalog {
 
-  /** The sequential reference interpreter (used by tests as the oracle,
-    * and by the distributed fold per key — same code path, so the
+  /** The sequential reference interpreter (used by tests as the oracle
+    * of the distributed replay; both step the same [[CasFold]], so the
     * porcupine-style check reduces to "distributed == sequential").
     */
   def replayKey(key: String, ops: Iterator[KvOp]): KvCell = {
-    var value: String = null
-    var version = 0L
-    var ok = 0L
-    var errv = 0L
-    var errnk = 0L
-    ops.foreach { op =>
-      if (op.attempt == version) {
-        value = op.value; version += 1; ok += 1
-      } else if (version == 0L) errnk += 1 // missing key, version != 0
-      else errv += 1
-    }
-    KvCell(key, if (value == null) "" else value, version, ok, errv, errnk)
+    val f = new CasFold
+    ops.foreach(f.step)
+    f.cell(key)
   }
 
-  /** Distributed CAS replay of an op-log Dataset. Ops within a key are
-    * replayed in `seq` order (sort is per-group over the shuffle's sorted
-    * run, not a global sort). Grouped on the `key` column, not with
-    * `groupByKey(_.key)`: the same single exchange and fold, but no
-    * per-op deserialization into a [[KvOp]] just to compute a key the
-    * row already holds.
+  /** Distributed CAS replay of an op-log Dataset: one hash exchange on
+    * `key`, then each shuffle partition sorted on `seq` and replayed in
+    * one pass, every op stepping its key's [[CasFold]]. A key's ops all
+    * land in one partition, so the pass sees each key's whole log in
+    * `seq` order. At the end of the partition it emits one [[KvCell]]
+    * per key, in key order.
     */
   def replay(spark: SparkSession, ops: org.apache.spark.sql.Dataset[KvOp]): DataFrame = {
     import spark.implicits._
-    ops.groupBy(col("key")).as[String, KvOp]
-      .flatMapSortedGroups($"seq") { (k, it) => Iterator.single(replayKey(k, it)) }
+    ops.repartition(col("key")).sortWithinPartitions(col("seq"))
+      .mapPartitions { it =>
+        val folds = new java.util.HashMap[String, CasFold]()
+        it.foreach(op => folds.computeIfAbsent(op.key, _ => new CasFold).step(op))
+        folds.keySet.toArray(new Array[String](0)).sorted.iterator
+          .map(k => folds.get(k).cell(k))
+      }
       .toDF()
   }
 

@@ -7,7 +7,7 @@ import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState,
   TimerValues, ValueState}
 import org.apache.spark.sql.types._
 import graft.Tables
-import graft.kv.{KvCell, KvOp}
+import graft.kv.{CasFold, KvCell, KvOp}
 
 /** Structured Streaming slice over the events table (SURVEY.md §2.3):
   * watermarked tumbling/sliding windows and stateful per-key folds.
@@ -152,9 +152,9 @@ object EventStreams extends graft.Catalog {
   }
 
   /** Streaming CAS KV replay (O16 as a stateful stream): per-key state is
-    * the live KV cell, updated by each micro-batch's ops in seq order —
-    * `mapGroupsWithState` is the unbounded-stream form of
-    * KVStore.replay's batch fold.
+    * the live KV cell, updated by each micro-batch's ops in seq order
+    * through the same [[CasFold]] as KVStore.replay's batch pass —
+    * `mapGroupsWithState` is its unbounded-stream form.
     */
   def kvStream(events: DataFrame): Dataset[KvCell] =
     kvStreamOps(graft.kv.KVStore.opsFrom(events))
@@ -167,16 +167,10 @@ object EventStreams extends graft.Catalog {
     ops.groupByKey(_.key)
       .mapGroupsWithState(GroupStateTimeout.NoTimeout) {
         (key: String, it: Iterator[KvOp], state: GroupState[KvCell]) =>
-          val prev = state.getOption.getOrElse(KvCell(key, "", 0L, 0L, 0L, 0L))
-          var (value, version, ok, errv, errnk) =
-            (prev.value, prev.version, prev.n_ok, prev.n_errversion, prev.n_errnokey)
+          val fold = state.getOption.map(CasFold.from).getOrElse(new CasFold)
           // micro-batch iterators are unordered; seq order is the contract
-          it.toSeq.sortBy(_.seq).foreach { op =>
-            if (op.attempt == version) { value = op.value; version += 1; ok += 1 }
-            else if (version == 0L) errnk += 1
-            else errv += 1
-          }
-          val cell = KvCell(key, value, version, ok, errv, errnk)
+          it.toSeq.sortBy(_.seq).foreach(fold.step)
+          val cell = fold.cell(key)
           state.update(cell)
           cell
       }

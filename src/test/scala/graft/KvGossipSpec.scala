@@ -42,6 +42,83 @@ class KvGossipSpec extends SparkSpec {
     }
   }
 
+  /** Op logs at realistic key counts: 1–300 keys (empty and unicode
+    * among them), up to 3000 ops with unique shuffled `seq` values
+    * (negatives included), empty and unicode values, attempts 0..5. Many
+    * keys per shuffle partition, interleaved in `seq` order, is what the
+    * one-pass replay has to untangle.
+    */
+  private val genWideOps: Gen[List[KvOp]] = for {
+    nKeys <- Gen.choose(1, 300)
+    n <- Gen.choose(1, 3000)
+    keys = Vector.tabulate(nKeys) {
+      case 0 => ""
+      case 1 => "ключ"
+      case 2 => "\uD83D\uDD11"
+      case i => s"k$i"
+    }
+    ops <- Gen.listOfN(n, for {
+      key <- Gen.oneOf(keys)
+      value <- Gen.frequency(1 -> Gen.const(""), 1 -> Gen.const("значение\uD83D\uDE00"),
+        4 -> Gen.alphaNumStr.map(_.take(8)))
+      attempt <- Gen.choose(0L, 5L)
+    } yield (key, value, attempt))
+    seed <- Gen.long
+  } yield {
+    val seqs = new scala.util.Random(seed).shuffle((0 until n).map(i => i * 7919L - 4000000L))
+    ops.zip(seqs).map { case ((k, v, a), q) => KvOp(k, v, a, q) }
+  }
+
+  private def sequential(ops: Seq[KvOp]): Map[String, graft.kv.KvCell] =
+    ops.groupBy(_.key).map { case (k, kops) =>
+      k -> KVStore.replayKey(k, kops.sortBy(_.seq).iterator)
+    }
+
+  test("distributed CAS replay == sequential interpreter (1-300 keys, up to 3000 ops, " +
+    "3+ input partitions)") {
+    val cases = samples(genWideOps, 10)
+    cases.foreach { ops =>
+      val input = spark.createDataset(spark.sparkContext.parallelize(ops, 3 + ops.size % 3))
+      assert(input.rdd.getNumPartitions >= 3)
+      val got = KVStore.replay(spark, input)
+        .as[graft.kv.KvCell].collect()
+      assert(got.length === got.map(_.key).distinct.length, "a key emitted twice")
+      assert(got.map(c => c.key -> c).toMap === sequential(ops))
+    }
+    // the generator reaches the regimes the pass must separate
+    assert(cases.exists(_.map(_.key).distinct.size > 100))
+    assert(cases.exists(_.size > 1000))
+    assert(cases.exists(ops => sequential(ops).values.exists(_.version > 1)))
+  }
+
+  test("kvStreamOps over one micro-batch == replay on the same log") {
+    val ops = samples(genWideOps, 12).maxBy(_.map(_.key).distinct.size)
+    val landing = java.nio.file.Files.createTempDirectory("graftkvone").toString
+    val opsDs = spark.createDataset(ops)
+    opsDs.coalesce(1).write.parquet(s"$landing/a")
+    val stream = spark.readStream.schema(opsDs.schema).parquet(s"$landing/a").as[KvOp]
+    val q = graft.streaming.EventStreams.kvStreamOps(stream)
+      .writeStream.outputMode(org.apache.spark.sql.streaming.OutputMode.Update())
+      .format("memory").queryName("kv_one_batch_out").start()
+    try {
+      q.processAllAvailable()
+      assert(q.recentProgress.count(_.numInputRows > 0) === 1)
+      val streamed = spark.table("kv_one_batch_out").as[graft.kv.KvCell].collect()
+      val batch = KVStore.replay(spark, opsDs).as[graft.kv.KvCell].collect()
+      assert(streamed.sortBy(_.key).toSeq === batch.sortBy(_.key).toSeq)
+      assert(batch.length > 100)
+    } finally q.stop()
+  }
+
+  test("kv_cas_replay plans one hash exchange and sorts on seq alone") {
+    val plan = KVStore.casReplay(spark, sf).queryExecution.executedPlan.toString
+    val nEx = "Exchange hashpartitioning".r.findAllIn(plan).length
+    assert(nEx === 1, s"kv_cas_replay: $nEx hash exchanges:\n$plan")
+    val sorts = """Sort \[([^\]]*)\]""".r.findAllMatchIn(plan).map(_.group(1)).toList
+    assert(sorts.nonEmpty && sorts.forall(_.matches("""seq#\d+L ASC NULLS FIRST""")),
+      s"kv_cas_replay sorts on $sorts:\n$plan")
+  }
+
   test("CAS semantics: version-matched put succeeds, mismatched errors (srv/server.go:59-88)") {
     val ops = List(
       KvOp("k", "v1", 0, 0), // OK -> version 1

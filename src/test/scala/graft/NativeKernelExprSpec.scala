@@ -1,7 +1,7 @@
 package graft
 
-import graft.functions.{BpePreTokenCount, LetterTokens, MatchCount, PairStructs, SegBucket,
-  WhitespaceTokens}
+import graft.functions.{BpePreTokenCount, DecimalOrderJoin, LetterTokens, MatchCount,
+  PairStructs, SegBucket, WhitespaceTokens}
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.expressions.Size
 import org.apache.spark.sql.functions._
@@ -31,6 +31,9 @@ import org.scalacheck.rng.Seed
   *  - the three bucket pair kernels (`OrderedPairStructs`,
   *    `NewPairStructs`, `HammingPairStructs`) vs their bucket lambdas,
   *    on the hand-picked rows plus generated buckets the same way;
+  *  - [[DecimalOrderJoin]] vs `array_join(sort_array(cast(ids AS
+  *    array<string>)), ",")` (mr_indexer's doc list), over generated
+  *    arrays of decimal-string edges on both of its paths;
   *  - the tokenizer kernels ([[WhitespaceTokens]], [[LetterTokens]],
   *    [[BpePreTokenCount]]) vs the split / regexp_extract_all spellings
   *    they replaced, over generated strings (every Java regex class
@@ -394,6 +397,81 @@ class NativeKernelExprSpec extends SparkSpec {
     }
     assert(cases.exists(c => c.distinct.size < c.size))
     assert(cases.map(_.size).toSet.contains(maxBucket))
+  }
+
+  // ---- indexer doc lists ----
+
+  /** Decimal-string edges: 0, ±1, each power of ten and its neighbours
+    * (string order puts "10" before "9"), the 8-byte fast path's edges,
+    * and the long range's ends.
+    */
+  private val decimalEdges: Seq[Long] = {
+    val tens = (1 to 18).map(p => math.pow(10, p).toLong)
+      .flatMap(t => Seq(t - 1, t, t + 1)) ++ Seq(0L, 1L)
+    (tens ++ tens.map(-_) ++ Seq(-9999999L, -10000000L, 99999999L, 100000000L,
+      Long.MinValue, Long.MaxValue)).distinct
+  }
+
+  private val genDecimalElem: Gen[java.lang.Long] = Gen.frequency(
+    1 -> Gen.const(null),
+    4 -> Gen.oneOf(decimalEdges).map(Long.box),
+    4 -> Gen.choose(-9999999L, 99999999L).map(Long.box),
+    1 -> Gen.choose(Long.MinValue, Long.MaxValue).map(Long.box))
+
+  /** Arrays over the edges: null, empty and all-null arrays, duplicates
+    * (elements drawn from a small pool), fast-path-only arrays, arrays
+    * that mix both paths, and each fast-path edge among fast elements.
+    */
+  private val genDocIds: Gen[Seq[java.lang.Long]] = Gen.frequency(
+    1 -> Gen.const(null),
+    1 -> Gen.const(Seq.empty[java.lang.Long]),
+    1 -> Gen.choose(1, 3).flatMap(n => Gen.listOfN(n, Gen.const(null: java.lang.Long))),
+    6 -> Gen.choose(1, 40).flatMap(n => Gen.listOfN(n, genDecimalElem)),
+    2 -> Gen.choose(1, 40).flatMap(n =>
+      Gen.listOfN(n, Gen.choose(-9999999L, 99999999L).map(Long.box))),
+    // one fast-path edge among fast elements: the edge alone picks the path
+    2 -> (for {
+      edge <- Gen.oneOf(-9999999L, -10000000L, 99999999L, 100000000L)
+      n <- Gen.choose(1, 10)
+      xs <- Gen.listOfN(n, Gen.choose(-9999999L, 99999999L))
+      seed <- Gen.long
+    } yield new scala.util.Random(seed).shuffle(edge :: xs).map(Long.box)),
+    2 -> (for {
+      pool <- Gen.listOfN(3, genDecimalElem)
+      n <- Gen.choose(2, 20)
+      xs <- Gen.listOfN(n, Gen.oneOf(pool))
+    } yield xs))
+
+  test("DecimalOrderJoin == array_join(sort_array(cast(ids AS array<string>)), ',') " +
+    "(generated arrays)") {
+    val cases = samples(genDocIds, 300)
+    val schema = StructType(Seq(StructField("k", LongType, nullable = false),
+      StructField("ids", ArrayType(LongType, containsNull = true))))
+    val df = spark.createDataFrame(
+      java.util.Arrays.asList(cases.zipWithIndex.map { case (ids, k) => Row(k.toLong, ids) }: _*),
+      schema)
+    def joined(d: DataFrame, c: Column): Map[Long, Option[String]] =
+      d.select($"k", c).collect()
+        .map(r => r.getLong(0) -> Option(r.getString(1))).toMap
+    for (d <- bothPaths(df)) {
+      val native = joined(d, Native(es => DecimalOrderJoin(es.head), $"ids"))
+      // the spelling mr_indexer ran before the kernel
+      val sql = joined(d, expr("array_join(sort_array(cast(ids AS array<string>)), ',')"))
+      assert(native.size === cases.size)
+      assert(native === sql)
+    }
+    // the generator reaches every branch: null and all-null arrays,
+    // duplicates, arrays on each path and arrays mixing both
+    def fast(x: java.lang.Long) = x == null || (x >= -9999999L && x <= 99999999L)
+    val nonNull = cases.filter(_ != null)
+    assert(cases.contains(null) && nonNull.exists(c => c.nonEmpty && c.forall(_ == null)))
+    assert(nonNull.exists(c => c.count(_ != null) > c.filter(_ != null).distinct.size))
+    assert(nonNull.exists(c => c.count(_ != null) > 1 && c.forall(fast)))
+    assert(nonNull.exists(c => c.exists(x => !fast(x)) && c.exists(x => x != null && fast(x))))
+    val seen = nonNull.flatten.filter(_ != null).map(_.longValue).toSet
+    assert(Seq(Long.MinValue, Long.MaxValue, 0L, 9L, 10L, 99L, 100L).forall(seen))
+    assert(Seq(-9999999L, -10000000L, 99999999L, 100000000L).forall(edge =>
+      nonNull.exists(c => c.contains(edge) && c.count(x => !fast(x)) <= 1)))
   }
 
   // ---- tokenizer kernels ----
