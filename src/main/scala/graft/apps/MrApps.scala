@@ -20,7 +20,9 @@ import graft.mr.{AppLoader, KeyValue, MapReduce, MrApp}
   * second aggregate for the (word, doc) DISTINCT.
   * Tokenization stays inside whole-stage codegen: the byte-scanning
   * kernels of `graft.functions` ([[letterTokens]],
-  * [[graft.text.TextAnalysis.toks]]) and `explode`, no UDFs.
+  * [[graft.text.TextAnalysis.toks]]) and `explode`, no UDFs; so does
+  * the indexer's doc list, sorted as packed longs
+  * ([[graft.functions.DecimalOrderJoin]]).
   */
 object MrApps extends graft.Catalog {
 

@@ -31,14 +31,17 @@ class KvGossipSpec extends SparkSpec {
     } yield (key, value, attempt))
   } yield ops.zipWithIndex.map { case ((k, v, a), i) => KvOp(k, v, a, i.toLong) }
 
+  /** Each key's cell from the sequential interpreter, ops in seq order. */
+  private def sequential(ops: Seq[KvOp]): Map[String, graft.kv.KvCell] =
+    ops.groupBy(_.key).map { case (k, kops) =>
+      k -> KVStore.replayKey(k, kops.sortBy(_.seq).iterator)
+    }
+
   test("distributed CAS replay == sequential interpreter (random op logs)") {
     samples(genOps, 12).foreach { ops =>
-      val seqResult = ops.groupBy(_.key).map { case (k, kops) =>
-        k -> KVStore.replayKey(k, kops.sortBy(_.seq).iterator)
-      }
       val distResult = KVStore.replay(spark, spark.createDataset(ops))
         .as[graft.kv.KvCell].collect().map(c => c.key -> c).toMap
-      assert(distResult === seqResult)
+      assert(distResult === sequential(ops))
     }
   }
 
@@ -68,11 +71,6 @@ class KvGossipSpec extends SparkSpec {
     val seqs = new scala.util.Random(seed).shuffle((0 until n).map(i => i * 7919L - 4000000L))
     ops.zip(seqs).map { case ((k, v, a), q) => KvOp(k, v, a, q) }
   }
-
-  private def sequential(ops: Seq[KvOp]): Map[String, graft.kv.KvCell] =
-    ops.groupBy(_.key).map { case (k, kops) =>
-      k -> KVStore.replayKey(k, kops.sortBy(_.seq).iterator)
-    }
 
   test("distributed CAS replay == sequential interpreter (1-300 keys, up to 3000 ops, " +
     "3+ input partitions)") {
