@@ -2,7 +2,7 @@
 # Run a graft main class with plain `java` against a SNAPSHOT of the
 # compiled classes (so concurrent `sbt compile` of new code can't swap
 # class files under a running JVM) — keeps the sbt build lock free
-# while multi-minute rehearsal jobs (ScaleGen/Verify/Bench/StreamScale)
+# while multi-minute jobs (ScaleGen/Verify/Bench and the rehearsal mains)
 # run in the background. Mirrors build.sbt's forked-run JVM flags.
 #
 # Usage: [CLS_SNAP=dir] scripts/java_run.sh <mainClass> [args...]

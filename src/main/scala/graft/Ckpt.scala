@@ -2,32 +2,12 @@ package graft
 
 import org.apache.spark.storage.StorageLevel
 
-/** Order-independent distributed result hash shared by the rehearsal
-  * mains (StreamScale legs, ConcurrencyKillRehearsal): sum of per-row
-  * xxhash64 over stringified columns (null → a NUL-prefixed sentinel no
-  * real cast produces), accumulated in DECIMAL(38,0) so no overflow
-  * semantics differ across engines. Nothing data-scale reaches the
-  * driver — one row comes back.
-  */
-object RowHash {
-  import org.apache.spark.sql.functions._
-  def of(df: org.apache.spark.sql.DataFrame): String = {
-    val cols = df.columns.toSeq.map(c =>
-      coalesce(col(c).cast("string"), lit("\u0000null")))
-    df.select(sum(xxhash64(cols: _*).cast("decimal(38,0)")).as("h"))
-      .head() match {
-      case r if r.isNullAt(0) => "0"
-      case r => r.getDecimal(0).toBigInteger.toString
-    }
-  }
-}
-
 /** THIS session's executor processes only: under local-cluster the
   * Workers run inside the driver JVM, so its executors are this
   * process's direct children — scoping by parent pid keeps a kill away
   * from any OTHER Spark job on the box (the smoke run that motivated
   * this killed a concurrent session's executor and measured nothing).
-  * Shared by every kill rehearsal.
+  * Used by [[DecommissionRehearsal]] to pick the executors it drains.
   */
 object Execs {
   def childExecutorPids(): Seq[Long] = {

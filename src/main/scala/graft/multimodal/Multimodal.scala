@@ -3,7 +3,6 @@ package graft.multimodal
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftnative.Native
-import graft.functions.HammingPairStructs
 import graft.Tables
 
 /** A media file as it would sit in a multimodal training table: an
@@ -202,37 +201,15 @@ object Multimodal extends graft.Catalog {
 
   /** Near-duplicate media pairs by perceptual-hash hamming distance —
     * the image-dedup pass of a multimodal pipeline, structured exactly
-    * like the text SimHash tier: 16-bit chunk blocking (a pair within
-    * [[PHashMaxHamming]] MUST agree on some chunk), bucket caps from
-    * [[graft.text.Dedup.MaxBucket]], pairs generated only inside
-    * buckets. Two exchanges (chunk group + distinct); the decode/hash
-    * pass is narrow.
+    * the text SimHash tier's [[graft.text.Dedup.hammingPairs]]: 16-bit
+    * chunk blocking (a pair within [[PHashMaxHamming]] MUST agree on
+    * some chunk), capped buckets, pairs generated only inside buckets.
+    * Two exchanges (chunk group + distinct); the decode/hash pass is
+    * narrow.
     */
-  def phashPairs(spark: SparkSession, d: String): DataFrame = {
-    import spark.implicits._
-    // r14: native HammingPairStructs replaces the in-bucket pair lambda
-    // (same kernel as the text SimHash tier; NativeKernelExprSpec pins
-    // the parity, the oracle replays the lambda spelling unchanged).
-    val cap = graft.text.Dedup.MaxBucket
-    val chunked = phashes(mediaFiles(spark, d)).select(
-      struct($"doc_id", $"ph_lo", $"ph_hi").as("ds"),
-      posexplode(array(
-        $"ph_lo".bitwiseAND(0xFFFFL),
-        shiftright($"ph_lo", 16).bitwiseAND(0xFFFFL),
-        $"ph_hi".bitwiseAND(0xFFFFL),
-        shiftright($"ph_hi", 16).bitwiseAND(0xFFFFL))))
-      .withColumnRenamed("pos", "chunk")
-      .withColumnRenamed("col", "chunk_val")
-    chunked
-      .groupBy($"chunk", $"chunk_val")
-      .agg(collect_list($"ds").as("ds"))
-      .filter(size($"ds") > 1 && size($"ds") <= cap)
-      .select(explode(Native(es => HammingPairStructs(es.head), $"ds")).as("p"))
-      .select($"p.a".as("doc_a"), $"p.b".as("doc_b"),
-        $"p.h".cast("long").as("hamming"))
-      .filter($"hamming" <= PHashMaxHamming)
-      .distinct()
-  }
+  def phashPairs(spark: SparkSession, d: String): DataFrame =
+    graft.text.Dedup.hammingPairs(
+      phashes(mediaFiles(spark, d)), "ph_lo", "ph_hi", PHashMaxHamming)
 
   /** The shared CTE chain computing the per-doc hash halves (`ph`) —
     * composed into BOTH phash oracles so the two can never drift. Byte
@@ -275,31 +252,9 @@ object Multimodal extends graft.Catalog {
   /** DuckDB twin of [[phashPairs]]: the shared hash CTEs + chunk
     * blocking, caps, and the hamming filter.
     */
-  private def phashOracle: String = {
-    val chunkBranches = Seq(
-      "ph_lo & 65535", "(ph_lo >> 16) & 65535",
-      "ph_hi & 65535", "(ph_hi >> 16) & 65535").zipWithIndex.map {
-      case (e, i) => s"SELECT doc_id, ph_lo, ph_hi, $i AS chunk, $e AS chunk_val FROM ph"
-    }.mkString("\nUNION ALL\n")
+  private def phashOracle: String =
     s"""$phashCtes,
-       |chunks AS (
-       |$chunkBranches),
-       |cand AS (
-       |  SELECT * FROM (
-       |    SELECT doc_id, ph_lo, ph_hi, chunk, chunk_val,
-       |           count(*) OVER (PARTITION BY chunk, chunk_val) AS bsz
-       |    FROM chunks) x
-       |  WHERE bsz > 1 AND bsz <= ${graft.text.Dedup.MaxBucket})
-       |SELECT DISTINCT
-       |  least(a.doc_id, b.doc_id) AS doc_a,
-       |  greatest(a.doc_id, b.doc_id) AS doc_b,
-       |  CAST(bit_count(xor(a.ph_lo, b.ph_lo))
-       |       + bit_count(xor(a.ph_hi, b.ph_hi)) AS BIGINT) AS hamming
-       |FROM cand a JOIN cand b
-       |  ON a.chunk = b.chunk AND a.chunk_val = b.chunk_val AND a.doc_id < b.doc_id
-       |WHERE bit_count(xor(a.ph_lo, b.ph_lo))
-       |      + bit_count(xor(a.ph_hi, b.ph_hi)) <= $PHashMaxHamming""".stripMargin
-  }
+       |${graft.text.Dedup.hammingOracle("ph", "ph_lo", "ph_hi", PHashMaxHamming)}""".stripMargin
 
   /** Audio-style frame energy segmentation — the VAD-shaped pass an
     * audio curation pipeline runs (frame the waveform, energy per

@@ -262,10 +262,10 @@ object Curation extends graft.Catalog {
         |  SELECT CAST(sum(CAST(round(i.o_totalprice*100,0) AS BIGINT)) AS DOUBLE)/100/count(*)
         |  FROM orders i WHERE i.o_custkey = o.o_custkey)""".stripMargin,
     "training_mix" ->
-      """WITH base AS (
+      s"""WITH base AS (
         |  SELECT doc_id, source,
-        |    list_filter(string_split_regex(text, '\s+'), x -> x <> '') AS t,
-        |    regexp_replace(lower(trim(text)), '\s+', ' ', 'g') AS norm
+        |    list_filter(string_split_regex(text, '\\s+'), x -> x <> '') AS t,
+        |    regexp_replace(lower(trim(text)), '\\s+', ' ', 'g') AS norm
         |  FROM documents),
         |gated AS (
         |  SELECT doc_id, source, t, norm,
@@ -283,19 +283,10 @@ object Curation extends graft.Catalog {
         |  SELECT * FROM (
         |    SELECT *, row_number() OVER (PARTITION BY norm ORDER BY doc_id) AS rn
         |    FROM gated) x WHERE rn = 1),
-        |jd0 AS (
-        |  SELECT doc_id, list_distinct(t) AS dt, t[1] AS b1,
-        |         CAST(floor(len(t) / 10) AS BIGINT) AS b2
-        |  FROM (SELECT doc_id,
-        |          list_filter(string_split_regex(text, '\s+'), x -> x <> '') AS t
-        |        FROM documents) x),
-        |jd AS (
-        |  SELECT * FROM (
-        |    SELECT *, count(*) OVER (PARTITION BY b1, b2) AS bsz FROM jd0) y
-        |  WHERE bsz <= 50),
+        |${graft.text.Dedup.jaccardBlockCtes},
         |losers AS (
         |  SELECT DISTINCT b.doc_id
-        |  FROM jd a JOIN jd b ON a.b1 = b.b1 AND a.b2 = b.b2 AND a.doc_id < b.doc_id
+        |  FROM dd a JOIN dd b ON a.b1 = b.b1 AND a.b2 = b.b2 AND a.doc_id < b.doc_id
         |  WHERE CAST(len(list_filter(a.dt, x -> list_contains(b.dt, x))) AS DOUBLE) /
         |        (len(a.dt) + len(b.dt)
         |          - len(list_filter(a.dt, x -> list_contains(b.dt, x)))) >= 0.8)

@@ -203,16 +203,7 @@ object Graph extends graft.Catalog {
     * SQL twin of `Dedup.jaccardPairs(..).filter(jacc >= 0.5)`.
     */
   private def jaccardEdgeCtes: String =
-    s"""d0 AS (
-       |  SELECT doc_id, list_distinct(t) AS dt, t[1] AS b1,
-       |         CAST(floor(len(t) / 10) AS BIGINT) AS b2
-       |  FROM (SELECT doc_id,
-       |          list_filter(string_split_regex(text, '\\s+'), x -> x <> '') AS t
-       |        FROM documents) x),
-       |dd AS (
-       |  SELECT * FROM (
-       |    SELECT *, count(*) OVER (PARTITION BY b1, b2) AS bsz FROM d0) y
-       |  WHERE bsz <= ${graft.text.Dedup.MaxBucket}),
+    s"""${graft.text.Dedup.jaccardBlockCtes},
        |e AS (
        |  SELECT a.doc_id AS a, b.doc_id AS b
        |  FROM dd a JOIN dd b ON a.b1 = b.b1 AND a.b2 = b.b2 AND a.doc_id < b.doc_id

@@ -26,7 +26,7 @@ import graft.text.TextAnalysis
   * the watermark passes chain-tail + horizon. State therefore holds
   * only the fingerprints ACTIVE inside the horizon (at a steady arrival
   * rate r docs/s, ~r·horizon cells) regardless of stream length — the
-  * property StreamScale measures at rehearsal volume. A dedup that
+  * plateau `STREAM_sf10.json` records at 100× volume. A dedup that
   * instead matched against ALL history (the batch `dedup_exact`
   * semantics) would grow state with the corpus; on an unbounded stream
   * that is the adjudicated-unbounded EWMA trade-off, and the horizon
@@ -46,10 +46,10 @@ import graft.text.TextAnalysis
   * event-time order ACROSS batches (within a batch the processor sorts,
   * healing any in-batch disorder), and stay equal under bounded
   * cross-batch lateness for non-root rows whose removal does not bridge
-  * a >horizon gap (proved at 100x volume by the doc_admit_disorder
-  * StreamScale leg). A late row with t EARLIER than the live chain's
-  * root is the one irreconcilable case: the twin would crown it root,
-  * but the stream already emitted `admit` for the later-t row — the
+  * a >horizon gap (the doc_admit_disorder leg of `STREAM_sf10.json`
+  * held this at 100× volume). A late row with t EARLIER than the live
+  * chain's root is the one irreconcilable case: the twin would crown it
+  * root, but the stream already emitted `admit` for the later-t row — the
   * processor pins the deterministic arrival semantics (drop_dup onto
   * the emitted root; the root is never rewritten), spec-tested in
   * DocStreamsSpec ("late row preceding the chain root").
@@ -172,8 +172,8 @@ object DocStreams extends graft.Catalog {
     * delay throttles eviction (timers fire as the watermark passes) and
     * bounds tolerated lateness — rows older than the watermark are
     * dropped by the engine before the processor sees them; the verdict
-    * horizon is [[HorizonSec]]. The disorder rehearsal widens the delay
-    * to one replay-chunk span so chunk-late rows stay in-watermark.
+    * horizon is [[HorizonSec]]. A disordered replay widens the delay
+    * to its lateness span so late rows stay in-watermark.
     */
   def docAdmitStream(docs: DataFrame,
       horizonMs: Long = HorizonSec * 1000L,
@@ -187,20 +187,6 @@ object DocStreams extends graft.Catalog {
       .transformWithState(
         new DocAdmitProcessor(horizonMs),
         TimeMode.EventTime(), OutputMode.Append())
-  }
-
-  /** The staged stream input: prefix fingerprint (one scan, no
-    * shuffle) + synthesized arrival time. Shared by the spec and
-    * StreamScale so the staging definition cannot drift from the batch
-    * twin's.
-    */
-  def fingerprintedDocs(spark: SparkSession, d: String): DataFrame = {
-    import spark.implicits._
-    Tables.documents(spark, d).select(
-      $"doc_id",
-      prefixFp($"text").as("fp"),
-      expr(s"timestamp_seconds($ArrivalBaseSec + doc_id * $ArrivalSpacingSec)")
-        .as("ts"))
   }
 
   /** Batch twin (oracled): rebuild the gap-chains with lag/cumsum over

@@ -22,11 +22,59 @@ import graft.functions.{DistinctGramHashes, HammingPairStructs, HotWeight, Match
   * (`MaxBucket`) so one degenerate key cannot quadratically explode a
   * task — the standard LSH trade (a >cap bucket means the docs are
   * near-identical anyway; exact dedup catches them).
+  *
+  * The cap has two owners, one per engine. On Spark, [[cappedPairs]]
+  * groups a family's rows by its bucket key, keeps buckets of 2 to
+  * `MaxBucket` rows ([[inCap]]) and explodes the pairs of each kept
+  * bucket; every bucketed pair family here and
+  * [[graft.multimodal.Multimodal]]'s perceptual-hash tier go through it,
+  * and the two that cannot (the blocked-Jaccard window and the prefix
+  * tier's pre-collect admission) filter on [[inCap]] itself. On DuckDB,
+  * every twin caps its buckets with the [[cappedCte]] window, so a twin
+  * cannot drift from the cap where the fixtures (largest bucket 34 docs
+  * at sf0.1) cannot show it.
   */
 object Dedup extends graft.Catalog {
 
   /** Buckets larger than this are dropped from pair generation. */
   val MaxBucket = 50
+
+  /** The cap over a bucket's row count: 2 to [[MaxBucket]] rows. */
+  def inCap(n: Column): Column = n > 1 && n <= MaxBucket
+
+  /** The collected bucket's column name inside [[cappedPairs]]. */
+  private val Bucket = "bucket"
+
+  /** Candidate pairs of `rows`, one per row in column `p`: `payload`
+    * collected per `keys` bucket, buckets outside [[inCap]] dropped, and
+    * `pairs` (an array of pair structs, given the bucket's array)
+    * exploded.
+    */
+  def cappedPairs(rows: DataFrame, keys: Seq[Column], payload: Column)(
+      pairs: Column => Column): DataFrame =
+    rows.groupBy(keys: _*)
+      .agg(collect_list(payload).as(Bucket))
+      .filter(inCap(size(col(Bucket))))
+      .select(explode(pairs(col(Bucket))).as("p"))
+
+  /** DuckDB twin of the cap: the rows of `src` whose `keys` bucket is
+    * within [[inCap]], with the bucket's row count as `bsz`.
+    */
+  def cappedCte(src: String, keys: String): String =
+    s"SELECT * FROM (SELECT *, count(*) OVER (PARTITION BY $keys) AS bsz FROM $src) x " +
+      s"WHERE bsz > 1 AND bsz <= $MaxBucket"
+
+  /** DuckDB twin of [[jaccardPairsOf]]'s token blocks, as two CTEs:
+    * `d0` (doc_id, dt, b1, b2, t) and `dd`, its capped rows.
+    */
+  val jaccardBlockCtes: String =
+    s"""d0 AS (
+       |  SELECT doc_id, list_distinct(t) AS dt, t[1] AS b1,
+       |         CAST(floor(len(t) / 10) AS BIGINT) AS b2, t
+       |  FROM (SELECT doc_id,
+       |          list_filter(string_split_regex(text, '\\s+'), x -> x <> '') AS t
+       |        FROM documents) x),
+       |dd AS (${cappedCte("d0", "b1, b2")})""".stripMargin
 
   /** THE cross-engine base hash: a 32-bit word from 8 hex chars of
     * md5, starting at `offset` (1-based). One definition on the Spark
@@ -71,10 +119,10 @@ object Dedup extends graft.Catalog {
         array_distinct($"t").as("dt"),
         element_at($"t", 1).as("b1"),
         floor(size($"t") / 10).cast("long").as("b2"))
-      // same MaxBucket discipline as the sketch tiers: a degenerate block
-      // (every doc starting with "the") must not go quadratic
+      // a degenerate block (every doc starting with "the") must not go
+      // quadratic; a singleton block makes no a < b pair
       .withColumn("bsz", count(lit(1)).over(wBlock))
-      .filter($"bsz" <= MaxBucket)
+      .filter(inCap($"bsz"))
       .drop("bsz")
     val a = docs.select($"doc_id".as("doc_a"), $"dt".as("ta"), $"b1", $"b2")
     val b = docs.select($"doc_id".as("doc_b"), $"dt".as("tb"), $"b1", $"b2")
@@ -164,13 +212,16 @@ object Dedup extends graft.Catalog {
     * document: a permutation minimum is identical over a multiset and
     * its set, so dedup would cost work and change nothing.
     */
-  def signatures(spark: SparkSession, d: String): DataFrame = {
-    import spark.implicits._
+  def signatures(spark: SparkSession, d: String): DataFrame = signaturesWith(spark, d)
+
+  /** [[signatures]] with `carry` columns of the documents row between
+    * doc_id and sig.
+    */
+  private def signaturesWith(spark: SparkSession, d: String, carry: Column*): DataFrame =
     Tables.documents(spark, d)
-      .withColumn("t", TextAnalysis.toks($"text"))
-      .filter(size($"t") >= 3)
-      .select($"doc_id", Native(minhashSig, $"t").as("sig"))
-  }
+      .withColumn("t", TextAnalysis.toks(col("text")))
+      .filter(size(col("t")) >= 3)
+      .select((col("doc_id") +: carry :+ Native(minhashSig, col("t")).as("sig")): _*)
 
   private def minhashSig(es: Seq[Expression]): Expression =
     graft.functions.MinHashSig(
@@ -208,26 +259,34 @@ object Dedup extends graft.Catalog {
     // in-bucket pair explode and the signature match count are native
     // kernels (sortedPairs, sigMatches), not interpreted lambdas.
     val sigs = signatures(spark, d).transform(graft.Ckpt.cut)
-    val bands = sigs.select(
-      $"doc_id",
-      posexplode(transform(
-        sequence(lit(0), lit(Bands - 1)),
-        bnd => slice($"sig", bnd * Rows + 1, lit(Rows)))))
-      .withColumnRenamed("pos", "band")
-      .withColumnRenamed("col", "band_key")
-    val cand = bands
-      .groupBy($"band", $"band_key")
-      .agg(collect_list($"doc_id").as("ids"))
-      .filter(size($"ids") > 1 && size($"ids") <= MaxBucket)
-      .select(sortedPairs($"ids").as("p"))
+    val cand = bandPairs(sigs, Seq($"doc_id"), $"doc_id")(sortedPairs)
       .select($"p.part_a".as("doc_a"), $"p.part_b".as("doc_b"))
       .distinct()
-    val sa = sigs.select($"doc_id".as("doc_a"), $"sig".as("sig_a"))
-    val sb = sigs.select($"doc_id".as("doc_b"), $"sig".as("sig_b"))
-    cand.join(sa, "doc_a").join(sb, "doc_b")
-      .withColumn("m", sigMatches($"sig_a", $"sig_b"))
+    withSigMatches(cand, sigs)
       .select($"doc_a", $"doc_b", ($"m".cast("double") / NumHashes).as("est_jaccard"))
   }
+
+  /** [[cappedPairs]] over the LSH bands of `sigs`: each signature's
+    * [[Bands]] slices of [[Rows]] minima, with the `carry` columns, keyed
+    * on (band, band_key).
+    */
+  private def bandPairs(sigs: DataFrame, carry: Seq[Column], payload: Column)(
+      pairs: Column => Column): DataFrame = {
+    val bands = sigs.select(carry :+ posexplode(transform(
+        sequence(lit(0), lit(Bands - 1)),
+        bnd => slice(col("sig"), bnd * Rows + 1, lit(Rows)))): _*)
+      .withColumnRenamed("pos", "band")
+      .withColumnRenamed("col", "band_key")
+    cappedPairs(bands, Seq(col("band"), col("band_key")), payload)(pairs)
+  }
+
+  /** `cand` (doc_a, doc_b, ...) with both signatures joined back and
+    * `m`, the count of minima they share.
+    */
+  private def withSigMatches(cand: DataFrame, sigs: DataFrame): DataFrame =
+    cand.join(sigs.select(col("doc_id").as("doc_a"), col("sig").as("sig_a")), "doc_a")
+      .join(sigs.select(col("doc_id").as("doc_b"), col("sig").as("sig_b")), "doc_b")
+      .withColumn("m", sigMatches(col("sig_a"), col("sig_b")))
 
   /** One row per i<j pair of a bucket's id list, as struct(part_a <=
     * part_b): the native [[graft.functions.PairStructs]] kernel over the
@@ -239,8 +298,8 @@ object Dedup extends graft.Catalog {
     * over i<j does not depend on the list's order, so the rows are the
     * same, repeated ids included (NativeKernelExprSpec pins it).
     */
-  private def sortedPairs(ids: Column): Column =
-    explode(Native(es => PairStructs(es.head), sort_array(ids)))
+  private[graft] def sortedPairs(ids: Column): Column =
+    Native(es => PairStructs(es.head), sort_array(ids))
 
   /** Signature minima that match position by position: the native
     * [[graft.functions.MatchCount]] kernel in place of the interpreted
@@ -278,31 +337,14 @@ object Dedup extends graft.Catalog {
     // kernel with the (x.is_new OR y.is_new) pair filter folded in — the
     // nested lambda spelling it replaces is pinned by
     // NativeKernelExprSpec and still replayed by the oracle.
-    val sigs = Tables.documents(spark, d)
-      .withColumn("t", TextAnalysis.toks($"text"))
-      .filter(size($"t") >= 3)
-      .select($"doc_id", ($"source" === IncrementalSource).as("is_new"),
-        Native(minhashSig, $"t").as("sig"))
+    val sigs = signaturesWith(spark, d, ($"source" === IncrementalSource).as("is_new"))
       .transform(graft.Ckpt.cut)
-    val bands = sigs.select(
-      $"doc_id", $"is_new",
-      posexplode(transform(
-        sequence(lit(0), lit(Bands - 1)),
-        bnd => slice($"sig", bnd * Rows + 1, lit(Rows)))))
-      .withColumnRenamed("pos", "band")
-      .withColumnRenamed("col", "band_key")
-    val cand = bands
-      .groupBy($"band", $"band_key")
-      .agg(collect_list(struct($"doc_id", $"is_new")).as("ds"))
-      .filter(size($"ds") > 1 && size($"ds") <= MaxBucket)
-      .select(explode(Native(es => NewPairStructs(es.head), $"ds")).as("p"))
+    val cand = bandPairs(sigs, Seq($"doc_id", $"is_new"), struct($"doc_id", $"is_new"))(
+        ds => Native(es => NewPairStructs(es.head), ds))
       .select($"p.a".as("doc_a"), $"p.b".as("doc_b"),
         when($"p.nn", "new-new").otherwise("new-corpus").as("pair_type"))
       .distinct()
-    val sa = sigs.select($"doc_id".as("doc_a"), $"sig".as("sig_a"))
-    val sb = sigs.select($"doc_id".as("doc_b"), $"sig".as("sig_b"))
-    cand.join(sa, "doc_a").join(sb, "doc_b")
-      .withColumn("m", sigMatches($"sig_a", $"sig_b"))
+    withSigMatches(cand, sigs)
       .select($"doc_a", $"doc_b", $"pair_type",
         ($"m".cast("double") / NumHashes).as("est_jaccard"),
         $"m".as("n_match"))
@@ -454,33 +496,60 @@ object Dedup extends graft.Catalog {
       simhashPairsUncached(spark, d)
     }
 
-  private def simhashPairsUncached(spark: SparkSession, d: String): DataFrame = {
-    import spark.implicits._
-    // Same bucketed-pairs shape as minhash: group by 16-bit chunk, cap the
-    // bucket, generate pairs inside the bucket — never a raw self-join
-    // (low-entropy chunks would otherwise explode quadratically).
-    // r14: the in-bucket pair+hamming explode runs as the native
-    // HammingPairStructs kernel (the lambda spelling is pinned by
-    // NativeKernelExprSpec; the oracle replays it unchanged).
-    val docs = simhashDocs(spark, d)
-    val chunked = docs.select(
-      struct($"doc_id", $"sim_lo", $"sim_hi").as("ds"),
+  private def simhashPairsUncached(spark: SparkSession, d: String): DataFrame =
+    hammingPairs(simhashDocs(spark, d), "sim_lo", "sim_hi", MaxHamming)
+
+  /** (doc_a, doc_b, hamming) pairs within `maxHamming` bits of a 64-bit
+    * hash that (doc_id, `lo`, `hi`) rows carry as two 32-bit halves — the
+    * text SimHash tier and the perceptual-hash media tier. The same
+    * bucketed-pairs shape as minhash: group by 16-bit chunk, cap the
+    * bucket, generate pairs inside the bucket — never a raw self-join
+    * (low-entropy chunks would otherwise explode quadratically). The
+    * in-bucket pair+hamming explode is the native HammingPairStructs
+    * kernel (the lambda spelling is pinned by NativeKernelExprSpec; the
+    * oracle replays it unchanged).
+    */
+  def hammingPairs(rows: DataFrame, lo: String, hi: String, maxHamming: Int): DataFrame = {
+    val (l, h) = (col(lo), col(hi))
+    val chunked = rows.select(
+      struct(col("doc_id"), l, h).as("ds"),
       posexplode(array(
-        $"sim_lo".bitwiseAND(0xFFFFL),
-        shiftright($"sim_lo", 16).bitwiseAND(0xFFFFL),
-        $"sim_hi".bitwiseAND(0xFFFFL),
-        shiftright($"sim_hi", 16).bitwiseAND(0xFFFFL))))
+        l.bitwiseAND(0xFFFFL),
+        shiftright(l, 16).bitwiseAND(0xFFFFL),
+        h.bitwiseAND(0xFFFFL),
+        shiftright(h, 16).bitwiseAND(0xFFFFL))))
       .withColumnRenamed("pos", "chunk")
       .withColumnRenamed("col", "chunk_val")
-    chunked
-      .groupBy($"chunk", $"chunk_val")
-      .agg(collect_list($"ds").as("ds"))
-      .filter(size($"ds") > 1 && size($"ds") <= MaxBucket)
-      .select(explode(Native(es => HammingPairStructs(es.head), $"ds")).as("p"))
-      .select($"p.a".as("doc_a"), $"p.b".as("doc_b"),
-        $"p.h".cast("long").as("hamming"))
-      .filter($"hamming" <= MaxHamming)
+    cappedPairs(chunked, Seq(col("chunk"), col("chunk_val")), col("ds"))(
+        ds => Native(es => HammingPairStructs(es.head), ds))
+      .select(col("p.a").as("doc_a"), col("p.b").as("doc_b"),
+        col("p.h").cast("long").as("hamming"))
+      .filter(col("hamming") <= maxHamming)
       .distinct()
+  }
+
+  /** DuckDB twin of [[hammingPairs]] over the CTE `src` (doc_id, `lo`,
+    * `hi`): the four chunk branches, the capped buckets and the hamming
+    * filter.
+    */
+  def hammingOracle(src: String, lo: String, hi: String, maxHamming: Int): String = {
+    val chunkBranches = Seq(
+      s"$lo & 65535", s"($lo >> 16) & 65535",
+      s"$hi & 65535", s"($hi >> 16) & 65535").zipWithIndex.map {
+      case (e, i) => s"SELECT doc_id, $lo, $hi, $i AS chunk, $e AS chunk_val FROM $src"
+    }.mkString("\nUNION ALL\n")
+    s"""chunks AS (
+       |$chunkBranches),
+       |cand AS (${cappedCte("chunks", "chunk, chunk_val")})
+       |SELECT DISTINCT
+       |  least(a.doc_id, b.doc_id) AS doc_a,
+       |  greatest(a.doc_id, b.doc_id) AS doc_b,
+       |  CAST(bit_count(xor(a.$lo, b.$lo))
+       |       + bit_count(xor(a.$hi, b.$hi)) AS BIGINT) AS hamming
+       |FROM cand a JOIN cand b
+       |  ON a.chunk = b.chunk AND a.chunk_val = b.chunk_val AND a.doc_id < b.doc_id
+       |WHERE bit_count(xor(a.$lo, b.$lo))
+       |      + bit_count(xor(a.$hi, b.$hi)) <= $maxHamming""".stripMargin
   }
 
   /** Generated DuckDB oracle for the FULL minhash pipeline: md5-prefix
@@ -488,15 +557,7 @@ object Dedup extends graft.Catalog {
     * as raw signature slices, bucket caps, and the estimated Jaccard —
     * every constant embedded from [[perms]].
     */
-  private def minhashOracle: String = {
-    val minCols = perms.zipWithIndex.map { case ((a, b), i) =>
-      s"min((h * $a + $b) % $MinhashPrime) AS m$i"
-    }.mkString(",\n    ")
-    val sigList = (0 until NumHashes).map(i => s"m$i").mkString("[", ",", "]")
-    val bandBranches = (0 until Bands).map { t =>
-      val key = (0 until Rows).map(i => s"m${t * Rows + i}").mkString("[", ",", "]")
-      s"SELECT doc_id, $sigList AS sig, $t AS band, $key AS band_key FROM sig"
-    }.mkString("\nUNION ALL\n")
+  private def minhashOracle: String =
     s"""WITH toks AS (
        |  SELECT doc_id,
        |         list_filter(string_split_regex(text, '\\s+'), x -> x <> '') AS t
@@ -513,13 +574,8 @@ object Dedup extends graft.Catalog {
        |    $minCols
        |  FROM h GROUP BY doc_id),
        |bands AS (
-       |$bandBranches),
-       |cand AS (
-       |  SELECT * FROM (
-       |    SELECT doc_id, sig, band, band_key,
-       |           count(*) OVER (PARTITION BY band, band_key) AS bsz
-       |    FROM bands) x
-       |  WHERE bsz > 1 AND bsz <= $MaxBucket)
+       |${bandBranches(s"doc_id, $sigList AS sig", "sig")}),
+       |cand AS (${cappedCte("bands", "band, band_key")})
        |SELECT DISTINCT
        |  least(a.doc_id, b.doc_id) AS doc_a,
        |  greatest(a.doc_id, b.doc_id) AS doc_b,
@@ -528,21 +584,28 @@ object Dedup extends graft.Catalog {
        |    / $NumHashes AS est_jaccard
        |FROM cand a JOIN cand b
        |  ON a.band = b.band AND a.band_key = b.band_key AND a.doc_id < b.doc_id""".stripMargin
-  }
+
+  /** The oracles' 64 permutation minima `m0..m63` over the base hash `h`. */
+  private def minCols: String = perms.zipWithIndex.map { case ((a, b), i) =>
+    s"min((h * $a + $b) % $MinhashPrime) AS m$i"
+  }.mkString(",\n    ")
+
+  /** The 64 minima as one list literal of columns. */
+  private def sigList: String = (0 until NumHashes).map(i => s"m$i").mkString("[", ",", "]")
+
+  /** One UNION ALL branch per band over `from`: `cols`, then the band
+    * number and its [[Rows]]-minima key.
+    */
+  private def bandBranches(cols: String, from: String): String = (0 until Bands).map { t =>
+    val key = (0 until Rows).map(i => s"m${t * Rows + i}").mkString("[", ",", "]")
+    s"SELECT $cols, $t AS band, $key AS band_key FROM $from"
+  }.mkString("\nUNION ALL\n")
 
   /** DuckDB twin of [[incrementalMinhashPairs]]: the minhash oracle's
     * CTE chain with a per-doc is_new flag riding the bands, the
     * at-least-one-new pair predicate, and the pair_type tag.
     */
-  private def incrMinhashOracle: String = {
-    val minCols = perms.zipWithIndex.map { case ((a, b), i) =>
-      s"min((h * $a + $b) % $MinhashPrime) AS m$i"
-    }.mkString(",\n    ")
-    val sigList = (0 until NumHashes).map(i => s"m$i").mkString("[", ",", "]")
-    val bandBranches = (0 until Bands).map { t =>
-      val key = (0 until Rows).map(i => s"m${t * Rows + i}").mkString("[", ",", "]")
-      s"SELECT doc_id, is_new, $sigList AS sig, $t AS band, $key AS band_key FROM sigf"
-    }.mkString("\nUNION ALL\n")
+  private def incrMinhashOracle: String =
     s"""WITH toks AS (
        |  SELECT doc_id,
        |         list_filter(string_split_regex(text, '\\s+'), x -> x <> '') AS t
@@ -561,13 +624,8 @@ object Dedup extends graft.Catalog {
        |  FROM h GROUP BY doc_id),
        |sigf AS (SELECT sig.*, f.is_new FROM sig JOIN flags f USING (doc_id)),
        |bands AS (
-       |$bandBranches),
-       |cand AS (
-       |  SELECT * FROM (
-       |    SELECT doc_id, is_new, sig, band, band_key,
-       |           count(*) OVER (PARTITION BY band, band_key) AS bsz
-       |    FROM bands) x
-       |  WHERE bsz > 1 AND bsz <= $MaxBucket)
+       |${bandBranches(s"doc_id, is_new, $sigList AS sig", "sigf")}),
+       |cand AS (${cappedCte("bands", "band, band_key")})
        |SELECT DISTINCT
        |  least(a.doc_id, b.doc_id) AS doc_a,
        |  greatest(a.doc_id, b.doc_id) AS doc_b,
@@ -581,11 +639,10 @@ object Dedup extends graft.Catalog {
        |FROM cand a JOIN cand b
        |  ON a.band = b.band AND a.band_key = b.band_key AND a.doc_id < b.doc_id
        |WHERE a.is_new OR b.is_new""".stripMargin
-  }
 
   /** Generated DuckDB oracle for the full simhash pipeline: md5-split
-    * token hashes, 64 bit-balance sums, sign-packed 32-bit halves,
-    * 16-bit chunk blocking with bucket caps, and hamming filtering.
+    * token hashes, 64 bit-balance sums, sign-packed 32-bit halves, then
+    * [[hammingOracle]]'s chunk blocking and hamming filter.
     */
   private def simhashOracle: String = {
     def balCols(half: String): String = (0 until 32).map { b =>
@@ -594,12 +651,6 @@ object Dedup extends graft.Catalog {
     def packed(half: String): String = (0 until 32).map { b =>
       s"(CASE WHEN ${half}_b$b > 0 THEN ${1L << b} ELSE 0 END)"
     }.mkString(" + ")
-    val chunkBranches = Seq(
-      "sim_lo & 65535", "(sim_lo >> 16) & 65535",
-      "sim_hi & 65535", "(sim_hi >> 16) & 65535").zipWithIndex.map {
-      case (e, i) =>
-        s"SELECT doc_id, sim_lo, sim_hi, $i AS chunk, $e AS chunk_val FROM sim"
-    }.mkString("\nUNION ALL\n")
     s"""WITH tok AS (
        |  SELECT doc_id,
        |         unnest(list_distinct(
@@ -620,23 +671,7 @@ object Dedup extends graft.Catalog {
        |    ${packed("h_lo")} AS sim_lo,
        |    ${packed("h_hi")} AS sim_hi
        |  FROM bal),
-       |chunks AS (
-       |$chunkBranches),
-       |cand AS (
-       |  SELECT * FROM (
-       |    SELECT doc_id, sim_lo, sim_hi, chunk, chunk_val,
-       |           count(*) OVER (PARTITION BY chunk, chunk_val) AS bsz
-       |    FROM chunks) x
-       |  WHERE bsz > 1 AND bsz <= $MaxBucket)
-       |SELECT DISTINCT
-       |  least(a.doc_id, b.doc_id) AS doc_a,
-       |  greatest(a.doc_id, b.doc_id) AS doc_b,
-       |  CAST(bit_count(xor(a.sim_lo, b.sim_lo))
-       |       + bit_count(xor(a.sim_hi, b.sim_hi)) AS BIGINT) AS hamming
-       |FROM cand a JOIN cand b
-       |  ON a.chunk = b.chunk AND a.chunk_val = b.chunk_val AND a.doc_id < b.doc_id
-       |WHERE bit_count(xor(a.sim_lo, b.sim_lo))
-       |      + bit_count(xor(a.sim_hi, b.sim_hi)) <= $MaxHamming""".stripMargin
+       |${hammingOracle("sim", "sim_lo", "sim_hi", MaxHamming)}""".stripMargin
   }
 
   // ---- Winnowing (rolling-hash fingerprints, MOSS-style) ----
@@ -656,8 +691,8 @@ object Dedup extends graft.Catalog {
     * (doc_a, doc_b, n_shared). Per doc the work is linear (k-gram hash
     * stream → per-window minima → distinct), all inside one codegen'd
     * projection; the only shuffles are the fingerprint bucket group
-    * (bucket-capped like every pair generator here) and the pair count.
-    * Hashes are the md5-prefix grid, so DuckDB replays them exactly.
+    * and the pair count. Hashes are the md5-prefix grid, so DuckDB
+    * replays them exactly.
     */
   /** (doc_id, fp) fingerprint stream of a (doc_id, t) tokenized frame —
     * exposed so specs can drive synthetic documents.
@@ -678,10 +713,7 @@ object Dedup extends graft.Catalog {
     winnowFingerprints(
       Tables.documents(spark, d)
         .select($"doc_id", TextAnalysis.toks($"text").as("t")))
-      .groupBy($"fp")
-      .agg(collect_list($"doc_id").as("ids"))
-      .filter(size($"ids") > 1 && size($"ids") <= MaxBucket)
-      .select(sortedPairs($"ids").as("p"))
+      .transform(cappedPairs(_, Seq($"fp"), $"doc_id")(sortedPairs))
       .groupBy($"p.part_a".as("doc_a"), $"p.part_b".as("doc_b"))
       .agg(count(lit(1)).as("n_shared"))
       .filter($"n_shared" >= WinnowMinShared)
@@ -762,11 +794,11 @@ object Dedup extends graft.Catalog {
       .select($"p.tok".as("tok"), $"doc_id", $"dt")
     // Bucket admission BEFORE the heavy collect: bucket sizes come from
     // a tok-only aggregate (map-side combined, no arrays), and only
-    // tokens whose bucket the cap will keep (2..MaxBucket prefix rows —
-    // the oracle's `count(*) OVER (PARTITION BY tok)` window, verbatim)
-    // reach the collect_list. The post-agg filter this replaces had to
+    // tokens whose bucket the cap will keep (the oracle's
+    // `count(*) OVER (PARTITION BY tok)` window, verbatim) reach the
+    // collect_list. The post-agg filter this replaces had to
     // MATERIALIZE every oversized bucket first, and at 100x there are
-    // far more than PrefixHotCap tokens with df > MaxBucket — the ones
+    // far more than PrefixHotCap tokens above the cap — the ones
     // beyond the hot fit built df-sized lists of full token arrays only
     // to be discarded, the executor-OOM class the sf10 multi-process
     // gate exposed (Collect.serialize / BufferHolder.grow heap death).
@@ -774,29 +806,30 @@ object Dedup extends graft.Catalog {
     // heavy (doc_id, dt) payload still shuffles exactly once.
     val bucketable = prefixes
       .groupBy($"tok").agg(count(lit(1)).as("bsz"))
-      .filter($"bsz" > 1 && $"bsz" <= MaxBucket)
+      .filter(inCap($"bsz"))
       .select($"tok")
-    prefixes
-      .join(bucketable, Seq("tok"), "left_semi")
-      .groupBy($"tok")
-      .agg(collect_list(struct($"doc_id", $"dt")).as("ds"))
-      .filter(size($"ds") > 1 && size($"ds") <= MaxBucket)
-      .select(explode(expr(
-        """flatten(transform(ds, (x, i) ->
-          |  transform(filter(ds, (y, j) -> j > i AND y.doc_id != x.doc_id),
-          |    y -> named_struct(
-          |      'doc_a', IF(x.doc_id < y.doc_id, x.doc_id, y.doc_id),
-          |      'ta', IF(x.doc_id < y.doc_id, x.dt, y.dt),
-          |      'doc_b', IF(x.doc_id < y.doc_id, y.doc_id, x.doc_id),
-          |      'tb', IF(x.doc_id < y.doc_id, y.dt, x.dt)))))""".stripMargin))
-        .as("m"))
-      .withColumn("inter", size(array_intersect($"m.ta", $"m.tb")).cast("long"))
-      .withColumn("uni", size($"m.ta").cast("long") + size($"m.tb") - $"inter")
+    cappedPairs(prefixes.join(bucketable, Seq("tok"), "left_semi"),
+        Seq($"tok"), struct($"doc_id", $"dt"))(crossDocPairs("dt", "ta", "tb"))
+      .withColumn("inter", size(array_intersect($"p.ta", $"p.tb")).cast("long"))
+      .withColumn("uni", size($"p.ta").cast("long") + size($"p.tb") - $"inter")
       .filter($"inter" * den >= $"uni" * num)
-      .select($"m.doc_a".as("doc_a"), $"m.doc_b".as("doc_b"), $"inter",
+      .select($"p.doc_a".as("doc_a"), $"p.doc_b".as("doc_b"), $"inter",
         ($"inter".cast("double") / $"uni").as("jacc"))
       .distinct()
   }
+
+  /** Cross-document pairs of a bucket of (doc_id, `f`) structs, as
+    * (doc_a, `a`, doc_b, `b`) with doc_a < doc_b: an interpreted lambda
+    * over the [[cappedPairs]] bucket column, which it reads by name.
+    */
+  private def crossDocPairs(f: String, a: String, b: String): Column => Column = _ => expr(
+    s"""flatten(transform($Bucket, (x, i) ->
+       |  transform(filter($Bucket, (y, j) -> j > i AND y.doc_id != x.doc_id),
+       |    y -> named_struct(
+       |      'doc_a', IF(x.doc_id < y.doc_id, x.doc_id, y.doc_id),
+       |      '$a', IF(x.doc_id < y.doc_id, x.$f, y.$f),
+       |      'doc_b', IF(x.doc_id < y.doc_id, y.doc_id, x.doc_id),
+       |      '$b', IF(x.doc_id < y.doc_id, y.$f, x.$f)))))""".stripMargin)
 
   /** DuckDB twin of [[prefixJaccardPairs]]: the hot-token fit is pure
     * SQL over the same data (exact df, df desc / tok tiebreak, the same
@@ -832,9 +865,7 @@ object Dedup extends graft.Catalog {
        |  SELECT doc_id, dt,
        |         unnest(st[1 : CAST(n - (n * $PrefixJaccNum + $PrefixJaccDen - 1) // $PrefixJaccDen + 1 AS BIGINT)]) AS tok
        |  FROM srt),
-       |capped AS (
-       |  SELECT * FROM (SELECT *, count(*) OVER (PARTITION BY tok) AS bsz FROM pfx) x
-       |  WHERE bsz > 1 AND bsz <= $MaxBucket),
+       |capped AS (${cappedCte("pfx", "tok")}),
        |pairs AS (
        |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
        |         CAST(len(list_intersect(a.dt, b.dt)) AS BIGINT) AS inter,
@@ -897,20 +928,9 @@ object Dedup extends graft.Catalog {
       .select($"doc_id", $"pos".cast("long").as("pos"), $"h")
     // positional matches: bucket on the gram hash, explode cross-doc
     // (doc, pos) pairs inside the bucket, ordered so doc_a < doc_b
-    val matches = grams
-      .groupBy($"h")
-      .agg(collect_list(struct($"doc_id", $"pos")).as("ps"))
-      .filter(size($"ps") > 1 && size($"ps") <= MaxBucket)
-      .select(explode(expr(
-        """flatten(transform(ps, (x, i) ->
-          |  transform(filter(ps, (y, j) -> j > i AND y.doc_id != x.doc_id),
-          |    y -> named_struct(
-          |      'doc_a', IF(x.doc_id < y.doc_id, x.doc_id, y.doc_id),
-          |      'pos_a', IF(x.doc_id < y.doc_id, x.pos, y.pos),
-          |      'doc_b', IF(x.doc_id < y.doc_id, y.doc_id, x.doc_id),
-          |      'pos_b', IF(x.doc_id < y.doc_id, y.pos, x.pos)))))""".stripMargin))
-        .as("m"))
-      .select($"m.doc_a", $"m.pos_a", $"m.doc_b", $"m.pos_b")
+    val matches = cappedPairs(grams, Seq($"h"), struct($"doc_id", $"pos"))(
+        crossDocPairs("pos", "pos_a", "pos_b"))
+      .select($"p.doc_a", $"p.pos_a", $"p.doc_b", $"p.pos_b")
     // gaps-and-islands per doc-pair diagonal: consecutive gram matches
     // (pos_a stepping by 1) share (pos_a - row_number) and merge into
     // one maximal span
@@ -1014,9 +1034,7 @@ object Dedup extends graft.Catalog {
        |  FROM d0),
        |g AS (SELECT doc_id, u.pos AS pos, u.h AS h
        |      FROM (SELECT doc_id, unnest(gs) AS u FROM kg) x),
-       |capped AS (
-       |  SELECT * FROM (SELECT *, count(*) OVER (PARTITION BY h) AS bsz FROM g) x
-       |  WHERE bsz > 1 AND bsz <= $MaxBucket),
+       |capped AS (${cappedCte("g", "h")}),
        |m AS (
        |  SELECT a.doc_id AS doc_a, a.pos AS pos_a, b.doc_id AS doc_b, b.pos AS pos_b,
        |         a.pos - b.pos AS diag
@@ -1072,10 +1090,8 @@ object Dedup extends graft.Catalog {
       .select($"doc_id", Native(es => DistinctGramHashes(es.head, ContainK), $"t").as("hs"))
       .select($"doc_id", size($"hs").cast("long").as("n_doc"),
         explode($"hs").as("h"))
-    gn.groupBy($"h")
-      .agg(collect_list(struct($"doc_id", $"n_doc")).as("ds"))
-      .filter(size($"ds") > 1 && size($"ds") <= MaxBucket)
-      .select(explode(Native(es => OrderedPairStructs(es.head), $"ds")).as("p"))
+    cappedPairs(gn, Seq($"h"), struct($"doc_id", $"n_doc"))(
+        ds => Native(es => OrderedPairStructs(es.head), ds))
       .groupBy($"p.doc_a".as("doc_a"), $"p.doc_b".as("doc_b"),
         $"p.n_a".as("n_a"), $"p.n_b".as("n_b"))
       .agg(count(lit(1)).as("inter"))
@@ -1104,10 +1120,7 @@ object Dedup extends graft.Catalog {
        |  SELECT doc_id, h,
        |         CAST(count(*) OVER (PARTITION BY doc_id) AS BIGINT) AS n_doc
        |  FROM g),
-       |capped AS (
-       |  SELECT * FROM (
-       |    SELECT *, count(*) OVER (PARTITION BY h) AS bsz FROM gn) y
-       |  WHERE bsz > 1 AND bsz <= $MaxBucket)
+       |capped AS (${cappedCte("gn", "h")})
        |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
        |       CAST(count(*) AS BIGINT) AS inter,
        |       max(a.n_doc) AS n_a, max(b.n_doc) AS n_b,
@@ -1286,24 +1299,8 @@ object Dedup extends graft.Catalog {
   /** Composes the jaccard-pair and minhash-pair oracle CTE chains and
     * folds the four counts + two ratios.
     */
-  private def blockingEvalOracle: String = {
-    val minCols = perms.zipWithIndex.map { case ((a, b), i) =>
-      s"min((h * $a + $b) % $MinhashPrime) AS m$i"
-    }.mkString(",\n    ")
-    val bandBranches = (0 until Bands).map { t =>
-      val key = (0 until Rows).map(i => s"m${t * Rows + i}").mkString("[", ",", "]")
-      s"SELECT doc_id, $t AS band, $key AS band_key FROM sig"
-    }.mkString("\nUNION ALL\n")
-    s"""WITH d0 AS (
-       |  SELECT doc_id, list_distinct(t) AS dt, t[1] AS b1,
-       |         CAST(floor(len(t) / 10) AS BIGINT) AS b2, t
-       |  FROM (SELECT doc_id,
-       |          list_filter(string_split_regex(text, '\\s+'), x -> x <> '') AS t
-       |        FROM documents) x),
-       |dd AS (
-       |  SELECT * FROM (
-       |    SELECT *, count(*) OVER (PARTITION BY b1, b2) AS bsz FROM d0) y
-       |  WHERE bsz <= $MaxBucket),
+  private def blockingEvalOracle: String =
+    s"""WITH $jaccardBlockCtes,
        |truth AS MATERIALIZED (
        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
        |  FROM dd a JOIN dd b
@@ -1326,13 +1323,8 @@ object Dedup extends graft.Catalog {
        |    $minCols
        |  FROM h GROUP BY doc_id),
        |bands AS (
-       |$bandBranches),
-       |cb AS (
-       |  SELECT * FROM (
-       |    SELECT doc_id, band, band_key,
-       |           count(*) OVER (PARTITION BY band, band_key) AS bsz
-       |    FROM bands) x
-       |  WHERE bsz > 1 AND bsz <= $MaxBucket),
+       |${bandBranches("doc_id", "sig")}),
+       |cb AS (${cappedCte("bands", "band, band_key")}),
        |cand AS MATERIALIZED (
        |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
        |  FROM cb a JOIN cb b
@@ -1354,7 +1346,6 @@ object Dedup extends graft.Catalog {
        |                 AS DOUBLE), 6) + 0.0
        |       ELSE 0.0 END AS reduction_ratio
        |FROM nd, nt, nc, nh""".stripMargin
-  }
 
   val oracles: Map[String, String] = Map(
     "dedup_containment" -> containOracle,
@@ -1385,9 +1376,7 @@ object Dedup extends graft.Catalog {
          |    ELSE CAST([] AS BIGINT[]) END AS fps
          |  FROM kg),
          |fp AS (SELECT doc_id, unnest(fps) AS fp FROM wn),
-         |capped AS (
-         |  SELECT * FROM (SELECT *, count(*) OVER (PARTITION BY fp) AS bsz FROM fp) x
-         |  WHERE bsz > 1 AND bsz <= $MaxBucket)
+         |capped AS (${cappedCte("fp", "fp")})
          |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_shared
          |FROM capped a JOIN capped b ON a.fp = b.fp AND a.doc_id < b.doc_id
          |GROUP BY 1, 2 HAVING count(*) >= $WinnowMinShared""".stripMargin,
@@ -1399,19 +1388,10 @@ object Dedup extends graft.Catalog {
         |GROUP BY sha256(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'))""".stripMargin,
     "dedup_blocking_eval" -> blockingEvalOracle,
     "dedup_jaccard_pairs" ->
-      """WITH d0 AS (
-        |  SELECT doc_id, list_distinct(t) AS dt, t[1] AS b1,
-        |         CAST(floor(len(t) / 10) AS BIGINT) AS b2
-        |  FROM (SELECT doc_id,
-        |          list_filter(string_split_regex(text, '\s+'), x -> x <> '') AS t
-        |        FROM documents) x),
-        |d AS (
-        |  SELECT * FROM (
-        |    SELECT *, count(*) OVER (PARTITION BY b1, b2) AS bsz FROM d0) y
-        |  WHERE bsz <= 50)
+      s"""WITH $jaccardBlockCtes
         |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
         |  CAST(len(list_filter(a.dt, x -> list_contains(b.dt, x))) AS BIGINT) AS inter,
         |  CAST(len(list_filter(a.dt, x -> list_contains(b.dt, x))) AS DOUBLE) /
         |    (len(a.dt) + len(b.dt) - len(list_filter(a.dt, x -> list_contains(b.dt, x)))) AS jacc
-        |FROM d a JOIN d b ON a.b1 = b.b1 AND a.b2 = b.b2 AND a.doc_id < b.doc_id""".stripMargin)
+        |FROM dd a JOIN dd b ON a.b1 = b.b1 AND a.b2 = b.b2 AND a.doc_id < b.doc_id""".stripMargin)
 }

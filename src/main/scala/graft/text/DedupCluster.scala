@@ -225,16 +225,7 @@ object DedupCluster extends graft.Catalog {
     */
   private def closureCte: String =
     s"""WITH RECURSIVE pairs AS (
-       |  WITH d0 AS (
-       |    SELECT doc_id, list_distinct(t) AS dt, t[1] AS b1,
-       |           CAST(floor(len(t) / 10) AS BIGINT) AS b2
-       |    FROM (SELECT doc_id,
-       |            list_filter(string_split_regex(text, '\\s+'), x -> x <> '') AS t
-       |          FROM documents) x),
-       |  dd AS (
-       |    SELECT * FROM (
-       |      SELECT *, count(*) OVER (PARTITION BY b1, b2) AS bsz FROM d0) y
-       |    WHERE bsz <= ${Dedup.MaxBucket})
+       |  WITH ${Dedup.jaccardBlockCtes}
        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
        |  FROM dd a JOIN dd b ON a.b1 = b.b1 AND a.b2 = b.b2 AND a.doc_id < b.doc_id
        |  WHERE CAST(len(list_filter(a.dt, x -> list_contains(b.dt, x))) AS DOUBLE) /

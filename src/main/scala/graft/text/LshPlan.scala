@@ -57,16 +57,7 @@ object LshPlan extends graft.Catalog {
 
   private def planOracle: String = {
     val planRows = Plans.map { case (b, r) => s"($b, $r)" }.mkString(", ")
-    s"""WITH d0 AS (
-       |  SELECT doc_id, list_distinct(t) AS dt, t[1] AS b1,
-       |         CAST(floor(len(t) / 10) AS BIGINT) AS b2
-       |  FROM (SELECT doc_id,
-       |          list_filter(string_split_regex(text, '\\s+'), x -> x <> '') AS t
-       |        FROM documents) x),
-       |dd AS (
-       |  SELECT * FROM (
-       |    SELECT *, count(*) OVER (PARTITION BY b1, b2) AS bsz FROM d0) y
-       |  WHERE bsz <= ${Dedup.MaxBucket}),
+    s"""WITH ${Dedup.jaccardBlockCtes},
        |pairs AS MATERIALIZED (
        |  SELECT CAST(len(list_filter(a.dt, x -> list_contains(b.dt, x))) AS DOUBLE) /
        |         (len(a.dt) + len(b.dt) - len(list_filter(a.dt, x -> list_contains(b.dt, x))))

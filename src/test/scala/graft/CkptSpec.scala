@@ -228,19 +228,4 @@ class CkptSpec extends SparkSpec {
       cut.queryExecution.analyzed.toString.contains("LogicalRDD"))
     assert(cut.orderBy("k").collect().toSeq == src.orderBy("k").collect().toSeq)
   }
-
-  test("RowHash: order-independent, null-safe, and value-sensitive") {
-    import spark.implicits._
-    val a = Seq((1L, "x"), (2L, null: String), (3L, "z")).toDF("k", "v")
-    val shuffled = Seq((3L, "z"), (1L, "x"), (2L, null: String)).toDF("k", "v")
-    assert(RowHash.of(a) == RowHash.of(shuffled), "row order must not matter")
-    val changed = Seq((1L, "x"), (2L, null: String), (3L, "Z")).toDF("k", "v")
-    assert(RowHash.of(a) != RowHash.of(changed), "a changed value must change the hash")
-    // the NUL sentinel: a LITERAL "null" string is not a null
-    val litNull = Seq((2L, "null")).toDF("k", "v")
-    val realNull = Seq((2L, null: String)).toDF("k", "v")
-    assert(RowHash.of(litNull) != RowHash.of(realNull))
-    assert(RowHash.of(spark.emptyDataFrame.withColumn("k",
-      org.apache.spark.sql.functions.lit(1L)).filter("k = 2")) == "0")
-  }
 }

@@ -198,9 +198,9 @@ class DocStreamsSpec extends SparkSpec {
   }
 
   test("chunk-late NON-ROOT row (the disorder-leg delayable class): stream == batch exactly") {
-    // The doc_admit_disorder StreamScale leg delays only non-root rows
-    // whose removal bridges no >horizon gap; this is that class at
-    // fixture scale: doc 11 (a mid-chain dup) arrives one batch late,
+    // The doc_admit_disorder leg of STREAM_sf10.json delayed only
+    // non-root rows whose removal bridges no >horizon gap; this is that
+    // class at fixture scale: doc 11 (a mid-chain dup) arrives one batch late,
     // after its event-time successor 12 was already processed. The
     // successor still links (12.t - 10.t <= horizon — the leg's
     // non-bridge predicate), the late row lands on the live chain, and

@@ -196,6 +196,18 @@ class RelationalSpec extends SparkSpec {
       s"oracle or noOracle key that is not a query: ${(oracled ++ noOracle).diff(queries)}")
   }
 
+  test("every DuckDB twin caps its buckets with the one cap template") {
+    // the fixtures' largest bucket is far below the cap, so only the
+    // SQL text can show a twin whose cap drifted from Spark's
+    val Array(pre, mid, post) = text.Dedup.cappedCte("\u0001", "\u0000").split("[\u0000\u0001]")
+    val q = java.util.regex.Pattern.quote _
+    val template = (q(pre) + "[\\w, ]+" + q(mid) + "\\w+" + q(post)).r
+    val oracles = SparkEntry.oracleSql
+    val drifted = oracles.filter { case (_, sql) => template.replaceAllIn(sql, "").contains("bsz") }
+    assert(drifted.isEmpty, s"a bsz clause outside the template: ${drifted.keys.toSeq.sorted}")
+    assert(oracles.values.map(template.findAllIn(_).size).sum >= 15)
+  }
+
   test("skyline: outputs mutually non-dominated and undominated by any input; planted staircase") {
     import spark.implicits._
     val out = relational.RelExtras.skylineLineitems(spark, sf).collect()

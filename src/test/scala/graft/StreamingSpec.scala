@@ -551,6 +551,13 @@ class StreamingSpec extends SparkSpec {
           val r = rows()
           if (r.contains((1L, 1L, 30.0)) || r.contains((1L, 3L, 20.0))) Some(r) else None
         }
+        // the sink shows a batch's rows before its RocksDB commit ends,
+        // and progress is posted only after it: stop once both data
+        // batches report progress (processAllAvailable never returns
+        // here — the TTL keeps the processing-time trigger armed)
+        pollUntil("both data batches committed") {
+          if (q.recentProgress.count(_.numInputRows > 0) >= 2) Some(()) else None
+        }
         assert(decided.contains((1L, 1L, 30.0)) && !decided.contains((1L, 3L, 20.0)),
           s"idle user's window was retained past the TTL: $decided")
       } finally q.stop()

@@ -502,6 +502,36 @@ class TextDedupSpec extends SparkSpec {
       "exact dedup must still catch the capped-out duplicates")
   }
 
+  test("cappedPairs keeps buckets of 2..MaxBucket rows, at both edges of the cap") {
+    import graft.functions.OrderedPairStructs
+    import org.apache.spark.sql.graftnative.Native
+    // buckets of 1, 2, MaxBucket and MaxBucket + 1 rows, ids unique
+    // across buckets; the fixtures never reach the last two sizes
+    val sizes = Seq(1, 2, Dedup.MaxBucket, Dedup.MaxBucket + 1)
+    val rows = sizes.zipWithIndex.flatMap { case (n, k) =>
+      (0 until n).map(i => (k.toLong, k * 1000L + i, (i % 7).toLong))
+    }.toDF("k", "doc_id", "n_doc")
+    def keysOf(pairs: Seq[(Long, Long)]): Set[Long] =
+      pairs.flatMap { case (a, b) => Seq(a / 1000, b / 1000) }.toSet
+    // a singleton bucket makes no pair either way, so the kept set is
+    // read off the predicate itself
+    val kept = rows.groupBy($"k").agg(count(lit(1)).as("n"))
+      .filter(Dedup.inCap($"n")).select($"k").as[Long].collect().toSet
+    assert(kept == Set(1L, 2L), s"the cap kept buckets $kept")
+    val expected = 1 + Dedup.MaxBucket * (Dedup.MaxBucket - 1) / 2
+    val sorted = Dedup.cappedPairs(rows, Seq($"k"), $"doc_id")(Dedup.sortedPairs)
+      .select($"p.part_a", $"p.part_b").as[(Long, Long)].collect().toSeq
+    assert(sorted.size == expected && sorted.distinct.size == expected,
+      s"sortedPairs: ${sorted.size} pairs, want $expected")
+    assert(keysOf(sorted) == Set(1L, 2L), s"sortedPairs read buckets ${keysOf(sorted)}")
+    assert(sorted.forall { case (a, b) => a / 1000 == b / 1000 }, "a pair crossed buckets")
+    val ordered = Dedup.cappedPairs(rows, Seq($"k"), struct($"doc_id", $"n_doc"))(
+        ds => Native(es => OrderedPairStructs(es.head), ds))
+      .select($"p.doc_a", $"p.doc_b").as[(Long, Long)].collect().toSeq
+    assert(ordered.sorted == sorted.sorted,
+      "the struct kernel must see the same capped buckets as sortedPairs")
+  }
+
   test("gram overlap: exact copies score 1.0, unique docs 0.0, shares bounded") {
     import graft.text.TextExtras
     val copied = (1 to 20).map(i => s"copy$i")
