@@ -48,11 +48,14 @@ case class LshBuckets(
     * round-before-compare discipline: a dot within 5e-5 of zero
     * collapses to ±0.0 identically everywhere, so a future change in
     * either engine's summation order (last-ulp noise) cannot flip a
-    * bucket bit. The DuckDB oracle applies round(dot, 4) >= 0.
+    * bucket bit. The DuckDB oracle applies round(dot, 4) >= 0, in SQL
+    * order: a NaN or +Infinity dot sets the bit, -Infinity clears it,
+    * and a vector with a null element has null dots, so no bit is set.
     */
   def compute(v: ArrayData): ArrayData = {
     if (v.numElements() != dim) return null
     val out = new Array[Long](numTables)
+    if (NearestCell.hasNull(v)) return new GenericArrayData(out)
     var t = 0
     while (t < numTables) {
       var bucket = 0L
@@ -62,9 +65,11 @@ case class LshBuckets(
         var acc = 0.0
         var j = 0
         while (j < dim) { acc += v.getDouble(j) * p(j); j += 1 }
-        val rounded = java.math.BigDecimal.valueOf(acc)
-          .setScale(4, java.math.RoundingMode.HALF_UP)
-        if (rounded.signum() >= 0) bucket |= (1L << i)
+        val nonNegative =
+          if (java.lang.Double.isNaN(acc) || java.lang.Double.isInfinite(acc)) !(acc < 0)
+          else java.math.BigDecimal.valueOf(acc)
+            .setScale(4, java.math.RoundingMode.HALF_UP).signum() >= 0
+        if (nonNegative) bucket |= (1L << i)
         i += 1
       }
       out(t) = bucket

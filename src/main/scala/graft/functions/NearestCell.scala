@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, SQLOrderingUtil}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
 
 /** Native Catalyst expression: index of the nearest centroid (squared
@@ -15,7 +15,10 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
   *
   * Distance is evaluated as -2·v·c + |c|² (the |v|² term is constant
   * per row); dots accumulate left-to-right, so the argmin is
-  * bit-identical to the dot_f64-column formulation it replaces.
+  * bit-identical to the dot_f64-column formulation it replaces. Scores
+  * compare in SQL order (NaN above every number, -0.0 equal to 0.0), the
+  * order the twins' `ORDER BY score, cell` argmin uses; a vector with a
+  * null element has no score, so no cell (null).
   */
 case class NearestCell(child: Expression, cents: Array[Array[Double]])
     extends UnaryExpression {
@@ -32,12 +35,12 @@ case class NearestCell(child: Expression, cents: Array[Array[Double]])
   override def nullable: Boolean = true
 
   def compute(v: ArrayData): Any = {
-    if (v.numElements() != dim) return null
+    if (v.numElements() != dim || NearestCell.hasNull(v)) return null
     val scores = NearestCell.scores(v.toDoubleArray(), cents, cn2)
     var best = 0
     var c = 1
     while (c < scores.length) {
-      if (scores(c) < scores(best)) { best = c }
+      if (SQLOrderingUtil.compareDoubles(scores(c), scores(best)) < 0) { best = c }
       c += 1
     }
     best
@@ -84,4 +87,10 @@ object NearestCell {
 
   def cn2Of(cents: Array[Array[Double]]): Array[Double] =
     cents.map(_.foldLeft(0.0)((a, x) => a + x * x))
+
+  def hasNull(v: ArrayData): Boolean = {
+    var j = 0
+    while (j < v.numElements()) { if (v.isNullAt(j)) return true; j += 1 }
+    false
+  }
 }

@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData, SQLOrderingUtil}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
 /** Native Catalyst expression: per-dimension scalar-quantization codes of
@@ -26,7 +26,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   * object, set at plan time from the driver-collected fit.
   *
   * Null handling: a null input or a wrong-dimensionality vector yields
-  * null (same stance as [[DotProduct]]/[[LshBuckets]]).
+  * null (same stance as [[DotProduct]]/[[LshBuckets]]). `v >= b` is the
+  * SQL comparison the twin replays: NaN counts as above every boundary,
+  * and a null element, which compares to nothing, takes the lowest code.
   */
 case class QuantCode(child: Expression, bounds: Array[Array[Double]])
     extends UnaryExpression {
@@ -47,13 +49,15 @@ case class QuantCode(child: Expression, bounds: Array[Array[Double]])
     val out = new Array[Double](dim)
     var j = 0
     while (j < dim) {
-      val x = v.getDouble(j)
       val bs = bounds(j)
       var raw = 1
-      var k = 0
-      while (k < bs.length) {
-        if (x >= bs(k)) raw += 1
-        k += 1
+      if (!v.isNullAt(j)) {
+        val x = v.getDouble(j)
+        var k = 0
+        while (k < bs.length) {
+          if (SQLOrderingUtil.compareDoubles(x, bs(k)) >= 0) raw += 1
+          k += 1
+        }
       }
       // centered: 2*raw - (B+1) where B = bs.length + 1 buckets
       out(j) = (2 * raw - (bs.length + 2)).toDouble

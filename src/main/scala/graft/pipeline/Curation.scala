@@ -283,13 +283,8 @@ object Curation extends graft.Catalog {
         |  SELECT * FROM (
         |    SELECT *, row_number() OVER (PARTITION BY norm ORDER BY doc_id) AS rn
         |    FROM gated) x WHERE rn = 1),
-        |${graft.text.Dedup.jaccardBlockCtes},
-        |losers AS (
-        |  SELECT DISTINCT b.doc_id
-        |  FROM dd a JOIN dd b ON a.b1 = b.b1 AND a.b2 = b.b2 AND a.doc_id < b.doc_id
-        |  WHERE CAST(len(list_filter(a.dt, x -> list_contains(b.dt, x))) AS DOUBLE) /
-        |        (len(a.dt) + len(b.dt)
-        |          - len(list_filter(a.dt, x -> list_contains(b.dt, x)))) >= 0.8)
+        |${graft.text.Dedup.jaccardPairCtes},
+        |losers AS (SELECT DISTINCT doc_b AS doc_id FROM jp WHERE jacc >= 0.8)
         |SELECT source, count(*) AS n_docs,
         |       CAST(sum(n_tokens) AS BIGINT) AS total_tokens,
         |       min(doc_id) AS first_doc

@@ -203,13 +203,8 @@ object Graph extends graft.Catalog {
     * SQL twin of `Dedup.jaccardPairs(..).filter(jacc >= 0.5)`.
     */
   private def jaccardEdgeCtes: String =
-    s"""${graft.text.Dedup.jaccardBlockCtes},
-       |e AS (
-       |  SELECT a.doc_id AS a, b.doc_id AS b
-       |  FROM dd a JOIN dd b ON a.b1 = b.b1 AND a.b2 = b.b2 AND a.doc_id < b.doc_id
-       |  WHERE CAST(len(list_filter(a.dt, x -> list_contains(b.dt, x))) AS DOUBLE) /
-       |        (len(a.dt) + len(b.dt) - len(list_filter(a.dt, x -> list_contains(b.dt, x))))
-       |        >= 0.5)""".stripMargin
+    s"""${graft.text.Dedup.jaccardPairCtes},
+       |e AS (SELECT doc_a AS a, doc_b AS b FROM jp WHERE jacc >= 0.5)""".stripMargin
 
   private def trianglesOracle: String =
     s"""WITH $jaccardEdgeCtes

@@ -24,7 +24,7 @@ import org.apache.spark.sql.functions._
   * method legs. At 100 TB one would sample probes from the corpus
   * (here the fixed probe set IS the convention) and the shape is
   * unchanged. Determinism: hits are exact integer set intersections on
-  * rounded-then-ranked lists; recall is an exact K-grid fraction.
+  * lists ranked by [[Similarity.topK]]; recall is an exact K-grid fraction.
   */
 object Eval extends graft.Catalog {
 

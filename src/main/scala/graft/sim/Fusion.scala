@@ -3,8 +3,6 @@ package graft.sim
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftnative.Native
-import graft.functions.DotProduct
 import graft.Tables
 
 /** Rank fusion across similarity geometries — Reciprocal Rank Fusion
@@ -30,10 +28,10 @@ import graft.Tables
   * would first be cut by an ANN shortlist ([[Similarity.annIvfPq]]);
   * the fusion stage itself is rank-arithmetic on shortlists and never
   * rescans the corpus. Cross-engine determinism: scores are rounded to
-  * 4 decimals BEFORE ranking with ties on neighbor_id (the catalog
-  * convention), ranks are exact integers, and the fused score is a
-  * fixed-order three-term sum of exact-integer reciprocals rounded at
-  * emission.
+  * 4 decimals before ranking with ties on neighbor_id (the [[Similarity]]
+  * convention; the fused top-K is [[Similarity.topK]]), ranks are exact
+  * integers, and the fused score is a fixed-order three-term sum of
+  * exact-integer reciprocals rounded at emission.
   */
 object Fusion extends graft.Catalog {
 
@@ -42,16 +40,12 @@ object Fusion extends graft.Catalog {
 
   def rrfFusion(spark: SparkSession, d: String): DataFrame = {
     import spark.implicits._
-    val e = Tables.embeddings(spark, d)
-      .withColumn("v", col("embedding").cast("array<double>"))
-      .withColumn("norm", sqrt(Native(es => DotProduct(es(0), es(1)), $"v", $"v")))
-    val q = e.filter($"vec_id" < Similarity.NumQueries)
-      .select($"vec_id".as("query_id"), $"v".as("qv"), $"norm".as("qnorm"))
+    val e = Similarity.withVec(Tables.embeddings(spark, d))
     val c = e.select($"vec_id".as("neighbor_id"), $"v".as("cv"),
       $"norm".as("cnorm"))
-    val scored = c.crossJoin(broadcast(q))
+    val scored = c.crossJoin(broadcast(Similarity.probeVecs(e)))
       .filter($"neighbor_id" =!= $"query_id")
-      .withColumn("ip", Native(es => DotProduct(es(0), es(1)), $"qv", $"cv"))
+      .withColumn("ip", Similarity.nativeDot($"qv", $"cv"))
       .withColumn("s_cos", round($"ip" / ($"qnorm" * $"cnorm"), 4))
       .withColumn("s_ip", round($"ip", 4))
       // |q - c|^2 expanded over the already-computed norms and dot:
@@ -72,29 +66,22 @@ object Fusion extends graft.Catalog {
         lit(1.0) / ($"rk_cos" + lit(RrfC)) +
           lit(1.0) / ($"rk_ip" + lit(RrfC)) +
           lit(1.0) / ($"rk_l2" + lit(RrfC)), 6))
-    val byRrf = Window.partitionBy($"query_id")
-      .orderBy($"rrf".desc, $"neighbor_id".asc)
-    ranked
-      .withColumn("rk", row_number().over(byRrf).cast("long"))
-      .filter($"rk" <= TopK)
+    Similarity.topK(ranked, "rrf", TopK)
       .select($"query_id", $"neighbor_id", $"rk",
         $"rk_cos", $"rk_ip", $"rk_l2", $"rrf")
   }
 
   private def rrfOracle: String =
-    s"""WITH e AS (
-       |  SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS norm
-       |  FROM (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-       |        FROM embeddings)),
+    s"""WITH ${Similarity.vecCtes},
        |q AS (SELECT vec_id AS query_id, v AS qv, norm AS qnorm
-       |      FROM e WHERE vec_id < ${Similarity.NumQueries}),
+       |      FROM n WHERE vec_id < ${Similarity.NumQueries}),
        |scored AS (
-       |  SELECT query_id, e.vec_id AS neighbor_id,
-       |    round(list_dot_product(qv, e.v) / (qnorm * e.norm), 4) + 0.0 AS s_cos,
-       |    round(list_dot_product(qv, e.v), 4) + 0.0 AS s_ip,
-       |    round(qnorm * qnorm + e.norm * e.norm
-       |          - 2.0 * list_dot_product(qv, e.v), 4) + 0.0 AS s_l2
-       |  FROM q, e WHERE e.vec_id <> query_id),
+       |  SELECT query_id, c.vec_id AS neighbor_id,
+       |    ${Similarity.cosineSql("qv", "qnorm", "c.v", "c.norm")} + 0.0 AS s_cos,
+       |    round(list_dot_product(qv, c.v), 4) + 0.0 AS s_ip,
+       |    round(qnorm * qnorm + c.norm * c.norm
+       |          - 2.0 * list_dot_product(qv, c.v), 4) + 0.0 AS s_l2
+       |  FROM q, n c WHERE c.vec_id <> query_id),
        |ranked AS (
        |  SELECT query_id, neighbor_id,
        |    CAST(row_number() OVER (PARTITION BY query_id
@@ -110,13 +97,8 @@ object Fusion extends graft.Catalog {
        |          1e0 / (rk_ip + $RrfC) +
        |          1e0 / (rk_l2 + $RrfC), 6) AS rrf
        |  FROM ranked)
-       |SELECT query_id, neighbor_id, rk, rk_cos, rk_ip, rk_l2, rrf
-       |FROM (
-       |  SELECT query_id, neighbor_id, rk_cos, rk_ip, rk_l2, rrf,
-       |    CAST(row_number() OVER (PARTITION BY query_id
-       |      ORDER BY rrf DESC, neighbor_id ASC) AS BIGINT) AS rk
-       |  FROM fused)
-       |WHERE rk <= $TopK""".stripMargin
+       |${Similarity.rankedSql("fused", "rrf", TopK,
+            cols = "query_id, neighbor_id, rk, rk_cos, rk_ip, rk_l2, rrf")}""".stripMargin
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "embed_rrf_fusion" -> (rrfFusion _))

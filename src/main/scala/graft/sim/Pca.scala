@@ -2,8 +2,6 @@ package graft.sim
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftnative.Native
-import graft.functions.DotProduct
 import graft.Tables
 
 /** Distributed PCA — the top principal component of the embedding
@@ -89,7 +87,7 @@ object Pca extends graft.Catalog {
           .as(s"s$i"))
       for (k <- 1 to PowerIters) {
         prev = v
-        val tExpr = Native(es => DotProduct(es(0), es(1)), $"c", typedlit(v.toSeq))
+        val tExpr = Similarity.nativeDot($"c", typedlit(v.toSeq))
         val srow = centered.withColumn("t", tExpr).agg(sAggs.head, sAggs.tail: _*)
           .collect()(0)
         val sd = Array.tabulate(Dim)(i => srow.getAs[Long](s"s$i").toDouble)
@@ -127,8 +125,8 @@ object Pca extends graft.Catalog {
     Tables.embeddings(spark, d)
       .select($"vec_id", col("embedding").cast("array<double>").as("x"))
       .withColumn("c", zip_with($"x", meanLit, (a, b) => a - b))
-      .withColumn("t", Native(es => DotProduct(es(0), es(1)), $"c", vLit))
-      .withColumn("cc", Native(es => DotProduct(es(0), es(1)), $"c", $"c"))
+      .withColumn("t", Similarity.nativeDot($"c", vLit))
+      .withColumn("cc", Similarity.nativeDot($"c", $"c"))
       .select($"vec_id",
         round($"t", 4).as("proj"),
         round(sqrt(greatest($"cc" - $"t" * $"t", lit(0.0))), 4)

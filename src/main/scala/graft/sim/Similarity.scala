@@ -1,6 +1,7 @@
 package graft.sim
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.graftnative.Native
@@ -33,6 +34,15 @@ import graft.Tables
   * codebooks, boundaries) are fitted once per session as [[graft.Memo]]
   * entries ([[quantizer]], [[quantBounds]]) and embedded as literals in
   * the generated oracles.
+  *
+  * The ranking convention has one owner per engine. On Spark:
+  * [[nativeDot]] (the in-order native dot), [[cosine]] (that dot over
+  * the norm product, rounded to 4 dp), [[topK]] (one `row_number` per
+  * query, score descending, ties on `neighbor_id`), [[exactRerank]]
+  * (a shortlist re-scored with [[cosine]], top [[K]] kept), and the
+  * [[withVec]] / [[probeVecs]] frames. On DuckDB: [[vecCtes]],
+  * [[cosineSql]], [[rankedSql]] and [[rerankTail]]. A site states only
+  * why it scores or ranks what it does; the convention itself lives here.
   */
 object Similarity extends graft.Catalog {
 
@@ -75,10 +85,47 @@ object Similarity extends graft.Catalog {
   /** Hot paths use the native codegen'd [[graft.functions.DotProduct]]
     * (same left-to-right summation order, so oracle parity holds).
     */
-  private def withVec(df: DataFrame): DataFrame = {
-    df.withColumn("v", col("embedding").cast("array<double>"))
-      .withColumn("norm", sqrt(Native(dotF64, col("v"), col("v"))))
+  private[sim] def nativeDot(a: Column, b: Column): Column = Native(es => DotProduct(es(0), es(1)), a, b)
+
+  /** The catalog cosine: rounded to 4 dp before anything ranks on it. */
+  private[sim] def cosine(q: Column, qn: Column, c: Column, cn: Column): Column =
+    round(nativeDot(q, c) / (qn * cn), 4)
+
+  /** The top `k` rows per `keys` by `score` descending, ties to the
+    * lower `neighbor_id`, ranked 1.. in the long column `rk`.
+    */
+  private[sim] def topK(
+      scored: DataFrame,
+      score: String,
+      k: Int,
+      keys: Seq[String] = Seq("query_id")): DataFrame = {
+    val w = Window.partitionBy(keys.map(col): _*).orderBy(col(score).desc, col("neighbor_id"))
+    scored.withColumn("rk", row_number().over(w).cast("long")).filter(col("rk") <= k)
   }
+
+  /** Exact rerank of a (query_id, neighbor_id) shortlist: both sides
+    * broadcast against the candidate vectors of `e`, so no vector
+    * shuffles; the probe frame is a parameter because IVF-PQ's is a
+    * local relation built from the quantizer's sample.
+    */
+  private def exactRerank(e: DataFrame, shortlist: DataFrame, probeVecs: DataFrame): DataFrame = {
+    val scored = e.select(col("vec_id").as("neighbor_id"), col("v").as("cv"), col("norm").as("cnorm"))
+      .join(broadcast(shortlist), Seq("neighbor_id"))
+      .join(broadcast(probeVecs), Seq("query_id"))
+      .withColumn("sim", cosine(col("qv"), col("qnorm"), col("cv"), col("cnorm")))
+    topK(scored, "sim", K).select("query_id", "neighbor_id", "rk", "sim")
+  }
+
+  /** The embeddings as `v` (array<double>) with their L2 `norm`. */
+  private[sim] def withVec(df: DataFrame): DataFrame = {
+    df.withColumn("v", col("embedding").cast("array<double>"))
+      .withColumn("norm", sqrt(nativeDot(col("v"), col("v"))))
+  }
+
+  /** The probe vectors (vec_id < NumQueries) of a [[withVec]] frame. */
+  private[sim] def probeVecs(e: DataFrame): DataFrame =
+    e.filter(col("vec_id") < NumQueries)
+      .select(col("vec_id").as("query_id"), col("v").as("qv"), col("norm").as("qnorm"))
 
   /** Per-vector L2 norm + dimensionality — the normalization pass every
     * embedding pipeline runs before cosine retrieval (norm=0 guards,
@@ -97,11 +144,10 @@ object Similarity extends graft.Catalog {
         round($"norm", 6).as("l2_norm"))
   }
 
-  /** ONE implementation of the broadcast-probe scoring scaffold: every
-    * probe (vec_id < NumQueries) rounded-then-ranked against every
-    * candidate — (query_id, qlabel, neighbor_id, clabel, sim). Shared
-    * by [[knnExact]] and [[tripletMine]] so the scoring convention
-    * (native dot, 4dp round-before-rank) lives in one place.
+  /** The broadcast-probe scoring scaffold: every probe
+    * (vec_id < NumQueries) scored against every candidate —
+    * (query_id, qlabel, neighbor_id, clabel, sim). Shared by
+    * [[knnExact]] and [[tripletMine]].
     */
   private def probeScores(spark: SparkSession, d: String): DataFrame = {
     import spark.implicits._
@@ -114,20 +160,13 @@ object Similarity extends graft.Catalog {
       $"v".as("cv"), $"norm".as("cnorm"))
     c.crossJoin(broadcast(q))
       .filter($"neighbor_id" =!= $"query_id")
-      .withColumn("sim", round(Native(dotF64, $"qv", $"cv") / ($"qnorm" * $"cnorm"), 4))
+      .withColumn("sim", cosine($"qv", $"qnorm", $"cv", $"cnorm"))
       .select($"query_id", $"qlabel", $"neighbor_id", $"clabel", $"sim")
   }
 
   /** Exact cosine top-K for each probe vector (DuckDB-oracled). */
-  def knnExact(spark: SparkSession, d: String): DataFrame = {
-    import spark.implicits._
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy($"query_id").orderBy($"sim".desc, $"neighbor_id")
-    probeScores(spark, d)
-      .withColumn("rk", row_number().over(w).cast("long"))
-      .filter($"rk" <= K)
-      .select($"query_id", $"neighbor_id", $"rk", $"sim")
-  }
+  def knnExact(spark: SparkSession, d: String): DataFrame =
+    topK(probeScores(spark, d), "sim", K).select("query_id", "neighbor_id", "rk", "sim")
 
   /** Deterministic ±1 hyperplane matrix (seeded). */
   private val planes: Seq[Seq[Double]] = {
@@ -138,8 +177,6 @@ object Similarity extends graft.Catalog {
   /** The native all-tables bucket hasher over the plane matrix. */
   def lshBuckets(es: Seq[Expression]): Expression =
     graft.functions.LshBuckets(es.head, planes.map(_.toArray).toArray, PlanesPerTable)
-
-  private val dotF64: Seq[Expression] => Expression = es => DotProduct(es(0), es(1))
 
   /** (vec_id, v, norm, tbl, bucket) rows for every vector. All 96 plane
     * dots and the L bucket ids come from ONE native expression
@@ -169,16 +206,12 @@ object Similarity extends graft.Catalog {
       .select($"vec_id".as("query_id"), $"v".as("qv"), $"norm".as("qnorm"), $"tbl", $"bucket")
     val c = buckets
       .select($"vec_id".as("neighbor_id"), $"v".as("cv"), $"norm".as("cnorm"), $"tbl", $"bucket")
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy($"query_id").orderBy($"sim".desc, $"neighbor_id")
-    c.join(broadcast(q), Seq("tbl", "bucket"))
+    val pairs = c.join(broadcast(q), Seq("tbl", "bucket"))
       .filter($"neighbor_id" =!= $"query_id")
-      .withColumn("sim", round(Native(dotF64, $"qv", $"cv") / ($"qnorm" * $"cnorm"), 4))
+      .withColumn("sim", cosine($"qv", $"qnorm", $"cv", $"cnorm"))
       .select($"query_id", $"neighbor_id", $"sim")
       .distinct() // a pair may collide in several tables
-      .withColumn("rk", row_number().over(w).cast("long"))
-      .filter($"rk" <= K)
-      .select($"query_id", $"neighbor_id", $"rk", $"sim")
+    topK(pairs, "sim", K).select("query_id", "neighbor_id", "rk", "sim")
   }
 
   /** Cap on the size of a dedup blocking cell: a cell over the cap is
@@ -190,17 +223,6 @@ object Similarity extends graft.Catalog {
     */
   val MaxCellBlock = 2000
 
-  /** Embedding-cosine near-duplicate pairs (the dedup tier above
-    * MinHash): exact pairwise cosine within IVF-CELL blocks — the same
-    * coarse quantizer the ANN tier fits assigns every vector to its
-    * nearest centroid (one narrow native [[graft.functions.NearestCell]]
-    * pass), and pairs are generated only within a cell, with
-    * [[MaxCellBlock]] bounding the quadratic term. Cell blocking keys on
-    * actual vector geometry, so the block count scales with the fitted
-    * cell count instead of an incidental low-cardinality label column
-    * (whose blocks are O(n²/labels) at scale). DuckDB-oracled via the
-    * [[quantizer]]'s centroids.
-    */
   /** ONE implementation of "fit the quantizer, assign every vector to
     * its cell, drop over-cap cells" — the shared front half of every
     * cell-blocked operator ([[embedDupPairs]], [[crossLabelMutual]]).
@@ -228,6 +250,17 @@ object Similarity extends graft.Catalog {
     assigned.join(broadcast(keep), "cell")
   }
 
+  /** Embedding-cosine near-duplicate pairs (the dedup tier above
+    * MinHash): exact pairwise cosine within IVF-CELL blocks — the same
+    * coarse quantizer the ANN tier fits assigns every vector to its
+    * nearest centroid (one narrow native [[graft.functions.NearestCell]]
+    * pass), and pairs are generated only within a cell, with
+    * [[MaxCellBlock]] bounding the quadratic term. Cell blocking keys on
+    * actual vector geometry, so the block count scales with the fitted
+    * cell count instead of an incidental low-cardinality label column
+    * (whose blocks are O(n²/labels) at scale). DuckDB-oracled via the
+    * [[quantizer]]'s centroids.
+    */
   def embedDupPairs(spark: SparkSession, d: String): DataFrame = {
     import spark.implicits._
     val capped = cappedCells(spark, d)
@@ -235,7 +268,7 @@ object Similarity extends graft.Catalog {
     val b = capped.select($"cell", $"vec_id".as("vec_b"), $"v".as("cv"), $"norm".as("cnorm"))
     a.join(b, "cell")
       .filter($"vec_a" < $"vec_b")
-      .withColumn("sim", round(Native(dotF64, $"qv", $"cv") / ($"qnorm" * $"cnorm"), 4))
+      .withColumn("sim", cosine($"qv", $"qnorm", $"cv", $"cnorm"))
       .filter($"sim" >= 0.3)
       .select($"vec_a", $"vec_b", $"cell".cast("long").as("cell"), $"sim")
   }
@@ -256,9 +289,8 @@ object Similarity extends graft.Catalog {
     * paper's keep rule: edge points survive, prototypical near-copies
     * drop), expressed as deterministic pairwise dominance: x is removed iff
     * some same-cell y with (ccos_y, vec_id_y) < (ccos_x, vec_id_x)
-    * lexicographically has sim(x, y) ≥ ε. Dominance compares the
-    * ROUNDED (4dp) centroid cosines, so the order is bit-stable across
-    * engines; vec_id breaks ties (the file-wide determinism rule).
+    * lexicographically has sim(x, y) ≥ ε. Dominance compares the rounded
+    * [[cosine]]s, so the order is bit-stable across engines.
     *
     * Scale shape: one narrow assignment scan, a broadcast join to the
     * bounded centroid table, and the [[MaxCellBlock]]-capped within-cell
@@ -279,7 +311,7 @@ object Similarity extends graft.Catalog {
       .map(i => (i, cents(i), math.sqrt(cn2(i))))
       .toDF("cell", "cv", "cnorm")
     val scored = capped.join(broadcast(centsDf), "cell")
-      .withColumn("ccos", round(Native(dotF64, $"v", $"cv") / ($"norm" * $"cnorm"), 4))
+      .withColumn("ccos", cosine($"v", $"norm", $"cv", $"cnorm"))
       .select($"cell", $"vec_id", $"v", $"norm", $"ccos")
       .transform(graft.Ckpt.cut)
     val a = scored.select($"cell".as("ca"), $"vec_id".as("vec_a"), $"v".as("av"),
@@ -290,7 +322,7 @@ object Similarity extends graft.Catalog {
     // then fold per vector: one shuffle fewer than distinct-then-join,
     // and the verdict set crosses the wire once, not twice
     val cond = $"ca" === $"cb" && $"vec_a" =!= $"vec_b" &&
-      round(Native(dotF64, $"av", $"bv") / ($"an" * $"bn"), 4) >= SemDedupEps &&
+      cosine($"av", $"an", $"bv", $"bn") >= SemDedupEps &&
       ($"ccos_b" < $"ccos_a" ||
         ($"ccos_b" === $"ccos_a" && $"vec_b" < $"vec_a"))
     a.join(b, cond, "left_outer")
@@ -308,17 +340,14 @@ object Similarity extends graft.Catalog {
     * (query_id, same-label?) — two rows survive per anchor and pivot
     * into one via single-row max-of-struct (no ordering subtlety: the
     * rank filter leaves at most one non-null struct per side).
-    * Rounded-then-ranked sims, vec_id tie-breaks; fully oracle-able.
+    * Fully oracle-able.
     */
   def tripletMine(spark: SparkSession, d: String): DataFrame = {
     import spark.implicits._
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy($"query_id", $"same").orderBy($"sim".desc, $"neighbor_id")
-    probeScores(spark, d)
+    val scored = probeScores(spark, d)
       .withColumn("same", $"clabel" === $"qlabel")
       .select($"query_id", $"qlabel", $"neighbor_id", $"sim", $"same")
-      .withColumn("rk", row_number().over(w))
-      .filter($"rk" === 1)
+    topK(scored, "sim", 1, Seq("query_id", "same"))
       .groupBy($"query_id", $"qlabel".as("anchor_label"))
       .agg(
         max(when($"same", struct($"neighbor_id", $"sim"))).as("p"),
@@ -337,9 +366,8 @@ object Similarity extends graft.Catalog {
     * shared IVF cells (the same fitted coarse quantizer as the dedup
     * tier, [[MaxCellBlock]]-capped), so no label-cross is ever
     * all-pairs; the two mutual-rank windows partition on
-    * (vec, other-label) — high-cardinality by construction. Similarity
-    * is rounded-then-ranked with vec_id tie-breaks (the file-wide
-    * determinism rule), and the DuckDB twin replays the fitted
+    * (vec, other-label) — high-cardinality by construction — and break
+    * ties on the other side's vec_id. The DuckDB twin replays the fitted
     * centroids as literals.
     */
   def crossLabelMutual(spark: SparkSession, d: String): DataFrame = {
@@ -349,13 +377,13 @@ object Similarity extends graft.Catalog {
       $"v".as("qv"), $"norm".as("qnorm"))
     val b = capped.select($"cell", $"vec_id".as("vec_b"), $"label".as("label_b"),
       $"v".as("cv"), $"norm".as("cnorm"))
-    val wa = org.apache.spark.sql.expressions.Window
+    val wa = Window
       .partitionBy($"vec_a", $"label_b").orderBy($"sim".desc, $"vec_b")
-    val wb = org.apache.spark.sql.expressions.Window
+    val wb = Window
       .partitionBy($"vec_b", $"label_a").orderBy($"sim".desc, $"vec_a")
     a.join(b, "cell")
       .filter($"label_a" < $"label_b")
-      .withColumn("sim", round(Native(dotF64, $"qv", $"cv") / ($"qnorm" * $"cnorm"), 4))
+      .withColumn("sim", cosine($"qv", $"qnorm", $"cv", $"cnorm"))
       .select($"label_a", $"label_b", $"vec_a", $"vec_b", $"sim")
       .withColumn("ra", row_number().over(wa))
       .withColumn("rb", row_number().over(wb))
@@ -365,17 +393,11 @@ object Similarity extends graft.Catalog {
 
   /** DuckDB twin of [[crossLabelMutual]] over the fitted centroids. */
   private def xlabelOracle(cents: Array[Array[Double]]): String =
-    s"""${assignCtes(cents)},
-       |lbl AS (
-       |  SELECT a.vec_id, CAST(e.label AS BIGINT) AS label, a.v, a.norm, a.cell
-       |  FROM assign a JOIN embeddings e ON a.vec_id = e.vec_id),
-       |keep AS (
-       |  SELECT cell FROM lbl GROUP BY cell HAVING count(*) <= $MaxCellBlock),
-       |capped AS (SELECT l.* FROM lbl l JOIN keep k ON l.cell = k.cell),
+    s"""${cappedCellCtes(cents)},
        |cross_pairs AS (
        |  SELECT a.label AS label_a, b.label AS label_b,
        |         a.vec_id AS vec_a, b.vec_id AS vec_b,
-       |         round(list_dot_product(a.v, b.v) / (a.norm * b.norm), 4) + 0.0 AS sim
+       |         ${cosineSql("a.v", "a.norm", "b.v", "b.norm")} + 0.0 AS sim
        |  FROM capped a JOIN capped b ON a.cell = b.cell AND a.label < b.label),
        |ranked AS (
        |  SELECT *,
@@ -404,49 +426,50 @@ object Similarity extends graft.Catalog {
       .collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
 
-  /** Deterministic Lloyd k-means coarse quantizer trained on a bounded
-    * driver-side sample — the standard IVF recipe (FAISS trains its
-    * quantizer on a sample too): collecting TrainCap 64-dim vectors is
-    * ~8 MB regardless of table size, the distributed work stays in the
-    * assignment pass. Spark ML's KMeans on the full table spent ~3 s of
-    * scheduler overhead clustering 2000 rows; the local fit is
-    * microseconds and exactly reproducible (seeded init, fixed
-    * iteration count, ties to the lowest cell index).
+  /** Deterministic Lloyd k-means on a bounded in-memory sample — the
+    * standard IVF recipe (FAISS trains its quantizer on a sample too):
+    * collecting TrainCap 64-dim vectors is ~8 MB regardless of table
+    * size, the distributed work stays in the assignment pass. Spark ML's
+    * KMeans on the full table spent ~3 s of scheduler overhead
+    * clustering 2000 rows; the local fit is microseconds and exactly
+    * reproducible (`seed`ed init, 5 fixed iterations, ties to the lowest
+    * cell index, an emptied cell keeps its centroid). Fits both the IVF
+    * coarse cells and each PQ subspace's codebook.
     */
-  private def centroids(sample: Array[Array[Double]]): Array[Array[Double]] = {
-    val k = IvfCells
-    val rnd = new scala.util.Random(42)
-    val cents = Array.fill(k)(sample(rnd.nextInt(sample.length)).clone())
-    val assign = new Array[Int](sample.length)
+  private def lloyd(points: Array[Array[Double]], k: Int, seed: Long): Array[Array[Double]] = {
+    val dim = points(0).length
+    val rnd = new scala.util.Random(seed)
+    val cents = Array.fill(k)(points(rnd.nextInt(points.length)).clone())
+    val assign = new Array[Int](points.length)
     for (_ <- 0 until 5) {
       var i = 0
-      while (i < sample.length) {
+      while (i < points.length) {
         var best = 0; var bestD = Double.MaxValue
         var c = 0
         while (c < k) {
           var d2 = 0.0; var j = 0
-          val cv = cents(c); val x = sample(i)
-          while (j < cv.length) { val df = x(j) - cv(j); d2 += df * df; j += 1 }
+          val cv = cents(c); val x = points(i)
+          while (j < dim) { val df = x(j) - cv(j); d2 += df * df; j += 1 }
           if (d2 < bestD) { bestD = d2; best = c }
           c += 1
         }
         assign(i) = best
         i += 1
       }
-      val sums = Array.fill(k)(new Array[Double](64))
+      val sums = Array.fill(k)(new Array[Double](dim))
       val counts = new Array[Int](k)
       var n = 0
-      while (n < sample.length) {
+      while (n < points.length) {
         val c = assign(n); counts(c) += 1
         var j = 0
-        while (j < 64) { sums(c)(j) += sample(n)(j); j += 1 }
+        while (j < dim) { sums(c)(j) += points(n)(j); j += 1 }
         n += 1
       }
       var c = 0
       while (c < k) {
         if (counts(c) > 0) {
           var j = 0
-          while (j < 64) { cents(c)(j) = sums(c)(j) / counts(c); j += 1 }
+          while (j < dim) { cents(c)(j) = sums(c)(j) / counts(c); j += 1 }
         }
         c += 1
       }
@@ -469,8 +492,13 @@ object Similarity extends graft.Catalog {
     * (sorted capped sample, fixed seeds, fixed iterations).
     */
   final class Quantizer(sample: Array[(Long, Array[Double])]) {
-    val cents: Array[Array[Double]] = centroids(sample.map(_._2))
-    val books: Array[Array[Array[Double]]] = pqCodebooks(sample.map(_._2))
+    private val points = sample.map(_._2)
+    val cents: Array[Array[Double]] = lloyd(points, IvfCells, 42)
+    /** One [[PqCentroids]]-entry codebook per PQ subspace. */
+    val books: Array[Array[Array[Double]]] = Array.tabulate(PqSubspaces) { m =>
+      lloyd(points.map(v => java.util.Arrays.copyOfRange(v, m * PqSubDim, (m + 1) * PqSubDim)),
+        PqCentroids, 42 + m)
+    }
     /** (query_id, v, |v|), the norm summed in index order. */
     val queries: Seq[(Long, Array[Double], Double)] =
       sample.toSeq.filter(_._1 < NumQueries)
@@ -527,18 +555,14 @@ object Similarity extends graft.Catalog {
       .withColumn("cell", nearestCell)
       .select($"vec_id".as("neighbor_id"), $"v".as("cv"), $"norm".as("cnorm"), $"cell")
     val probesDf = broadcast(q.probeRows(probes).toDF("query_id", "cell", "qv", "qnorm"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy($"query_id").orderBy($"sim".desc, $"neighbor_id")
     // no distinct needed: each candidate has exactly ONE cell and a
     // probe's IvfProbes cells are distinct, so a (query, neighbor) pair
     // joins at most once — unlike the LSH path where a pair can collide
     // in several tables
-    cand.join(probesDf, "cell")
+    val pairs = cand.join(probesDf, "cell")
       .filter($"neighbor_id" =!= $"query_id")
-      .withColumn("sim", round(Native(dotF64, $"qv", $"cv") / ($"qnorm" * $"cnorm"), 4))
-      .withColumn("rk", row_number().over(w).cast("long"))
-      .filter($"rk" <= k)
-      .select($"query_id", $"neighbor_id", $"rk", $"sim")
+      .withColumn("sim", cosine($"qv", $"qnorm", $"cv", $"cnorm"))
+    topK(pairs, "sim", k).select("query_id", "neighbor_id", "rk", "sim")
   }
 
   /** Quantile-quantized KNN — the scalar-quantization (SQ) compression
@@ -622,20 +646,20 @@ object Similarity extends graft.Catalog {
       .select($"vec_id", quantCode.as("q"))
   }
 
-  def knnQuantized(spark: SparkSession, d: String): DataFrame = {
-    import spark.implicits._
-    val codes = knnQuantizedCodes(spark, d)
-    val probes = codes.filter($"vec_id" < NumQueries)
-      .select($"vec_id".as("query_id"), $"q".as("qq"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy($"query_id").orderBy($"score".desc, $"neighbor_id")
-    codes.select($"vec_id".as("neighbor_id"), $"q".as("cq"))
+  def knnQuantized(spark: SparkSession, d: String): DataFrame =
+    topK(codeScores(knnQuantizedCodes(spark, d)), "score", K)
+      .select("query_id", "neighbor_id", "rk", "score")
+
+  /** Every probe's integer code dot against every other coded vector:
+    * (neighbor_id, query_id, score), the broadcast shape of [[knnExact]].
+    */
+  private def codeScores(codes: DataFrame): DataFrame = {
+    val probes = codes.filter(col("vec_id") < NumQueries)
+      .select(col("vec_id").as("query_id"), col("q").as("qq"))
+    codes.select(col("vec_id").as("neighbor_id"), col("q").as("cq"))
       .crossJoin(broadcast(probes))
-      .filter($"neighbor_id" =!= $"query_id")
-      .withColumn("score", Native(dotF64, $"qq", $"cq").cast("long"))
-      .withColumn("rk", row_number().over(w).cast("long"))
-      .filter($"rk" <= K)
-      .select($"query_id", $"neighbor_id", $"rk", $"score")
+      .filter(col("neighbor_id") =!= col("query_id"))
+      .withColumn("score", nativeDot(col("qq"), col("cq")).cast("long"))
   }
 
   /** Shortlist depth for the SQ→exact composite: wide enough to cover
@@ -651,8 +675,7 @@ object Similarity extends graft.Catalog {
     * generates a cheap [[RerankShortlist]]-deep candidate list per
     * probe (8× less memory traffic than float scoring — at 100 TB the
     * code table is what fits in page cache), then ONLY those pairs are
-    * re-scored with the exact [[knnExact]] convention (double cosine,
-    * 4dp round-before-rank, neighbor_id ties).
+    * re-scored exactly ([[exactRerank]]).
     *
     * Scale shape: one coded-corpus scan for the shortlist (broadcast
     * probe codes), then one full-vector scan joined against the
@@ -664,31 +687,10 @@ object Similarity extends graft.Catalog {
     * away.
     */
   def knnRerank(spark: SparkSession, d: String): DataFrame = {
-    import spark.implicits._
-    val codes = knnQuantizedCodes(spark, d)
-    val probeCodes = codes.filter($"vec_id" < NumQueries)
-      .select($"vec_id".as("query_id"), $"q".as("qq"))
-    val wShort = org.apache.spark.sql.expressions.Window
-      .partitionBy($"query_id").orderBy($"iscore".desc, $"neighbor_id")
-    val shortlist = codes.select($"vec_id".as("neighbor_id"), $"q".as("cq"))
-      .crossJoin(broadcast(probeCodes))
-      .filter($"neighbor_id" =!= $"query_id")
-      .withColumn("iscore", Native(dotF64, $"qq", $"cq").cast("long"))
-      .withColumn("srk", row_number().over(wShort))
-      .filter($"srk" <= RerankShortlist)
-      .select($"query_id", $"neighbor_id")
+    val shortlist = topK(codeScores(knnQuantizedCodes(spark, d)), "score", RerankShortlist)
+      .select("query_id", "neighbor_id")
     val e = withVec(Tables.embeddings(spark, d))
-    val probeVecs = e.filter($"vec_id" < NumQueries)
-      .select($"vec_id".as("query_id"), $"v".as("qv"), $"norm".as("qnorm"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy($"query_id").orderBy($"sim".desc, $"neighbor_id")
-    e.select($"vec_id".as("neighbor_id"), $"v".as("cv"), $"norm".as("cnorm"))
-      .join(broadcast(shortlist), Seq("neighbor_id"))
-      .join(broadcast(probeVecs), Seq("query_id"))
-      .withColumn("sim", round(Native(dotF64, $"qv", $"cv") / ($"qnorm" * $"cnorm"), 4))
-      .withColumn("rk", row_number().over(w).cast("long"))
-      .filter($"rk" <= K)
-      .select($"query_id", $"neighbor_id", $"rk", $"sim")
+    exactRerank(e, shortlist, probeVecs(e))
   }
 
   /** Johnson–Lindenstrauss random projection: target dimensionality of
@@ -719,8 +721,8 @@ object Similarity extends graft.Catalog {
     * round makes the sketch bit-identical across engines). The
     * shortlist scores probes against sketches with the native dot —
     * 4× less data touched than full vectors — then only the
-    * [[RerankShortlist]] survivors are re-scored with the exact
-    * [[knnExact]] convention. Same composite shape as [[knnRerank]]:
+    * [[RerankShortlist]] survivors are re-scored by [[exactRerank]].
+    * Same composite shape as [[knnRerank]]:
     * one sketch scan + one vector scan joined to the broadcast
     * shortlist; nothing 64-dim ever shuffles. At 100 TB the sketch
     * column is what you materialize next to the parquet — a 4×-smaller
@@ -732,26 +734,12 @@ object Similarity extends graft.Catalog {
       .withColumn("p", transform(rpLit, r => round(dot($"v", r), 4)))
     val probes = e.filter($"vec_id" < NumQueries)
       .select($"vec_id".as("query_id"), $"p".as("qp"))
-    val wShort = org.apache.spark.sql.expressions.Window
-      .partitionBy($"query_id").orderBy($"pscore".desc, $"neighbor_id")
-    val shortlist = e.select($"vec_id".as("neighbor_id"), $"p".as("cp"))
+    val scored = e.select($"vec_id".as("neighbor_id"), $"p".as("cp"))
       .crossJoin(broadcast(probes))
       .filter($"neighbor_id" =!= $"query_id")
-      .withColumn("pscore", Native(dotF64, $"qp", $"cp"))
-      .withColumn("srk", row_number().over(wShort))
-      .filter($"srk" <= RerankShortlist)
-      .select($"query_id", $"neighbor_id")
-    val probeVecs = e.filter($"vec_id" < NumQueries)
-      .select($"vec_id".as("query_id"), $"v".as("qv"), $"norm".as("qnorm"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy($"query_id").orderBy($"sim".desc, $"neighbor_id")
-    e.select($"vec_id".as("neighbor_id"), $"v".as("cv"), $"norm".as("cnorm"))
-      .join(broadcast(shortlist), Seq("neighbor_id"))
-      .join(broadcast(probeVecs), Seq("query_id"))
-      .withColumn("sim", round(Native(dotF64, $"qv", $"cv") / ($"qnorm" * $"cnorm"), 4))
-      .withColumn("rk", row_number().over(w).cast("long"))
-      .filter($"rk" <= K)
-      .select($"query_id", $"neighbor_id", $"rk", $"sim")
+      .withColumn("pscore", nativeDot($"qp", $"cp"))
+    val shortlist = topK(scored, "pscore", RerankShortlist).select("query_id", "neighbor_id")
+    exactRerank(e, shortlist, probeVecs(e))
   }
 
   /** DuckDB twin of [[knnRp]]: the same literal matrix, sketch, 4dp
@@ -759,32 +747,15 @@ object Similarity extends graft.Catalog {
     */
   private def knnRpOracle: String = {
     val rLit = "[" + rpRows.map(r => "[" + r.mkString(",") + "]").mkString(",") + "]"
-    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-       |nv AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS norm,
-       |         list_transform($rLit::DOUBLE[][],
+    s"""WITH $vecCtes,
+       |np AS (SELECT vec_id, list_transform($rLit::DOUBLE[][],
        |                        r -> round(list_dot_product(v, r), 4)) AS p
        |       FROM e),
-       |q AS (SELECT vec_id AS query_id, p AS qp FROM nv WHERE vec_id < $NumQueries),
-       |short AS (
-       |  SELECT query_id, neighbor_id FROM (
-       |    SELECT q.query_id, n.vec_id AS neighbor_id,
-       |           row_number() OVER (PARTITION BY q.query_id
-       |                              ORDER BY list_dot_product(q.qp, n.p) DESC,
-       |                                       n.vec_id) AS srk
-       |    FROM q JOIN nv n ON n.vec_id <> q.query_id) t
-       |  WHERE srk <= $RerankShortlist),
-       |scored AS (
-       |  SELECT s.query_id, s.neighbor_id,
-       |         round(list_dot_product(qn.v, nn.v) / (qn.norm * nn.norm), 4) + 0.0 AS sim
-       |  FROM short s
-       |  JOIN nv qn ON qn.vec_id = s.query_id
-       |  JOIN nv nn ON nn.vec_id = s.neighbor_id)
-       |SELECT query_id, neighbor_id, rk, sim FROM (
-       |  SELECT query_id, neighbor_id, sim,
-       |         row_number() OVER (PARTITION BY query_id
-       |                            ORDER BY sim DESC, neighbor_id) AS rk
-       |  FROM scored) t
-       |WHERE rk <= $K""".stripMargin
+       |ps AS (
+       |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
+       |         list_dot_product(q.p, c.p) AS pscore
+       |  FROM np q JOIN np c ON q.vec_id < $NumQueries AND c.vec_id <> q.vec_id),
+       |${rerankTail("ps", "pscore")}""".stripMargin
   }
 
   /** Product quantization — the third compression scheme of the ANN
@@ -818,51 +789,6 @@ object Similarity extends graft.Catalog {
   val PqSubDim = 8
   val PqCentroids = 64
 
-  /** Seeded per-subspace Lloyd fit (5 iterations, the [[centroids]]
-    * shape generalized to sub-dimension k-means).
-    */
-  private def pqCodebooks(sample: Array[Array[Double]]): Array[Array[Array[Double]]] =
-    Array.tabulate(PqSubspaces) { m =>
-      val sub = sample.map(v => java.util.Arrays.copyOfRange(v, m * PqSubDim, (m + 1) * PqSubDim))
-      val rnd = new scala.util.Random(42 + m)
-      val cents = Array.fill(PqCentroids)(sub(rnd.nextInt(sub.length)).clone())
-      val assign = new Array[Int](sub.length)
-      for (_ <- 0 until 5) {
-        var i = 0
-        while (i < sub.length) {
-          var best = 0; var bestD = Double.MaxValue
-          var c = 0
-          while (c < PqCentroids) {
-            var d2 = 0.0; var j = 0
-            val cv = cents(c); val x = sub(i)
-            while (j < PqSubDim) { val df = x(j) - cv(j); d2 += df * df; j += 1 }
-            if (d2 < bestD) { bestD = d2; best = c }
-            c += 1
-          }
-          assign(i) = best
-          i += 1
-        }
-        val sums = Array.fill(PqCentroids)(new Array[Double](PqSubDim))
-        val counts = new Array[Int](PqCentroids)
-        var n = 0
-        while (n < sub.length) {
-          val c = assign(n); counts(c) += 1
-          var j = 0
-          while (j < PqSubDim) { sums(c)(j) += sub(n)(j); j += 1 }
-          n += 1
-        }
-        var c = 0
-        while (c < PqCentroids) {
-          if (counts(c) > 0) {
-            var j = 0
-            while (j < PqSubDim) { cents(c)(j) = sums(c)(j) / counts(c); j += 1 }
-          }
-          c += 1
-        }
-      }
-      cents
-    }
-
   /** Adds `xhat`/`xnorm` (PQ-coded-and-reconstructed vector + norm) to a
     * frame carrying `v`, keeping every existing column: 8 per-subspace
     * NearestCell argmins on slices, then a literal codebook lookup per
@@ -884,7 +810,7 @@ object Similarity extends graft.Catalog {
     }: _*))
     coded
       .withColumn("xhat", xhat)
-      .withColumn("xnorm", sqrt(Native(dotF64, $"xhat", $"xhat")))
+      .withColumn("xnorm", sqrt(nativeDot($"xhat", $"xhat")))
       .drop((0 until PqSubspaces).map(m => s"c$m"): _*)
   }
 
@@ -909,29 +835,15 @@ object Similarity extends graft.Catalog {
     */
   def knnPq(spark: SparkSession, d: String): DataFrame = {
     import spark.implicits._
-    val probes = withVec(Tables.embeddings(spark, d))
-      .filter($"vec_id" < NumQueries)
-      .select($"vec_id".as("query_id"), $"v".as("qv"), $"norm".as("qnorm"))
-    val wShort = org.apache.spark.sql.expressions.Window
-      .partitionBy($"query_id").orderBy($"psim".desc, $"neighbor_id")
-    val shortlist = pqReconstructed(spark, d)
+    val e = withVec(Tables.embeddings(spark, d))
+    val probes = probeVecs(e)
+    val scored = pqReconstructed(spark, d)
       .select($"vec_id".as("neighbor_id"), $"xhat", $"xnorm")
       .crossJoin(broadcast(probes))
       .filter($"neighbor_id" =!= $"query_id")
-      .withColumn("psim", round(Native(dotF64, $"qv", $"xhat") / ($"qnorm" * $"xnorm"), 4))
-      .withColumn("srk", row_number().over(wShort))
-      .filter($"srk" <= RerankShortlist)
-      .select($"query_id", $"neighbor_id")
-    val e = withVec(Tables.embeddings(spark, d))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy($"query_id").orderBy($"sim".desc, $"neighbor_id")
-    e.select($"vec_id".as("neighbor_id"), $"v".as("cv"), $"norm".as("cnorm"))
-      .join(broadcast(shortlist), Seq("neighbor_id"))
-      .join(broadcast(probes), Seq("query_id"))
-      .withColumn("sim", round(Native(dotF64, $"qv", $"cv") / ($"qnorm" * $"cnorm"), 4))
-      .withColumn("rk", row_number().over(w).cast("long"))
-      .filter($"rk" <= K)
-      .select($"query_id", $"neighbor_id", $"rk", $"sim")
+      .withColumn("psim", cosine($"qv", $"qnorm", $"xhat", $"xnorm"))
+    val shortlist = topK(scored, "psim", RerankShortlist).select("query_id", "neighbor_id")
+    exactRerank(e, shortlist, probes)
   }
 
   /** IVF-PQ — the production FAISS composition, and the actual 100 TB
@@ -958,28 +870,17 @@ object Similarity extends graft.Catalog {
     val cand = withPqRecon(spark, e.withColumn("cell", nearestCell), q.books)
       .select($"vec_id".as("neighbor_id"), $"cell", $"xhat", $"xnorm")
     val probesDf = broadcast(q.probeRows(IvfProbes).toDF("query_id", "cell", "qv", "qnorm"))
-    val probeVecs = broadcast(
-      q.queries.map { case (id, v, qnorm) => (id, v.toSeq, qnorm) }.toDF("query_id", "qv", "qnorm"))
-    val wShort = org.apache.spark.sql.expressions.Window
-      .partitionBy($"query_id").orderBy($"psim".desc, $"neighbor_id")
     // a (query, neighbor) pair joins at most once (one cell per
     // candidate, distinct probe cells — the annIvf argument), so the
     // shortlist needs no distinct
-    val shortlist = cand.join(probesDf, "cell")
+    val scored = cand.join(probesDf, "cell")
       .filter($"neighbor_id" =!= $"query_id")
-      .withColumn("psim", round(Native(dotF64, $"qv", $"xhat") / ($"qnorm" * $"xnorm"), 4))
-      .withColumn("srk", row_number().over(wShort))
-      .filter($"srk" <= RerankShortlist)
-      .select($"query_id", $"neighbor_id")
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy($"query_id").orderBy($"sim".desc, $"neighbor_id")
-    e.select($"vec_id".as("neighbor_id"), $"v".as("cv"), $"norm".as("cnorm"))
-      .join(broadcast(shortlist), Seq("neighbor_id"))
-      .join(probeVecs, Seq("query_id"))
-      .withColumn("sim", round(Native(dotF64, $"qv", $"cv") / ($"qnorm" * $"cnorm"), 4))
-      .withColumn("rk", row_number().over(w).cast("long"))
-      .filter($"rk" <= K)
-      .select($"query_id", $"neighbor_id", $"rk", $"sim")
+      .withColumn("psim", cosine($"qv", $"qnorm", $"xhat", $"xnorm"))
+    val shortlist = topK(scored, "psim", RerankShortlist).select("query_id", "neighbor_id")
+    // the probe vectors come from the quantizer's sample, a local
+    // relation, not a second scan
+    exactRerank(e, shortlist,
+      q.queries.map { case (id, v, qnorm) => (id, v.toSeq, qnorm) }.toDF("query_id", "qv", "qnorm"))
   }
 
   /** Full-corpus Lloyd rounds refining the sample-trained quantizer. */
@@ -1062,7 +963,6 @@ object Similarity extends graft.Catalog {
     */
   def silhouetteEval(spark: SparkSession, d: String): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.expressions.Window
     val e = withVec(Tables.embeddings(spark, d))
     val cents = quantizer(spark, d).cents
     val cn2 = graft.functions.NearestCell.cn2Of(cents)
@@ -1071,9 +971,9 @@ object Similarity extends graft.Catalog {
     val wVec = Window.partitionBy($"vec_id")
       .orderBy($"key".asc, $"cell".asc)
     val perVec = e
-      .withColumn("n2", Native(dotF64, $"v", $"v"))
+      .withColumn("n2", nativeDot($"v", $"v"))
       .crossJoin(broadcast(centsDf))
-      .withColumn("key", lit(-2) * Native(dotF64, $"v", $"cv") + $"cn2")
+      .withColumn("key", lit(-2) * nativeDot($"v", $"cv") + $"cn2")
       .withColumn("r", row_number().over(wVec))
       .groupBy($"vec_id")
       .agg(
@@ -1093,22 +993,18 @@ object Similarity extends graft.Catalog {
   }
 
   private def silhouetteOracle(cents: Array[Array[Double]]): String = {
-    val cn2 = graft.functions.NearestCell.cn2Of(cents)
-    val centRows = cents.zipWithIndex.map { case (c, i) =>
-      s"($i, [${c.map(dlit).mkString(",")}], ${dlit(cn2(i))})"
-    }.mkString(",\n")
-    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-       |n AS (SELECT vec_id, v, list_dot_product(v, v) AS n2 FROM e),
+    s"""WITH $vecCtes,
+       |sq AS (SELECT vec_id, v, list_dot_product(v, v) AS n2 FROM e),
        |cents(cell, c, cn2) AS (VALUES
-       |$centRows),
+       |${centRows(cents)}),
        |d AS (
-       |  SELECT n.vec_id, n.n2, cents.cell,
-       |         -2 * list_dot_product(n.v, cents.c) + cents.cn2 AS key,
+       |  SELECT sq.vec_id, sq.n2, cents.cell,
+       |         -2 * list_dot_product(sq.v, cents.c) + cents.cn2 AS key,
        |         row_number() OVER (
-       |           PARTITION BY n.vec_id
-       |           ORDER BY -2 * list_dot_product(n.v, cents.c) + cents.cn2,
+       |           PARTITION BY sq.vec_id
+       |           ORDER BY -2 * list_dot_product(sq.v, cents.c) + cents.cn2,
        |                    cents.cell) AS r
-       |  FROM n CROSS JOIN cents),
+       |  FROM sq CROSS JOIN cents),
        |p AS (
        |  SELECT vec_id,
        |    min(CASE WHEN r = 1 THEN key END) AS okey,
@@ -1165,23 +1061,20 @@ object Similarity extends graft.Catalog {
     * recursion stays a LINEAR chain of small jobs instead of a plan
     * that re-derives all prior steps 3^K times.
     *
-    * Cross-engine exactness: relevance and pair sims go through the
-    * catalog's round-4 cosine, then ×10⁴ to exact BIGINT (rel_e4), so
+    * Cross-engine exactness: relevance and pair sims go through
+    * [[cosine]], then ×10⁴ to exact BIGINT (rel_e4), so
     * the MMR objective 7·rel_e4 − 3·ms_e4 is pure integer arithmetic —
     * both engines pick identical argmaxes with the vec_id tie-break.
     * The DuckDB twin unrolls the same K steps as CTE blocks.
     */
   def mmrDiversified(spark: SparkSession, d: String): DataFrame = {
     import spark.implicits._
-    val w = org.apache.spark.sql.expressions.Window.partitionBy($"query_id")
+    val w = Window.partitionBy($"query_id")
     val e = withVec(Tables.embeddings(spark, d))
       .select($"vec_id", $"v", $"norm")
-    val q = e.filter($"vec_id" < NumQueries)
-      .select($"vec_id".as("query_id"), $"v".as("qv"), $"norm".as("qnorm"))
     val e4 = (a: String, b: String, n1: String, n2: String) =>
-      round(round(Native(dotF64, col(a), col(b)) / (col(n1) * col(n2)), 4) * 10000, 0)
-        .cast("bigint")
-    val shortlist = e.crossJoin(broadcast(q))
+      round(cosine(col(a), col(n1), col(b), col(n2)) * 10000, 0).cast("bigint")
+    val shortlist = e.crossJoin(broadcast(probeVecs(e)))
       .filter($"vec_id" =!= $"query_id")
       .withColumn("rel_e4", e4("qv", "v", "qnorm", "norm"))
       .withColumn("rk",
@@ -1425,21 +1318,65 @@ object Similarity extends graft.Catalog {
     val branches = (0 until LshTables).map { t =>
       s"SELECT vec_id, v, norm, $t AS tbl, ${bucketExpr(t)} AS bucket FROM n"
     }.mkString("\nUNION ALL\n")
-    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-       |n AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS norm FROM e),
+    s"""WITH $vecCtes,
        |b AS (
        |$branches),
        |pairs AS (
        |  SELECT DISTINCT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-       |         round(list_dot_product(q.v, c.v) / (q.norm * c.norm), 4) + 0.0 AS sim
+       |         ${cosineSql("q.v", "q.norm", "c.v", "c.norm")} + 0.0 AS sim
        |  FROM b q JOIN b c ON q.tbl = c.tbl AND q.bucket = c.bucket
        |  WHERE q.vec_id < $NumQueries AND c.vec_id <> q.vec_id)
-       |SELECT query_id, neighbor_id, rk, sim FROM (
-       |  SELECT query_id, neighbor_id, sim,
-       |         row_number() OVER (PARTITION BY query_id
-       |                            ORDER BY sim DESC, neighbor_id) AS rk
-       |  FROM pairs) t
-       |WHERE rk <= $K""".stripMargin
+       |${rankedSql("pairs", "sim", K)}""".stripMargin
+  }
+
+  /** The twins' vector CTE head: `e` (vec_id, label, v) and `n`, which
+    * adds the L2 norm — the SQL twin of [[withVec]].
+    */
+  private[sim] val vecCtes: String =
+    """e AS (SELECT vec_id, CAST(label AS BIGINT) AS label,
+      |             CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+      |n AS (SELECT vec_id, label, v, sqrt(list_dot_product(v, v)) AS norm FROM e)""".stripMargin
+
+  /** The SQL twin of [[cosine]]. */
+  private[sim] def cosineSql(q: String, qn: String, c: String, cn: String): String =
+    s"round(list_dot_product($q, $c) / ($qn * $cn), 4)"
+
+  /** The SQL twin of [[topK]]: `cols` of the rows of `src` ranked per
+    * `keys` as `rk`, the top `k` kept.
+    */
+  private[graft] def rankedSql(
+      src: String,
+      score: String,
+      k: Int,
+      keys: String = "query_id",
+      cols: String = "query_id, neighbor_id, rk, sim"): String =
+    s"""SELECT $cols FROM (
+       |  SELECT *, row_number() OVER (PARTITION BY $keys ORDER BY $score DESC, neighbor_id) AS rk
+       |  FROM $src) ranked
+       |WHERE rk <= $k""".stripMargin
+
+  /** The SQL twin of a shortlist plus [[exactRerank]]: the top
+    * [[RerankShortlist]] of `src` by `score`, re-scored against the `n`
+    * vectors, top [[K]]. Ends the statement.
+    */
+  private def rerankTail(src: String, score: String): String =
+    s"""short AS (${rankedSql(src, score, RerankShortlist, cols = "query_id, neighbor_id")}),
+       |scored AS (
+       |  SELECT s.query_id, s.neighbor_id,
+       |         ${cosineSql("qn.v", "qn.norm", "nn.v", "nn.norm")} + 0.0 AS sim
+       |  FROM short s
+       |  JOIN n qn ON qn.vec_id = s.query_id
+       |  JOIN n nn ON nn.vec_id = s.neighbor_id)
+       |${rankedSql("scored", "sim", K)}""".stripMargin
+
+  /** A centroid table's `VALUES` rows: (cell, c, |c|²), the doubles as
+    * round-trip literals.
+    */
+  private def centRows(cents: Array[Array[Double]]): String = {
+    val cn2 = graft.functions.NearestCell.cn2Of(cents)
+    cents.zipWithIndex.map { case (c, i) =>
+      s"($i, [${c.map(dlit).mkString(",")}], ${dlit(cn2(i))})"
+    }.mkString(",\n")
   }
 
   /** The shared centroid-literal assignment CTE chain (`e`/`n`/`cents`/
@@ -1450,23 +1387,26 @@ object Similarity extends graft.Catalog {
     * matches the native left-to-right loop bit for bit (proven by the
     * LSH and knn oracles).
     */
-  private def assignCtes(cents: Array[Array[Double]]): String = {
-    val cn2 = graft.functions.NearestCell.cn2Of(cents)
-    val centRows = cents.zipWithIndex.map { case (c, i) =>
-      s"($i, [${c.map(dlit).mkString(",")}], ${dlit(cn2(i))})"
-    }.mkString(",\n")
-    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-       |n AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS norm FROM e),
+  private def assignCtes(cents: Array[Array[Double]]): String =
+    s"""WITH $vecCtes,
        |cents(cell, c, cn2) AS (VALUES
-       |$centRows),
+       |${centRows(cents)}),
        |assign AS (
-       |  SELECT vec_id, v, norm, cell FROM (
-       |    SELECT n.vec_id, n.v, n.norm, cents.cell,
+       |  SELECT vec_id, label, v, norm, cell FROM (
+       |    SELECT n.vec_id, n.label, n.v, n.norm, cents.cell,
        |           row_number() OVER (
        |             PARTITION BY n.vec_id
        |             ORDER BY -2 * list_dot_product(n.v, cents.c) + cents.cn2, cents.cell) AS r
        |    FROM n CROSS JOIN cents) x WHERE r = 1)""".stripMargin
-  }
+
+  /** [[assignCtes]] plus `capped`, the vectors of the cells within
+    * [[MaxCellBlock]] — the twin of [[cappedCells]].
+    */
+  private def cappedCellCtes(cents: Array[Array[Double]]): String =
+    s"""${assignCtes(cents)},
+       |keep AS (
+       |  SELECT cell FROM assign GROUP BY cell HAVING count(*) <= $MaxCellBlock),
+       |capped AS (SELECT a.* FROM assign a JOIN keep k ON a.cell = k.cell)""".stripMargin
 
   /** DuckDB twin of [[annIvf]], generated from the [[quantizer]] AFTER
     * the query ran (Verify's dump order): the fitted centroids and the
@@ -1484,24 +1424,12 @@ object Similarity extends graft.Catalog {
        |  FROM probes pr JOIN n ON n.vec_id = pr.query_id),
        |pairs AS (
        |  SELECT p.query_id, a.vec_id AS neighbor_id,
-       |         round(list_dot_product(p.qv, a.v) / (p.qnorm * a.norm), 4) + 0.0 AS sim
+       |         ${cosineSql("p.qv", "p.qnorm", "a.v", "a.norm")} + 0.0 AS sim
        |  FROM p JOIN assign a ON a.cell = p.cell
        |  WHERE a.vec_id <> p.query_id)
-       |SELECT query_id, neighbor_id, rk, sim FROM (
-       |  SELECT query_id, neighbor_id, sim,
-       |         row_number() OVER (PARTITION BY query_id
-       |                            ORDER BY sim DESC, neighbor_id) AS rk
-       |  FROM pairs) t
-       |WHERE rk <= $K""".stripMargin
+       |${rankedSql("pairs", "sim", K)}""".stripMargin
   }
 
-  /** DuckDB twin of [[knnPq]], generated from the fitted codebooks:
-    * per-subspace argmin replays the [[graft.functions.NearestCell]]
-    * score (-2·dot + |c|², ties to the lowest code) on list_slice'd
-    * subvectors against the 128 codebook literals, reconstruction is
-    * list(c ORDER BY m) flattened, and scoring/ranking reuse the knn
-    * conventions (round-before-rank, neighbor_id ties).
-    */
   /** The shared PQ coding/reconstruction CTE block (`subcents`/`sub`/
     * `xh`/`xn`) — assumes an `n`(vec_id, v, norm) CTE is already in
     * scope, so both the flat-PQ and the IVF-PQ oracles replay the
@@ -1532,52 +1460,34 @@ object Similarity extends graft.Catalog {
        |  SELECT vec_id, xhat, sqrt(list_dot_product(xhat, xhat)) AS xnorm FROM xh)""".stripMargin
   }
 
-  /** The shared shortlist→exact-rerank SQL tail: ADC ranking over a
-    * `cand`(query_id, neighbor_id, xhat, xnorm) CTE against `p`, then
-    * the exact-cosine rerank from `n` — identical between the flat-PQ
-    * and IVF-PQ oracles by construction.
+  /** ADC scoring of the reconstructed `xn` candidates against the raw
+    * probe `p` — the twin of the PQ shortlists' `psim`.
     */
-  private def pqRerankTail: String =
-    s"""short AS (
-       |  SELECT query_id, neighbor_id FROM (
-       |    SELECT c.query_id, c.neighbor_id,
-       |           row_number() OVER (
-       |             PARTITION BY c.query_id
-       |             ORDER BY round(list_dot_product(p.qv, c.xhat)
-       |                            / (p.qnorm * c.xnorm), 4) DESC,
-       |                      c.neighbor_id) AS srk
-       |    FROM cand c JOIN p ON p.query_id = c.query_id) s
-       |  WHERE srk <= $RerankShortlist),
-       |pairs AS (
-       |  SELECT p.query_id, c.vec_id AS neighbor_id,
-       |         round(list_dot_product(p.qv, c.v) / (p.qnorm * c.norm), 4) + 0.0 AS sim
-       |  FROM short
-       |  JOIN p ON p.query_id = short.query_id
-       |  JOIN n c ON c.vec_id = short.neighbor_id)
-       |SELECT query_id, neighbor_id, rk, sim FROM (
-       |  SELECT query_id, neighbor_id, sim,
-       |         row_number() OVER (PARTITION BY query_id
-       |                            ORDER BY sim DESC, neighbor_id) AS rk
-       |  FROM pairs) t
-       |WHERE rk <= $K""".stripMargin
+  private val pqScore: String = cosineSql("p.qv", "p.qnorm", "xn.xhat", "xn.xnorm")
 
+  /** DuckDB twin of [[knnPq]], generated from the fitted codebooks:
+    * per-subspace argmin replays the [[graft.functions.NearestCell]]
+    * score (-2·dot + |c|², ties to the lowest code) on list_slice'd
+    * subvectors against the 128 codebook literals, reconstruction is
+    * list(c ORDER BY m) flattened, and scoring and ranking go through
+    * [[cosineSql]] and [[rerankTail]].
+    */
   private def knnPqOracle(books: Array[Array[Array[Double]]]): String =
-    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-       |n AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS norm FROM e),
+    s"""WITH $vecCtes,
        |${pqCtes(books)},
        |p AS (
        |  SELECT vec_id AS query_id, v AS qv, norm AS qnorm
        |  FROM n WHERE vec_id < $NumQueries),
        |cand AS (
-       |  SELECT p.query_id, xn.vec_id AS neighbor_id, xn.xhat, xn.xnorm
+       |  SELECT p.query_id, xn.vec_id AS neighbor_id, $pqScore AS psim
        |  FROM p CROSS JOIN xn
        |  WHERE xn.vec_id <> p.query_id),
-       |$pqRerankTail""".stripMargin
+       |${rerankTail("cand", "psim")}""".stripMargin
 
   /** DuckDB twin of [[annIvfPq]]: [[assignCtes]]' centroid-literal cell
     * assignment prunes to the probe-literal cells, [[pqCtes]]'
     * codebook replay supplies the reconstructed candidates inside them,
-    * and the shared [[pqRerankTail]] replays shortlist + exact rerank.
+    * and [[rerankTail]] replays shortlist + exact rerank.
     */
   private def ivfPqOracle(
       cents: Array[Array[Double]],
@@ -1591,12 +1501,13 @@ object Similarity extends graft.Catalog {
        |  SELECT vec_id AS query_id, v AS qv, norm AS qnorm
        |  FROM n WHERE vec_id < $NumQueries),
        |cand AS (
-       |  SELECT pr.query_id, a.vec_id AS neighbor_id, xn.xhat, xn.xnorm
+       |  SELECT pr.query_id, a.vec_id AS neighbor_id, $pqScore AS psim
        |  FROM probes pr
+       |  JOIN p ON p.query_id = pr.query_id
        |  JOIN assign a ON a.cell = pr.cell
        |  JOIN xn ON xn.vec_id = a.vec_id
        |  WHERE a.vec_id <> pr.query_id),
-       |$pqRerankTail""".stripMargin
+       |${rerankTail("cand", "psim")}""".stripMargin
   }
 
   /** DuckDB twin of [[kmeansRefine]], from the fitted warm-start
@@ -1610,10 +1521,6 @@ object Similarity extends graft.Catalog {
     * pagerank CTE-inlining lesson).
     */
   private def kmeansOracle(init: Array[Array[Double]]): String = {
-    val cn2 = graft.functions.NearestCell.cn2Of(init)
-    val initRows = init.zipWithIndex.map { case (c, i) =>
-      s"($i, [${c.map(dlit).mkString(",")}], ${dlit(cn2(i))})"
-    }.mkString(",\n")
     def assignSql(name: String, prev: String): String =
       s"""$name AS MATERIALIZED (
          |  SELECT vec_id, v, cell FROM (
@@ -1624,9 +1531,9 @@ object Similarity extends graft.Catalog {
          |    FROM e CROSS JOIN $prev) x WHERE rk = 1)""".stripMargin
     val sb = new StringBuilder
     sb.append(
-      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+      s"""WITH $vecCtes,
          |cents0(cell, c, cn2) AS (VALUES
-         |$initRows)""".stripMargin)
+         |${centRows(init)})""".stripMargin)
     for (r <- 1 until KmRounds) {
       val prev = if (r == 1) "cents0" else s"c${r - 1}n"
       sb.append(s""",
@@ -1683,15 +1590,12 @@ object Similarity extends graft.Catalog {
     * join. The cap filter replays as a per-cell count join.
     */
   private def embedDupOracle(cents: Array[Array[Double]]): String = {
-    s"""${assignCtes(cents)},
-       |keep AS (
-       |  SELECT cell FROM assign GROUP BY cell HAVING count(*) <= $MaxCellBlock),
-       |capped AS (SELECT a.* FROM assign a JOIN keep k ON a.cell = k.cell)
+    val sim = cosineSql("a.v", "a.norm", "b.v", "b.norm")
+    s"""${cappedCellCtes(cents)}
        |SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-       |       CAST(a.cell AS BIGINT) AS cell,
-       |       round(list_dot_product(a.v, b.v) / (a.norm * b.norm), 4) + 0.0 AS sim
+       |       CAST(a.cell AS BIGINT) AS cell, $sim + 0.0 AS sim
        |FROM capped a JOIN capped b ON a.cell = b.cell AND a.vec_id < b.vec_id
-       |WHERE round(list_dot_product(a.v, b.v) / (a.norm * b.norm), 4) >= 0.3""".stripMargin
+       |WHERE $sim >= 0.3""".stripMargin
   }
 
   /** DuckDB twin of [[semDedup]]: centroid-literal assignment + cap,
@@ -1702,22 +1606,19 @@ object Similarity extends graft.Catalog {
     val cn2 = graft.functions.NearestCell.cn2Of(cents)
     val cnormRows = cents.indices
       .map(i => s"($i, ${dlit(math.sqrt(cn2(i)))})").mkString(",\n")
-    s"""${assignCtes(cents)},
-       |keep AS (
-       |  SELECT cell FROM assign GROUP BY cell HAVING count(*) <= $MaxCellBlock),
-       |capped AS (SELECT a.* FROM assign a JOIN keep k ON a.cell = k.cell),
+    s"""${cappedCellCtes(cents)},
        |cnorms(cell, cnorm) AS (VALUES
        |$cnormRows),
        |scored AS (
        |  SELECT a.vec_id, a.cell, a.v, a.norm,
-       |         round(list_dot_product(a.v, c.c) / (a.norm * cn.cnorm), 4) AS ccos
+       |         ${cosineSql("a.v", "a.norm", "c.c", "cn.cnorm")} AS ccos
        |  FROM capped a
        |  JOIN cents c ON c.cell = a.cell
        |  JOIN cnorms cn ON cn.cell = a.cell),
        |rm AS (
        |  SELECT DISTINCT a.vec_id
        |  FROM scored a JOIN scored b ON a.cell = b.cell AND a.vec_id <> b.vec_id
-       |  WHERE round(list_dot_product(a.v, b.v) / (a.norm * b.norm), 4) >= $SemDedupEps
+       |  WHERE ${cosineSql("a.v", "a.norm", "b.v", "b.norm")} >= $SemDedupEps
        |    AND (b.ccos < a.ccos OR (b.ccos = a.ccos AND b.vec_id < a.vec_id)))
        |SELECT s.vec_id, CAST(s.cell AS BIGINT) AS cell, s.ccos + 0.0 AS ccos,
        |       CAST(CASE WHEN rm.vec_id IS NOT NULL THEN 1 ELSE 0 END AS BIGINT) AS removed
@@ -1735,7 +1636,7 @@ object Similarity extends graft.Catalog {
     val bndRows = bounds.zipWithIndex.map { case (bs, j) =>
       s"($j, [${bs.map(dlit).mkString(",")}])"
     }.mkString(",\n")
-    s"""WITH x AS (
+    s"""x AS (
        |  SELECT vec_id, r.range AS dim, CAST(embedding[r.range + 1] AS DOUBLE) AS v
        |  FROM embeddings, range(64) r),
        |bnd(dim, bv) AS (VALUES
@@ -1747,49 +1648,26 @@ object Similarity extends graft.Catalog {
        |  FROM x JOIN bnd ON x.dim = bnd.dim),
        |q AS (
        |  SELECT vec_id, list(CAST(code AS DOUBLE) ORDER BY dim) AS qv
-       |  FROM c GROUP BY vec_id)""".stripMargin
+       |  FROM c GROUP BY vec_id),
+       |qs AS (
+       |  SELECT p.vec_id AS query_id, o.vec_id AS neighbor_id,
+       |         CAST(list_dot_product(p.qv, o.qv) AS BIGINT) AS score
+       |  FROM q p JOIN q o ON p.vec_id < $NumQueries AND o.vec_id <> p.vec_id)""".stripMargin
   }
 
-  private def knnQuantizedOracle(bounds: Array[Array[Double]]): String = {
-    s"""${quantCodeCtes(bounds)}
-       |SELECT query_id, neighbor_id, rk, score FROM (
-       |  SELECT p.vec_id AS query_id, n.vec_id AS neighbor_id,
-       |         CAST(list_dot_product(p.qv, n.qv) AS BIGINT) AS score,
-       |         row_number() OVER (PARTITION BY p.vec_id
-       |                            ORDER BY list_dot_product(p.qv, n.qv) DESC, n.vec_id) AS rk
-       |  FROM q p JOIN q n ON p.vec_id < $NumQueries AND n.vec_id <> p.vec_id) t
-       |WHERE rk <= $K""".stripMargin
-  }
+  private def knnQuantizedOracle(bounds: Array[Array[Double]]): String =
+    s"""WITH ${quantCodeCtes(bounds)}
+       |${rankedSql("qs", "score", K, cols = "query_id, neighbor_id, rk, score")}""".stripMargin
 
   /** DuckDB twin of [[knnRerank]], from the same boundary fit: the
     * integer-dot shortlist replays over the code CTEs, then the exact
     * cosine rerank replays [[knnExact]]'s convention over only the
     * shortlisted id pairs.
     */
-  private def knnRerankOracle(bounds: Array[Array[Double]]): String = {
-    s"""${quantCodeCtes(bounds)},
-       |short AS (
-       |  SELECT query_id, neighbor_id FROM (
-       |    SELECT p.vec_id AS query_id, n.vec_id AS neighbor_id,
-       |           row_number() OVER (PARTITION BY p.vec_id
-       |                              ORDER BY list_dot_product(p.qv, n.qv) DESC, n.vec_id) AS srk
-       |    FROM q p JOIN q n ON p.vec_id < $NumQueries AND n.vec_id <> p.vec_id) t
-       |  WHERE srk <= $RerankShortlist),
-       |e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-       |nv AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS norm FROM e),
-       |scored AS (
-       |  SELECT s.query_id, s.neighbor_id,
-       |         round(list_dot_product(qn.v, nn.v) / (qn.norm * nn.norm), 4) + 0.0 AS sim
-       |  FROM short s
-       |  JOIN nv qn ON qn.vec_id = s.query_id
-       |  JOIN nv nn ON nn.vec_id = s.neighbor_id)
-       |SELECT query_id, neighbor_id, rk, sim FROM (
-       |  SELECT query_id, neighbor_id, sim,
-       |         row_number() OVER (PARTITION BY query_id
-       |                            ORDER BY sim DESC, neighbor_id) AS rk
-       |  FROM scored) t
-       |WHERE rk <= $K""".stripMargin
-  }
+  private def knnRerankOracle(bounds: Array[Array[Double]]): String =
+    s"""WITH $vecCtes,
+       |${quantCodeCtes(bounds)},
+       |${rerankTail("qs", "score")}""".stripMargin
 
   /** The MMR twin: the same K greedy steps unrolled as CTE blocks —
     * selection state is the UNION of the prior sel CTEs, exclusion is
@@ -1800,14 +1678,12 @@ object Similarity extends graft.Catalog {
     def selUpTo(t: Int) =
       (1 to t).map(i => s"SELECT * FROM sel$i").mkString(" UNION ALL ")
     val sb = new StringBuilder(
-      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-         |q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < $NumQueries),
+      s"""WITH $vecCtes,
+         |q AS (SELECT vec_id AS query_id, v AS qv, norm AS qnorm FROM n WHERE vec_id < $NumQueries),
          |scored AS (
-         |  SELECT query_id, e.vec_id,
-         |    CAST(round(round(list_dot_product(qv, e.v) /
-         |      (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(e.v, e.v))),
-         |      4) * 10000, 0) AS BIGINT) AS rel_e4
-         |  FROM q, e WHERE e.vec_id <> query_id),
+         |  SELECT query_id, c.vec_id,
+         |    CAST(round(${cosineSql("qv", "qnorm", "c.v", "c.norm")} * 10000, 0) AS BIGINT) AS rel_e4
+         |  FROM q, n c WHERE c.vec_id <> query_id),
          |shortlist AS (
          |  SELECT query_id, vec_id, rel_e4 FROM (
          |    SELECT query_id, vec_id, rel_e4,
@@ -1816,13 +1692,12 @@ object Similarity extends graft.Catalog {
          |    FROM scored) t WHERE rk <= $MmrShortlist),
          |pairs AS (
          |  SELECT a.query_id, a.vec_id AS a_id, b.vec_id AS b_id,
-         |    CAST(round(round(list_dot_product(ea.v, eb.v) /
-         |      (sqrt(list_dot_product(ea.v, ea.v)) * sqrt(list_dot_product(eb.v, eb.v))),
-         |      4) * 10000, 0) AS BIGINT) AS s_e4
+         |    CAST(round(${cosineSql("ea.v", "ea.norm", "eb.v", "eb.norm")} * 10000, 0)
+         |      AS BIGINT) AS s_e4
          |  FROM shortlist a
          |  JOIN shortlist b ON a.query_id = b.query_id AND a.vec_id <> b.vec_id
-         |  JOIN e ea ON ea.vec_id = a.vec_id
-         |  JOIN e eb ON eb.vec_id = b.vec_id),
+         |  JOIN n ea ON ea.vec_id = a.vec_id
+         |  JOIN n eb ON eb.vec_id = b.vec_id),
          |sel1 AS (
          |  SELECT query_id, vec_id, rel_e4, rel_e4 * 7 AS mmr_w,
          |         CAST(1 AS BIGINT) AS mmr_rank
@@ -1860,20 +1735,13 @@ object Similarity extends graft.Catalog {
     "embed_centroid_drift" -> centroidDriftOracle,
     "embed_mmr" -> mmrOracle,
     "embed_triplets" ->
-      s"""WITH e AS (SELECT vec_id, CAST(label AS BIGINT) AS label,
-         |                  CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-         |n AS (SELECT vec_id, label, v, sqrt(list_dot_product(v, v)) AS norm FROM e),
-         |q AS (SELECT vec_id AS query_id, label AS qlabel, v AS qv, norm AS qnorm
-         |      FROM n WHERE vec_id < $NumQueries),
+      s"""WITH $vecCtes,
          |s AS (
-         |  SELECT q.query_id, q.qlabel, n.vec_id AS neighbor_id,
-         |         round(list_dot_product(q.qv, n.v) / (q.qnorm * n.norm), 4) + 0.0 AS sim,
-         |         n.label = q.qlabel AS same
-         |  FROM q JOIN n ON n.vec_id <> q.query_id),
-         |r AS (
-         |  SELECT *, row_number() OVER (PARTITION BY query_id, same
-         |                               ORDER BY sim DESC, neighbor_id) AS rk
-         |  FROM s)
+         |  SELECT q.vec_id AS query_id, q.label AS qlabel, c.vec_id AS neighbor_id,
+         |         ${cosineSql("q.v", "q.norm", "c.v", "c.norm")} + 0.0 AS sim,
+         |         c.label = q.label AS same
+         |  FROM n q JOIN n c ON q.vec_id < $NumQueries AND c.vec_id <> q.vec_id),
+         |r AS (${rankedSql("s", "sim", 1, "query_id, same", cols = "*")})
          |SELECT query_id, qlabel AS anchor_label,
          |  max(CASE WHEN same THEN neighbor_id END) AS positive_id,
          |  max(CASE WHEN same THEN sim END) AS sim_pos,
@@ -1881,7 +1749,7 @@ object Similarity extends graft.Catalog {
          |  max(CASE WHEN NOT same THEN sim END) AS sim_neg,
          |  round(max(CASE WHEN same THEN sim END)
          |        - max(CASE WHEN NOT same THEN sim END), 4) + 0.0 AS margin
-         |FROM r WHERE rk = 1 GROUP BY query_id, qlabel""".stripMargin,
+         |FROM r GROUP BY query_id, qlabel""".stripMargin,
     "embed_norms" ->
       """SELECT vec_id, CAST(label AS BIGINT) AS label,
         |       CAST(len(v) AS BIGINT) AS n_dims,
@@ -1896,17 +1764,10 @@ object Similarity extends graft.Catalog {
     "embed_ann_lsh" -> annLshOracle,
     "embed_knn_rp" -> knnRpOracle,
     "embed_knn" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < 10),
-        |s AS (SELECT query_id, e.vec_id AS neighbor_id,
-        |        round(list_dot_product(qv, e.v) /
-        |              (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(e.v, e.v))),
-        |              4) AS sim
-        |      FROM q, e WHERE e.vec_id <> query_id)
-        |SELECT query_id, neighbor_id, rk, sim FROM (
-        |  SELECT query_id, neighbor_id, sim,
-        |         row_number() OVER (PARTITION BY query_id
-        |                            ORDER BY sim DESC, neighbor_id) AS rk
-        |  FROM s) t
-        |WHERE rk <= 5""".stripMargin)
+      s"""WITH $vecCtes,
+        |s AS (
+        |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
+        |         ${cosineSql("q.v", "q.norm", "c.v", "c.norm")} AS sim
+        |  FROM n q JOIN n c ON q.vec_id < $NumQueries AND c.vec_id <> q.vec_id)
+        |${rankedSql("s", "sim", K)}""".stripMargin)
 }

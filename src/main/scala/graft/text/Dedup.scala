@@ -76,6 +76,18 @@ object Dedup extends graft.Catalog {
        |        FROM documents) x),
        |dd AS (${cappedCte("d0", "b1, b2")})""".stripMargin
 
+  /** [[jaccardBlockCtes]] plus `jp` (doc_a, doc_b, inter, jacc): every
+    * within-block pair a < b with its token-set intersection size,
+    * computed once, and the Jaccard ratio over it.
+    */
+  val jaccardPairCtes: String =
+    s"""$jaccardBlockCtes,
+       |jp AS (
+       |  SELECT doc_a, doc_b, inter, CAST(inter AS DOUBLE) / (na + nb - inter) AS jacc
+       |  FROM (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, len(a.dt) AS na, len(b.dt) AS nb,
+       |               len(list_filter(a.dt, x -> list_contains(b.dt, x))) AS inter
+       |        FROM dd a JOIN dd b ON a.b1 = b.b1 AND a.b2 = b.b2 AND a.doc_id < b.doc_id) x)""".stripMargin
+
   /** THE cross-engine base hash: a 32-bit word from 8 hex chars of
     * md5, starting at `offset` (1-based). One definition on the Spark
     * side; the generated oracles embed the literal DuckDB twin
@@ -1300,16 +1312,9 @@ object Dedup extends graft.Catalog {
     * folds the four counts + two ratios.
     */
   private def blockingEvalOracle: String =
-    s"""WITH $jaccardBlockCtes,
+    s"""WITH $jaccardPairCtes,
        |truth AS MATERIALIZED (
-       |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-       |  FROM dd a JOIN dd b
-       |    ON a.b1 = b.b1 AND a.b2 = b.b2 AND a.doc_id < b.doc_id
-       |  WHERE CAST(len(list_filter(a.dt, x -> list_contains(b.dt, x)))
-       |          AS DOUBLE) /
-       |        (len(a.dt) + len(b.dt)
-       |         - len(list_filter(a.dt, x -> list_contains(b.dt, x))))
-       |        >= 0.5),
+       |  SELECT doc_a, doc_b FROM jp WHERE jacc >= 0.5),
        |sh AS (
        |  SELECT doc_id,
        |         unnest(list_transform(range(len(t) - 2),
@@ -1388,10 +1393,6 @@ object Dedup extends graft.Catalog {
         |GROUP BY sha256(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'))""".stripMargin,
     "dedup_blocking_eval" -> blockingEvalOracle,
     "dedup_jaccard_pairs" ->
-      s"""WITH $jaccardBlockCtes
-        |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-        |  CAST(len(list_filter(a.dt, x -> list_contains(b.dt, x))) AS BIGINT) AS inter,
-        |  CAST(len(list_filter(a.dt, x -> list_contains(b.dt, x))) AS DOUBLE) /
-        |    (len(a.dt) + len(b.dt) - len(list_filter(a.dt, x -> list_contains(b.dt, x)))) AS jacc
-        |FROM dd a JOIN dd b ON a.b1 = b.b1 AND a.b2 = b.b2 AND a.doc_id < b.doc_id""".stripMargin)
+      s"""WITH $jaccardPairCtes
+        |SELECT doc_a, doc_b, CAST(inter AS BIGINT) AS inter, jacc FROM jp""".stripMargin)
 }

@@ -225,12 +225,8 @@ object DedupCluster extends graft.Catalog {
     */
   private def closureCte: String =
     s"""WITH RECURSIVE pairs AS (
-       |  WITH ${Dedup.jaccardBlockCtes}
-       |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-       |  FROM dd a JOIN dd b ON a.b1 = b.b1 AND a.b2 = b.b2 AND a.doc_id < b.doc_id
-       |  WHERE CAST(len(list_filter(a.dt, x -> list_contains(b.dt, x))) AS DOUBLE) /
-       |        (len(a.dt) + len(b.dt) - len(list_filter(a.dt, x -> list_contains(b.dt, x))))
-       |        >= $JaccThreshold),
+       |  WITH ${Dedup.jaccardPairCtes}
+       |  SELECT doc_a, doc_b FROM jp WHERE jacc >= $JaccThreshold),
        |und AS (
        |  SELECT doc_a AS src, doc_b AS dst FROM pairs
        |  UNION ALL SELECT doc_b, doc_a FROM pairs),

@@ -57,15 +57,8 @@ object LshPlan extends graft.Catalog {
 
   private def planOracle: String = {
     val planRows = Plans.map { case (b, r) => s"($b, $r)" }.mkString(", ")
-    s"""WITH ${Dedup.jaccardBlockCtes},
-       |pairs AS MATERIALIZED (
-       |  SELECT CAST(len(list_filter(a.dt, x -> list_contains(b.dt, x))) AS DOUBLE) /
-       |         (len(a.dt) + len(b.dt) - len(list_filter(a.dt, x -> list_contains(b.dt, x))))
-       |         AS jacc
-       |  FROM dd a JOIN dd b ON a.b1 = b.b1 AND a.b2 = b.b2 AND a.doc_id < b.doc_id
-       |  WHERE CAST(len(list_filter(a.dt, x -> list_contains(b.dt, x))) AS DOUBLE) /
-       |        (len(a.dt) + len(b.dt) - len(list_filter(a.dt, x -> list_contains(b.dt, x))))
-       |        >= 0.5),
+    s"""WITH ${Dedup.jaccardPairCtes},
+       |pairs AS MATERIALIZED (SELECT jacc FROM jp WHERE jacc >= 0.5),
        |plans AS (SELECT CAST(p.b AS BIGINT) AS b, CAST(p.r AS BIGINT) AS r
        |          FROM (VALUES $planRows) p(b, r)),
        |scored AS (

@@ -61,8 +61,14 @@ class CkptSpec extends SparkSpec {
     val first = Memo.frame(spark, ("ckpt_spec", "d2"))(fitFrame(fits))
     assert(first.count() == 3)
     // kill the checkpoint the way Verify's hygiene (or an executor
-    // cascade) does: unpersist the truncated-lineage RDD's blocks
-    spark.sparkContext.getPersistentRDDs.values
+    // cascade) does: unpersist the truncated-lineage RDD's blocks —
+    // only this frame's, so other suites' memo frames in the shared
+    // SparkSession stay alive
+    val own = first.queryExecution.logical.collect {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
+    }.toSet
+    spark.sparkContext.getPersistentRDDs
+      .collect { case (id, rdd) if own(id) => rdd }
       .foreach(_.unpersist(blocking = true))
     val healed = Memo.frame(spark, ("ckpt_spec", "d2"))(fitFrame(fits))
     assert(fits.get() == 2, "dead blocks must force a refit")

@@ -1,7 +1,7 @@
 package graft
 
-import graft.functions.{BpePreTokenCount, DecimalOrderJoin, LetterTokens, MatchCount,
-  PairStructs, SegBucket, WhitespaceTokens}
+import graft.functions.{BpePreTokenCount, DecimalOrderJoin, DotProduct, LetterTokens, LshBuckets,
+  MatchCount, NearestCell, PairStructs, QuantCode, SegBucket, WhitespaceTokens}
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.expressions.Size
 import org.apache.spark.sql.functions._
@@ -37,7 +37,13 @@ import org.scalacheck.rng.Seed
   *  - the tokenizer kernels ([[WhitespaceTokens]], [[LetterTokens]],
   *    [[BpePreTokenCount]]) vs the split / regexp_extract_all spellings
   *    they replaced, over generated strings (every Java regex class
-  *    boundary, null, long, and malformed UTF-8), compared byte for byte.
+  *    boundary, null, long, and malformed UTF-8), compared byte for byte;
+  *  - the retrieval kernels ([[DotProduct]], [[NearestCell]],
+  *    [[QuantCode]], [[LshBuckets]]) vs the interpreted spellings the
+  *    DuckDB twins replay, over generated vectors with every IEEE edge
+  *    (±0.0, NaN, ±Infinity, the extreme and the least positive double),
+  *    null and empty arrays, null elements and wrong lengths, compared
+  *    bit for bit with NaN equal to NaN.
   */
 class NativeKernelExprSpec extends SparkSpec {
   import spark.implicits._
@@ -595,6 +601,140 @@ class NativeKernelExprSpec extends SparkSpec {
         val n = counts(d, Native(es => BpePreTokenCount(es.head, legacy), $"text"))
         assert(n === counts(d, Native(es => Size(es.head, legacy), extracted)))
         assert(n.values.exists(_ == (if (legacy) Some(-1) else None)))
+      }
+    }
+  }
+
+  // ---- generated numeric edges for the retrieval kernels ----
+
+  private val doubleEdges: Seq[Double] = Seq(0.0, -0.0, Double.NaN, Double.PositiveInfinity,
+    Double.NegativeInfinity, Double.MinValue, Double.MaxValue, Double.MinPositiveValue,
+    -Double.MinPositiveValue, 1.0, -1.0)
+
+  /** Doubles with the IEEE edges common, and a rare null. */
+  private val genEdgeDouble: Gen[java.lang.Double] = Gen.frequency(
+    1 -> Gen.const(null),
+    8 -> Gen.oneOf(doubleEdges).map(Double.box),
+    8 -> Gen.choose(-3.0, 3.0).map(Double.box),
+    3 -> Gen.choose(-4, 4).map(i => Double.box(i * 0.5)))
+
+  /** Finite, non-null doubles: the fitted constants a kernel is built with. */
+  private val genConst: Gen[Double] = Gen.frequency(
+    3 -> Gen.oneOf(doubleEdges.filter(d => !d.isNaN && !d.isInfinite)),
+    1 -> Gen.oneOf(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity),
+    6 -> Gen.choose(-3.0, 3.0))
+
+  /** Vectors of `dim` elements, plus null, empty and wrong-length arrays. */
+  private def genVec(dim: Int): Gen[Seq[java.lang.Double]] = Gen.frequency(
+    1 -> Gen.const(null),
+    1 -> Gen.const(Seq.empty[java.lang.Double]),
+    1 -> Gen.choose(1, dim + 2).suchThat(_ != dim).flatMap(n => Gen.listOfN(n, genEdgeDouble)),
+    12 -> Gen.listOfN(dim, genEdgeDouble))
+
+  private val VecDim = 4
+
+  /** Dots within a rounding step of zero, half-way cases included. */
+  private val nearZero: Seq[Double] =
+    Seq(5e-5, 4.9999e-5, 5.0001e-5, 2.5e-5, 1.5e-4, 1e-9).flatMap(x => Seq(x, -x))
+
+  /** Generated vectors as (k, v), with every edge at every position and
+    * the near-zero values on the first two axes.
+    */
+  private lazy val vecCases: DataFrame = {
+    val edges = for (e <- doubleEdges; j <- 0 until VecDim)
+      yield Seq.tabulate[java.lang.Double](VecDim)(i => if (i == j) e else 0.5 * (i + 1))
+    val small = for (x <- nearZero; y <- nearZero.take(4))
+      yield Seq[java.lang.Double](x, y, 0.0, 0.0)
+    (samples(genVec(VecDim), 600) ++ edges ++ small).zipWithIndex
+      .map { case (v, k) => (k.toLong, v) }.toDF("k", "v")
+  }
+
+  private def consts(rows: Int, seed: Long): Array[Array[Double]] =
+    Gen.listOfN(rows, Gen.listOfN(VecDim, genConst)).apply(Gen.Parameters.default, Seed(seed))
+      .get.map(_.toArray).toArray
+
+  /** Doubles as their bits, NaN collapsed to one pattern. */
+  private def bits(d: Double): Long = java.lang.Double.doubleToLongBits(d)
+
+  private def collected[A](d: DataFrame, c: Column)(read: (Row, Int) => A): Map[Long, Option[A]] =
+    d.select($"k", c).collect()
+      .map(r => r.getLong(0) -> (if (r.isNullAt(1)) None else Some(read(r, 1)))).toMap
+
+  private def doubleBits(r: Row, i: Int): Seq[Long] = r.getSeq[Double](i).map(bits)
+
+  /** Kernel and spelling agree on every row of `cases`; a mismatch
+    * names its rows and their inputs.
+    */
+  private def assertSameRows[A](
+      cases: DataFrame, native: Map[Long, A], spelled: Map[Long, A], clue: String): Unit = {
+    val bad = spelled.keys.toSeq.sorted.filter(k => native.get(k) != spelled.get(k))
+    lazy val input = cases.collect().map(r => r.getLong(0) -> r.toSeq.tail.mkString(", ")).toMap
+    assert(native.size === spelled.size && bad.isEmpty, s"$clue: ${bad.size} rows differ, e.g. " +
+      bad.take(3).map(k => s"row $k (${input(k)}): kernel ${native.getOrElse(k, "no row")} spelling ${spelled(k)}")
+        .mkString("; "))
+  }
+
+  test("DotProduct == Similarity.dot bit for bit (generated IEEE-edge vectors)") {
+    val rows = (samples(Gen.zip(genVec(VecDim), genVec(VecDim)), 600) ++
+      doubleEdges.flatMap(a => doubleEdges.map(b => (Seq[java.lang.Double](a, 1.0), Seq[java.lang.Double](b, 1.0)))))
+      .zipWithIndex.map { case ((a, b), k) => (k.toLong, a, b) }.toDF("k", "a", "b")
+    for (d <- bothPaths(rows)) {
+      val native = collected(d, Native(es => DotProduct(es(0), es(1)), $"a", $"b"))((r, i) => bits(r.getDouble(i)))
+      val spelled = collected(d, graft.sim.Similarity.dot($"a", $"b"))((r, i) => bits(r.getDouble(i)))
+      assertSameRows(rows, native, spelled, "dot")
+      assert(spelled.values.exists(_.isEmpty) && spelled.values.exists(_.contains(bits(Double.NaN))))
+    }
+  }
+
+  test("NearestCell == argmin of -2·Similarity.dot + |c|², ties to the lowest cell (generated)") {
+    for (seed <- 0L until 4L) {
+      val cents = consts(5, seed) ++ consts(1, seed).map(_.clone()) // a duplicate cell ties
+      val cn2 = NearestCell.cn2Of(cents)
+      val scores = cents.indices.map(i =>
+        lit(-2.0) * graft.sim.Similarity.dot($"v", typedLit(cents(i).toSeq)) + lit(cn2(i)))
+      val spelled = array_min(array(cents.indices.map(i =>
+        when(scores(i).isNotNull, struct(scores(i).as("s"), lit(i).as("cell")))): _*))
+        .getField("cell")
+      for (d <- bothPaths(vecCases)) {
+        val native = collected(d, Native(es => NearestCell(es.head, cents), $"v"))(_.getInt(_))
+        assertSameRows(vecCases, native, collected(d, spelled)(_.getInt(_)), s"seed $seed")
+        assert(native.values.exists(_.isEmpty) && native.values.flatten.toSet.size > 1)
+      }
+    }
+  }
+
+  test("QuantCode == 2·(1 + #{b : v >= b}) − (B+1) comparison bucketing (generated)") {
+    for (seed <- 0L until 4L) {
+      val bounds = consts(VecDim, 100 + seed).map(_ ++ consts(1, 200 + seed).head)
+      val b1 = bounds.head.length + 1
+      val spelled = when(size($"v") === VecDim, transform($"v", (x, j) =>
+        (lit(2) * (lit(1) + size(filter(element_at(typedLit(bounds.map(_.toSeq).toSeq), j + 1),
+          b => x >= b))) - lit(b1 + 1)).cast("double")))
+      for (d <- bothPaths(vecCases)) {
+        val native = collected(d, Native(es => QuantCode(es.head, bounds), $"v"))(doubleBits)
+        assertSameRows(vecCases, native, collected(d, spelled)(doubleBits), s"seed $seed")
+        assert(native.values.flatten.flatten.toSet.size > 2)
+      }
+    }
+  }
+
+  test("LshBuckets == round-before-sign bucket sums (generated)") {
+    val perTable = 3
+    // table 0's planes read the near-zero coordinates straight through
+    val axes = Array(Array(1.0, 0.0, 0.0, 0.0), Array(0.0, -1.0, 0.0, 0.0), Array(1.0, 1.0, 0.0, 0.0))
+    for (seed <- 0L until 4L) {
+      val planes = axes ++ consts(perTable, 300 + seed)
+      val spelled = when(size($"v") === VecDim, array((0 until 2).map { t =>
+        (0 until perTable).map { i =>
+          val dot = graft.sim.Similarity.dot($"v", typedLit(planes(t * perTable + i).toSeq))
+          when(round(dot, 4) >= 0, lit(1L << i)).otherwise(lit(0L))
+        }.reduce(_ + _)
+      }: _*))
+      for (d <- bothPaths(vecCases)) {
+        val native = collected(d, Native(es => LshBuckets(es.head, planes, perTable), $"v"))(
+          (r, i) => r.getSeq[Long](i))
+        assertSameRows(vecCases, native, collected(d, spelled)((r, i) => r.getSeq[Long](i)), s"seed $seed")
+        assert(native.values.flatten.flatten.toSet.size > 2)
       }
     }
   }

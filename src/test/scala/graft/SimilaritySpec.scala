@@ -32,6 +32,29 @@ class SimilaritySpec extends SparkSpec {
     }
   }
 
+  test("every embedding top-K twin ranks through the one rankedSql wrapper") {
+    // the fitted twins exist once the SparkSession holds their fits
+    Similarity.quantizer(spark, sf)
+    Similarity.quantBounds(spark, sf)
+    val q = java.util.regex.Pattern.quote _
+    val Array(pre, afterCols, afterKeys, afterScore, afterSrc) =
+      Similarity.rankedSql("\u0001", "\u0002", 0, "\u0003", "\u0004")
+        .stripSuffix("0").split("[\u0001-\u0004]")
+    val template = (q(pre) + "[\\w, *]+" + q(afterCols) + "[\\w, ]+" + q(afterKeys) + "\\w+" +
+      q(afterScore) + "\\w+" + q(afterSrc) + "\\d+").r
+    val ranking = "ORDER BY (sim|score|psim|pscore|iscore) DESC, neighbor_id".r
+    val oracles = SparkEntry.oracleSql
+    val drifted = oracles.filter { case (_, sql) =>
+      ranking.findFirstIn(template.replaceAllIn(sql, "")).isDefined
+    }
+    assert(drifted.isEmpty, s"a top-K ranking outside rankedSql: ${drifted.keys.toSeq.sorted}")
+    val ranked = oracles.filter { case (_, sql) => template.findFirstIn(sql).isDefined }.keySet
+    val family = Set("embed_knn", "embed_ann_lsh", "embed_ann_ivf", "embed_knn_quantized",
+      "embed_knn_rerank", "embed_knn_rp", "embed_knn_pq", "embed_ann_ivfpq", "embed_triplets",
+      "embed_rrf_fusion", "embed_recall_eval")
+    assert(family.diff(ranked).isEmpty, s"not ranked through rankedSql: ${family.diff(ranked)}")
+  }
+
   // plane matrix re-derived with the same seed (private in Similarity)
   private lazy val planesOf: Int => Seq[Double] = {
     val rnd = new scala.util.Random(7)
